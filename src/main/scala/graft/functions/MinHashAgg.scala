@@ -5,10 +5,11 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -157,11 +158,67 @@ case class SimHashSignature(child: Expression,
     copy(child = newChild)
 }
 
+/** In-row MinHash signature over one document's token-hash array: for k
+  * seeded hash functions, the minimum over the row's elements. Every
+  * token of a document lives in its own row, so the signature never
+  * needed the explode → group-by(doc_id) → [[MinHashSignature]]
+  * aggregate and its exchange; this computes it in place.
+  *
+  * The input elements are first-level token hashes, `xxhash64(t)` (seed
+  * 42) — exactly the per-token hash [[MinHashSignature]] computes before
+  * chaining the hash index — so over a non-empty distinct-token array
+  * the signature is bit-identical to the aggregate's (spec-pinned,
+  * multi-byte tokens included). Null elements are skipped, as the
+  * aggregate skips null tokens. An empty array yields all
+  * `Long.MaxValue` (the aggregate emits no row for a doc without tokens,
+  * so callers drop empty rows first). */
+case class MinHashOfHashes(child: Expression, numHashes: Int)
+    extends UnaryExpression {
+  require(numHashes >= 1, s"graft_minhash_row: numHashes must be >= 1, got $numHashes")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case dt => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects array<bigint>, got ${dt.simpleString}")
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_minhash_row"
+
+  def compute(a: ArrayData): ArrayData = {
+    val sig = Array.fill(numHashes)(Long.MaxValue)
+    var t = 0
+    while (t < a.numElements()) {
+      if (!a.isNullAt(t)) {
+        val h1 = a.getLong(t)
+        var i = 0
+        while (i < numHashes) {
+          // = XxHash64Function.hash(i, IntegerType, h1), unboxed
+          val h = XXH64.hashInt(i, h1)
+          if (h < sig(i)) sig(i) = h
+          i += 1
+        }
+      }
+      t += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(sig)
+  }
+
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("minHashOfHashes", this, classOf[MinHashOfHashes].getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 object MinHashAgg {
-  /** Aggregate Column: MinHash signature of the grouped token column. */
-  def minhash(token: Column, numHashes: Int): Column =
-    Bridge.column(MinHashSignature(Bridge.expression(token), numHashes)
-      .toAggregateExpression())
+  /** Row Column: MinHash signature of an `array<bigint>` of token hashes
+    * (see [[MinHashOfHashes]]). */
+  def minhashOfHashes(hashes: Column, numHashes: Int): Column =
+    Bridge.column(MinHashOfHashes(Bridge.expression(hashes), numHashes))
 
   /** Aggregate Column: 64-bit SimHash of the grouped token column. */
   def simhash(token: Column): Column =

@@ -166,13 +166,15 @@ case class JaccardSimilarity(left: Expression, right: Expression)
   * word sets themselves unless two distinct words of a pair collide in
   * 64 bits (~2⁻⁶⁴ per vocabulary pair — the same collision class every
   * hashed candidate path here already accepts; the oracle gate
-  * re-verifies the emitted values at both SFs). NULL ELEMENTS ARE
-  * UNDEFINED BEHAVIOR: getLong on a null slot reads whatever bits sit
-  * there (it does not throw), so a containsNull input yields silently
-  * wrong similarities — callers must feed arrays built from non-null
-  * hashes (sort_array(transform(words, xxhash64)) and
-  * graft_ngram_hashes both are, even though their static type carries
-  * containsNull=true, which is why the type check cannot enforce it). */
+  * re-verifies the emitted values at both SFs). A NULL ARRAY yields
+  * NULL (the usual null-in/null-out); a NULL ELEMENT is rejected with an
+  * IllegalArgumentException naming the side and index — a sorted hash
+  * set has no null member, and getLong on a null slot would read
+  * whatever bits sit there and return a silently wrong similarity. The
+  * element check runs only for inputs whose static type allows nulls
+  * (`containsNull`): the minhash and shingle payloads
+  * (sort_array(transform(words, xxhash64)), graft_ngram_hashes) are
+  * typed null-free, so the verify's hot path pays nothing for it. */
 case class JaccardSortedLongs(left: Expression, right: Expression)
     extends BinaryExpression with BinaryTypedInputs {
 
@@ -180,9 +182,29 @@ case class JaccardSortedLongs(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_jaccard_sorted"
 
+  private def mayHoldNull(e: Expression): Boolean = e.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  }
+  private lazy val checkLeft = mayHoldNull(left)
+  private lazy val checkRight = mayHoldNull(right)
+
+  def rejectNulls(a: ArrayData, side: String): Unit = {
+    var i = 0
+    while (i < a.numElements()) {
+      if (a.isNullAt(i))
+        throw new IllegalArgumentException(
+          s"$prettyName: null element at index $i of the $side array " +
+            "(inputs must be null-free sorted hash arrays)")
+      i += 1
+    }
+  }
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
+    if (checkLeft) rejectNulls(x, "left")
+    if (checkRight) rejectNulls(y, "right")
     val n = x.numElements(); val m = y.numElements()
     var i = 0; var j = 0
     var inter = 0; var union = 0
@@ -210,7 +232,13 @@ case class JaccardSortedLongs(left: Expression, right: Expression)
       val last = ctx.freshName("last"); val hasLast = ctx.freshName("hasLast")
       val takeA = ctx.freshName("takeA"); val v = ctx.freshName("v")
       val inA = ctx.freshName("inA"); val inB = ctx.freshName("inB")
+      lazy val ref = ctx.addReferenceObj("jaccardSorted", this,
+        classOf[JaccardSortedLongs].getName)
+      val guard =
+        (if (checkLeft) s"""$ref.rejectNulls($a, "left");\n""" else "") +
+        (if (checkRight) s"""$ref.rejectNulls($b, "right");\n""" else "")
       s"""
+        $guard
         int $n = $a.numElements(); int $m = $b.numElements();
         int $i = 0; int $j = 0;
         int $inter = 0; int $union = 0;
@@ -618,6 +646,12 @@ object VectorFunctions {
 
   def equalPositions(a: Column, b: Column): Column =
     Bridge.column(EqualPositions(Bridge.expression(a), Bridge.expression(b)))
+
+  /** Generator: a band bucket's exactly-once `(doc_a, doc_b)` LSH pairs
+    * (see [[BucketPairs]]). */
+  def bucketPairs(members: Column, band: Column, width: Int, minAgree: Int): Column =
+    Bridge.column(BucketPairs(Bridge.expression(members), Bridge.expression(band),
+      width, minAgree))
 }
 
 /** Session extension registering the native functions for SQL users:

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.util.Det.round4
-import graft.util.{PayloadJoin, TextNorm}
+import graft.util.{FanOut, PayloadJoin, TextNorm}
 import graft.functions.VectorFunctions.jaccard
 
 /** Deduplication family for training-data pipelines.
@@ -120,16 +120,15 @@ object Dedup {
     val idx = corpusIndex.getOrElse(bandedSignatures(corpus, numHashes, bands))
       .select(col("doc_id").as("doc_c"), col("sig").as("sig_c"),
         col("band_idx"), col("band_hash"))
-    // explicit repartition pins the emit stage's parallelism (AQE would
-    // coalesce the KB-scale band exchange under the pair-amplifying join).
-    // `batchBanded` (r17): the ingest loop already computed the batch's
-    // band frame for its intra-batch pass and index append — reuse it
-    // instead of re-running the token-scale signature aggregation.
-    val bb = batchBanded
+    // the batch band exchange is width-pinned ([[graft.util.FanOut]]: AQE
+    // would coalesce the KB-scale band exchange under the pair-amplifying
+    // join). `batchBanded` (r17): the ingest loop already computed the
+    // batch's band frame for its intra-batch pass and index append — reuse
+    // it instead of re-running the signature pipeline.
+    val bb = FanOut.pin(batchBanded
       .getOrElse(bandedSignatures(batch, numHashes, bands))
       .select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
-        col("band_idx"), col("band_hash"))
-      .repartition(col("band_idx"), col("band_hash"))
+        col("band_idx"), col("band_hash")), col("band_idx"), col("band_hash"))
     // slack = ∞ disables the agreement prefilter (the recall-1
     // adjudication config, matching minhashLsh)
     val minAgree = math.max(0.0, (threshold - prefilterSlackSd * math.sqrt(
@@ -138,22 +137,20 @@ object Dedup {
         Seq("band_idx", "band_hash"))
       .filter(graft.functions.VectorFunctions.firstEqualBand(
         col("sig_b"), col("sig_c"), r) === col("band_idx"))
-    val cand = (if (minAgree == 0) cand0
+    val cand = FanOut.pin((if (minAgree == 0) cand0
       else cand0.filter(graft.functions.VectorFunctions.equalPositions(
         col("sig_b"), col("sig_c")) >= minAgree))
-      .select(col("doc_b"), col("doc_c"))
+      .select(col("doc_b"), col("doc_c")),
       // id-pair stage barrier before the payload verify (same finding as
       // minhashLsh: fused, the verify rides the pair-amplifying iterator)
-      .repartition(col("doc_b"))
+      col("doc_b"))
     val bw = batch.select(col("doc_id").as("doc_b"), hashedWordSet.as("wb"))
     val cw = corpus.select(col("doc_id").as("doc_c"), hashedWordSet.as("wc"))
-    cand
+    verifiedJaccard(cand
       .join(payloadJoin.hint(bw), "doc_b")
-      .join(payloadJoin.hint(cw), "doc_c")
-      .withColumn("jaccard",
-        graft.functions.VectorFunctions.jaccardSortedLongs(col("wb"), col("wc")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_b"), col("doc_c"), round4(col("jaccard")).as("jaccard"))
+      .join(payloadJoin.hint(cw), "doc_c"),
+      col("wb"), col("wc"), threshold)
+      .select(col("doc_b"), col("doc_c"), col("jaccard"))
     // no presentation sort: pair-set output (see minhashLsh)
   }
 
@@ -174,20 +171,21 @@ object Dedup {
     // in bytes (the scan often yields ONE partition) while the block join
     // emits quadratically per block — without the explicit exchange the
     // whole pair emit would run on the scan's task count
-    val pairs = ids.select(col("doc_id").as("doc_a"), col("lang"), col("band"))
-      .repartition(col("lang"), col("band"))
+    val pairs = FanOut.pin(
+        ids.select(col("doc_id").as("doc_a"), col("lang"), col("band")),
+        col("lang"), col("band"))
       .join(ids.select(col("doc_id").as("doc_b"), col("lang").as("lang_b"),
         col("band").as("band_b")),
         col("lang") === col("lang_b") && col("band") === col("band_b") &&
           col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b")
-      // stage barrier before the verify — same finding as minhashLsh: fused
-      // into the block-join emit stage, the payload probes + set jaccard run
-      // inside the pair-amplifying iterator and cost 3x (id-pair exchange is
-      // 16 B/row and co-partitions the first payload attach)
-      .repartition(col("doc_a"))
+    // stage barrier before the verify — same finding as minhashLsh: fused
+    // into the block-join emit stage, the payload probes + set jaccard run
+    // inside the pair-amplifying iterator and cost 3x (id-pair exchange is
+    // 16 B/row and co-partitions the first payload attach)
+    val pinned = FanOut.pin(pairs, col("doc_a"))
     val pay = documents.select(col("doc_id"), payload.as("p"))
-    pairs
+    pinned
       .join(payloadJoin.hint(pay.select(col("doc_id").as("doc_a"), col("p").as("pa"))), "doc_a")
       .join(payloadJoin.hint(pay.select(col("doc_id").as("doc_b"), col("p").as("pb"))), "doc_b")
       .withColumn("jaccard", verify(col("pa"), col("pb")))
@@ -217,6 +215,38 @@ object Dedup {
     blockedJaccard(documents, hashedWordSet, threshold, payloadJoin,
       graft.functions.VectorFunctions.jaccardSortedLongs)
 
+  /** (doc_id, sig, band_idx, band_hash) — the LSH band frame of a corpus:
+    * each doc's MinHash signature computed IN-ROW from its hashed word set
+    * ([[graft.functions.MinHashOfHashes]] over [[hashedWordSet]] — one
+    * xxhash64 per distinct word, then k seeded re-hashes and a running
+    * min; no token explode, no signature aggregate, no exchange),
+    * exploded into `bands` bucket rows. Values are bit-identical to the
+    * former explode → `graft_minhash` aggregate form: `xxhash64(w)` (seed
+    * 42) is that aggregate's first-level token hash and `words` is already
+    * distinct. Docs whose word array is null or empty have no signature
+    * and drop out, as they did under the aggregate (spec-pinned).
+    * This IS the persistable near-dup INDEX of a growing corpus: write it
+    * once per ingest generation and every later batch joins against it
+    * ([[incrementalMinhash]]) without touching corpus text again. */
+  def bandedSignatures(documents: DataFrame, numHashes: Int = 64,
+                       bands: Int = 8): DataFrame = {
+    require(numHashes % bands == 0,
+      s"numHashes ($numHashes) must be divisible by bands ($bands)")
+    bandRows(documents.select(col("doc_id"), hashedWordSet.as("__wh"))
+      .filter(size(col("__wh")) > 0)
+      .select(col("doc_id"),
+        graft.functions.MinHashAgg.minhashOfHashes(col("__wh"), numHashes).as("sig")),
+      bands, numHashes / bands)
+  }
+
+  /** (doc_id, sig) → one (doc_id, sig, band_idx, band_hash) row per band;
+    * band_hash = xxhash64 over the band's `r` signature positions. */
+  private[graft] def bandRows(sigs: DataFrame, bands: Int, r: Int): DataFrame =
+    sigs.select(col("doc_id"), col("sig"),
+      posexplode(array((0 until bands).map(bi =>
+        xxhash64((bi * r until (bi + 1) * r).map(j => col("sig")(j)): _*)): _*))
+        .as(Seq("band_idx", "band_hash")))
+
   /** MinHash + LSH near-dup: k hash functions over the word set via seeded
     * xxhash64; signatures cut into b bands of r rows; docs sharing a band
     * bucket become candidates; candidates verified with exact Jaccard.
@@ -226,44 +256,39 @@ object Dedup {
     * (1/8)^(1/8) ~ 0.77 — recall ~0.77 at J=0.8, ~0.99 at J=0.9, while a
     * background pair at J~0.55 collides in under 1% of bands. That keeps
     * candidates ≈ O(near-dups) — the 100 TB property; r (rows per band) is
-    * the knob that holds it on similarity-dense corpora. */
-  /** (doc_id, sig, band_idx, band_hash) — the LSH band frame of a corpus:
-    * one-pass native MinHash signature aggregate (map-side partial agg,
-    * one Array[Long] buffer per doc) exploded into `bands` bucket rows.
-    * This IS the persistable near-dup INDEX of a growing corpus: write it
-    * once per ingest generation and every later batch joins against it
-    * ([[incrementalMinhash]]) without touching corpus text again. */
-  def bandedSignatures(documents: DataFrame, numHashes: Int = 64,
-                       bands: Int = 8): DataFrame = {
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be divisible by bands ($bands)")
-    val r = numHashes / bands
-    val toks = documents.select(col("doc_id"), explode(words).as("t"))
-    toks.groupBy("doc_id")
-      .agg(graft.functions.MinHashAgg.minhash(col("t"), numHashes).as("sig"))
-      .select(col("doc_id"), col("sig"),
-        posexplode(array((0 until bands).map(bi =>
-          xxhash64((bi * r until (bi + 1) * r).map(j => col("sig")(j)): _*)): _*))
-          .as(Seq("band_idx", "band_hash")))
-  }
-
-  /** `maxBandDf` (r13) is the minhash analogue of the substring family's
-    * window df cap: a band BUCKET shared by f docs emits f(f−1)/2
-    * candidate rows from the band join — on a real crawl, boilerplate
-    * that dominates a band's minima (a long shared header out-weighing
-    * short bodies) creates buckets of thousands of docs whose pairs are
-    * mostly below-threshold noise the verify then pays for (measured in
-    * SCALE_DEMO_r13: the hot-bucket fan-out grows ~100× on a 10×
-    * corpus). With a finite cap, buckets with > maxBandDf docs drop
-    * BEFORE the join and pair dedup becomes "first agreeing NON-HOT
-    * band" (computable map-side: in an agreeing band both docs share the
-    * band value, hence the same hotness — one doc's hot-band bitmask
-    * decides for the pair). The trade, explicit as everywhere in the df
-    * family: a pair agreeing ONLY in hot buckets drops — which includes
-    * exact-copy mega-clusters (all bands hot past the cap), so run exact
-    * dedup (D1) first, as every production pipeline does; the capped
+    * the knob that holds it on similarity-dense corpora.
+    *
+    * Candidate generation is one group-by on (band_idx, band_hash) feeding
+    * the in-bucket pair kernel [[graft.functions.BucketPairs]]: each bucket
+    * collects its members' (doc_id, sig, hot mask) and the kernel emits a
+    * pair only from the pair's first agreeing non-hot band and only when
+    * its signature agreement reaches the prefilter bound — the exactly-once
+    * rule and the prefilter, fused with the pair walk instead of filtering
+    * a band self-join's output. Nothing else is materialized per pair: no
+    * pair is built twice, no signature is copied into a joined row, and
+    * pairs stream out of the kernel, so a bucket costs memory for its
+    * MEMBERS (f docs · numHashes longs), never for its f(f−1)/2 pairs. The
+    * pair-check work per bucket is still quadratic in f, which is what
+    * `maxBandDf` bounds.
+    *
+    * `maxBandDf` (r13) is the minhash analogue of the substring family's
+    * window df cap: a band BUCKET shared by f docs costs f(f−1)/2 pair
+    * checks — on a real crawl, boilerplate that dominates a band's minima
+    * (a long shared header out-weighing short bodies) creates buckets of
+    * thousands of docs whose pairs are mostly below-threshold noise the
+    * verify then pays for (measured in SCALE_DEMO_r13: the hot-bucket
+    * fan-out grows ~100× on a 10× corpus), and the bucket's member list is
+    * held in memory. With a finite cap, buckets with > maxBandDf docs drop
+    * BEFORE the bucket aggregate and pair dedup becomes "first agreeing
+    * NON-HOT band" (an agreeing band means equal band values, so both docs
+    * share that bucket's hotness — the OR of the two docs' hot-band
+    * bitmasks speaks for the pair). The trade, explicit as everywhere in
+    * the df family: a pair agreeing ONLY in hot buckets drops — which
+    * includes exact-copy mega-clusters (all bands hot past the cap), so run
+    * exact dedup (D1) first, as every production pipeline does; the capped
     * path's extra exchanges are hot-bucket-sized, never corpus-sized.
-    * Default Int.MaxValue = today's uncapped behavior, bit-for-bit. */
+    * Default Int.MaxValue = uncapped: the same kernel with an all-zero hot
+    * mask. */
   def minhashLsh(documents: DataFrame, numHashes: Int = 64, bands: Int = 8,
                  threshold: Double = 0.8,
                  payloadJoin: PayloadJoin = PayloadJoin.Auto,
@@ -273,32 +298,13 @@ object Dedup {
     require(numHashes % bands == 0,
       s"numHashes ($numHashes) must be divisible by bands ($bands)")
     val r = numHashes / bands
-    // Bands carry (doc_id, band, sig) — token arrays NEVER ride the pair
-    // shuffle; they re-attach only for the prefiltered candidates. The
-    // signature (numHashes longs per doc-band row) is carried deliberately:
-    // it lets a pair colliding in k bands keep exactly ONE row via the
-    // first-agreeing-band filter (a map-side native expression) where the
-    // former dropDuplicates re-shuffled the RAW pair set — the largest
-    // frame in the pipeline (10.1 M raw vs 4.1 M distinct at sf0.1) — and
-    // it powers the signature-agreement prefilter below. The extra bytes
-    // cost O(n·bands·numHashes) on the banded frame, which is small next
-    // to the pair set exactly when pair volume is big enough to matter.
-    // The explicit repartition pins the join's task count: the banded frame
-    // is KB-scale in BYTES while the bucket join can emit orders of
-    // magnitude more pairs, and AQE's byte-based partition coalescing would
-    // otherwise shrink this exchange to 1-2 tasks and run the whole emit
-    // serially (measured 2x on the sf0.1 corpus). A user-specified
-    // repartition is never coalesced, and it co-partitions the equi-join
-    // key as a bonus.
     // `precomputedBanded` (r17): a caller that also persists/appends the
     // band index (the ingest loop) passes its already-checkpointed
-    // [[bandedSignatures]] frame so the signature aggregation — the
-    // token-scale explode + 64-hash MinHash, the most expensive stage of
-    // the pipeline — runs once per batch, not once per consumer. The
-    // frame must be exactly bandedSignatures(documents, numHashes, bands).
+    // [[bandedSignatures]] frame so the signature pipeline runs once per
+    // batch, not once per consumer. The frame must be exactly
+    // bandedSignatures(documents, numHashes, bands).
     val banded = precomputedBanded
       .getOrElse(bandedSignatures(documents, numHashes, bands))
-      .repartition(col("band_idx"), col("band_hash"))
     // Prefilter: with k hashes the agreement fraction estimates J with sd
     // sqrt(J(1-J)/k) (~0.05 at k=64, J=0.8); 2.5 sd of slack keeps the miss
     // probability for a true threshold-J pair under ~1% while the exact
@@ -309,95 +315,93 @@ object Dedup {
     // generation and the exact verify.
     val minAgree = math.max(0.0, (threshold - prefilterSlackSd * math.sqrt(
       threshold * (1 - threshold) / numHashes)) * numHashes).floor.toInt
-    // shuffle_hash hint: both sides sit on the SAME repartition exchange, so
-    // a shuffled join computes the signature subtree once (ReusedExchange);
-    // letting AQE broadcast one side would duplicate the whole sig
-    // aggregation into the broadcast branch
-    def selfJoin(side: DataFrame) =
-      side.as("x").hint("shuffle_hash").join(side.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-        col("x.band_hash") === col("y.band_hash") &&
-        col("x.doc_id") < col("y.doc_id"))
-    val cand0 =
-      if (maxBandDf == Int.MaxValue)
-        selfJoin(banded).filter(graft.functions.VectorFunctions.firstEqualBand(
-          col("x.sig"), col("y.sig"), r) === col("x.band_idx"))
+    val cand = bandCandidates(banded, bands, r, minAgree, maxBandDf)
+    // Stage barrier before the verify: without it the payload probes +
+    // set-jaccard fuse INTO the pair-emit stage and the whole verify rides
+    // the pair iterator (measured 12.5 s vs 4.3 s at sf0.1 on the former
+    // band join). The exchange is id-pairs only (16 B/row), co-partitions
+    // the first payload attach, and gives AQE a replan point with true
+    // pair stats.
+    val pinned = FanOut.pin(cand, col("doc_a"))
+    // The docs side is usually tiny next to millions of candidate pairs, but
+    // the choice is the caller's PayloadJoin strategy (default: AQE decides),
+    // never a hardcoded hint that would OOM at corpus scale.
+    val docsW = documents.select(col("doc_id"), hashedWordSet.as("w"))
+    verifiedJaccard(pinned
+      .join(payloadJoin.hint(docsW.select(col("doc_id").as("doc_a"), col("w").as("wa"))), "doc_a")
+      .join(payloadJoin.hint(docsW.select(col("doc_id").as("doc_b"), col("w").as("wb"))), "doc_b"),
+      col("wa"), col("wb"), threshold)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    // NO presentation sort: the output is a pair SET, and a global orderBy
+    // would range-sample the plan — re-executing the whole verify stage just
+    // to pick sort bounds (measured 3x cost at sf0.1). Callers needing a
+    // canonical order sort the (small) verified output themselves.
+  }
+
+  /** (doc_a, doc_b) LSH candidates of a band frame (doc_id, sig, band_idx,
+    * band_hash): each pair at most once, from its first agreeing non-hot
+    * band, with signature agreement >= `minAgree` — the candidate half of
+    * [[minhashLsh]] (see there for the kernel and the `maxBandDf` cap). */
+  private[graft] def bandCandidates(banded: DataFrame, bands: Int, r: Int,
+                                    minAgree: Int, maxBandDf: Int): DataFrame = {
+    val members =
+      if (maxBandDf == Int.MaxValue) banded.withColumn("__hotmask", lit(0L))
       else {
         require(bands <= 64,
           s"the hot-band bitmask is a Long — maxBandDf needs bands <= 64, got $bands")
-        // Hot-bucket cap (scaladoc above). All the cap machinery is
-        // hot-sized: the hot list (boilerplate buckets only) broadcasts;
-        // the per-doc hot-band bitmask aggregates ONLY rows inside hot
-        // buckets (the inner join drops everything else) and broadcasts
-        // back. The LAZY checkpoint is the compute-once barrier for the
-        // four consumers (bucket counts, mask, both self-join sides):
-        // without it, column pruning specializes the band exchange per
-        // consumer — five non-canonical exchanges, the signature
-        // aggregation re-executing behind each (measured; ReusedExchange
-        // only dedupes IDENTICAL subtrees). Above the barrier the cheap
-        // consumers re-cluster from checkpointed rows (AQE plans a lazy
-        // checkpoint as UnknownPartitioning: the hot-count exchange is
-        // post-partial-agg, bucket-count-sized; the mask exchange is
-        // hot-rows-only) and the two SELF-JOIN sides are kept plan-
-        // IDENTICAL so the one full-width band exchange materializes
-        // once and the other side is a ReusedExchange (PlanSpec-pinned).
+        // Hot-bucket cap (scaladoc above). The cap machinery is hot-sized:
+        // the hot list (boilerplate buckets only) broadcasts; the per-doc
+        // hot-band bitmask aggregates ONLY rows inside hot buckets (the
+        // inner join drops everything else) and broadcasts back. The LAZY
+        // checkpoint is the compute-once barrier for the three consumers
+        // (bucket counts, mask, bucket members): without it, column
+        // pruning specializes the banded frame per consumer and the
+        // signature pipeline re-executes behind each (PlanSpec-pinned).
         val bandedC = banded.localCheckpoint(false)
         val hot = bandedC.groupBy("band_idx", "band_hash")
           .agg(count(lit(1)).as("__df")).filter(col("__df") > maxBandDf)
           .select("band_idx", "band_hash")
         val mask = bandedC.join(broadcast(hot), Seq("band_idx", "band_hash"))
           .groupBy("doc_id")
-          .agg(sum(expr("shiftleft(1L, cast(band_idx as int))")).as("__hotmask"))
-        val capped = bandedC
-          .join(broadcast(hot.withColumn("__h", lit(true))),
-            Seq("band_idx", "band_hash"), "left")
-          .filter(col("__h").isNull).drop("__h")
-          .join(broadcast(mask), Seq("doc_id"), "left")
+          .agg(sum(expr("shiftleft(1L, band_idx)")).as("__hotmask"))
+        // a row sits in a hot bucket iff its own band's bit is set in its
+        // doc's mask: the mask attach also drops the hot buckets
+        bandedC.join(broadcast(mask), Seq("doc_id"), "left")
           .withColumn("__hotmask", coalesce(col("__hotmask"), lit(0L)))
-        // exactly-once rule = first agreeing NON-HOT band, a map-side
-        // when-chain: an agreeing band means equal band values, so
-        // either doc's hotness bit speaks for the pair — hot bits are
-        // consulted only under bandEq, where x's and y's provably
-        // match, so OR-ing them is semantically x's bit alone. The OR
-        // is there for the PLAN, not the semantics: referencing both
-        // masks keeps the two join sides column-identical (x-only left
-        // y's mask dead, and the pruned y subtree no longer matched
-        // x's exchange — the full-width band shuffle ran twice).
-        def bandEq(j: Int) =
-          slice(col("x.sig"), j * r + 1, r) === slice(col("y.sig"), j * r + 1, r)
-        def hotBit(j: Int) =
-          shiftright(col("x.__hotmask").bitwiseOR(col("y.__hotmask")), j)
-            .bitwiseAND(1L) === 1L
-        val firstOk = (0 until bands).foldRight(lit(-1)) { (j, rest) =>
-          when(bandEq(j) && !hotBit(j), lit(j)).otherwise(rest) }
-        selfJoin(capped).filter(firstOk === col("x.band_idx"))
+          .filter(expr("shiftright(__hotmask, band_idx) & 1L") === 0L)
       }
-    val cand = (if (minAgree == 0) cand0
-      else cand0.filter(graft.functions.VectorFunctions.equalPositions(
-        col("x.sig"), col("y.sig")) >= minAgree))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      // Stage barrier before the verify: without it the payload probes +
-      // set-jaccard fuse INTO the band-join emit stage and the whole verify
-      // rides the explode iterator (measured 12.5 s vs 4.3 s at sf0.1).
-      // The exchange is id-pairs only (16 B/row), co-partitions the first
-      // payload attach, and gives AQE a replan point with true pair stats.
-      .repartition(col("doc_a"))
-    // The docs side is usually tiny next to millions of candidate pairs, but
-    // the choice is the caller's PayloadJoin strategy (default: AQE decides),
-    // never a hardcoded hint that would OOM at corpus scale.
-    val docsW = documents.select(col("doc_id"), hashedWordSet.as("w"))
-    cand
-      .join(payloadJoin.hint(docsW.select(col("doc_id").as("doc_a"), col("w").as("wa"))), "doc_a")
-      .join(payloadJoin.hint(docsW.select(col("doc_id").as("doc_b"), col("w").as("wb"))), "doc_b")
-      .withColumn("jaccard",
-        graft.functions.VectorFunctions.jaccardSortedLongs(col("wa"), col("wb")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round4(col("jaccard")).as("jaccard"))
-    // NO presentation sort: the output is a pair SET, and a global orderBy
-    // would range-sample the plan — re-executing the whole verify stage just
-    // to pick sort bounds (measured 3x cost at sf0.1). Callers needing a
-    // canonical order sort the (small) verified output themselves.
+    // Bucket members carry (doc_id, sig, hot mask) — token arrays NEVER
+    // ride the band shuffle; they re-attach only for the emitted
+    // candidates. The signature (numHashes longs per doc-band row) is what
+    // the kernel's exactly-once rule and prefilter read. The band exchange
+    // is KB-scale in BYTES while the pair walk above it is quadratic per
+    // bucket, so its width is pinned ([[graft.util.FanOut]]): AQE would
+    // coalesce it by bytes to 1-2 tasks. Singleton buckets pair nothing
+    // and stop at the aggregate.
+    FanOut.pin(
+        members.select("doc_id", "sig", "__hotmask", "band_idx", "band_hash"),
+        col("band_idx"), col("band_hash"))
+      .groupBy("band_idx", "band_hash")
+      .agg(collect_list(struct(col("doc_id"), col("sig"), col("__hotmask")))
+        .as("__members"))
+      .filter(size(col("__members")) > 1)
+      .select(graft.functions.VectorFunctions.bucketPairs(
+        col("__members"), col("band_idx"), r, minAgree))
   }
+
+  /** The minhash family's exact verify over payload-attached pairs: the
+    * sorted-hash set Jaccard, kept at `>= threshold` and rounded. The
+    * Jaccard is fenced ([[graft.functions.EvalOnce]]): unfenced, the
+    * threshold filter pushes into the payload join's condition by
+    * substituting the kernel call, so every surviving pair ran the merge
+    * walk twice (condition, then projection). */
+  private def verifiedJaccard(pairs: DataFrame, a: Column, b: Column,
+                              threshold: Double): DataFrame =
+    pairs
+      .withColumn("jaccard", graft.functions.EvalOnce(
+        graft.functions.VectorFunctions.jaccardSortedLongs(a, b)))
+      .filter(col("jaccard") >= threshold)
+      .withColumn("jaccard", round4(col("jaccard")))
 
   /** Word n-gram (shingle) Jaccard near-dup pairs: contiguous 3-word
     * shingles instead of the word *set*, so word ORDER matters — two docs
@@ -1210,10 +1214,10 @@ object Dedup {
     // bijection onto disjoint bit ranges, the pair key injective)
     def clean(x: Column, b: Int): Column =
       bandPieces(b).map(piece(x, _) === 0).reduce(_ && _)
-    val chunked = bandKeyFrame(sigs, nChunks, pairBands)
-      // pin the emit stage's task count (see minhashLsh: AQE byte-based
-      // coalescing is blind to join-output amplification)
-      .repartition(col("chunk_idx"), col("chunk"))
+    // pin the emit stage's task count (see minhashLsh: AQE byte-based
+    // coalescing is blind to join-output amplification)
+    val chunked = FanOut.pin(bandKeyFrame(sigs, nChunks, pairBands),
+      col("chunk_idx"), col("chunk"))
     val xr = col("x.sig").bitwiseXOR(col("y.sig"))
     val firstBand = (1 until bandPieces.size - 1)
       .foldLeft(when(clean(xr, 0), 0))((acc, b) => acc.when(clean(xr, b), b))
@@ -1287,10 +1291,9 @@ object Dedup {
     val spans = chunkSpans(nChunks)
     val piece = sigPiece(spans) _
     val bands = bandPieceSets(nChunks, pairBands)
-    val bc = sigChunks(batchSigs, nChunks, pairBands)
+    val bc = FanOut.pin(sigChunks(batchSigs, nChunks, pairBands)
       .select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
-        col("chunk_idx"), col("chunk"))
-      .repartition(col("chunk_idx"), col("chunk"))
+        col("chunk_idx"), col("chunk")), col("chunk_idx"), col("chunk"))
     val probeKeys = bc.select("chunk_idx", "chunk").distinct()
     val hits = corpusChunks
       .join(broadcast(probeKeys), Seq("chunk_idx", "chunk"), "left_semi")

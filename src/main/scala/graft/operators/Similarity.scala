@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.util.Det.round4
-import graft.util.PayloadJoin
+import graft.util.{FanOut, PayloadJoin}
 import graft.functions.VectorFunctions.cosine
 
 /** Similarity search over an embedding column (Array[Float]).
@@ -76,11 +76,11 @@ object Similarity {
                     blocks: Int = 8): DataFrame = {
     val e = embeddings.select(col("vec_id"), col("embedding"),
       pmod(col("vec_id"), lit(blocks)).cast("int").as("blk"))
-    val left = e.withColumn("q", explode(sequence(col("blk"), lit(blocks - 1))))
-      .withColumnRenamed("blk", "p")
-      // pin the compare stage's task count: the n² compare work dwarfs the
-      // input bytes, so AQE/scan partitioning must not serialize it
-      .repartition(col("p"), col("q"))
+    // pin the compare stage's task count: the n² compare work dwarfs the
+    // input bytes, so AQE/scan partitioning must not serialize it
+    val left = FanOut.pin(
+      e.withColumn("q", explode(sequence(col("blk"), lit(blocks - 1))))
+        .withColumnRenamed("blk", "p"), col("p"), col("q"))
     val right = e.withColumn("p", explode(sequence(lit(0), col("blk"))))
       .withColumnRenamed("blk", "q")
     val removed = left.as("x").join(right.as("y"),
@@ -626,20 +626,20 @@ object Similarity {
     // first-agreeing-table filter (FirstEqualBand with width 1) — the
     // former dropDuplicates re-shuffled the RAW pair set (see
     // Dedup.minhashLsh, same finding).
-    val hashed = lshBuckets(embeddings, nTables, planesPerTable, dim)
-      // pin the emit stage's task count (see Dedup.minhashLsh: AQE
-      // byte-based coalescing is blind to join-output amplification)
-      .repartition(col("table_idx"), col("bucket"))
-    val cand = hashed.as("x").hint("shuffle_hash").join(hashed.as("y"),
+    // pin the emit stage's task count (see Dedup.minhashLsh: AQE
+    // byte-based coalescing is blind to join-output amplification)
+    val hashed = FanOut.pin(lshBuckets(embeddings, nTables, planesPerTable, dim),
+      col("table_idx"), col("bucket"))
+    // stage barrier before the verify: fused into the bucket-join emit
+    // stage, the payload probes + cosine ran inside the pair-amplifying
+    // iterator (see Dedup.minhashLsh — 3x measured there)
+    val cand = FanOut.pin(hashed.as("x").hint("shuffle_hash").join(hashed.as("y"),
         col("x.table_idx") === col("y.table_idx") &&
         col("x.bucket") === col("y.bucket") && col("x.vec_id") < col("y.vec_id"))
       .filter(graft.functions.VectorFunctions.firstEqualBand(
         col("x.bks"), col("y.bks"), 1) === col("x.table_idx"))
-      .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
-      // stage barrier before the verify: fused into the bucket-join emit
-      // stage, the payload probes + cosine ran inside the pair-amplifying
-      // iterator (see Dedup.minhashLsh — 3x measured there)
-      .repartition(col("vec_a"))
+      .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b")),
+      col("vec_a"))
     val e = embeddings.select(col("vec_id"), col("embedding"))
     cand
       .join(payloadJoin.hint(e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))), "vec_a")
@@ -670,23 +670,22 @@ object Similarity {
                                corpusVecs: DataFrame,
                                nTables: Int = 16, planesPerTable: Int = 4,
                                dim: Int = 64, minCos: Double = 0.4): DataFrame = {
-    val bb = lshBuckets(batch, nTables, planesPerTable, dim)
+    val bb = FanOut.pin(lshBuckets(batch, nTables, planesPerTable, dim)
       .select(col("vec_id").as("vec_b"), col("bks").as("bks_b"),
-        col("table_idx"), col("bucket"))
-      .repartition(col("table_idx"), col("bucket"))
+        col("table_idx"), col("bucket")), col("table_idx"), col("bucket"))
     val probeKeys = bb.select("table_idx", "bucket").distinct()
     val hits = corpusIndex
       .join(broadcast(probeKeys), Seq("table_idx", "bucket"), "left_semi")
       .select(col("vec_id").as("vec_c"), col("bks").as("bks_c"),
         col("table_idx"), col("bucket"))
-    val cand = bb.hint("shuffle_hash").join(hits, Seq("table_idx", "bucket"))
-      .filter(graft.functions.VectorFunctions.firstEqualBand(
-        col("bks_c"), col("bks_b"), 1) === col("table_idx"))
-      .select(col("vec_c"), col("vec_b"))
-      // stage barrier before the verify (the lshCandidates finding);
-      // the lazy checkpoint stops the probe join re-executing for the
-      // corpus-prune reference below
-      .repartition(col("vec_b"))
+    // stage barrier before the verify (the lshCandidates finding); the
+    // lazy checkpoint stops the probe join re-executing for the
+    // corpus-prune reference below
+    val cand = FanOut.pin(
+      bb.hint("shuffle_hash").join(hits, Seq("table_idx", "bucket"))
+        .filter(graft.functions.VectorFunctions.firstEqualBand(
+          col("bks_c"), col("bks_b"), 1) === col("table_idx"))
+        .select(col("vec_c"), col("vec_b")), col("vec_b"))
       .localCheckpoint(false)
     // STRUCTURALLY corpus-free embedding attach (the r12 containment
     // finding): prune the corpus vectors to the candidate-linked ids

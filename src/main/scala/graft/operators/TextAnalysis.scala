@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.util.Det.round4
-import graft.util.TextNorm
+import graft.util.{FanOut, TextNorm}
 
 /** Text analysis for training-data curation: language ID, quality scoring,
   * token counting, fingerprinting. All pure per-row `functions._`
@@ -1177,11 +1177,15 @@ object TextAnalysis {
       if (dfBroadcastBudget == Long.MaxValue ||
           dft.count() <= dfBroadcastBudget) broadcast(dft)
       else dft
-    val wtd = tf.join(dftSized, Seq("t"))
+    // The weighted postings are width-pinned before the query-term probe:
+    // they come straight off the corpus scan (often ONE split), and the
+    // probe + partial (query, doc) aggregate above them is the pass's
+    // widest stage — unpinned it ran on the scan's task count.
+    val wtd = FanOut.pin(tf.join(dftSized, Seq("t"))
       .crossJoin(broadcast(stats))
       .select(col("t"), col("doc_id"),
         round(idf * (col("tf").cast("double") * lit(2.2)) / denom * 1e6, 0)
-          .cast("long").as("w_micro"))
+          .cast("long").as("w_micro")), col("doc_id"))
     val qt = queries.select(col("doc_id").as("query_id"),
         explode(distinctWords).as("t"))
       .filter(col("t") =!= "")

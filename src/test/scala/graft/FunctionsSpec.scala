@@ -7,6 +7,14 @@ import graft.sources.Tables
 
 class FunctionsSpec extends SparkSpec {
 
+  /** The token-aggregate MinHash form ([[graft.functions.MinHashSignature]])
+    * — the reference the in-row signature is pinned against. */
+  private def minhashAgg(token: org.apache.spark.sql.Column, k: Int) =
+    org.apache.spark.sql.graftbridge.Bridge.column(
+      graft.functions.MinHashSignature(
+        org.apache.spark.sql.graftbridge.Bridge.expression(token), k)
+        .toAggregateExpression())
+
   test("native cosine matches the higher-order-function computation") {
     val e = Tables.embeddings(spark, sf).limit(50)
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("q"))
@@ -46,7 +54,7 @@ class FunctionsSpec extends SparkSpec {
         split(lower(trim(col("text"))), " "))).as("t"))
     val k = 16
     val native = toks.groupBy("doc_id")
-      .agg(graft.functions.MinHashAgg.minhash(col("t"), k).as("sig"))
+      .agg(minhashAgg(col("t"), k).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
     val aggs = (0 until k).map(i => min(xxhash64(col("t"), lit(i))).as(s"m$i"))
     val columnar = toks.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
@@ -141,6 +149,73 @@ class FunctionsSpec extends SparkSpec {
     val dup = Seq((Seq(1L, 5L, 5L, 9L), Seq(5L, 9L, 9L))).toDF("a", "b")
     assert(dup.select(VectorFunctions.jaccardSortedLongs(col("a"), col("b")))
       .head.getDouble(0) == 2.0 / 3.0)
+  }
+
+  test("sorted-long jaccard rejects null elements with a named error; " +
+       "a null array is null") {
+    import spark.implicits._
+    val df = Seq((Seq[java.lang.Long](1L, null, 9L), Seq[java.lang.Long](1L, 9L)))
+      .toDF("a", "b")
+    for (sides <- Seq(Seq(col("a"), col("b")), Seq(col("b"), col("a")))) {
+      // interpreted and codegen'd paths both guard
+      for (codegen <- Seq("true", "false")) {
+        spark.conf.set("spark.sql.codegen.wholeStage", codegen)
+        try {
+          val e = intercept[Exception](df.select(
+            VectorFunctions.jaccardSortedLongs(sides(0), sides(1))).collect())
+          val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+            .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" | ")
+          assert(msgs.contains("graft_jaccard_sorted: null element at index 1"), msgs)
+        } finally spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+    val nullArr = Seq((Option.empty[Seq[Long]], Seq(1L))).toDF("a", "b")
+    assert(nullArr.select(VectorFunctions.jaccardSortedLongs(col("a"), col("b")))
+      .head.isNullAt(0))
+    // null-free input typed containsNull=true still computes normally
+    val typedNullable = Seq((Seq[java.lang.Long](1L, 5L), Seq[java.lang.Long](5L)))
+      .toDF("a", "b")
+    assert(typedNullable.select(VectorFunctions.jaccardSortedLongs(col("a"), col("b")))
+      .head.getDouble(0) == 0.5)
+  }
+
+  test("in-row MinHash signature is bit-identical to the token aggregate " +
+       "(random, empty and multi-byte tokens), and the band index is unchanged") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(31)
+    val alphabet = Seq("a", "b", "z", "é", "ß", "日本", "🙂", "\u0000", "x y")
+    def tok() = (1 to 1 + rnd.nextInt(4)).map(_ => alphabet(rnd.nextInt(alphabet.size))).mkString
+    val docs = (0 until 60).map { i =>
+      val text = i % 10 match {
+        case 0 => null                                   // no word array
+        case 1 => ""                                     // one empty word
+        case 2 => "   "                                  // trims to ""
+        case _ => (1 to 1 + rnd.nextInt(30)).map(_ => tok()).mkString(" ")
+      }
+      (i.toLong, text)
+    }.toDF("doc_id", "text")
+    val k = 24
+    val words = array_distinct(split(lower(trim(col("text"))), " "))
+    val reference = docs.select(col("doc_id"), explode(words).as("t"))
+      .groupBy("doc_id").agg(minhashAgg(col("t"), k).as("sig"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val inRow = docs.select(col("doc_id"), sort_array(transform(words, w => xxhash64(w))).as("h"))
+      .filter(size(col("h")) > 0)
+      .select(col("doc_id"), graft.functions.MinHashAgg.minhashOfHashes(col("h"), k).as("sig"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(reference.size == 54 && inRow == reference)
+    // the persisted band index: same rows, same schema, value for value
+    val banded = graft.operators.Dedup.bandedSignatures(docs, k, 4)
+    val bandedRef = docs.select(col("doc_id"), explode(words).as("t"))
+      .groupBy("doc_id").agg(minhashAgg(col("t"), k).as("sig"))
+      .select(col("doc_id"), col("sig"),
+        posexplode(array((0 until 4).map(bi =>
+          xxhash64((bi * 6 until (bi + 1) * 6).map(j => col("sig")(j)): _*)): _*))
+          .as(Seq("band_idx", "band_hash")))
+    assert(banded.schema.map(f => (f.name, f.dataType)) ==
+      bandedRef.schema.map(f => (f.name, f.dataType)))
+    assert(banded.exceptAll(bandedRef).isEmpty && bandedRef.exceptAll(banded).isEmpty)
+    assert(banded.count() == 54 * 4)
   }
 
   test("first-equal-band and equal-positions kernels match brute force") {

@@ -110,62 +110,87 @@ class PlanSpec extends SparkSpec {
 
   test("candidate generators pin their emit-stage parallelism (user repartition)") {
     // AQE byte-based coalescing shrinks the KB-scale banded/bucketed frames
-    // to 1-2 partitions and serializes the pair emit (r5 finding: 2x+) —
-    // pin the explicit block-key repartition that prevents it
+    // to 1-2 partitions and serializes the pair emit (r5 finding: 2x+).
+    // A count-less repartition(keys) is REPARTITION_BY_COL, which AQE
+    // coalesces all the same — every fan-out repartition must carry an
+    // explicit partition count (graft.util.FanOut: the session width)
+    val docs = Tables.documents(spark, sf)
     Seq(
-      "minhashLsh" -> Dedup.minhashLsh(Tables.documents(spark, sf)),
-      "simhash" -> Dedup.simhash(Tables.documents(spark, sf)),
-      "jaccardPairs" -> Dedup.jaccardPairs(Tables.documents(spark, sf)),
+      "minhashLsh" -> Dedup.minhashLsh(docs),
+      "simhash" -> Dedup.simhash(docs),
+      "jaccardPairs" -> Dedup.jaccardPairs(docs),
       "lshCandidates" -> Similarity.lshCandidates(Tables.embeddings(spark, sf)),
       "semanticDedup" -> Similarity.semanticDedup(Tables.embeddings(spark, sf)),
+      "bm25TopK" -> TextAnalysis.bm25TopK(docs.filter(col("doc_id") % 50 =!= 0),
+        docs.filter(col("doc_id") % 50 === 0)),
     ).foreach { case (name, df) =>
       val reparts = df.queryExecution.optimizedPlan.collect {
         case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression => r
       }
       assert(reparts.nonEmpty, s"$name lost its emit-parallelism repartition")
+      assert(reparts.forall(_.optNumPartitions.contains(
+          spark.conf.get("spark.sql.shuffle.partitions").toInt)),
+        s"$name has a repartition AQE may coalesce: $reparts")
     }
   }
 
-  test("capped minhash computes the banded-signature exchange once " +
-       "(hot counts, hot mask, and the self-join all reuse it)") {
-    // the maxBandDf path references the expensive banded subtree from
-    // FOUR plans (bucket df counts, per-doc hot-band bitmask, both
-    // self-join sides); correctness never depended on compute-once, but
-    // cost does — column pruning specializes the band exchange per
-    // consumer, so without a barrier the signature aggregation
-    // re-executed behind five non-canonical exchanges (measured, r14).
-    // Pin the fixed shape: the signature pipeline sits entirely BEHIND
-    // the lazy checkpoint (no minhash aggregate above it), and the one
-    // full-width band exchange materializes once — the other self-join
-    // side reads it as a ReusedExchange carrying the sig column.
-    val df = Dedup.minhashLsh(Tables.documents(spark, sf), maxBandDf = 3)
+  test("capped minhash: the banded signature pipeline executes once " +
+       "(hot counts, hot mask and bucket members share one checkpoint)") {
+    // the maxBandDf path references the banded frame from THREE plans
+    // (bucket df counts, per-doc hot-band bitmask, bucket members);
+    // correctness never depended on compute-once, but cost does — column
+    // pruning specializes the banded frame per consumer, so without a
+    // barrier the signature pipeline re-executed behind each (measured,
+    // r14). Pin the shape: the signature kernel sits entirely BEHIND the
+    // lazy checkpoint ...
+    val docs = Tables.documents(spark, sf)
+    val df = Dedup.minhashLsh(docs, maxBandDf = 3)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
     assert(plan.contains("ExistingRDD"),
       s"capped path lost its banded checkpoint barrier:\n$plan")
-    assert(!plan.contains("graft_minhash"),
-      s"signature aggregation re-executes outside the barrier:\n$plan")
-    assert("ReusedExchange \\[[^\\]]*sig".r.findFirstIn(plan).nonEmpty,
-      s"self-join sides diverged — full-width band exchange ran twice:\n$plan")
+    assert(!plan.contains("graft_minhash_row"),
+      s"signature pipeline re-executes outside the barrier:\n$plan")
+    // ... and each banded row is produced exactly once across all three
+    // consumers (a row-counting probe on the banded frame)
+    val produced = spark.sparkContext.longAccumulator("banded rows")
+    val probe = udf { (_: Long) => produced.add(1); true }
+    val banded = Dedup.bandedSignatures(docs)
+    val capped = Dedup.minhashLsh(docs, maxBandDf = 3,
+      precomputedBanded = Some(banded.filter(probe(col("band_hash")))))
+    assert(capped.exceptAll(df).isEmpty && df.exceptAll(capped).isEmpty)
+    assert(produced.value == banded.count(),
+      s"banded rows produced ${produced.value} times for ${banded.count()} rows")
   }
 
-  test("minhash band shuffle carries no token arrays on the pair join") {
-    // the candidate self-join's inputs must not contain the word payload —
-    // it re-attaches only after pair generation + prefilter. The bounded
-    // signature (numHashes longs) rides deliberately: it pays for the
-    // exactly-once first-band filter + agreement prefilter (see minhashLsh)
+  test("minhash LSH: no band self-join, no token arrays in the bucket " +
+       "aggregate's input") {
+    // candidates come from ONE group-by on (band_idx, band_hash) feeding
+    // the in-bucket pair kernel — no join on the band key remains. The
+    // bucket aggregate's input must not contain the word payload (it
+    // re-attaches only after candidate generation + prefilter); the
+    // bounded signature (numHashes longs) rides deliberately: the kernel's
+    // exactly-once rule and prefilter read it (see minhashLsh)
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join}
     val df = Dedup.minhashLsh(Tables.documents(spark, sf))
-    val joins = df.queryExecution.optimizedPlan.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    val plan = df.queryExecution.optimizedPlan
+    val bandJoins = plan.collect {
+      case j: Join if j.condition.exists(_.references.exists(
+        a => a.name == "band_idx" || a.name == "band_hash")) => j
     }
-    val bandJoin = joins.filter(_.condition.exists(_.toString.contains("band")))
-    assert(bandJoin.nonEmpty, "no band-bucket join found")
-    bandJoin.foreach { j =>
-      val cols = (j.left.output ++ j.right.output).map(_.name.toLowerCase)
-      assert(!cols.exists(c => c.startsWith("w") || c.contains("text")),
-        s"payload rides the pair shuffle: $cols")
+    assert(bandJoins.isEmpty, s"a band self-join is back: $bandJoins")
+    val bucketAggs = plan.collect {
+      case a: Aggregate if Set("band_idx", "band_hash").subsetOf(
+        a.groupingExpressions.flatMap(_.references.map(_.name)).toSet) => a
     }
+    assert(bucketAggs.size == 1, s"expected one bucket aggregate: $bucketAggs")
+    val cols = bucketAggs.head.child.output.map(_.name.toLowerCase)
+    assert(!cols.exists(c => c.startsWith("w") || c.contains("text")),
+      s"payload rides the band shuffle: $cols")
+    assert(plan.collect { case g: Generate
+      if g.generator.isInstanceOf[graft.functions.BucketPairs] => g }.size == 1,
+      "candidates no longer come from the bucket-pair kernel")
   }
 
   test("bloom semi join probes on the fact side BELOW the join") {
@@ -538,12 +563,17 @@ class PlanSpec extends SparkSpec {
       s"corpus-sized output globally sorts:\n$plan")
   }
 
-  test("quality cascade: partial aggregation, no global sort") {
+  test("quality cascade: scan-bound — no aggregate, no exchange, no global sort") {
+    // r18: the top-word share reduces over the doc's in-row counts array
+    // (graft_ngram_counts), so the former (doc, word) groupBy and its
+    // exchange are gone; the cascade is one codegen'd scan projection
     val df = TextAnalysis.qualityCascade(Tables.documents(spark, sf))
     val plan = explained(df)
-    assert(plan.contains("partial_count"), s"no map-side combine:\n$plan")
-    assert(!plan.contains("Exchange rangepartitioning"),
-      s"corpus-sized output globally sorts:\n$plan")
+    assert(plan.contains("graft_ngram_counts"),
+      s"top-word share no longer reads the in-row counts:\n$plan")
+    assert(!plan.contains("Aggregate"), s"an aggregate is back:\n$plan")
+    assert(!plan.contains("Exchange"),
+      s"the cascade shuffles (or globally sorts):\n$plan")
   }
 
   test("zorder key is scan-bound whole-stage codegen") {
@@ -688,7 +718,12 @@ class PlanSpec extends SparkSpec {
     // corpus-SCALE state stand-ins: what matters is the plan shape, which
     // is independent of the row counts — the sizes table must appear only
     // under broadcast semi-probes, never inside a shuffle join
-    val idx = Seq(("alpha beta gamma", Seq((1L, 0L), (2L, 0L))))
+    // the index key is the shingle's 8-byte hash (r18), as the ingest
+    // loop stores it: the "alpha beta gamma" shingle through the same kernel
+    val sh = Seq("alpha beta gamma").toDF("text")
+      .select(explode(graft.functions.TermFunctions.ngramHashes(
+        graft.util.TextNorm.words(col("text")), 3))).head.getLong(0)
+    val idx = Seq((sh, Seq((1L, 0L), (2L, 0L))))
       .toDF("sh", "ds")
       .select(col("sh"), transform(col("ds"),
         e => struct(e.getField("_1").as("doc_id"), e.getField("_2").as("p")))

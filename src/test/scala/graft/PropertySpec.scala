@@ -369,4 +369,82 @@ class PropertySpec extends AnyFunSuite {
         s"promotion twins diverged on:\n$page")
     }
   }
+
+  test("LSH bucket-pair kernel equals the band self-join + first-equal-band " +
+       "+ equal-positions form (r=1x48, singleton buckets, all-band and " +
+       "duplicate signatures, hot masks, hot-only pairs)") {
+    import spark.implicits._
+    import graft.functions.VectorFunctions.{equalPositions, firstEqualBand}
+    // The form the kernel replaced, kept here as the reference: the band
+    // self-join, the exactly-once first-agreeing-(non-hot-)band filter and
+    // the signature-agreement prefilter, hot buckets dropped before the join.
+    def reference(banded: org.apache.spark.sql.DataFrame, bands: Int, r: Int,
+                  minAgree: Int, maxBandDf: Int) = {
+      val capped =
+        if (maxBandDf == Int.MaxValue) banded.withColumn("__hotmask", lit(0L))
+        else {
+          val hot = banded.groupBy("band_idx", "band_hash")
+            .agg(count(lit(1)).as("__df")).filter(col("__df") > maxBandDf)
+            .select("band_idx", "band_hash")
+          val mask = banded.join(hot, Seq("band_idx", "band_hash"))
+            .groupBy("doc_id")
+            .agg(sum(expr("shiftleft(1L, cast(band_idx as int))")).as("__hotmask"))
+          banded.join(hot.withColumn("__h", lit(true)), Seq("band_idx", "band_hash"), "left")
+            .filter(col("__h").isNull).drop("__h")
+            .join(mask, Seq("doc_id"), "left")
+            .withColumn("__hotmask", coalesce(col("__hotmask"), lit(0L)))
+        }
+      val joined = capped.as("x").join(capped.as("y"),
+        col("x.band_idx") === col("y.band_idx") &&
+        col("x.band_hash") === col("y.band_hash") &&
+        col("x.doc_id") < col("y.doc_id"))
+      def bandEq(j: Int) =
+        slice(col("x.sig"), j * r + 1, r) === slice(col("y.sig"), j * r + 1, r)
+      def hotBit(j: Int) =
+        shiftright(col("x.__hotmask").bitwiseOR(col("y.__hotmask")), j)
+          .bitwiseAND(1L) === 1L
+      val first =
+        if (maxBandDf == Int.MaxValue) firstEqualBand(col("x.sig"), col("y.sig"), r)
+        else (0 until bands).foldRight(lit(-1)) { (j, rest) =>
+          when(bandEq(j) && !hotBit(j), lit(j)).otherwise(rest) }
+      val kept = joined.filter(first === col("x.band_idx"))
+      (if (minAgree == 0) kept
+       else kept.filter(equalPositions(col("x.sig"), col("y.sig")) >= minAgree))
+        .select(col("x.doc_id"), col("y.doc_id"))
+        .collect().map(p => (p.getLong(0), p.getLong(1))).toSeq.sorted
+    }
+    val gen = for {
+      shape <- Gen.oneOf((48, 1, 3L), (4, 4, 2L), (8, 2, 3L))
+      n <- Gen.choose(1, 30)
+      sigs <- Gen.listOfN(n, Gen.listOfN(shape._1 * shape._2, Gen.choose(0L, shape._3 - 1)))
+      dups <- Gen.listOfN(3, Gen.choose(0, n - 1))
+      minAgree <- if (shape._2 == 1) Gen.const(0) else Gen.choose(0, shape._1 * shape._2)
+      maxBandDf <- Gen.oneOf(Int.MaxValue, 2, 3, 6)
+    } yield (shape, sigs, dups, minAgree, maxBandDf)
+    forAllSampled(gen, 16) { case ((bands, r, _), sigs, dups, minAgree, maxBandDf) =>
+      val k = bands * r
+      // planted rows, values outside the random domain:
+      //  - a singleton doc (every bucket of size 1);
+      //  - copies of random signatures (agree in every band);
+      //  - docs 900/901 agree ONLY in bands 0 and 1, whose buckets six
+      //    fillers push over every cap (hot-only pair: emitted uncapped,
+      //    dropped capped)
+      val unique = Seq(800L -> Seq.tabulate(k)(i => 1000L + i))
+      val copies = dups.zipWithIndex.map { case (d, i) => (700L + i) -> sigs(d) }
+      val hotOnly = (900L to 907L).map { d =>
+        d -> Seq.tabulate(k)(i => if (i < 2 * r) 50L + i else d * 100 + i) }
+      val all = sigs.zipWithIndex.map { case (s, i) => i.toLong -> s } ++
+        unique ++ copies ++ hotOnly
+      val banded = graft.operators.Dedup.bandRows(all.toDF("doc_id", "sig"), bands, r)
+        .localCheckpoint()
+      val got = graft.operators.Dedup.bandCandidates(banded, bands, r, minAgree, maxBandDf)
+        .collect().map(p => (p.getLong(0), p.getLong(1))).toSeq.sorted
+      val want = reference(banded, bands, r, minAgree, maxBandDf)
+      assert(got == want, s"bands=$bands r=$r minAgree=$minAgree maxBandDf=$maxBandDf")
+      assert(got.distinct == got, "a pair emitted twice")
+      val pairedHotOnly = got.contains(900L -> 901L)
+      assert(pairedHotOnly == (maxBandDf == Int.MaxValue && minAgree <= 2 * r),
+        s"hot-only pair: maxBandDf=$maxBandDf minAgree=$minAgree")
+    }
+  }
 }

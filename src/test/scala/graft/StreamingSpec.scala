@@ -635,8 +635,13 @@ class StreamingSpec extends SparkSpec {
     // maintained index == hand-derived all-time state: pqr hit its 4th
     // distinct doc this batch -> absorbing overflow (NULL); stored p
     // slots are canonical 0 (batch flags are scratch, never persisted)
+    // the index key is the shingle's 8-byte hash (r18): hash each
+    // hand-derived shingle through the same kernel the ingest loop uses
+    def shKey(shingle: String): Long = Seq(shingle).toDF("text")
+      .select(explode(graft.functions.TermFunctions.ngramHashes(
+        graft.util.TextNorm.words(col("text")), 3))).head.getLong(0)
     val idx = TxLogFormat.read(spark, indexT).collect().map { r =>
-      r.getString(0) -> (if (r.isNullAt(1)) None
+      r.getLong(0) -> (if (r.isNullAt(1)) None
         else Some(r.getSeq[Row](1).map(e => (e.getLong(0), e.getLong(1)))))
     }.toMap
     val exp = Map[String, Option[Seq[Long]]](
@@ -645,7 +650,7 @@ class StreamingSpec extends SparkSpec {
       "y z w" -> Some(Seq(2L, 10L)), "z w v" -> Some(Seq(2L)),
       "z w q" -> Some(Seq(10L)), "q r a" -> Some(Seq(11L)),
       "q r b" -> Some(Seq(12L)))
-      .map { case (k, v) => k -> v.map(_.map(d => (d, 0L))) }
+      .map { case (k, v) => shKey(k) -> v.map(_.map(d => (d, 0L))) }
     assert(idx == exp, idx.toString)
     // sizes stay EXACTLY |{shingles with all-time df <= maxDf}|: docs 1
     // and 3 each lost pqr from their universe (3 -> 2) when it crossed
