@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.Tables
+import graft.util.Scoped
 import graft.operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
@@ -25,11 +26,6 @@ object SparkEntry {
     *    dedup_semantic_lsh (0.35). */
   private val memo =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** Drop a rig's scratch directory once its result is checkpointed. */
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
 
   /** The BPE tokenize/pack rig (r16): each doc's text is ONE word
     * family repeated — family by doc_id % 4, repetition weights
@@ -83,12 +79,10 @@ object SparkEntry {
     // not once per consumer per attempt. The funnel itself is never
     // memoized — every query run computes its fates from these records.
     memo.getOrElseUpdate(
-      s"${s.sparkContext.applicationId}|$d|crawlRecs", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_crawlcur_")
+      s"${s.sparkContext.applicationId}|$d|crawlRecs",
+      Scoped.tempDir("graft_crawlcur_") { tmp =>
         writeCrawlArchives(s, d, tmp.toString)
-        val recs = readCrawlRecs(s, tmp.toString).localCheckpoint()
-        rmTree(tmp.toFile)
-        recs
+        readCrawlRecs(s, tmp.toString).localCheckpoint()
       })
 
   /** The registrant the rig's gated groups live on — the funnel
@@ -193,14 +187,11 @@ object SparkEntry {
   private val pslMemo =
     scala.collection.concurrent.TrieMap.empty[String, graft.operators.Curation.PslRules]
   private def pslRigRules(s: SparkSession): graft.operators.Curation.PslRules =
-    pslMemo.getOrElseUpdate("rig", {
-      val dir = java.nio.file.Files.createTempDirectory("graft_psl_")
+    pslMemo.getOrElseUpdate("rig", Scoped.tempDir("graft_psl_") { dir =>
       val f = dir.resolve("public_suffix_list.dat")
       java.nio.file.Files.write(f,
         (pslRigLines.mkString("\n") + "\n").getBytes("UTF-8"))
-      val r = graft.operators.Curation.PslRules.load(s, f.toString)
-      rmTree(dir.toFile)
-      r
+      graft.operators.Curation.PslRules.load(s, f.toString)
     })
 
   /** The planted PSL-rig URLs — one slot per algorithm branch. */
@@ -1089,9 +1080,8 @@ object SparkEntry {
     // → HTML text extraction → URL canonicalization + dedup; every
     // stage's output is a closed form, so ONE oracle adjudicates the
     // whole archive-file-to-corpus chain
-    "crawl_funnel" -> ((s, d) => {
+    "crawl_funnel" -> ((s, d) => Scoped.tempDir("graft_crawlfun_") { tmp =>
       import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_crawlfun_")
       val a = (col("doc_id") - col("doc_id") % 40).cast("string")
       val url = when(col("doc_id") % 40 === 3,
           concat(lit("https://news-site.com/Articles/"), a,
@@ -1122,12 +1112,10 @@ object SparkEntry {
           regexp_extract(col("rec_id"), "urn:graft:doc:(\\d+)", 1)
             .cast("long").as("doc_id"),
           col("url"), col("body").cast("string").as("html"))
-      val out = Curation.urlDedup(TextAnalysis.htmlToText(pages))
+      Curation.urlDedup(TextAnalysis.htmlToText(pages))
         .select("doc_id", "url_canonical", "keep", "text")
         .orderBy("doc_id")
         .localCheckpoint()
-      rmTree(tmp.toFile)
-      out
     }),
     // HTML text extraction (r14 — between the crawl archive and every
     // text op): per-doc synthetic pages (title, style/script blocks
@@ -1181,13 +1169,10 @@ object SparkEntry {
     // state. Cold: everything lands before the single tick, so the
     // funnel runs one cold batch ≡ crawl_curation (third query on the
     // shared oracle; batch / record stream / landing watch)
-    "crawl_curation_e2e" -> ((s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ccur_land_")
+    "crawl_curation_e2e" -> ((s, d) => Scoped.tempDir("graft_ccur_land_") { tmp =>
       writeCrawlArchives(s, d, tmp.toString)
-      val out = graft.streaming.StreamOps.runCrawlLandingIngest(s,
+      graft.streaming.StreamOps.runCrawlLandingIngest(s,
         tmp.toString, blockedDomains = crawlRigBlocklist)
-      rmTree(tmp.toFile)
-      out
     }),
     // block-level boilerplate removal (r15, VERDICT #2 — the C4/CCNet
     // step plain html_extract lacks): per-doc pages planted with the
@@ -1339,9 +1324,8 @@ object SparkEntry {
     // mixed writer — and the revisit resolves its original by a DIGEST
     // JOIN (no byte re-hash, the body isn't even there to hash); the
     // fate/dup_of table is the per-group structural closed form
-    "crawl_revisit_dedup" -> ((s, d) => {
+    "crawl_revisit_dedup" -> ((s, d) => Scoped.tempDir("graft_crawlrv_") { tmp =>
       import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_crawlrv_")
       val docs = Tables.documents(s, d)
       val slice = docs.filter(col("doc_id") % 10 === 9)
         .select(col("doc_id"), (col("doc_id") - col("doc_id") % 20).as("grp"),
@@ -1367,7 +1351,6 @@ object SparkEntry {
             .cast("long").as("doc_id"),
           col("warc_type"), col("payload_digest"))
         .localCheckpoint()
-      rmTree(tmp.toFile)
       val responses = recs.filter(col("warc_type") === "response")
         .select(col("payload_digest"), col("doc_id").as("dup_of"))
       recs.filter(col("warc_type") === "revisit")
@@ -1410,16 +1393,15 @@ object SparkEntry {
     // whose memory is bounded per RECORD so archive size is unbounded.
     // Every field — record order within each file included — is a
     // closed form over the documents table.
-    "warc_file_ingest" -> ((s, d) => {
+    "warc_file_ingest" -> ((s, d) => Scoped.tempDir("graft_warcfiles_") { tmp =>
       import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_warcfiles_")
       graft.sources.Warc.writeArchives(
         Tables.documents(s, d).filter(col("doc_id") % 10 === 2)
           .select(expr("(doc_id div 10) % 8").as("file_id"), col("doc_id"),
             concat(lit("https://example.com/doc/"), col("doc_id")).as("url"),
             col("text")),
         tmp.toString)
-      val parsed = graft.sources.Warc.readWarcFiles(s, tmp.toString)
+      graft.sources.Warc.readWarcFiles(s, tmp.toString)
         .select(
           regexp_extract(col("rec_id"), "urn:graft:doc:(\\d+)", 1)
             .cast("long").as("doc_id"),
@@ -1430,8 +1412,6 @@ object SparkEntry {
           col("body").cast("string").as("body_text"))
         .orderBy("doc_id", "rec_idx")
         .localCheckpoint() // materialize so the rig files can go away
-      rmTree(tmp.toFile)
-      parsed
     }),
     // Unicode NFC normalization (r15 — fix_mojibake's companion: the
     // SAME visible text arrives precomposed or decomposed, and every

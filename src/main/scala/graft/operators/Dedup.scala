@@ -699,21 +699,12 @@ object Dedup {
     // bottom while clamping to the session width for genuinely big graphs.
     val loopParts = math.max(1L, math.min(defaultSp.toLong.max(1L),
       nEdges / (256L << 10) + 1)).toInt
-    // r18 (VERDICT What's-wrong #1): the loop width lives on a CLONED
-    // session, never the caller's. The r17 conf.set + finally-restore on
-    // the SHARED session let any concurrently planned query (a streaming
-    // micro-batch thread, a thread-pooled bench) pick up the loop's
-    // narrowed width — a tiny CC graph could plan a concurrent 100 TB
-    // aggregation at 2 partitions — and interleaved save/restore could
-    // leave the reduced width behind permanently. newSession() shares the
-    // SparkContext (the checkpointed edge blocks are context-scoped, so
-    // re-rooting the LogicalRDD is free) but owns its conf: nothing
-    // outside the loop can observe loopParts.
-    val spark = callerSession.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    def rebind(df: DataFrame, to: org.apache.spark.sql.SparkSession): DataFrame =
-      org.apache.spark.sql.graftbridge.Bridge.ofRows(to, df.queryExecution.analyzed)
-    val e = rebind(e0, spark)
+    // the loop width lives on a scoped session, never the caller's
+    // (graft.util.Scoped); the checkpointed edge blocks are
+    // context-scoped, so re-rooting them onto it is free
+    val spark = graft.util.Scoped.session(callerSession,
+      "spark.sql.shuffle.partitions" -> loopParts.toString)
+    val e = graft.util.Scoped.rebind(e0, spark)
     locally {
       // Undirected view of the edges: two cheap scans of the cached edge
       // blocks per use — NEVER materialized. The r17 shape stored a
@@ -813,7 +804,7 @@ object Dedup {
       if (labels ne init) freeLocalCheckpoint(init)
       // hand the final (checkpointed) labels back on the CALLER's session
       // so downstream plans use the caller's width, not the loop's
-      rebind(labels, callerSession)
+      graft.util.Scoped.rebind(labels, callerSession)
     }
   }
 

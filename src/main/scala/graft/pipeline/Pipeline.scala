@@ -1023,14 +1023,13 @@ final class Pipeline(models: Seq[Model], exposures: Seq[Exposure] = Nil,
   /** [[run]] against a [[Target]]: materializations land under the
     * target's warehouse path (dataset isolation — dev/ci/prod never share
     * tables), DAG parallelism = the target's `threads`, and the target's
-    * sparkConf entries apply for the duration of the run and are restored
-    * after (a CI run must not leak prod-sized shuffle settings into the
-    * session). */
+    * sparkConf entries apply to the run only (a CI run must not leak
+    * prod-sized shuffle settings into the caller's session). */
   def runTarget(spark: SparkSession, sources: Map[String, DataFrame],
                 target: Target, hooks: RunHooks = RunHooks.none,
                 fullRefresh: Boolean = false): Map[String, DataFrame] =
-    withTargetConf(spark, target) {
-      run(spark, sources, target.warehousePath, hooks, fullRefresh, target.threads)
+    onTarget(spark, target, sources) { (s, srcs) =>
+      run(s, srcs, target.warehousePath, hooks, fullRefresh, target.threads)
     }
 
   /** `dbt clone` (dbt 1.6): materialize the selected models (default:
@@ -1077,21 +1076,23 @@ final class Pipeline(models: Seq[Model], exposures: Seq[Exposure] = Nil,
                         target: Target, select: Seq[String], deferTo: Target,
                         hooks: RunHooks = RunHooks.none,
                         fullRefresh: Boolean = false): Map[String, DataFrame] =
-    withTargetConf(spark, target) {
-      runDeferred(spark, sources, target.warehousePath, select,
+    onTarget(spark, target, sources) { (s, srcs) =>
+      runDeferred(s, srcs, target.warehousePath, select,
         deferTo.warehousePath, hooks, fullRefresh)
     }
 
-  private def withTargetConf[T](spark: SparkSession, target: Target)(
-      body: => T): T = {
-    val prev = target.sparkConf.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    target.sparkConf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+  /** Runs `body` on a [[graft.util.Scoped]] session carrying the target's
+    * sparkConf, with the sources rebound onto it; the returned frames are
+    * rebound to the caller's session, so later reads use the caller's
+    * conf. */
+  private def onTarget(spark: SparkSession, target: Target,
+      sources: Map[String, DataFrame])(
+      body: (SparkSession, Map[String, DataFrame]) => Map[String, DataFrame])
+      : Map[String, DataFrame] = {
+    import graft.util.Scoped
+    val s = Scoped.session(spark, target.sparkConf.toSeq: _*)
+    body(s, sources.map { case (k, df) => k -> Scoped.rebind(df, s) })
+      .map { case (k, df) => k -> Scoped.rebind(df, spark) }
   }
 
   /** Ready-queue DAG scheduler: runs `exec` for every model over a fixed

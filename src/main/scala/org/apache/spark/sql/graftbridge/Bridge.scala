@@ -18,6 +18,13 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `cloneSession()` is `private[sql]`: a child session that starts from a
+    * COPY of the parent's state — runtime conf, temp views, functions and
+    * listeners included — and owns its conf and query manager from then on. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
   /** Run an extensions installer and register its injected FUNCTIONS into
     * an existing session's registry. `SparkSessionExtensions` is normally
     * consumed only while a session is BUILT, which makes the injection

@@ -630,16 +630,25 @@ class PipelineSpec extends SparkSpec {
     val dev = Target("dev", tmp(), threads = 2,
       sparkConf = Map("spark.sql.shuffle.partitions" -> "7"))
     val prod = Target("prod", tmp(), threads = 2)
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    @volatile var seenConf: String = null
-    val hooks = RunHooks(afterModel =
-      (_, _) => seenConf = spark.conf.get("spark.sql.shuffle.partitions"))
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    // per model: (the model frame's session width, the caller's width)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val hooks = RunHooks(afterModel = (_, out) => {
+      seen.add(out.sparkSession.conf.get(key) -> spark.conf.get(key)); ()
+    })
     // dev runs on HALF the orders; prod on all — outputs must not mix
     val devOut = dag.runTarget(spark,
       Map("orders" -> orders.filter(col("o_orderkey") % 2 === 0)), dev, hooks)
-    assert(seenConf == "7", "per-target conf not applied during the run")
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == before,
+    assert(seen.size == 2)
+    seen.forEach { case (model, caller) =>
+      assert(model == "7", "per-target conf not applied to the model's frame")
+      assert(caller == before, "per-target conf leaked into the caller's session")
+    }
+    assert(spark.conf.get(key) == before,
       "per-target conf leaked into the session")
+    assert(devOut.values.forall(_.sparkSession eq spark),
+      "returned frames must read on the caller's session")
     val prodOut = dag.runTarget(spark, Map("orders" -> orders), prod)
     // artifacts landed under their own warehouses, and differ
     assert(new java.io.File(s"${dev.warehousePath}/t_fct").exists())

@@ -1132,4 +1132,95 @@ class StreamingSpec extends SparkSpec {
     assert(stream == expected,
       s"stream ${stream.size} vs batch ${expected.size} sessions")
   }
+
+  test("scoped sessions: rig micro-batches and the CC loop see the caller's " +
+       "runtime conf; the rig's width never shows on the caller") {
+    val widthKey = "spark.sql.shuffle.partitions"
+    val tzKey = "spark.sql.session.timeZone"
+    val ansiKey = "spark.sql.ansi.enabled"
+    val callerWidth = spark.conf.get(widthKey)
+    val prev = Seq(tzKey, ansiKey).map(k => k -> spark.conf.get(k))
+    val ansi = (!spark.conf.get(ansiKey).toBoolean).toString
+    // runtime-only conf: a session rebuilt from the SparkContext drops it
+    spark.conf.set(tzKey, "America/New_York")
+    spark.conf.set(ansiKey, ansi)
+    def runtimeConf(s: org.apache.spark.sql.SparkSession) =
+      (s.conf.get(tzKey), s.conf.get(ansiKey))
+    try {
+      val src = s"$sf/documents.parquet"
+      val rigWidth = StreamOps.ingestWidth(spark, src).toString
+      assert(rigWidth != callerWidth, "fixture: the rig must run narrower")
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Any]]
+      StreamOps.ingestRig(spark, src) { r =>
+        StreamOps.drainBatches(r.source(sf, "documents.parquet")
+            .select("doc_id")) { (b, _) =>
+          seen.add(Seq(runtimeConf(b.sparkSession),
+            b.sparkSession.conf.get(widthKey), spark.conf.get(widthKey)))
+          ()
+        }
+        r.spark.range(1).toDF()
+      }
+      assert(!seen.isEmpty)
+      seen.forEach { s =>
+        assert(s == Seq(("America/New_York", ansi), rigWidth, callerWidth), s)
+      }
+      assert(spark.conf.get(widthKey) == callerWidth)
+
+      // the CC loop runs on its own scoped session; a listener registered
+      // on the caller is cloned with it and reports the loop's actions
+      val loop = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Any]]
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+          loop.add(Seq(runtimeConf(qe.sparkSession),
+            qe.sparkSession.conf.get(widthKey))); ()
+        }
+        def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      import spark.implicits._
+      spark.listenerManager.register(listener)
+      try {
+        val labels = graft.operators.Dedup.connectedComponents(
+          Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("doc_a", "doc_b"))
+        assert(labels.sparkSession eq spark)
+        assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+          Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L))
+        org.apache.spark.graftbridge.CoreBridge.drainListenerBus(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      // a 3-edge graph sizes the loop to one partition
+      val inLoop = loop.toArray.toSeq.map(_.asInstanceOf[Seq[Any]])
+        .filter(_(1) == "1")
+      assert(inLoop.nonEmpty, "no action observed on the loop's session")
+      inLoop.foreach(s => assert(s.head == ("America/New_York", ansi), s))
+      assert(spark.conf.get(widthKey) == callerWidth)
+    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("ingest width: source bytes / 128 KiB + 1 capped at the caller's " +
+       "width; a missing or empty source gets the caller's width") {
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val landing = java.nio.file.Files.createTempDirectory("graft_landing_")
+    try {
+      // a landing watch started before any file arrives
+      assert(StreamOps.ingestWidth(spark, landing.toString) == width)
+      assert(StreamOps.ingestWidth(spark, landing.resolve("none").toString) == width)
+    } finally landing.toFile.delete()
+    Seq("documents", "embeddings", "lineitem").foreach { t =>
+      val path = s"$sf/$t.parquet"
+      val bytes = new java.io.File(path).length()
+      assert(StreamOps.ingestWidth(spark, path) ==
+        math.min(width.toLong, bytes / (128 << 10) + 1), t)
+    }
+  }
+
+  test("runSessionize leaves no temp directory behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scratch(): Set[String] = Option(tmp.list()).toSet.flatten
+      .filter(n => n.startsWith("graft_sess_flush_") || n.startsWith("graft_rig_"))
+    val before = scratch()
+    assert(StreamOps.runSessionize(spark, sf).count() > 0)
+    assert((scratch() -- before).isEmpty, (scratch() -- before).toString)
+  }
 }
