@@ -1062,12 +1062,6 @@ final class Pipeline(models: Seq[Model], exposures: Seq[Exposure] = Nil,
     }.toMap
   }
 
-  /** [[cloneFrom]] across [[Target]]s — `dbt clone --state prod` while
-    * dev is the active target. */
-  def cloneTarget(spark: SparkSession, from: Target, to: Target,
-                  select: Seq[String] = Nil): Map[String, DataFrame] =
-    cloneFrom(spark, from.warehousePath, to.warehousePath, select)
-
   /** dbt slim-CI across targets: `--defer --state <prod>` where both sides
     * are [[Target]]s — build `select` into `target`, resolving unselected
     * parents from the DEFER target's warehouse (reference
@@ -1147,11 +1141,6 @@ final class Pipeline(models: Seq[Model], exposures: Seq[Exposure] = Nil,
     failure
   }
 
-  /** Materializes one built model frame — the physical half of [[run]]. */
-  /** Materializes one built model frame — the physical half of [[run]].
-    * All table-family materializations route through the [[
-    * graft.sources.TableFormat]] seam, so swapping parquet-dir storage for
-    * Delta/Iceberg is a constructor argument, not an operator rewrite. */
   /** Contract gate ([[Contract]]): schema freeze checked driver-side
     * before anything runs; row constraints fuse into the frame so they
     * enforce inside the materializing job (for a ViewMat, inside the first
@@ -1177,6 +1166,10 @@ final class Pipeline(models: Seq[Model], exposures: Seq[Exposure] = Nil,
       graft.util.RowGuard(df, checks, s"in model '${m.name}' contract")
     }
 
+  /** Materializes one built model frame — the physical half of [[run]].
+    * All table-family materializations route through the [[
+    * graft.sources.TableFormat]] seam, so swapping parquet-dir storage for
+    * Delta/Iceberg is a constructor argument, not an operator rewrite. */
   private def materializeModel(spark: SparkSession, m: Model, df0: DataFrame,
                                targetDir: String,
                                fullRefresh: Boolean): DataFrame = {

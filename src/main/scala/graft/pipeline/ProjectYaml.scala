@@ -706,8 +706,8 @@ object ProjectYaml {
     ut.name -> outcome
   }
 
-  /** Every `unit_tests:` declaration under the project's model paths. */
-  def loadProjectUnitTests(projectDir: String): Seq[UnitTestDef] = {
+  /** The text of every `.yml` file under the project's model paths. */
+  private def modelYmls(projectDir: String): Seq[String] = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val root = Paths.get(projectDir)
@@ -718,8 +718,12 @@ object ProjectYaml {
         try s.iterator().asScala.filter(f =>
           Files.isRegularFile(f) && f.toString.endsWith(".yml")).toVector
         finally s.close()
-      }.flatMap(f => loadUnitTests(Files.readString(f)))
+      }.map(Files.readString(_))
   }
+
+  /** Every `unit_tests:` declaration under the project's model paths. */
+  def loadProjectUnitTests(projectDir: String): Seq[UnitTestDef] =
+    modelYmls(projectDir).flatMap(loadUnitTests)
 
   // ---- metrics: blocks (dbt 1.6 semantic layer) ----
 
@@ -764,19 +768,8 @@ object ProjectYaml {
   }
 
   /** Every `metrics:` declaration under the project's model paths. */
-  def loadProjectMetrics(projectDir: String): Seq[Metric] = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(projectDir)
-    val project = loadProject(Files.readString(root.resolve("dbt_project.yml")))
-    project.modelPaths.map(root.resolve).filter(Files.isDirectory(_))
-      .flatMap { d =>
-        val s = Files.walk(d)
-        try s.iterator().asScala.filter(f =>
-          Files.isRegularFile(f) && f.toString.endsWith(".yml")).toVector
-        finally s.close()
-      }.flatMap(f => loadMetrics(Files.readString(f)))
-  }
+  def loadProjectMetrics(projectDir: String): Seq[Metric] =
+    modelYmls(projectDir).flatMap(loadMetrics)
 
   // ---- selectors.yml (dbt named selectors) ----
 

@@ -19,11 +19,14 @@ import scala.jdk.CollectionConverters._
   * Spark's, never string-built here). The log lives at
   * `<table>/_txlog/<version>.commit`, one file per commit, each a
   * line-oriented record of `a <relpath>` (add) / `r <relpath>` (remove) /
-  * `s <schema-json>` (schema) / `t <app:batch>` (txn tag) /
-  * `f <relpath>…` (per-file min/max/null stats) / `m <kind>` (commit
-  * marker: `rewrite` for layout-only maintenance, `checkpoint` for a
-  * vacuum fold) / `dv`/`dvx <relpath>…` (deletion vectors — merge-on-read
-  * row deletes, see [[deleteVectors]]) actions.
+  * `s <schema-json>` (schema) / `t <app:batch>` (txn tag) / `w <epoch>`
+  * (load stamp) / `f <relpath>…` (per-file min/max/null stats) /
+  * `fb <relpath>…` (per-file bloom filter) / `m <kind>` (commit marker:
+  * `rewrite` for layout-only maintenance, `checkpoint` for a vacuum fold,
+  * `clone`) / `dv`/`dvx <relpath>…` (deletion vectors — merge-on-read row
+  * deletes, see [[deleteVectors]]) / `c`/`cd` (CHECK constraint declare /
+  * drop) / `bi`/`bid` (bloom index declare / drop) actions. `LogState`'s
+  * `apply` is the one reader of this grammar.
   *
   * On top of the ACID core this carries the other two pillars of a lake
   * format: '''additive schema evolution''' ([[mergeSchemas]] — appends
@@ -66,30 +69,33 @@ object TxLogFormat extends TableFormat {
   private def checkpointFile(path: String, v: Long): JPath =
     logDir(path).resolve(f"$v%016d.checkpoint")
 
-  /** Auto-checkpoint cadence (Delta's `checkpointInterval`, default 10):
-    * every Nth commit also writes a SIDECAR `<v>.checkpoint` beside the
-    * commit file — the full folded state as of v, a pure resolution CACHE.
-    * Snapshot/txn/constraint folds start from the latest sidecar and read
-    * only the ≤N commits after it, so a never-vacuumed table (e.g. a
-    * streaming sink at one commit per micro-batch) pays O(N) per read
-    * instead of a linearly growing log fold. Commit history stays fully
-    * intact — time travel, [[readChanges]], [[restore]] and [[history]]
-    * are unaffected; [[vacuum]] remains the (destructive) space
-    * reclaimer. 0 disables. */
-  @volatile var checkpointInterval: Int = 10
+  /** Auto-checkpoint cadence (Delta's `checkpointInterval`): every Nth
+    * commit also writes a SIDECAR `<v>.checkpoint` beside the commit file
+    * — the full folded state as of v, a pure resolution CACHE. [[fold]]
+    * starts from the latest sidecar and reads only the ≤N commits after
+    * it, so a never-vacuumed table (e.g. a streaming sink at one commit
+    * per micro-batch) pays O(N) per read instead of a linearly growing log
+    * fold. Commit history stays fully intact — time travel,
+    * [[readChanges]], [[restore]] and [[history]] are unaffected;
+    * [[vacuum]] remains the (destructive) space reclaimer. */
+  private[graft] val checkpointInterval = 10
 
-  /** Sidecar checkpoint versions present, ascending. */
-  private def checkpointVersions(path: String): Seq[Long] = {
+  /** Versions of the log's `<v>.<kind>` files present, ascending. */
+  private def logVersions(path: String, kind: String): Seq[Long] = {
     val dir = logDir(path)
     if (!Files.isDirectory(dir)) Nil
     else {
       val s = Files.list(dir)
       try s.iterator.asScala.map(_.getFileName.toString)
-        .filter(_.matches("\\d{16}\\.checkpoint"))
-        .map(_.stripSuffix(".checkpoint").toLong).toSeq.sorted
+        .filter(_.matches(s"\\d{16}\\.$kind"))
+        .map(_.stripSuffix(s".$kind").toLong).toSeq.sorted
       finally s.close()
     }
   }
+
+  /** Sidecar checkpoint versions present, ascending. */
+  private def checkpointVersions(path: String): Seq[Long] =
+    logVersions(path, "checkpoint")
 
   /** The sidecar to fold from for a read as of `upTo`, given the commit
     * versions `vs` (dense — slots allocate as prev+1): valid iff every
@@ -103,21 +109,10 @@ object TxLogFormat extends TableFormat {
         .lastOption)
 
   /** Committed versions, ascending. */
-  def versions(path: String): Seq[Long] = {
-    val dir = logDir(path)
-    if (!Files.isDirectory(dir)) Nil
-    else {
-      val s = Files.list(dir)
-      try s.iterator.asScala.map(_.getFileName.toString)
-        .filter(_.matches("\\d{16}\\.commit"))
-        .map(_.stripSuffix(".commit").toLong).toSeq.sorted
-      finally s.close()
-    }
-  }
+  def versions(path: String): Seq[Long] = logVersions(path, "commit")
 
-  private case class LogState(live: Seq[String], schema: Option[String],
-                              version: Long, stats: Map[String, FileStat],
-                              dvs: Map[String, Array[Long]])
+  private def readLines(file: JPath): Seq[String] =
+    Files.readAllLines(file).asScala.toSeq
 
   // ---- deletion vectors (Delta's merge-on-read DELETE) ----
   //
@@ -153,37 +148,102 @@ object TxLogFormat extends TableFormat {
     if (a.isEmpty) b else if (b.isEmpty) a
     else (a ++ b).distinct.sorted
 
-  /** One pass over the commit log as of `upTo` (inclusive): live file set
-    * (LinkedHashSet keeps commit order so reads are deterministic),
-    * latest schema json, latest version, and — when `withStats` — the
-    * per-file stats map. The stats parse is skipped on the commit hot
-    * path ([[commit]]'s CAS loop re-snapshots per attempt). */
-  private def foldLog(path: String, upTo: Long = Long.MaxValue,
-                      withStats: Boolean = false): LogState = {
-    val vs = versions(path).filter(_ <= upTo)
-    val live = scala.collection.mutable.LinkedHashSet[String]()
+  /** `<rel>\t<b64 positions>` of a `dv`/`dvx` line; None when malformed. */
+  private def dvBody(body: String): Option[(String, Array[Long])] = {
+    val p = body.split("\t", 2)
+    if (p.length != 2) None
+    else try Some((p(0), decodePositions(p(1))))
+    catch { case _: IllegalArgumentException => None }
+  }
+
+  /** The log folded as of one version: the single state every reader and
+    * writer works from (Delta's snapshot = one replay of checkpoint +
+    * later actions). [[apply]] is the one implementation of the line
+    * grammar; [[fold]] feeds it a sidecar plus the commits after it,
+    * [[commit]] feeds it the lines it just published (so the sidecar
+    * checkpoint renders without re-reading the log), and [[readChanges]]
+    * steps it commit by commit. Stats stay raw lines
+    * (restated verbatim by checkpoints and clones) and parse only where
+    * pruning or counting needs them ([[fileStats]]). */
+  private final class LogState {
+    import scala.collection.mutable
+    var version: Long = -1L
+    /** LinkedHashSet keeps commit order, so reads are deterministic. */
+    val live = mutable.LinkedHashSet[String]()
     var schema: Option[String] = None
-    val stats = scala.collection.mutable.Map[String, FileStat]()
-    val dvs = scala.collection.mutable.Map[String, Array[Long]]()
-    def foldLines(lines: Iterable[String]): Unit = lines.foreach { line =>
-      if (line.startsWith("a ")) live += line.drop(2)
-      else if (line.startsWith("r ")) { live -= line.drop(2); dvs.remove(line.drop(2)) }
-      else if (line.startsWith("s ")) schema = Some(line.drop(2))
-      // deletion vectors affect READ correctness (unlike stats), so they
-      // parse unconditionally; `dv` is a per-commit delta, `dvx` restates
-      else if (line.startsWith("dv ")) {
-        val p = line.drop(3).split("\t", 2)
-        if (p.length == 2) try dvs(p(0)) =
-          unionSorted(dvs.getOrElse(p(0), Array.empty), decodePositions(p(1)))
-        catch { case _: IllegalArgumentException => }
-      } else if (line.startsWith("dvx ")) {
-        val p = line.drop(4).split("\t", 2)
-        if (p.length == 2) try {
-          val arr = decodePositions(p(1))
-          if (arr.isEmpty) dvs.remove(p(0)) else dvs(p(0)) = arr
-        } catch { case _: IllegalArgumentException => }
+    val dvs = mutable.Map[String, Array[Long]]()
+    /** CHECK constraints, name → SQL predicate, in declaration order. */
+    val constraints = mutable.LinkedHashMap[String, String]()
+    /** Bloom-index declarations: column → (numBits, numHashFns). */
+    val bloomIndexes = mutable.LinkedHashMap[String, (Int, Int)]()
+    /** The exactly-once ledger: every `appId:batchId` tag committed. */
+    val txns = mutable.LinkedHashSet[String]()
+    /** Payload of the newest `w` line: the last load's epoch second. */
+    var loadStamp: Option[String] = None
+    /** Newest raw `f` line per file and `fb` line per (file, column).
+      * Kept through a file's removal — [[restore]] may re-add it. */
+    val statLines = mutable.LinkedHashMap[String, String]()
+    val bloomLines = mutable.LinkedHashMap[(String, String), String]()
+
+    def apply(line: String): Unit = {
+      val sp = line.indexOf(' ')
+      if (sp > 0) {
+        val body = line.substring(sp + 1)
+        line.substring(0, sp) match {
+          case "a" => live += body
+          case "r" => live -= body; dvs.remove(body)
+          case "s" => schema = Some(body)
+          case "t" => txns += body
+          case "w" => loadStamp = Some(body)
+          case "f" => statLines(body.split("\t", 2)(0)) = line
+          case "fb" =>
+            val p = body.split("\t", 3)
+            if (p.length >= 2) bloomLines((p(0), p(1))) = line
+          // `dv` is a per-commit delta (union), `dvx` restates absolutely
+          case "dv" => dvBody(body).foreach { case (rel, ps) =>
+            dvs(rel) = unionSorted(dvs.getOrElse(rel, Array.empty), ps) }
+          case "dvx" => dvBody(body).foreach { case (rel, ps) =>
+            if (ps.isEmpty) dvs.remove(rel) else dvs(rel) = ps }
+          case "c" =>
+            val p = body.split("\t", 2)
+            if (p.length == 2) constraints(p(0)) = p(1)
+          case "cd" => constraints.remove(body)
+          case "bi" =>
+            val p = body.split("\t", -1)
+            if (p.length == 3) try bloomIndexes(p(0)) = (p(1).toInt, p(2).toInt)
+            catch { case _: NumberFormatException => }
+          case "bid" => bloomIndexes.remove(body)
+          case _ => // `m` markers carry no state
+        }
       }
-      else if (withStats && line.startsWith("f ")) {
+    }
+
+    /** Live files' deletion vectors. */
+    def liveDvs: Seq[(String, Array[Long])] =
+      dvs.toSeq.filter { case (rel, ps) => live.contains(rel) && ps.nonEmpty }
+        .sortBy(_._1)
+
+    /** The state as checkpoint body lines, family by family: load stamp,
+      * schema, txn tags, live adds (commit order), live files' stats and
+      * bloom filters, constraints, bloom-index declarations, and deletion
+      * vectors restated ABSOLUTELY (`dvx`) — a checkpoint is cumulative
+      * state, so per-commit deltas must not replay on top of it. Every
+      * family restates, or the fold would forget a replayed batch, disable
+      * skipping, or disarm enforcement for everything it covers. */
+    def body(withTxns: Boolean): Seq[String] =
+      loadStamp.map("w " + _).toSeq ++ schema.map("s " + _) ++
+        (if (withTxns) txns.toSeq.map("t " + _) else Nil) ++
+        live.toSeq.map("a " + _) ++
+        statLines.collect { case (rel, l) if live.contains(rel) => l } ++
+        bloomLines.collect { case ((rel, _), l) if live.contains(rel) => l } ++
+        constraints.map { case (n, e) => s"c $n\t$e" } ++
+        bloomIndexes.map { case (c, (bits, k)) => s"bi $c\t$bits\t$k" } ++
+        liveDvs.map { case (rel, ps) => s"dvx $rel\t${encodePositions(ps)}" }
+
+    /** Per-file stats parsed from the raw lines. */
+    def fileStats(): Map[String, FileStat] = {
+      val stats = mutable.Map[String, FileStat]()
+      statLines.values.foreach { line =>
         val parts = line.drop(2).split("\t", -1)
         if (parts.length >= 2 && (parts.length - 2) % 4 == 0) try {
           val cols = parts.drop(2).grouped(4).map { g =>
@@ -192,42 +252,37 @@ object TxLogFormat extends TableFormat {
               if (g(2).isEmpty) None else Some(BigDecimal(g(2))),
               g(3).toLong)
           }.toMap
-          val prev = stats.get(parts(0)).map(_.blooms).getOrElse(Map.empty)
-          stats(parts(0)) = FileStat(parts(1).toLong, cols, prev)
+          stats(parts(0)) = FileStat(parts(1).toLong, cols)
         } catch { case _: NumberFormatException => }
-      } else if (withStats && line.startsWith("fb ")) {
-        // `fb <rel>\t<col>\t<numHashFns>\t<base64 bit words>`
+      }
+      // `fb <rel>\t<col>\t<numHashFns>\t<base64 bit words>`
+      bloomLines.values.foreach { line =>
         val parts = line.drop(3).split("\t", -1)
         if (parts.length == 4) try {
           val bytes = java.util.Base64.getDecoder.decode(parts(3))
           val bb = java.nio.ByteBuffer.wrap(bytes)
-          val words = new Array[Long](bytes.length / 8)
-          var wi = 0
-          while (wi < words.length) { words(wi) = bb.getLong(wi * 8); wi += 1 }
-          val prev = stats.getOrElse(parts(0),
-            FileStat(Long.MaxValue, Map.empty))
+          val words = Array.tabulate(bytes.length / 8)(i => bb.getLong(i * 8))
+          val prev = stats.getOrElse(parts(0), FileStat(Long.MaxValue, Map.empty))
           stats(parts(0)) = prev.copy(blooms =
             prev.blooms + (parts(1) -> ((parts(2).toInt, words))))
         } catch { case scala.util.control.NonFatal(_) => }
       }
+      stats.toMap
     }
-    // start from the newest usable sidecar checkpoint (full state as of
-    // cp), then fold only the commits after it — O(checkpointInterval)
-    // files per resolution on a checkpointed table
-    val cp = checkpointBase(path, upTo, vs)
-    cp.foreach(c => foldLines(
-      Files.readAllLines(checkpointFile(path, c)).asScala))
-    vs.filter(v => cp.forall(_ < v)).foreach { v =>
-      foldLines(Files.readAllLines(commitFile(path, v)).asScala)
-    }
-    LogState(live.toSeq, schema, vs.lastOption.getOrElse(-1L), stats.toMap,
-      dvs.toMap)
   }
 
-  private def snapshot(path: String, upTo: Long = Long.MaxValue)
-      : (Seq[String], Option[String], Long) = {
-    val st = foldLog(path, upTo)
-    (st.live, st.schema, st.version)
+  /** The table as of `upTo` (inclusive): the newest usable sidecar, then
+    * only the commits after it — O([[checkpointInterval]]) files per
+    * resolution on a checkpointed table. */
+  private def fold(path: String, upTo: Long = Long.MaxValue): LogState = {
+    val vs = versions(path).filter(_ <= upTo)
+    val st = new LogState
+    val cp = checkpointBase(path, upTo, vs)
+    cp.foreach(c => readLines(checkpointFile(path, c)).foreach(st.apply))
+    vs.filter(v => cp.forall(_ < v))
+      .foreach(v => readLines(commitFile(path, v)).foreach(st.apply))
+    st.version = vs.lastOption.getOrElse(-1L)
+    st
   }
 
   // ---- per-file statistics (Delta-style data skipping) ----
@@ -341,41 +396,24 @@ object TxLogFormat extends TableFormat {
     }).mkString("\t"))
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  private def statsLines(spark: SparkSession, path: String,
-                         rels: Seq[String]): Seq[String] = {
+  /** `f` stats lines plus `fb` bloom-filter lines (for the base state's
+    * declared `bloomIdx`) of the newly staged `rels`. */
+  private def statsLines(spark: SparkSession, path: String, rels: Seq[String],
+                         bloomIdx: collection.Map[String, (Int, Int)])
+      : Seq[String] = {
     val conf = spark.sessionState.newHadoopConf()
     rels.flatMap(r => statsLine(conf, Paths.get(path, r), r)) ++
-      bloomLines(spark, path, rels)
+      bloomLines(spark, path, rels, bloomIdx)
   }
 
   // ---- Bloom file-skipping indexes (Delta's bloom filter index) ----
-
-  /** Active bloom-index declarations as of `upTo`: column → (numBits,
-    * numHashFns). Log lines: `bi <col>\t<numBits>\t<numHashFns>`
-    * declares, `bid <col>` drops; later `bi` redefines. */
-  private def foldBloomIndexes(path: String,
-                               upTo: Long = Long.MaxValue)
-      : Map[String, (Int, Int)] = {
-    val idx = scala.collection.mutable.LinkedHashMap[String, (Int, Int)]()
-    def foldLines(lines: Iterable[String]): Unit = lines.foreach { line =>
-      if (line.startsWith("bi ")) {
-        val p = line.drop(3).split("\t", -1)
-        if (p.length == 3) try idx(p(0)) = (p(1).toInt, p(2).toInt)
-        catch { case _: NumberFormatException => }
-      } else if (line.startsWith("bid ")) idx.remove(line.drop(4))
-    }
-    val vs = versions(path).filter(_ <= upTo)
-    val cp = checkpointBase(path, upTo, vs)
-    cp.foreach(c => foldLines(
-      Files.readAllLines(checkpointFile(path, c)).asScala))
-    vs.filter(v => cp.forall(_ < v)).foreach(v =>
-      foldLines(Files.readAllLines(commitFile(path, v)).asScala))
-    idx.toMap
-  }
+  //
+  // `bi <col>\t<numBits>\t<numHashFns>` declares, `bid <col>` drops; a
+  // later `bi` redefines.
 
   /** Declared bloom indexes: column → (numBits, numHashFns). */
   def bloomIndexes(path: String): Map[String, (Int, Int)] =
-    foldBloomIndexes(path)
+    fold(path).bloomIndexes.toMap
 
   /** Declare a bloom filter index on `column` (Delta `CREATE BLOOMFILTER
     * INDEX`): from this commit on, every write also records a per-file
@@ -399,16 +437,19 @@ object TxLogFormat extends TableFormat {
       s"txlog: numBits must be a power of two >= 64, got $numBits")
     require(numHashFns >= 1 && numHashFns <= 16,
       s"txlog: numHashFns must be in [1,16], got $numHashFns")
-    val v = snapshot(path)._3
-    require(v >= 0, s"txlog: no committed version at $path — write() first")
-    commit(path, Nil, Nil, None,
-      extra = Seq(s"bi $column\t$numBits\t$numHashFns"))
+    val st = fold(path)
+    require(st.version >= 0, s"txlog: no committed version at $path — write() first")
+    commit(path, st, extra = Seq(s"bi $column\t$numBits\t$numHashFns"))
   }
 
+  /** `DROP BLOOMFILTER INDEX`: later writes stop recording filters for
+    * `column`. Filters already recorded stay valid for their files and
+    * keep pruning until those files are rewritten. */
   def dropBloomIndex(path: String, column: String): Long = {
-    require(foldBloomIndexes(path).contains(column),
+    val st = fold(path)
+    require(st.bloomIndexes.contains(column),
       s"txlog: no bloom index on $column at $path")
-    commit(path, Nil, Nil, None, extra = Seq(s"bid $column"))
+    commit(path, st, extra = Seq(s"bid $column"))
   }
 
   /** Per-file `fb` lines for the newly staged `rels`, one per declared
@@ -417,9 +458,8 @@ object TxLogFormat extends TableFormat {
     * (map-side combined — only finished KB-scale filters reach the
     * driver). Runs only when an index is declared; the cost rides the
     * write that benefits, exactly like footer stats. */
-  private def bloomLines(spark: SparkSession, path: String,
-                         rels: Seq[String]): Seq[String] = {
-    val idx = foldBloomIndexes(path)
+  private def bloomLines(spark: SparkSession, path: String, rels: Seq[String],
+                         idx: collection.Map[String, (Int, Int)]): Seq[String] = {
     if (idx.isEmpty || rels.isEmpty) return Nil
     try {
       val root = Paths.get(path)
@@ -450,35 +490,14 @@ object TxLogFormat extends TableFormat {
     // conservative: a failed bloom build only disables skipping
   }
 
-  /** Recorded stats per live-able rel path, as of `upTo`. */
-  private def fileStats(path: String, upTo: Long = Long.MaxValue)
-      : Map[String, FileStat] = foldLog(path, upTo, withStats = true).stats
-
   // ---- CHECK constraints (Delta-style table invariants) ----
-
-  /** Active constraints as of `upTo`, in declaration order. Log lines:
-    * `c <name>\t<sql-expr>` declares, `cd <name>` drops; later `c` with
-    * the same name redefines. */
-  private def foldConstraints(path: String,
-                              upTo: Long = Long.MaxValue): Seq[(String, String)] = {
-    val cons = scala.collection.mutable.LinkedHashMap[String, String]()
-    def foldLines(lines: Iterable[String]): Unit = lines.foreach { line =>
-      if (line.startsWith("c ")) {
-        val p = line.drop(2).split("\t", 2)
-        if (p.length == 2) cons(p(0)) = p(1)
-      } else if (line.startsWith("cd ")) cons.remove(line.drop(3))
-    }
-    val vs = versions(path).filter(_ <= upTo)
-    val cp = checkpointBase(path, upTo, vs)
-    cp.foreach(c => foldLines(
-      Files.readAllLines(checkpointFile(path, c)).asScala))
-    vs.filter(v => cp.forall(_ < v)).foreach(v =>
-      foldLines(Files.readAllLines(commitFile(path, v)).asScala))
-    cons.toSeq
-  }
+  //
+  // `c <name>\t<sql-expr>` declares, `cd <name>` drops; a later `c` with
+  // the same name redefines.
 
   /** Active CHECK constraints: name -> SQL predicate. */
-  def constraints(path: String): Map[String, String] = foldConstraints(path).toMap
+  def constraints(path: String): Map[String, String] =
+    fold(path).constraints.toMap
 
   /** `ALTER TABLE ... ADD CONSTRAINT name CHECK (expr)`: existing rows are
     * validated in one scan first (a table already violating the invariant
@@ -496,217 +515,148 @@ object TxLogFormat extends TableFormat {
       s"txlog: constraint name must be non-empty without tab/newline: '$name'")
     require(!exprSql.exists(c => c == '\n' || c == '\r'),
       s"txlog: constraint expression must be single-line")
-    val st = foldLog(path)
-    val (live, schemaJson, v) = (st.live, st.schema, st.version)
-    require(v >= 0, s"txlog: no committed version at $path — write() first")
-    if (live.nonEmpty) {
+    val st = fold(path)
+    require(st.version >= 0, s"txlog: no committed version at $path — write() first")
+    if (st.live.nonEmpty) {
       // deletion-vector'd rows are logically gone — they must not block
-      val bad = readFiles(spark, path, live, schemaJson, st.dvs)
+      val bad = readFiles(spark, path, st.live.toSeq, st.schema, st.dvs)
         .filter(not(coalesce(expr(exprSql).cast("boolean"), lit(true))))
         .limit(1).count()
       require(bad == 0,
         s"txlog: existing rows at $path violate constraint $name ($exprSql)")
     }
-    commit(path, Nil, Nil, None, extra = Seq(s"c $name\t$exprSql"))
+    commit(path, st, extra = Seq(s"c $name\t$exprSql"))
   }
 
   /** `ALTER TABLE ... DROP CONSTRAINT name`. */
   def dropConstraint(path: String, name: String): Long = {
-    require(foldConstraints(path).exists(_._1 == name),
+    val st = fold(path)
+    require(st.constraints.contains(name),
       s"txlog: no constraint named $name at $path")
-    commit(path, Nil, Nil, None, extra = Seq(s"cd $name"))
+    commit(path, st, extra = Seq(s"cd $name"))
   }
-
-  /** Fuses the given active constraints into `df` via
-    * [[graft.util.RowGuard]]: a violating row throws from inside the write
-    * job (zero extra passes; the failed write leaves only invisible
-    * orphans). A constraint referencing a column `df` lacks fails analysis
-    * loudly — schema-evolving writes must carry their constrained columns.
-    * Callers fold the set ONCE and hand the same set to [[commit]] as
-    * `enforced`, so the commit can detect a constraint declared after the
-    * guard was built (the addConstraint/writer race). */
-  private def constraintGuard(df: DataFrame, path: String,
-                              cons: Seq[(String, String)]): DataFrame =
-    graft.util.RowGuard(df, cons, s"at $path")
 
   /** Deterministic test seam: runs at the top of every commit attempt. */
   private[graft] var onCommitAttempt: String => Unit = _ => ()
 
-  /** Full folded state as of `upTo`, serialized as checkpoint body lines:
-    * schema, txn tags, live adds (commit order), live files' stats lines,
-    * active constraints — shared by [[vacuum]]'s in-slot fold and the
-    * sidecar auto-checkpoints. Folds from the newest usable sidecar, so
-    * writing checkpoint k+1 costs O(checkpointInterval), not O(history). */
-  private def checkpointLines(path: String, upTo: Long): Seq[String] = {
-    val vs = versions(path).filter(_ <= upTo)
-    val cp = checkpointBase(path, upTo, vs)
-    val allLines: Seq[String] =
-      cp.map(c => Files.readAllLines(checkpointFile(path, c))
-        .asScala.toSeq).getOrElse(Nil) ++
-      vs.filter(v => cp.forall(_ < v)).flatMap(v =>
-        Files.readAllLines(commitFile(path, v)).asScala)
-    val (liveH, schemaH, _) = snapshot(path, upTo)
-    val liveSet = liveH.toSet
-    val txnsH = allLines.filter(_.startsWith("t ")).distinct
-    // restate live files' recorded stats (f) and bloom filters (fb), or
-    // the fold would silently disable data skipping for what it covers
-    val statsH = (allLines.filter(l => l.startsWith("f ") &&
-      liveSet.contains(l.drop(2).split("\t", 2)(0))) ++
-      allLines.filter(l => l.startsWith("fb ") &&
-        liveSet.contains(l.drop(3).split("\t", 2)(0)))).distinct
-    // constraints restate like txn tags, or the fold would disarm
-    // enforcement for everything it covers
-    val consH = foldConstraints(path, upTo).map { case (n, e) => s"c $n\t$e" }
-    // bloom-index declarations restate like constraints
-    val biH = foldBloomIndexes(path, upTo).map { case (c, (bits, k)) =>
-      s"bi $c\t$bits\t$k" }.toSeq
-    // preserve the newest load timestamp through the fold: a checkpoint
-    // restates history, it is not a load event
-    val wH = allLines.filter(_.startsWith("w ")).lastOption.toSeq
-    // deletion vectors restate ABSOLUTELY (`dvx`): the fold is cumulative
-    // state, so per-commit deltas must not replay on top of it
-    val dvH = foldLog(path, upTo).dvs.toSeq.sortBy(_._1).collect {
-      case (rel, ps) if liveSet.contains(rel) && ps.nonEmpty =>
-        s"dvx $rel\t${encodePositions(ps)}"
-    }
-    wH ++ schemaH.map("s " + _).toSeq ++ txnsH ++ liveH.map("a " + _) ++
-      statsH ++ consH ++ biH ++ dvH
+  /** Atomically publish `lines` as `file`: write a temp file, then
+    * hard-link it into place. Link creation is an all-or-nothing namespace
+    * op that fails if `file` exists, so readers see a complete file or
+    * none and the second of two racing writers gets false. */
+  private def publish(path: String, file: JPath, lines: Seq[String]): Boolean = {
+    val tmp = logDir(path).resolve(s".tmp-${UUID.randomUUID()}")
+    Files.writeString(tmp, lines.mkString("", "\n", "\n"))
+    try {
+      try Files.createLink(file, tmp)
+      catch { case _: UnsupportedOperationException =>
+        // FS without hard links: move-without-replace still refuses an
+        // existing target, just not atomically on every FS.
+        Files.move(tmp, file)
+      }
+      true
+    } catch { case _: FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(tmp)
   }
 
-  /** Write the `v` sidecar checkpoint if `v` is on the cadence. A sidecar
-    * is a pure cache of a deterministic fold: losing the race to another
-    * writer (same content) or failing to write it affects nothing but
-    * resolution cost, so errors are swallowed. */
-  private def maybeAutoCheckpoint(path: String, v: Long): Unit =
-    if (checkpointInterval > 0 && v > 0 && v % checkpointInterval == 0 &&
-        !Files.exists(checkpointFile(path, v))) try {
-      val content = ("m checkpoint" +: checkpointLines(path, v))
-        .mkString("", "\n", "\n")
-      val tmp = logDir(path).resolve(s".tmp-${UUID.randomUUID()}")
-      Files.writeString(tmp, content)
-      try Files.createLink(checkpointFile(path, v), tmp)
-      catch {
-        case _: UnsupportedOperationException =>
-          try Files.move(tmp, checkpointFile(path, v))
-          catch { case _: FileAlreadyExistsException => () }
-        case _: FileAlreadyExistsException => ()
-      }
-      Files.deleteIfExists(tmp)
-    } catch { case scala.util.control.NonFatal(_) => () }
+  /** Write the sidecar checkpoint for `st` (a state just advanced to its
+    * newly published version) if that version is on the cadence. A
+    * sidecar is a pure cache of a deterministic fold: losing the race to
+    * another writer (same content) or failing to write it affects nothing
+    * but resolution cost, so errors are swallowed. */
+  private def maybeAutoCheckpoint(path: String, st: LogState): Unit =
+    if (st.version > 0 && st.version % checkpointInterval == 0) try
+      publish(path, checkpointFile(path, st.version),
+        "m checkpoint" +: st.body(withTxns = true))
+    catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Publish one commit with optimistic concurrency: write the full
-    * content to a temp file, then hard-link it to the next version slot.
-    * Link creation is atomic and fails if the slot is taken, so two racing
-    * writers serialize; the loser re-resolves the snapshot (to re-check
-    * its removes are still live) and retries. `reResolveSchema`, when
-    * given, recomputes the schema line on EVERY attempt — a schema-merging
-    * op that loses the race must re-merge against the schema the winner
-    * just committed, or its retry would republish the stale merge and
-    * silently drop the winner's new columns. Returns the version. */
-  private def commit(path: String, adds: Seq[String], removes: Seq[String],
-                     schemaJson: Option[String],
-                     txn: Option[String] = None,
-                     stats: Seq[String] = Nil,
-                     marker: Option[String] = None,
-                     reResolveSchema: Option[() => Option[String]] = None,
-                     extra: Seq[String] = Nil,
-                     enforced: Option[Seq[(String, String)]] = None,
-                     requireLive: Seq[String] = Nil,
-                     dvFold: Option[Map[String, Array[Long]]] = None): Long = {
-    val dir = logDir(path)
-    Files.createDirectories(dir)
+  /** Publish one commit with optimistic concurrency. `base` is the state
+    * the operation planned from. Every attempt folds the log afresh and
+    * refuses (ConcurrentModificationException; the caller re-runs) a
+    * commit that conflicts with what landed since — the Delta conflict
+    * rule, one for every writer:
+    *  - every file it removes or vector-marks is still live: a concurrent
+    *    rewrite would strand the marks on a file the table no longer
+    *    serves, or replace the same rows twice;
+    *  - every removed file's deletion vector equals the base's: the
+    *    replacement content was staged from the base, so a vector that
+    *    landed since would be silently resurrected;
+    *  - a `guarded` write (rows staged under the base's constraint guard)
+    *    sees no constraint declared since the base: its rows were never
+    *    checked against it, and letting them land would publish the very
+    *    rows [[addConstraint]]'s validation scan exists to prevent. Drops
+    *    are safe (the guard was merely stricter than required).
+    * The content is then hard-linked to the next version slot: the link
+    * fails if the slot is taken, so racing writers serialize and the loser
+    * retries from a fresh fold. `schema` resolves against each attempt's
+    * state — a schema-merging op that loses the race must re-merge against
+    * the schema the winner just committed, or its retry would republish
+    * the stale merge and silently drop the winner's new columns. Returns
+    * the version. */
+  private def commit(path: String, base: LogState,
+                     adds: Seq[String] = Nil, removes: Seq[String] = Nil,
+                     schema: LogState => Option[String] = _ => None,
+                     txn: Option[String] = None, stats: Seq[String] = Nil,
+                     marker: Option[String] = None, extra: Seq[String] = Nil,
+                     guarded: Boolean = false): Long = {
+    Files.createDirectories(logDir(path))
+    val marks = extra.filter(l => l.startsWith("dv ") || l.startsWith("dvx "))
+      .map(_.split(" ", 2)(1).split("\t", 2)(0)).filterNot(adds.toSet)
+    def conflict(what: String, files: Iterable[String]): Unit =
+      if (files.nonEmpty) throw new java.util.ConcurrentModificationException(
+        s"txlog: $what: ${files.take(3).mkString(", ")} at $path — retry")
     var attempt = 0
     while (true) {
       onCommitAttempt(path)
-      val stNow = foldLog(path)
-      val v = stNow.version + 1
-      // deletion-vector conflict checks, on EVERY attempt — the Delta
-      // delete-vs-rewrite conflict rule, enforced in BOTH directions:
-      //  - a dv commit marks positions of a specific immutable file; if a
-      //    rewrite (compact/merge/purge) replaced that file since the
-      //    delete's rows were located, the positions address a file that
-      //    no longer carries the table's rows → refuse (requireLive);
-      //  - a REWRITE staged its replacement content from a fold taken
-      //    before commit time; if a deletion vector landed on one of its
-      //    removed files since (dvFold mismatch), the staged content still
-      //    CONTAINS the freshly-deleted rows and committing would
-      //    silently resurrect them → refuse, the caller re-runs.
-      if (requireLive.nonEmpty) {
-        val liveNow0 = stNow.live.toSet
-        val gone0 = requireLive.filterNot(liveNow0)
-        if (gone0.nonEmpty) throw new java.util.ConcurrentModificationException(
-          s"txlog: file(s) rewritten by a concurrent commit while marking " +
-            s"deletes: ${gone0.take(3).mkString(", ")} at $path — retry")
-      }
-      dvFold.foreach { atFold =>
-        val changed = removes.filter { r =>
-          !java.util.Arrays.equals(
-            stNow.dvs.getOrElse(r, Array.empty[Long]),
-            atFold.getOrElse(r, Array.empty[Long]))
-        }
-        if (changed.nonEmpty) throw new java.util.ConcurrentModificationException(
-          s"txlog: deletion vector(s) landed on file(s) this rewrite " +
-            s"staged without them: ${changed.take(3).mkString(", ")} at " +
-            s"$path — retry the rewrite")
-      }
-      // constraint-enforcement conflict check, on EVERY attempt (the
-      // Delta conflict-detection shape): the caller's row guard enforced
-      // the constraint set folded at plan time, seconds of staging ago — a
-      // constraint DECLARED since then (addConstraint validates existing
-      // rows, then commits) was not enforced on the staged files, so
-      // letting this commit land could publish the very rows the
-      // validation scan exists to prevent. Refuse loudly; the writer
-      // re-runs and picks up the new declaration. Drops are safe (the
-      // guard was merely stricter than required).
-      enforced.foreach { enf =>
-        val enfSet = enf.toSet
-        val missed = foldConstraints(path).filterNot(enfSet.contains)
-        if (missed.nonEmpty) throw new java.util.ConcurrentModificationException(
-          s"txlog: constraint(s) declared after this write's guard was " +
-            s"built: ${missed.map(_._1).mkString(", ")} at $path — retry " +
-            "the write to enforce them")
-      }
-      // re-resolve on EVERY attempt, not just retries: the caller computed
-      // its merge before staging (seconds of writing ago) — a commit that
-      // landed since then never trips the link CAS for THIS slot, yet its
-      // schema must be folded in. Resolving here, in the same iteration
-      // that claims slot v, merges against everything committed <= v-1.
-      val schemaNow = reResolveSchema.map(_()).getOrElse(schemaJson)
+      val st = fold(path)
+      conflict("file(s) removed or rewritten by a concurrent commit",
+        (removes ++ marks).filterNot(st.live).distinct)
+      conflict("deletion vector(s) landed on file(s) this commit staged " +
+        "without them", removes.filterNot(r => java.util.Arrays.equals(
+          st.dvs.getOrElse(r, Array.empty[Long]),
+          base.dvs.getOrElse(r, Array.empty[Long]))))
+      if (guarded) conflict("constraint(s) declared after this write's " +
+        "guard was built", st.constraints.collect {
+          case (n, e) if !base.constraints.get(n).contains(e) => n })
       // `w <epochsec>` records the load time INSIDE the commit content:
       // filesystem mtime is not durable ([[vacuum]] rewrites the horizon
       // commit file in place, which would reset an mtime-based freshness
-      // to "just loaded" — the r7 advice finding)
-      val content = (marker.map("m " + _).toSeq ++
+      // to "just loaded")
+      val lines = marker.map("m " + _).toSeq ++
         Seq(s"w ${java.time.Instant.now().getEpochSecond}") ++
-        schemaNow.map("s " + _).toSeq ++ txn.map("t " + _).toSeq ++
-        removes.map("r " + _) ++ adds.map("a " + _) ++ stats ++ extra)
-        .mkString("", "\n", "\n")
-      val tmp = dir.resolve(s".tmp-${UUID.randomUUID()}")
-      Files.writeString(tmp, content)
-      try {
-        try Files.createLink(commitFile(path, v), tmp)
-        catch { case _: UnsupportedOperationException =>
-          // FS without hard links: move-without-replace still refuses an
-          // existing target, just not atomically on every FS.
-          Files.move(tmp, commitFile(path, v))
-        }
-        Files.deleteIfExists(tmp)
-        maybeAutoCheckpoint(path, v)
-        return v
-      } catch {
-        case _: FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp)
-          attempt += 1
-          if (attempt > 100) throw new java.util.ConcurrentModificationException(
-            s"txlog: lost the commit race $attempt times at $path")
-          // a competing commit landed: verify our removes still exist
-          val liveNow = snapshot(path)._1.toSet
-          val gone = removes.filterNot(liveNow)
-          if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
-            s"txlog: files removed by a concurrent commit: ${gone.take(3).mkString(", ")}")
+        schema(st).map("s " + _) ++ txn.map("t " + _) ++
+        removes.map("r " + _) ++ adds.map("a " + _) ++ stats ++ extra
+      if (publish(path, commitFile(path, st.version + 1), lines)) {
+        lines.foreach(st.apply)
+        st.version += 1
+        maybeAutoCheckpoint(path, st)
+        return st.version
       }
+      attempt += 1
+      if (attempt > 100) throw new java.util.ConcurrentModificationException(
+        s"txlog: lost the commit race $attempt times at $path")
     }
     -1L // unreachable
+  }
+
+  /** The one write path for caller rows (write / overwritePartitions /
+    * replace / merge / appendBatch): stage `rows` under the base's
+    * constraint guard ([[graft.util.RowGuard]] — a violating row throws
+    * from inside the write job, leaving only invisible orphans), then
+    * commit them as a guarded write removing `removes(adds)`. With
+    * `evolve`, `schema` merges additively into the committed one (a type
+    * change refuses before anything is staged); otherwise it replaces it. */
+  private def writeRows(path: String, base: LogState, rows: DataFrame,
+                        schema: StructType, evolve: Boolean,
+                        partitionBy: Option[String], clusterBy: Seq[String] = Nil,
+                        txn: Option[String] = None)
+                       (removes: Seq[String] => Seq[String]): Long = {
+    if (evolve) mergeSchemas(base.schema, schema)
+    val adds = stageIn(graft.util.RowGuard(rows, base.constraints.toSeq,
+      s"at $path"), path, partitionBy, clusterBy)
+    commit(path, base, adds, removes(adds), txn = txn, guarded = true,
+      stats = statsLines(rows.sparkSession, path, adds, base.bloomIndexes),
+      schema = st => Some(
+        (if (evolve) mergeSchemas(st.schema, schema) else schema).json))
   }
 
   /** Write `df` through Spark into a staging dir, then move the parquet
@@ -750,10 +700,10 @@ object TxLogFormat extends TableFormat {
   }
 
   private def readAt(spark: SparkSession, path: String, upTo: Long): DataFrame = {
-    val st = foldLog(path, upTo)
+    val st = fold(path, upTo)
     require(st.version >= 0, s"txlog: no committed version at $path" +
       (if (upTo != Long.MaxValue) s" <= $upTo" else ""))
-    readFiles(spark, path, st.live, st.schema, st.dvs)
+    readFiles(spark, path, st.live.toSeq, st.schema, st.dvs)
   }
 
   /** Live files read with per-row FILE IDENTITY: the committed-schema data
@@ -789,7 +739,7 @@ object TxLogFormat extends TableFormat {
     * (deleted-row scale, KBs in the steady state), plain above
     * [[DvBroadcastMaxRows]]. */
   private def dvFrame(spark: SparkSession, live: Seq[String],
-                      dvs: Map[String, Array[Long]]): DataFrame = {
+                      dvs: collection.Map[String, Array[Long]]): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField}
     val rows: Seq[Row] = live.flatMap(r =>
       dvs.getOrElse(r, Array.empty[Long]).map(p => Row(r.split("/").last, p)))
@@ -801,7 +751,7 @@ object TxLogFormat extends TableFormat {
 
   private def readFiles(spark: SparkSession, path: String, live: Seq[String],
                         schemaJson: Option[String],
-                        dvs: Map[String, Array[Long]] = Map.empty): DataFrame = {
+                        dvs: collection.Map[String, Array[Long]] = Map.empty): DataFrame = {
     // merge-on-read: files carrying a deletion vector anti-join their
     // marked (file, row-index) positions out — a broadcast of the vector
     // frame (deleted-row scale, KBs) against only the DV'd files' scan;
@@ -877,45 +827,46 @@ object TxLogFormat extends TableFormat {
 
   def write(df: DataFrame, path: String, partitionBy: Option[String] = None,
             clusterBy: Seq[String] = Nil): Unit = {
-    val before = snapshot(path)._1
-    val cons = foldConstraints(path)
-    val adds = stageIn(constraintGuard(df, path, cons), path, partitionBy, clusterBy)
-    commit(path, adds, before, Some(df.schema.json),
-      stats = statsLines(df.sparkSession, path, adds),
-      enforced = Some(cons))
+    val base = fold(path)
+    writeRows(path, base, df, df.schema, evolve = false, partitionBy,
+      clusterBy)(_ => base.live.toSeq)
   }
 
   def overwritePartitions(df: DataFrame, path: String,
                           partitionCol: String): Unit = {
-    val (before, prevSchema, _) = snapshot(path)
-    requirePartitioned(path, before, "overwritePartitions")
+    val base = fold(path)
+    val live = base.live.toSeq
+    requirePartitioned(path, live, "overwritePartitions")
     // untouched partitions' files survive this commit → additive merge,
     // not wholesale replace, so their columns stay readable
-    val schema = mergeSchemas(prevSchema, df.schema)
-    val cons = foldConstraints(path)
-    val adds = stageIn(constraintGuard(df, path, cons), path, Some(partitionCol), Nil)
-    // which partitions `df` touched falls straight out of the staged dir
-    // names — no collect, no value formatting, escaping untouched.
-    val newDirs = adds.map(_.split("/", 2)(0)).toSet
-    val removes = snapshot(path)._1
-      .filter(r => r.contains("/") && newDirs.contains(r.split("/", 2)(0)))
-    commit(path, adds, removes, Some(schema.json),
-      stats = statsLines(df.sparkSession, path, adds),
-      reResolveSchema =
-        Some(() => Some(mergeSchemas(snapshot(path)._2, df.schema).json)),
-      enforced = Some(cons))
+    writeRows(path, base, df, df.schema, evolve = true, Some(partitionCol)) {
+      adds =>
+        // which partitions `df` touched falls straight out of the staged
+        // dir names — no collect, no value formatting, escaping untouched
+        val newDirs = adds.map(_.split("/", 2)(0)).toSet
+        live.filter(r => r.contains("/") && newDirs.contains(r.split("/", 2)(0)))
+    }
   }
 
   def replace(spark: SparkSession, df: DataFrame, path: String): Unit = {
     // `df`'s plan may read the current table; old files stay on disk (and
     // snapshot-pinned readers keep them) until vacuum, so there is no
     // self-overwrite hazard and no staging swap — one commit flips the set.
-    val before = snapshot(path)._1
-    val cons = foldConstraints(path)
-    val adds = stageIn(constraintGuard(df, path, cons), path, None, Nil)
-    commit(path, adds, before, Some(df.schema.json),
-      stats = statsLines(spark, path, adds),
-      enforced = Some(cons))
+    val base = fold(path)
+    writeRows(path, base, df, df.schema, evolve = false, None)(_ => base.live.toSeq)
+  }
+
+  /** Exactly-once batch-tagged MERGE (the [[appendBatch]] contract for
+    * upserts — the Delta streaming `foreachBatch MERGE INTO` shape): a
+    * replayed `appId:batchId` skips entirely, so a CDC stream upserting
+    * per micro-batch is idempotent under failure/restart. Returns None on
+    * a skipped replay, Some(files rewritten) otherwise. */
+  def mergeBatch(spark: SparkSession, path: String, keyCol: String,
+                 source: DataFrame, appId: String, batchId: Long,
+                 partitionBy: Option[String] = None): Option[Int] = {
+    val tag = s"$appId:$batchId"
+    if (committedTxns(path).contains(tag)) None
+    else Some(merge(spark, path, keyCol, source, partitionBy, Some(tag)))
   }
 
   /** `MERGE INTO` (the Delta upsert): target rows whose `keyCol` matches a
@@ -935,25 +886,12 @@ object TxLogFormat extends TableFormat {
     * duplicate lands (the multiple-match case Delta rejects; this engine
     * documents it instead of paying a validation agg per merge).
     * Returns the number of files rewritten. */
-  /** Exactly-once batch-tagged MERGE (the [[appendBatch]] contract for
-    * upserts — the Delta streaming `foreachBatch MERGE INTO` shape): a
-    * replayed `appId:batchId` skips entirely, so a CDC stream upserting
-    * per micro-batch is idempotent under failure/restart. Returns None on
-    * a skipped replay, Some(files rewritten) otherwise. */
-  def mergeBatch(spark: SparkSession, path: String, keyCol: String,
-                 source: DataFrame, appId: String, batchId: Long,
-                 partitionBy: Option[String] = None): Option[Int] = {
-    val tag = s"$appId:$batchId"
-    if (committedTxns(path).contains(tag)) None
-    else Some(merge(spark, path, keyCol, source, partitionBy, Some(tag)))
-  }
-
   def merge(spark: SparkSession, path: String, keyCol: String,
             source: DataFrame, partitionBy: Option[String] = None,
             txn: Option[String] = None): Int = {
-    val st0 = foldLog(path)
-    val (live, prevSchema, v) = (st0.live, st0.schema, st0.version)
-    require(v >= 0, s"txlog: no committed version at $path — write() first")
+    val base = fold(path)
+    val (live, prevSchema) = (base.live.toSeq, base.schema)
+    require(base.version >= 0, s"txlog: no committed version at $path — write() first")
     require(live.isEmpty ||
         live.exists(_.contains("/")) == partitionBy.isDefined,
       s"txlog: merge partitioning (${partitionBy.getOrElse("none")}) " +
@@ -961,19 +899,12 @@ object TxLogFormat extends TableFormat {
     val schema = mergeSchemas(prevSchema, source.schema)
     require(schema.fieldNames.contains(keyCol),
       s"txlog: merge key $keyCol not in table schema")
-    val target = readFiles(spark, path, live, prevSchema, st0.dvs)
+    val target = readFiles(spark, path, live, prevSchema, base.dvs)
     val srcKeys = source.select(col(keyCol).as("_mk")).distinct()
     val hitFiles = target.withColumn("_file", input_file_name())
       .join(srcKeys, target(keyCol) === srcKeys("_mk"), "left_semi")
       .select("_file").distinct().collect().map(_.getString(0))
-    val root = Paths.get(path).toAbsolutePath
-    val hitRel = hitFiles.map { f =>
-      val p = if (f.startsWith("file:")) Paths.get(new java.net.URI(f))
-              else Paths.get(f)
-      root.relativize(p.toAbsolutePath).toString
-    }.toSeq
-    require(!hitRel.exists(_.startsWith("..")),
-      s"txlog: hit file outside table root $root")
+    val hitRel = relPaths(path, hitFiles.toSeq)
     // carried-over rows: the hit files' rows whose key is NOT in the source
     val hitSet = hitFiles.toSet
     val kept =
@@ -988,14 +919,25 @@ object TxLogFormat extends TableFormat {
       else lit(null).cast(f.dataType).as(f.name)
     }.toSeq: _*)
     val out = if (kept == null) align(source) else align(kept).unionAll(align(source))
-    val cons = foldConstraints(path)
-    val adds = stageIn(constraintGuard(out, path, cons), path, partitionBy, Nil)
-    commit(path, adds, hitRel, Some(schema.json), txn = txn,
-      stats = statsLines(spark, path, adds),
-      reResolveSchema =
-        Some(() => Some(mergeSchemas(snapshot(path)._2, source.schema).json)),
-      enforced = Some(cons), dvFold = Some(st0.dvs))
+    writeRows(path, base, out, source.schema, evolve = true, partitionBy,
+      txn = txn)(_ => hitRel)
     hitRel.size
+  }
+
+  /** `input_file_name()` URIs back to table-relative paths. The URI's
+    * %-encoding stacks ON TOP of the Hive escaping in partition dir names,
+    * so decode to the on-disk path before relativizing — otherwise a
+    * remove entry would name a nonexistent rel path. */
+  private def relPaths(path: String, files: Seq[String]): Seq[String] = {
+    val root = Paths.get(path).toAbsolutePath
+    val rels = files.map { f =>
+      val p = if (f.startsWith("file:")) Paths.get(new java.net.URI(f))
+              else Paths.get(f)
+      root.relativize(p.toAbsolutePath).toString
+    }
+    require(!rels.exists(_.startsWith("..")),
+      s"txlog: hit file outside table root $root")
+    rels
   }
 
   /** Undo Hive's %XX dir-name escaping (partition values round-trip
@@ -1027,8 +969,8 @@ object TxLogFormat extends TableFormat {
     // second read(path) here could see a concurrent append's file, copy
     // its rows into the compacted output, and leave the original live —
     // silent duplication. readFiles pins exactly the files being replaced.
-    val st0 = foldLog(path)
-    val (live, schemaJson) = (st0.live, st0.schema)
+    val st0 = fold(path)
+    val (live, schemaJson) = (st0.live.toSeq, st0.schema)
     val (byDir, budget) = compactBudget(path, live, targetBytes, "compact")
     if (byDir.isEmpty) return budget
     // DV-aware read: the rewrite MATERIALIZES pending deletion vectors
@@ -1044,9 +986,9 @@ object TxLogFormat extends TableFormat {
       .repartition(col(partitionCol), col(saltCol))
       .drop(saltCol)
     val adds = stageIn(salted, path, Some(partitionCol), Nil)
-    commit(path, adds, byDir.values.flatten.toSeq, None,
-      stats = statsLines(spark, path, adds), marker = Some("rewrite"),
-      dvFold = Some(st0.dvs))
+    commit(path, st0, adds, byDir.values.flatten.toSeq,
+      stats = statsLines(spark, path, adds, st0.bloomIndexes),
+      marker = Some("rewrite"))
     budget
   }
 
@@ -1071,8 +1013,8 @@ object TxLogFormat extends TableFormat {
                        targetBytes: Long = 128L * 1024 * 1024): Map[String, Int] = {
     require(clusterBy.nonEmpty, "txlog: compactClustered needs cluster columns")
     // same single-snapshot discipline as [[compact]]
-    val st0 = foldLog(path)
-    val (live, schemaJson) = (st0.live, st0.schema)
+    val st0 = fold(path)
+    val (live, schemaJson) = (st0.live.toSeq, st0.schema)
     val (byDir, budget) = compactBudget(path, live, targetBytes,
       "compactClustered")
     if (byDir.isEmpty) return budget
@@ -1101,18 +1043,18 @@ object TxLogFormat extends TableFormat {
       .sortWithinPartitions(col(partitionCol), col(zc))
       .drop(zc)
     val adds = stageIn(shaped, path, Some(partitionCol), Nil)
-    commit(path, adds, byDir.values.flatten.toSeq, None,
-      stats = statsLines(spark, path, adds), marker = Some("rewrite"),
-      dvFold = Some(st0.dvs))
+    commit(path, st0, adds, byDir.values.flatten.toSeq,
+      stats = statsLines(spark, path, adds, st0.bloomIndexes),
+      marker = Some("rewrite"))
     budget
   }
 
   def deleteKeys(spark: SparkSession, path: String, partitionCol: String,
                  keyCol: String, keys: DataFrame): Seq[String] = {
-    val st0 = foldLog(path)
+    val st0 = fold(path)
     require(st0.version >= 0, s"txlog: no committed version at $path")
-    requirePartitioned(path, st0.live, "deleteKeys")
-    val df = readFiles(spark, path, st0.live, st0.schema, st0.dvs)
+    requirePartitioned(path, st0.live.toSeq, "deleteKeys")
+    val df = readFiles(spark, path, st0.live.toSeq, st0.schema, st0.dvs)
     val k = keys.columns.head
     // FILE-granular delete: only files that actually hold a doomed key
     // rewrite. The collect is file-count scale (the hit list), not row
@@ -1121,26 +1063,15 @@ object TxLogFormat extends TableFormat {
       .join(broadcast(keys), df(keyCol) === keys(k), "left_semi")
       .select("_file").distinct().collect().map(_.getString(0))
     if (hitFiles.isEmpty) return Nil
-    // input_file_name() is a URI (its %-encoding stacks ON TOP of the Hive
-    // escaping in partition dir names); decode back to the on-disk path
-    // before relativizing, or the remove entries would name nonexistent
-    // rel paths and the commit would silently duplicate the kept rows.
-    val root = Paths.get(path).toAbsolutePath
-    val hitRel = hitFiles.map { f =>
-      val p = if (f.startsWith("file:")) Paths.get(new java.net.URI(f))
-              else Paths.get(f)
-      root.relativize(p.toAbsolutePath).toString
-    }.toSeq
-    require(!hitRel.exists(_.startsWith("..")),
-      s"txlog: hit file outside table root $root")
+    val hitRel = relPaths(path, hitFiles.toSeq)
     val hitSet = hitFiles.toSet
     val kept = df.withColumn("_file", input_file_name())
       .filter(col("_file").isInCollection(hitSet))
       .drop("_file")
       .join(broadcast(keys), df(keyCol) === keys(k), "left_anti")
     val adds = stageIn(kept, path, Some(partitionCol), Nil)
-    commit(path, adds, hitRel, None,
-      stats = statsLines(spark, path, adds), dvFold = Some(st0.dvs))
+    commit(path, st0, adds, hitRel,
+      stats = statsLines(spark, path, adds, st0.bloomIndexes))
     hitRel.flatMap(r => r.split("/", 2) match {
       case Array(dir, _) if dir.contains("=") =>
         Some(unescapeHive(dir.split("=", 2)(1)))
@@ -1176,16 +1107,17 @@ object TxLogFormat extends TableFormat {
     require(maxDeletedRows > 0,
       s"txlog: maxDeletedRows must be positive (got $maxDeletedRows) — " +
         "for bulk deletes rewrite with deleteKeys/replace instead")
-    val st = foldLog(path)
+    val st = fold(path)
     require(st.version >= 0, s"txlog: no committed version at $path")
     if (st.live.isEmpty) return 0L
+    val live = st.live.toSeq
     val sfx = UUID.randomUUID().toString.take(8)
     val (fn, ri) = (s"_dv_fn_$sfx", s"_dv_ri_$sfx")
     // address discovery over LIVE rows only (existing vectors masked:
     // re-marking an already-deleted row would inflate the metadata count)
-    val meta = readMeta(spark, path, st.live, st.schema, fn, ri)
+    val meta = readMeta(spark, path, live, st.schema, fn, ri)
     val alive = {
-      val pos = dvFrame(spark, st.live, st.dvs)
+      val pos = dvFrame(spark, live, st.dvs)
       meta.join(pos,
         meta(fn) === pos("_dv_name") && meta(ri) === pos("_dv_pos"),
         "left_anti")
@@ -1201,7 +1133,7 @@ object TxLogFormat extends TableFormat {
       s"txlog: deleteVectors matched more than $maxDeletedRows rows at " +
         s"$path — a delete this large should rewrite (deleteKeys/replace)")
     if (doomed.isEmpty) return 0L
-    val byName = st.live.map(r => r.split("/").last -> r).toMap
+    val byName = live.map(r => r.split("/").last -> r).toMap
     val lines = doomed.groupBy(_.getString(0)).toSeq.sortBy(_._1)
       .map { case (n, rows) =>
         val rel = byName.getOrElse(n,
@@ -1209,8 +1141,7 @@ object TxLogFormat extends TableFormat {
         val ps = rows.map(_.getLong(1)).distinct.sorted.toArray
         s"dv $rel\t${encodePositions(ps)}"
       }
-    commit(path, Nil, Nil, None, txn = txn, extra = lines,
-      requireLive = lines.map(_.drop(3).split("\t", 2)(0)))
+    commit(path, st, txn = txn, extra = lines)
     doomed.length.toLong
   }
 
@@ -1232,9 +1163,7 @@ object TxLogFormat extends TableFormat {
   /** Deletion vectors outstanding per live file (file → deleted-row
     * count) — the observability hook behind "when should I purge". */
   def deletionVectors(path: String): Map[String, Int] = {
-    val st = foldLog(path)
-    st.dvs.collect { case (r, ps) if st.live.contains(r) && ps.nonEmpty =>
-      r -> ps.length }
+    fold(path).liveDvs.map { case (r, ps) => r -> ps.length }.toMap
   }
 
   /** `REORG TABLE ... APPLY (PURGE)` (Delta): physically rewrite ONLY the
@@ -1242,20 +1171,22 @@ object TxLogFormat extends TableFormat {
     * vector-free file survives byte-identical. A maintenance rewrite
     * (`m rewrite` — moves no logical data, CDF-silent), the repaying of
     * merge-on-read's read-side debt at the caller's chosen cadence.
-    * Returns the number of files rewritten. */
-  /** `minDvFraction`: only files whose deleted-row share reaches it
+    *
+    * `minDvFraction`: only files whose deleted-row share reaches it
     * rewrite (Delta's min-ratio heuristic — rewriting a GB file to drop
     * three rows wastes the write; their vectors stay until compaction or
     * a denser delete). Files without recorded row counts conservatively
-    * qualify. 0 purges everything vector'd. */
+    * qualify. 0 purges everything vector'd. Returns the number of files
+    * rewritten. */
   def purgeDeletes(spark: SparkSession, path: String,
                    partitionBy: Option[String] = None,
                    minDvFraction: Double = 0.0): Int = {
-    val st = foldLog(path, withStats = true)
+    val st = fold(path)
     require(st.version >= 0, s"txlog: no committed version at $path")
-    val dvd = st.live.filter { r =>
+    val stats = st.fileStats()
+    val dvd = st.live.toSeq.filter { r =>
       st.dvs.get(r).exists(_.nonEmpty) &&
-        st.stats.get(r).forall(fs => fs.rows <= 0 ||
+        stats.get(r).forall(fs => fs.rows <= 0 ||
           st.dvs(r).length.toDouble / fs.rows >= minDvFraction)
     }
     if (dvd.isEmpty) return 0
@@ -1264,9 +1195,9 @@ object TxLogFormat extends TableFormat {
         s"does not match the layout of $path")
     val rows = readFiles(spark, path, dvd, st.schema, st.dvs)
     val adds = stageIn(rows, path, partitionBy, Nil)
-    commit(path, adds, dvd, None,
-      stats = statsLines(spark, path, adds), marker = Some("rewrite"),
-      dvFold = Some(st.dvs))
+    commit(path, st, adds, dvd,
+      stats = statsLines(spark, path, adds, st.bloomIndexes),
+      marker = Some("rewrite"))
     dvd.size
   }
 
@@ -1277,16 +1208,7 @@ object TxLogFormat extends TableFormat {
 
   /** Transaction tags (`appId:batchId`) recorded so far — the replay
     * ledger behind [[appendBatch]]. */
-  def committedTxns(path: String): Set[String] = {
-    val vs = versions(path)
-    val cp = checkpointBase(path, Long.MaxValue, vs)
-    val base = cp.map(c => Files.readAllLines(checkpointFile(path, c)).asScala
-      .filter(_.startsWith("t ")).map(_.drop(2)).toSeq).getOrElse(Nil)
-    (base ++ vs.filter(v => cp.forall(_ < v)).flatMap { v =>
-      Files.readAllLines(commitFile(path, v)).asScala
-        .filter(_.startsWith("t ")).map(_.drop(2))
-    }).toSet
-  }
+  def committedTxns(path: String): Set[String] = fold(path).txns.toSet
 
   /** Exactly-once streaming sink primitive (the Delta streaming-sink txn
     * protocol): append `df`'s files in one commit TAGGED with
@@ -1299,24 +1221,18 @@ object TxLogFormat extends TableFormat {
   def appendBatch(df: DataFrame, path: String, appId: String, batchId: Long,
                   partitionBy: Option[String] = None): Boolean = {
     val tag = s"$appId:$batchId"
-    if (committedTxns(path).contains(tag)) return false
-    val (live0, prevSchema, _) = snapshot(path)
+    val base = fold(path)
+    if (base.txns.contains(tag)) return false
     // an append must match the table's directory layout: flat files next
     // to partition dirs (or vice versa) break partition discovery
-    require(live0.isEmpty ||
-        live0.exists(_.contains("/")) == partitionBy.isDefined,
+    require(base.live.isEmpty ||
+        base.live.exists(_.contains("/")) == partitionBy.isDefined,
       s"txlog: appendBatch partitioning (${partitionBy.getOrElse("none")}) " +
         s"does not match the layout of $path")
     // additive schema evolution: a batch may carry new columns (appended)
     // or omit committed ones (null-filled on read) — never a type change
-    val schema = mergeSchemas(prevSchema, df.schema)
-    val cons = foldConstraints(path)
-    val adds = stageIn(constraintGuard(df, path, cons), path, partitionBy, Nil)
-    commit(path, adds, Nil, Some(schema.json), Some(tag),
-      stats = statsLines(df.sparkSession, path, adds),
-      reResolveSchema =
-        Some(() => Some(mergeSchemas(snapshot(path)._2, df.schema).json)),
-      enforced = Some(cons))
+    writeRows(path, base, df, df.schema, evolve = true, partitionBy,
+      txn = Some(tag))(_ => Nil)
     true
   }
 
@@ -1324,12 +1240,6 @@ object TxLogFormat extends TableFormat {
   def readVersion(spark: SparkSession, path: String, version: Long): DataFrame =
     readAt(spark, path, version)
 
-  /** `TIMESTAMP AS OF` (Delta's other time-travel axis): the table as of
-    * the newest commit whose durable load stamp is ≤ `epochSec` —
-    * "what did the dashboard show yesterday 09:00" asked the way an
-    * auditor asks it. Stamps are the in-content `w` lines (vacuum-safe,
-    * not mtime); a timestamp before the earliest retained commit refuses
-    * like a vacuumed version. */
   /** A commit's durable timestamp. A pre-`w` legacy commit reports
     * timestamp 0, which reads as infinitely old (fabricating history in
     * [[readTimestamp]], folding away recent versions in
@@ -1340,6 +1250,12 @@ object TxLogFormat extends TableFormat {
     else Files.getLastModifiedTime(commitFile(path, c.version))
       .toInstant.getEpochSecond
 
+  /** `TIMESTAMP AS OF` (Delta's other time-travel axis): the table as of
+    * the newest commit whose durable load stamp is ≤ `epochSec` —
+    * "what did the dashboard show yesterday 09:00" asked the way an
+    * auditor asks it. Stamps are the in-content `w` lines (vacuum-safe,
+    * not mtime); a timestamp before the earliest retained commit refuses
+    * like a vacuumed version. */
   def readTimestamp(spark: SparkSession, path: String,
                     epochSec: Long): DataFrame = {
     val h = describeHistory(path) // newest first
@@ -1367,10 +1283,10 @@ object TxLogFormat extends TableFormat {
     * `read(...).filter(filter)`; the spec asserts both that equality and
     * the file-count drop. */
   def scan(spark: SparkSession, path: String, filter: Column): DataFrame = {
-    val st = foldLog(path, withStats = true) // one log pass: live + stats
-    val (live, schemaJson) = (st.live, st.schema)
+    val st = fold(path)
+    val (live, schemaJson) = (st.live.toSeq, st.schema)
     require(st.version >= 0, s"txlog: no committed version at $path")
-    val stats = st.stats
+    val stats = st.fileStats()
     // Resolve the predicate against an empty frame of the committed
     // schema: the raw Column is an unresolved function tree, but the
     // ANALYZED filter condition is typed Catalyst comparisons with
@@ -1437,14 +1353,17 @@ object TxLogFormat extends TableFormat {
     * ANY table size (the Delta `SELECT COUNT(*)` fast path). Falls back
     * to a real scan-count only when some live file predates stats. */
   def count(spark: SparkSession, path: String): Long = {
-    val st = foldLog(path, withStats = true)
+    val st = fold(path)
     require(st.version >= 0, s"txlog: no committed version at $path")
-    if (st.live.forall(st.stats.contains))
+    val live = st.live.toSeq
+    val stats = st.fileStats()
+    // a bloom-only entry (no `f` line) carries no row count
+    if (live.forall(r => stats.get(r).exists(_.rows != Long.MaxValue)))
       // a deletion vector's cardinality is exact metadata: the count stays
       // log-only through merge-on-read deletes
-      st.live.map(r => st.stats(r).rows -
+      live.map(r => stats(r).rows -
         st.dvs.getOrElse(r, Array.empty[Long]).length).sum
-    else readFiles(spark, path, st.live, st.schema, st.dvs).count()
+    else readFiles(spark, path, live, st.schema, st.dvs).count()
   }
 
   /** `RESTORE TABLE ... TO VERSION`: one commit that swaps the live set
@@ -1458,11 +1377,11 @@ object TxLogFormat extends TableFormat {
     require(vs.contains(version),
       s"txlog: version $version of $path is not available " +
         s"(have ${vs.mkString(", ")}) — vacuumed or never committed")
-    val stWant = foldLog(path, version)
-    val stNow = foldLog(path)
-    val (wantLive, wantSchema) = (stWant.live, stWant.schema)
-    val nowLive = stNow.live
-    val nowSet = nowLive.toSet
+    val stWant = fold(path, version)
+    val stNow = fold(path)
+    val (wantLive, wantSchema) = (stWant.live.toSeq, stWant.schema)
+    val nowLive = stNow.live.toSeq
+    val nowSet = stNow.live
     // deletion vectors must restore too: rows vector-deleted AFTER
     // `version` come back (un-delete), vectors as of `version` reinstate —
     // absolute `dvx` restatements per differing file (an empty payload
@@ -1476,8 +1395,8 @@ object TxLogFormat extends TableFormat {
       if (java.util.Arrays.equals(want, now)) None
       else Some(s"dvx $rel\t${encodePositions(want)}")
     }
-    commit(path, wantLive.filterNot(nowSet),
-      nowLive.filterNot(wantLive.toSet), wantSchema, extra = dvx)
+    commit(path, stNow, wantLive.filterNot(nowSet),
+      nowLive.filterNot(stWant.live), _ => wantSchema, extra = dvx)
   }
 
   /** Change data feed, file-granular: every row added or removed by the
@@ -1500,8 +1419,9 @@ object TxLogFormat extends TableFormat {
   def readChanges(spark: SparkSession, path: String, sinceVersion: Long,
                   untilVersion: Long = Long.MaxValue): DataFrame = {
     val vs = versions(path).filter(v => v > sinceVersion && v <= untilVersion)
-    val (_, schemaJson, last) = snapshot(path, untilVersion)
-    require(last >= 0, s"txlog: no committed version at $path")
+    val atUntil = fold(path, untilVersion)
+    require(atUntil.version >= 0, s"txlog: no committed version at $path")
+    val schemaJson = atUntil.schema
     val schema = schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
       .getOrElse(new StructType())
     def tag(df: DataFrame, typ: String, v: Long): DataFrame = df
@@ -1511,8 +1431,7 @@ object TxLogFormat extends TableFormat {
     // EARLIER commit were emitted as deletes then — a later removal of the
     // same file must not re-emit them, and a dv delta re-marking them (or a
     // restore restating them) must emit only the genuinely new positions
-    val dvState = scala.collection.mutable.Map[String, Array[Long]]() ++=
-      (if (sinceVersion >= 0) foldLog(path, sinceVersion).dvs else Map.empty)
+    val dvState = fold(path, sinceVersion)
     /** One file's rows AT (`keep=true`) or EXCEPT the given positions. */
     def rowsAt(rel: String, ps: Array[Long], keep: Boolean): DataFrame = {
       val sfx = UUID.randomUUID().toString.take(8)
@@ -1522,20 +1441,14 @@ object TxLogFormat extends TableFormat {
       (if (keep) m.filter(cond) else m.filter(!cond)).drop(fn, ri)
     }
     val parts = vs.flatMap { v =>
-      val lines = Files.readAllLines(commitFile(path, v)).asScala.toSeq
+      val lines = readLines(commitFile(path, v))
       require(!lines.contains("m checkpoint"),
         s"txlog: version $v of $path is a vacuum checkpoint — its " +
           "per-commit changes are gone; readChanges from a version >= it, " +
           "or use processChanges(allowFullResync = true) to rebuild")
       def files(p: String) = lines.filter(_.startsWith(p)).map(_.drop(p.length))
       def dvLines(p: String): Seq[(String, Array[Long])] =
-        files(p).flatMap { body =>
-          val q = body.split("\t", 2)
-          if (q.length == 2)
-            try Some((q(0), decodePositions(q(1))))
-            catch { case _: IllegalArgumentException => None }
-          else None
-        }
+        files(p).flatMap(dvBody)
       val out: Seq[DataFrame] =
         if (lines.contains("m rewrite")) Nil // bytes moved, no data change
         else {
@@ -1545,18 +1458,18 @@ object TxLogFormat extends TableFormat {
           // removed files: rows their vector already killed were emitted
           // as deletes when the vector committed — exclude them here
           val removedParts = files("r ").flatMap { rel =>
-            dvState.get(rel).filter(_.nonEmpty) match {
+            dvState.dvs.get(rel).filter(_.nonEmpty) match {
               case Some(dead) => Some(tag(rowsAt(rel, dead, keep = false),
                 "delete", v))
               case None => None // whole file emits below
             }
           }
           val removedPlain =
-            mk(files("r ").filter(r => dvState.get(r).forall(_.isEmpty)),
+            mk(files("r ").filter(r => dvState.dvs.get(r).forall(_.isEmpty)),
               "delete")
           // dv deltas: newly marked positions are deletes
           val dvParts = dvLines("dv ").flatMap { case (rel, delta) =>
-            val before = dvState.getOrElse(rel, Array.empty[Long])
+            val before = dvState.dvs.getOrElse(rel, Array.empty[Long])
             val fresh = delta.filterNot(before.contains)
             if (fresh.isEmpty) None
             else Some(tag(rowsAt(rel, fresh, keep = true), "delete", v))
@@ -1564,7 +1477,7 @@ object TxLogFormat extends TableFormat {
           // dvx restatements (restore): added positions are deletes,
           // dropped positions are re-inserts (the un-delete)
           val dvxParts = dvLines("dvx ").flatMap { case (rel, want) =>
-            val before = dvState.getOrElse(rel, Array.empty[Long])
+            val before = dvState.dvs.getOrElse(rel, Array.empty[Long])
             val added = want.filterNot(before.contains)
             val dropped = before.filterNot(want.contains)
             Seq(
@@ -1579,21 +1492,7 @@ object TxLogFormat extends TableFormat {
         }
       // advance the vector state through EVERY commit (rewrites too —
       // their `r` lines retire vectors), in the commit's own line order
-      lines.foreach { line =>
-        if (line.startsWith("r ")) dvState.remove(line.drop(2))
-        else if (line.startsWith("dv ")) {
-          val q = line.drop(3).split("\t", 2)
-          if (q.length == 2) try dvState(q(0)) = unionSorted(
-            dvState.getOrElse(q(0), Array.empty), decodePositions(q(1)))
-          catch { case _: IllegalArgumentException => }
-        } else if (line.startsWith("dvx ")) {
-          val q = line.drop(4).split("\t", 2)
-          if (q.length == 2) try {
-            val arr = decodePositions(q(1))
-            if (arr.isEmpty) dvState.remove(q(0)) else dvState(q(0)) = arr
-          } catch { case _: IllegalArgumentException => }
-        }
-      }
+      lines.foreach(dvState.apply)
       out
     }
     if (parts.isEmpty)
@@ -1627,12 +1526,11 @@ object TxLogFormat extends TableFormat {
     Files.createDirectories(cursor.getParent)
     val since =
       if (Files.exists(cursor)) Files.readString(cursor).trim.toLong else -1L
-    val until = snapshot(path)._3
+    val vs = versions(path)
+    val until = vs.lastOption.getOrElse(-1L)
     if (until <= since) return None
-    val checkpoints = versions(path)
-      .filter(v => v > since && v <= until)
-      .filter(v => Files.readAllLines(commitFile(path, v)).asScala
-        .contains("m checkpoint"))
+    val checkpoints = vs.filter(v => v > since &&
+      readLines(commitFile(path, v)).contains("m checkpoint"))
     val feed =
       if (checkpoints.isEmpty) readChanges(spark, path, since, until)
       else if (!allowFullResync)
@@ -1792,15 +1690,22 @@ object TxLogFormat extends TableFormat {
     }
   }
 
+  /** [[TableFormat.cloneTable]]: the zero-copy clone (ignores `spark` —
+    * the whole operation is namespace metadata). */
+  override def cloneTable(spark: SparkSession, src: String, dst: String): Unit = {
+    cloneTable(src, dst); ()
+  }
+
   /** `CREATE TABLE target CLONE source [VERSION AS OF v]` (Delta clone —
     * the engine behind `dbt clone`'s zero-copy CI environments): copies
     * the table AS OF `version` (default: latest) into `target` without
     * copying a byte of data. Data files are immutable, so each live file
     * HARD-LINKS into the target dir; the target gets a fresh single-commit
-    * log carrying the live set, committed schema, per-file skipping stats
-    * (raw `f` lines, so pruning fidelity is identical), and CHECK
-    * constraints. Cost is O(live file count) namespace ops at any table
-    * size. Unlike a path-referencing shallow clone (Delta's, which a
+    * log carrying the source's folded state — live set, committed schema,
+    * per-file skipping stats (raw `f`/`fb` lines, so pruning fidelity is
+    * identical), CHECK constraints, bloom-index declarations, deletion
+    * vectors and the last load stamp (a clone is not a load event). Cost
+    * is O(live file count) namespace ops at any table size. Unlike a path-referencing shallow clone (Delta's, which a
     * source-side VACUUM breaks), the link refcount makes the two tables
     * fully independent from the first commit: either side can append,
     * delete, restore, or vacuum without touching the other — shared
@@ -1809,12 +1714,6 @@ object TxLogFormat extends TableFormat {
     * stream replaying into it must land its batches). On a hard-link-less
     * FS each file falls back to a copy (an object store would use
     * server-side copy here). Returns the target's committed version (0). */
-  /** [[TableFormat.cloneTable]]: the zero-copy clone (ignores `spark` —
-    * the whole operation is namespace metadata). */
-  override def cloneTable(spark: SparkSession, src: String, dst: String): Unit = {
-    cloneTable(src, dst); ()
-  }
-
   def cloneTable(path: String, target: String,
                  version: Long = Long.MaxValue): Long = {
     val vs = versions(path)
@@ -1824,55 +1723,20 @@ object TxLogFormat extends TableFormat {
       s"txlog: version $upTo at $path was vacuumed away or never committed")
     require(versions(target).isEmpty,
       s"txlog: clone target $target already has a commit log")
-    // fold live set + schema + latest raw stats line per file as of upTo
-    val live = scala.collection.mutable.LinkedHashSet[String]()
-    var schema: Option[String] = None
-    val rawStats = scala.collection.mutable.Map[String, String]()
-    val rawBlooms = scala.collection.mutable.Map[(String, String), String]()
-    // fold from the newest usable SIDECAR like every other resolution: a
-    // table whose covered commits were reclaimed (the sidecar-sufficiency
-    // property) must still clone completely
-    val vsF = vs.filter(_ <= upTo)
-    val cpBase = checkpointBase(path, upTo, vsF)
-    val cloneLines: Seq[String] =
-      cpBase.map(c => Files.readAllLines(checkpointFile(path, c))
-        .asScala.toSeq).getOrElse(Nil) ++
-      vsF.filter(v => cpBase.forall(_ < v)).flatMap(v =>
-        Files.readAllLines(commitFile(path, v)).asScala)
-    cloneLines.foreach { line =>
-      if (line.startsWith("a ")) live += line.drop(2)
-      else if (line.startsWith("r ")) live -= line.drop(2)
-      else if (line.startsWith("s ")) schema = Some(line.drop(2))
-      else if (line.startsWith("f "))
-        rawStats(line.drop(2).split("\t", 2)(0)) = line
-      else if (line.startsWith("fb ")) {
-        val p = line.drop(3).split("\t", 3)
-        if (p.length >= 2) rawBlooms((p(0), p(1))) = line
-      }
-    }
-    // deletion vectors as of upTo carry over absolutely (a hard-linked
-    // file shares bytes with the source, so its masked rows must stay
-    // masked in the clone — and stay independent afterwards)
-    val dvLines = foldLog(path, upTo).dvs.toSeq.sortBy(_._1).collect {
-      case (rel, ps) if live.contains(rel) && ps.nonEmpty =>
-        s"dvx $rel\t${encodePositions(ps)}"
-    }
-    val liveSeq = live.toSeq
-    liveSeq.foreach { rel =>
+    val st = fold(path, upTo)
+    st.live.foreach { rel =>
       val src = Paths.get(path, rel)
       val dst = Paths.get(target, rel)
       Files.createDirectories(dst.getParent)
       try Files.createLink(dst, src)
       catch { case _: UnsupportedOperationException => Files.copy(src, dst) }
     }
-    val liveBloomLines = rawBlooms.collect {
-      case ((rel, _), line) if live.contains(rel) => line }.toSeq.sorted
-    commit(target, liveSeq, Nil, schema,
-      stats = liveSeq.flatMap(rawStats.get) ++ liveBloomLines,
-      marker = Some("clone"),
-      extra = foldConstraints(path, upTo).map { case (n, e) => s"c $n\t$e" } ++
-        foldBloomIndexes(path, upTo).map { case (c, (bits, k)) =>
-          s"bi $c\t$bits\t$k" } ++ dvLines)
+    Files.createDirectories(logDir(target))
+    if (!publish(target, commitFile(target, 0L),
+        "m clone" +: st.body(withTxns = false)))
+      throw new java.util.ConcurrentModificationException(
+        s"txlog: a concurrent commit created $target while cloning into it")
+    0L
   }
 
   /** One-call table maintenance — the OPTIMIZE scheduler a lakehouse runs
@@ -1903,7 +1767,7 @@ object TxLogFormat extends TableFormat {
       if (dvRows > maxDvRows)
         purgeDeletes(spark, path, Some(partitionCol)).toLong
       else 0L
-    val byDir = snapshot(path)._1.filter(_.contains("/"))
+    val byDir = fold(path).live.toSeq.filter(_.contains("/"))
       .groupBy(_.split("/", 2)(0))
     val needsCompact = byDir.exists(_._2.size > maxFilesPerPartition)
     val compacted =
@@ -1929,7 +1793,7 @@ object TxLogFormat extends TableFormat {
     // original load stamp — a checkpoint is not a load event), where the
     // file's mtime would report a vacuumed stale table as freshly loaded.
     // mtime stays as the fallback for pre-`w` logs.
-    Files.readAllLines(commitFile(path, vs.last)).asScala
+    readLines(commitFile(path, vs.last))
       .find(_.startsWith("w ")).map(_.drop(2).trim.toLong)
       .getOrElse(Files.getLastModifiedTime(commitFile(path, vs.last))
         .toInstant.getEpochSecond)
@@ -1938,7 +1802,7 @@ object TxLogFormat extends TableFormat {
   /** Commit history: (version, adds, removes) per commit. */
   def history(path: String): Seq[(Long, Int, Int)] =
     versions(path).map { v =>
-      val lines = Files.readAllLines(commitFile(path, v)).asScala
+      val lines = readLines(commitFile(path, v))
       (v, lines.count(_.startsWith("a ")), lines.count(_.startsWith("r ")))
     }
 
@@ -1958,7 +1822,7 @@ object TxLogFormat extends TableFormat {
     * Metadata-only (reads the log, never data files). */
   def describeHistory(path: String): Seq[CommitInfo] =
     versions(path).map { v =>
-      val lines = Files.readAllLines(commitFile(path, v)).asScala
+      val lines = readLines(commitFile(path, v))
       CommitInfo(
         version = v,
         timestamp = lines.find(_.startsWith("w "))
@@ -1992,6 +1856,37 @@ object TxLogFormat extends TableFormat {
     vacuum(path, retainVersions = math.max(1, recent))
   }
 
+  /** Every data file some retained version (>= `horizon`) references:
+    * the live set at the first retained version plus every file added
+    * after it — one forward pass, not one fold per version. */
+  private def reachable(path: String, at: LogState, vs: Seq[Long]): Set[String] =
+    at.live.toSet ++ vs.filter(_ > at.version).flatMap(v =>
+      readLines(commitFile(path, v)).collect {
+        case l if l.startsWith("a ") => l.drop(2) })
+
+  /** [[vacuum]] DRY RUN: the data files a vacuum at this retention WOULD
+    * reclaim (unreachable from every retained snapshot), without touching
+    * anything — the "what am I about to delete" check an operator runs
+    * before an aggressive retention change. Metadata-only. */
+  def vacuumPreview(path: String, retainVersions: Int = 1): Seq[String] = {
+    val vs = versions(path)
+    if (vs.isEmpty) return Nil
+    val horizon = math.max(vs.head, vs.last - math.max(0, retainVersions - 1))
+    val keep = reachable(path, fold(path, horizon), vs)
+    dataFiles(path).filterNot(keep).sorted
+  }
+
+  /** Table-relative paths of every parquet data file on disk. */
+  private def dataFiles(path: String): Seq[String] = {
+    val root = Paths.get(path)
+    val s = Files.walk(root)
+    try s.iterator().asScala
+      .filter(f => Files.isRegularFile(f) && f.toString.endsWith(".parquet"))
+      .filterNot(_.startsWith(logDir(path)))
+      .map(f => root.relativize(f).toString).toSeq
+    finally s.close()
+  }
+
   /** Reclaim space: checkpoint the snapshot as of `current -
     * retainVersions + 1` into that version's commit slot (temp file +
     * atomic replacing rename — old and new horizon commit describe the
@@ -2000,44 +1895,20 @@ object TxLogFormat extends TableFormat {
     * retained snapshot references and sweep orphaned stage dirs from
     * crashed writers. Time travel stays available for the retained
     * versions. Returns deleted data-file count. */
-  /** [[vacuum]] DRY RUN: the data files a vacuum at this retention WOULD
-    * reclaim (unreachable from every retained snapshot), without touching
-    * anything — the "what am I about to delete" check an operator runs
-    * before an aggressive retention change. Metadata-only. */
-  def vacuumPreview(path: String, retainVersions: Int = 1): Seq[String] = {
-    val vs = versions(path)
-    if (vs.isEmpty) return Nil
-    val horizon = vs.last - math.max(0, retainVersions - 1)
-    val reachable = vs.filter(_ >= horizon)
-      .flatMap(v => snapshot(path, v)._1).toSet
-    val root = Paths.get(path)
-    val s = Files.walk(root)
-    try s.iterator().asScala
-      .filter(f => Files.isRegularFile(f) && f.toString.endsWith(".parquet"))
-      .filterNot(_.startsWith(logDir(path)))
-      .map(f => root.relativize(f).toString)
-      .filterNot(reachable)
-      .toSeq.sorted
-    finally s.close()
-  }
-
   def vacuum(path: String, retainVersions: Int = 1): Int = {
     val vs = versions(path)
     if (vs.isEmpty) return 0
-    val horizon = vs.last - math.max(0, retainVersions - 1)
-    if (vs.exists(_ < horizon)) {
+    val horizon = math.max(vs.head, vs.last - math.max(0, retainVersions - 1))
+    val atHorizon = fold(path, horizon)
+    if (vs.head < horizon) {
       // fold everything <= horizon into a checkpoint at the horizon slot,
       // BEFORE deleting older commits — their `add` records are what the
       // later snapshots' live files resolve through. Txn tags carry
       // forward too, or a vacuum between micro-batches would forget a
       // replayed batch was already written.
-      // the folded content (schema + txn tags + live adds + surviving
-      // stats + active constraints) is the shared checkpoint body —
-      // see [[checkpointLines]] for why each family must restate
-      val content = ("m checkpoint" +: checkpointLines(path, horizon))
-        .mkString("", "\n", "\n")
       val tmp = logDir(path).resolve(s".tmp-${UUID.randomUUID()}")
-      Files.writeString(tmp, content)
+      Files.writeString(tmp, ("m checkpoint" +: atHorizon.body(withTxns = true))
+        .mkString("", "\n", "\n"))
       Files.move(tmp, commitFile(path, horizon),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -2049,19 +1920,12 @@ object TxLogFormat extends TableFormat {
       checkpointVersions(path).filter(_ < horizon)
         .foreach(v => Files.deleteIfExists(checkpointFile(path, v)))
     }
-    val retained = versions(path)
-    val reachable = retained.flatMap(v => snapshot(path, v)._1).toSet
-    val root = Paths.get(path)
+    val keep = reachable(path, atHorizon, vs)
     var deleted = 0
-    val s = Files.walk(root)
-    val all = try s.iterator.asScala
-      .filter(f => Files.isRegularFile(f) && f.toString.endsWith(".parquet"))
-      .filterNot(_.startsWith(logDir(path)))
-      .toSeq finally s.close()
-    all.foreach { f =>
-      val rel = root.relativize(f).toString
-      if (!reachable(rel)) { Files.deleteIfExists(f); deleted += 1 }
+    dataFiles(path).filterNot(keep).foreach { rel =>
+      Files.deleteIfExists(Paths.get(path, rel)); deleted += 1
     }
+    val root = Paths.get(path)
     // empty partition dirs + orphaned stages
     val s2 = Files.walk(root)
     try s2.iterator.asScala.toSeq.reverseIterator

@@ -1191,7 +1191,20 @@ object StreamOps {
     val corpusIndex =
       if (cold) spark.range(0).select(col("id").as("sh"),
         lit(null).cast("array<struct<doc_id:bigint,p:bigint>>").as("ds"))
-      else TxLogFormat.read(spark, indexTable)
+      else {
+        // an index persisted with the older string `sh` key would fail
+        // mid-stage on a cast: check the key type up front (analysis
+        // only, no job) and name the remedy
+        val idx = TxLogFormat.read(spark, indexTable)
+        val shType = idx.schema.find(_.name == "sh").map(_.dataType)
+        if (!shType.contains(org.apache.spark.sql.types.LongType))
+          throw new IllegalStateException(
+            s"containment index $indexTable has `sh` of type " +
+              s"${shType.map(_.simpleString).getOrElse("<missing>")}, " +
+              "expected bigint (the shingle's xxhash64): rebuild index " +
+              "from the corpus")
+        idx
+      }
     val corpusSizes =
       if (cold) spark.range(0).select(col("id").as("doc_id"), col("id").as("n_sh"))
       else TxLogFormat.read(spark, sizesTable)

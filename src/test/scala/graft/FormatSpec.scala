@@ -701,6 +701,96 @@ class FormatSpec extends SparkSpec {
       TxLogFormat.deletionVectors(t3).isEmpty)
   }
 
+  test("racing rewrite refuses: a self-reading replace or " +
+       "overwritePartitions does not resurrect a freshly-landed vector") {
+    val base = spark.range(0, 100)
+      .selectExpr("id", "CAST(id % 4 AS STRING) AS p", "id * 2 AS v")
+    val ops: Seq[(String, String => Unit)] = Seq(
+      "replace" -> (t => TxLogFormat.replace(spark,
+        TxLogFormat.read(spark, t), t)),
+      "overwritePartitions" -> (t => TxLogFormat.overwritePartitions(
+        TxLogFormat.read(spark, t).filter(col("p") === "1"), t, "p")))
+    ops.foreach { case (name, op) =>
+      val t = tmp()
+      TxLogFormat.write(base, t, Some("p"))
+      // the plan has read and staged the table; the vector lands between
+      // staging and the rewrite's first commit attempt
+      val hold = new java.util.concurrent.atomic.AtomicBoolean(true)
+      TxLogFormat.onCommitAttempt = p =>
+        if (p == t && hold.getAndSet(false))
+          TxLogFormat.deleteVectors(spark, t, col("id") < 10)
+      try {
+        val e = intercept[java.util.ConcurrentModificationException](op(t))
+        assert(e.getMessage.contains("deletion vector"), s"$name: ${e.getMessage}")
+      } finally TxLogFormat.onCommitAttempt = _ => ()
+      assert(TxLogFormat.read(spark, t).count() == 90, name)
+      assert(TxLogFormat.count(spark, t) == 90, name)
+    }
+  }
+
+  test("every line kind resolves the same from a sidecar, a full replay, " +
+       "a vacuum fold and a clone") {
+    import scala.jdk.CollectionConverters._
+    val t = tmp()
+    val batch = (lo: Long, hi: Long) => spark.range(lo, hi).selectExpr("id",
+      "CAST(id % 3 AS STRING) AS p", "id * 2 AS v", "CONCAT('u', id) AS who")
+    TxLogFormat.write(batch(0, 30), t, Some("p"))                    // v0  a s f
+    TxLogFormat.addConstraint(spark, t, "v_pos", "v >= 0")           // v1  c
+    TxLogFormat.addConstraint(spark, t, "id_pos", "id >= 0")         // v2  c
+    TxLogFormat.dropConstraint(t, "id_pos")                          // v3  cd
+    TxLogFormat.addBloomIndex(t, "who")                              // v4  bi
+    TxLogFormat.addBloomIndex(t, "v")                                // v5  bi
+    TxLogFormat.dropBloomIndex(t, "v")                               // v6  bid
+    assert(TxLogFormat.bloomIndexes(t).keySet == Set("who"))
+    intercept[IllegalArgumentException](TxLogFormat.dropBloomIndex(t, "v"))
+    TxLogFormat.appendBatch(batch(30, 40), t, "app", 0L, Some("p"))  // v7  t f fb
+    TxLogFormat.deleteVectors(spark, t, col("id") < 5)               // v8  dv
+    TxLogFormat.restore(t, 7L)                                       // v9  dvx
+    TxLogFormat.deleteVectors(spark, t, col("id") % 10 === 3)        // v10 dv
+    TxLogFormat.appendBatch(batch(40, 45), t, "app", 1L, Some("p"))  // v11
+    TxLogFormat.deleteVectors(spark, t, col("id") === 41)            // v12
+    val lg = Paths.get(t, "_txlog")
+    def sidecars() = Files.list(lg).iterator().asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".checkpoint")).toSeq
+    assert(sidecars() == Seq(f"${10L}%016d.checkpoint"))
+    def resolve(path: String) = (
+      TxLogFormat.constraints(path), TxLogFormat.bloomIndexes(path),
+      TxLogFormat.deletionVectors(path), TxLogFormat.lastCommitEpoch(path),
+      TxLogFormat.count(spark, path),
+      rows(TxLogFormat.read(spark, path).orderBy("id")),
+      rows(TxLogFormat.scan(spark, path, col("who") === "u31")))
+    val want = resolve(t)
+    assert(want._1 == Map("v_pos" -> "v >= 0"))
+    assert(want._2.keySet == Set("who"))
+    assert(want._3.values.sum == 5)        // 3, 13, 23, 33 and 41
+    assert(want._5 == 40 && want._6.size == 40 && want._7.size == 1)
+    val txns = Set("app:0", "app:1")
+    assert(TxLogFormat.committedTxns(t) == txns)
+    val c = tmp()
+    TxLogFormat.cloneTable(t, c)
+    assert(resolve(c) == want, "clone")
+    assert(TxLogFormat.committedTxns(c).isEmpty) // a clone is a new sink
+    sidecars().foreach(f => Files.delete(lg.resolve(f)))
+    assert(resolve(t) == want, "full replay")
+    assert(TxLogFormat.committedTxns(t) == txns)
+    TxLogFormat.vacuum(t, retainVersions = 1)
+    assert(TxLogFormat.versions(t) == Seq(12L))
+    assert(resolve(t) == want, "vacuum fold")
+    assert(TxLogFormat.committedTxns(t) == txns)
+    assert(resolve(c) == want, "clone after the source's vacuum")
+  }
+
+  test("count: a file with a bloom filter but no numeric stats falls back " +
+       "to a real count") {
+    // string-only rows record no `f` line (no row count); once an index
+    // is declared, a rewrite records an `fb` line for every file
+    val t = tmp()
+    TxLogFormat.write(spark.range(0, 7).selectExpr("CAST(id AS STRING) AS k"), t)
+    TxLogFormat.addBloomIndex(t, "k")
+    TxLogFormat.replace(spark, TxLogFormat.read(spark, t), t)
+    assert(TxLogFormat.count(spark, t) == 7)
+  }
+
   test("deleteVectorsBatch: tagged deletes skip on replay; overlapping " +
        "batches mark only new rows") {
     val base = spark.range(0, 20)

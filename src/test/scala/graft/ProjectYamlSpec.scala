@@ -427,4 +427,45 @@ class ProjectYamlSpec extends SparkSpec {
       java.nio.file.Paths.get(refDir, "models/exposures.yml"))
     assert(ProjectYaml.loadExposures(real).isEmpty)
   }
+
+  test("project-level loaders read unit_tests: and selectors.yml from a " +
+       "project directory; a project without selectors.yml has none") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_proj_files")
+    def write(rel: String, text: String): Unit = {
+      val p = dir.resolve(rel)
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.writeString(p, text)
+    }
+    write("dbt_project.yml", "name: files\nprofile: files\n")
+    write("models/doubled.sql",
+      "select id, v * 2 as v2 from {{ source('src', 't') }}\n")
+    write("models/staging/schema.yml",
+      """unit_tests:
+        |  - name: doubles_v
+        |    model: doubled
+        |    given:
+        |      - input: source('src', 't')
+        |        rows:
+        |          - {id: 1, v: 3}
+        |    expect:
+        |      rows:
+        |        - {id: 1, v2: 6}
+        |""".stripMargin)
+    assert(ProjectYaml.loadProjectSelectors(dir.toString).isEmpty)
+    write("selectors.yml",
+      """selectors:
+        |  - name: nightly
+        |    default: true
+        |    definition: doubled+
+        |""".stripMargin)
+    val tests = ProjectYaml.loadProjectUnitTests(dir.toString)
+    assert(tests.map(t => (t.name, t.model, t.given.keySet)) ==
+      Seq(("doubles_v", "doubled", Set("src.t"))))
+    val (models, _) = ProjectYaml.loadModels(dir.toString)
+    assert(ProjectYaml.runUnitTests(spark, models, tests) ==
+      Seq("doubles_v" -> None))
+    val sel = ProjectYaml.loadProjectSelectors(dir.toString)
+    assert(sel.map(s => (s.name, s.isDefault, s.definition)) ==
+      Seq(("nightly", true, "doubled+")))
+  }
 }

@@ -709,6 +709,26 @@ class StreamingSpec extends SparkSpec {
     assert(dump(xi) == dump(ci), s"index diverges:\n${dump(xi)}\nvs\n${dump(ci)}")
   }
 
+  test("streaming CONTAINMENT ingest refuses a string-keyed index with a " +
+       "named rebuild error before committing anything") {
+    import spark.implicits._
+    import graft.sources.TxLogFormat
+    val root = java.nio.file.Files.createTempDirectory("graft_ct_stale")
+    val (pairsT, indexT, sizesT) = (root.resolve("pairs").toString,
+      root.resolve("index").toString, root.resolve("sizes").toString)
+    // the older index layout: the shingle text itself as the `sh` key
+    TxLogFormat.write(Seq(("p q r", 1L)).toDF("sh", "doc_id")
+      .selectExpr("sh", "array(named_struct('doc_id', doc_id, 'p', 0L)) AS ds"),
+      indexT)
+    val e = intercept[IllegalStateException](
+      StreamOps.containmentIngestBatch(pairsT, indexT, sizesT, 0.6, 3)(
+        Seq((2L, "p q r s")).toDF("doc_id", "text"), 1L))
+    assert(e.getMessage.contains("rebuild index") &&
+      e.getMessage.contains("string"), e.getMessage)
+    assert(TxLogFormat.versions(pairsT).isEmpty &&
+      TxLogFormat.versions(indexT) == Seq(0L))
+  }
+
   test("streaming CONTAINMENT ingest with an uncrossed cap: the union of " +
        "per-batch emissions equals the batch closed form on the full corpus") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
