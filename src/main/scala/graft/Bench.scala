@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Parquet
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark entrypoint. Prints ONE JSON line:
@@ -103,7 +104,7 @@ object Bench {
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     tables.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      try Parquet.read(spark, s"$sfDir/$t.parquet").count()
       catch { case _: Throwable => () } // warm-up only; absence is fine
     }
 

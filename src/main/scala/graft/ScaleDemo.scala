@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -128,7 +129,7 @@ object ScaleDemo {
     }
 
     // ---- corpus generation (deterministic, written once per scale) ----
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
+    val base = Parquet.read(spark, s"$sfDir/documents.parquet")
       .select("doc_id", "text", "lang", "source")
     val header = element_at(typedlit(Headers), (col("doc_id") % 3).cast("int") + 1)
     def corpus(reps: Int): DataFrame =
@@ -145,7 +146,7 @@ object ScaleDemo {
     def materialize(name: String, reps: Int): DataFrame = {
       val path = s"$workDir/$name"
       corpus(reps).repartition(32).write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Parquet.read(spark, path)
     }
     val x1 = materialize("x1", 1)
     val x10 = materialize("x10", 10)
@@ -166,7 +167,7 @@ object ScaleDemo {
           when(col("doc_id") % 10 < 3, concat(header, lit(" "), mut))
             .otherwise(mut).as("text"), col("lang"), col("source"))
         .write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Parquet.read(spark, path)
     }
 
     import graft.operators.Dedup
@@ -225,8 +226,8 @@ object ScaleDemo {
           .select(col("id").as("doc_id"), col("id").as("n_sh")))
       idx.write.mode("overwrite").parquet(s"$workDir/$name.idx")
       sizes.write.mode("overwrite").parquet(s"$workDir/$name.sizes")
-      (spark.read.parquet(s"$workDir/$name.idx"),
-        spark.read.parquet(s"$workDir/$name.sizes"))
+      (Parquet.read(spark, s"$workDir/$name.idx"),
+        Parquet.read(spark, s"$workDir/$name.sizes"))
     }
     val (idx1, sz1) = buildIndex("x1", x1)
     val (idx10, sz10) = buildIndex("x10", x10)
@@ -246,7 +247,7 @@ object ScaleDemo {
       val (_, hashes) = Dedup.incrementalSubstringDedup(docs,
         spark.range(0).select(col("id").as("h")))
       hashes.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Parquet.read(spark, path)
     }
     val win1 = winIndex("x1", x1)
     val win10 = winIndex("x10", x10)
@@ -298,7 +299,7 @@ object ScaleDemo {
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
       bodied.unionByName(twins).repartition(32)
         .write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Parquet.read(spark, path)
     }
     val m1 = mcorpus("m1", 1)
     val m10 = mcorpus("m10", 10)
@@ -353,7 +354,7 @@ object ScaleDemo {
           col("sig").bitwiseXOR(lit((1L << 20) | (1L << 45))).as("sig"))
       baseSigs.unionByName(twins).repartition(32)
         .write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Parquet.read(spark, path)
     }
     val h1 = hcorpus("h1", 20000)
     val h10 = hcorpus("h10", 200000)
@@ -452,7 +453,7 @@ object ScaleDemo {
             repeat(concat(lit("w"), col("id") % 1000, lit(" ")), 180))
             .as("text"))
         .repartition(32).write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Parquet.read(spark, path)
     }
     val u1 = ucorpus("u1", 200000)    // hot key: 80k payload rows
     val u10 = ucorpus("u10", 2000000) // hot key: 800k payload rows
@@ -570,7 +571,7 @@ object ScaleDemo {
               ((col("doc_id") + i) % 10).cast("string"))), " ").as("text"),
           col("lang"), col("source"))
         .repartition(32).write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Parquet.read(spark, path)
     }
     val o10 = {
       val path = s"$workDir/o10"
@@ -579,7 +580,7 @@ object ScaleDemo {
           col("lang"), col("source"))
       }.reduce(_ unionByName _)
         .repartition(32).write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Parquet.read(spark, path)
     }
     // the synthetic corpus draws from a ~10² word pool, so ×10 barely
     // moves the fold count; vX salts per-occurrence (%1000) for a
@@ -594,7 +595,7 @@ object ScaleDemo {
             .as("text"),
           col("lang"), col("source"))
         .repartition(32).write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Parquet.read(spark, path)
     }
     def wordStats(d: DataFrame): (Long, Long) = {
       val w = d.select(explode(split(lower(trim(col("text"))), " ")).as("w"))

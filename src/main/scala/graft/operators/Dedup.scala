@@ -232,7 +232,11 @@ object Dedup {
                        bands: Int = 8): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes ($numHashes) must be divisible by bands ($bands)")
-    bandRows(documents.select(col("doc_id"), hashedWordSet.as("__wh"))
+    // __wh is fenced (EvalOnce): the size guard would otherwise push below
+    // the projection as a copy of the word hashing, which then ran twice
+    // per row (scan Filter, then the minhash Project)
+    bandRows(documents.select(col("doc_id"),
+        graft.functions.EvalOnce(hashedWordSet).as("__wh"))
       .filter(size(col("__wh")) > 0)
       .select(col("doc_id"),
         graft.functions.MinHashAgg.minhashOfHashes(col("__wh"), numHashes).as("sig")),

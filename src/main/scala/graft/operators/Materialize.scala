@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -123,7 +124,7 @@ object Materialize {
       unescape(p.getPath.getName.split("=", 2)(1)) ->
         math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     }.toMap
-    val df = spark.read.parquet(path)
+    val df = Parquet.read(spark, path)
     val budgetCol = typedLit(budget)
     val salted = df.withColumn("_salt",
       pmod(xxhash64(df.columns.map(col): _*),
@@ -220,7 +221,7 @@ object Materialize {
         .resolve("t").toString)
     orders.select("o_orderkey", "o_totalprice", "o_orderpriority")
       .write.mode("overwrite").partitionBy("o_orderpriority").parquet(target)
-    val fact = spark.read.parquet(target)
+    val fact = Parquet.read(spark, target)
     import spark.implicits._
     // the dim must be a SOURCE relation: over an in-memory LocalRelation
     // Catalyst folds the tier filter away at optimize time and the pruning
@@ -229,7 +230,7 @@ object Materialize {
         ("4-NOT SPECIFIED", "cold"), ("5-LOW", "cold"))
       .toDF("o_orderpriority", "tier")
       .write.mode("overwrite").parquet(target + "_dim")
-    val dim = spark.read.parquet(target + "_dim")
+    val dim = Parquet.read(spark, target + "_dim")
     fact.join(dim.filter(col("tier") === "hot"), "o_orderpriority")
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
@@ -259,7 +260,7 @@ object Materialize {
                  keyCol: String, keys: DataFrame): Seq[String] = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val df = spark.read.parquet(path)
+    val df = Parquet.read(spark, path)
     val affected = df.select(col(partitionCol), col(keyCol))
       .join(broadcast(keys), df(keyCol) === keys(keys.columns.head), "left_semi")
       .select(col(partitionCol).cast("string")).distinct()
@@ -305,7 +306,7 @@ object Materialize {
     val keys = orders.filter(col("o_custkey") % 97 === 0)
       .select(col("o_custkey").as("del_key")).distinct()
     deleteKeys(spark, target, "o_orderpriority", "o_custkey", keys)
-    spark.read.parquet(target)
+    Parquet.read(spark, target)
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
            graft.util.Det.centsSum(col("o_totalprice")).as("revenue"))

@@ -1151,9 +1151,13 @@ object TextAnalysis {
     // same counted array as a per-row sum (the dl aggregation + join are
     // gone too), and dft aggregates one row per DISTINCT (doc, term).
     // tf/df/dl values are bit-equal to the explode form (spec-pinned),
-    // so every weight and the oracle hash are unchanged.
-    val counted = corpus.select(col("doc_id"),
-        graft.functions.TermFunctions.ngramCounts(words, 1).as("__tc"))
+    // so every weight and the oracle hash are unchanged. The counted array
+    // is fenced (EvalOnce): Catalyst infers size(__tc) > 0 from the explode
+    // and pushes it, with the dl > 0 stats filter, below the projection by
+    // copying the kernel call — unfenced, every corpus scan counted each
+    // row twice (scan Filter, then Project).
+    val counted = corpus.select(col("doc_id"), graft.functions.EvalOnce(
+        graft.functions.TermFunctions.ngramCounts(words, 1)).as("__tc"))
       .select(col("doc_id"),
         aggregate(col("__tc"), lit(0L), (acc, e) => acc + e.getField("tf"))
           .as("dl"),

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -817,7 +818,7 @@ final class Pipeline(models: Seq[Model], exposures: Seq[Exposure] = Nil,
                 // the same directory concurrently.
                 val dir = s"$targetDir/dbt_test__audit/${m.name}/$tn"
                 t(out).write.mode("overwrite").parquet(dir)
-                spark.read.parquet(dir).count()
+                Parquet.read(spark, dir).count()
               }
             // outcome evaluates at EVERY count, including 0: dbt's
             // zero-matching conditions (`error_if: "= 0"` — the

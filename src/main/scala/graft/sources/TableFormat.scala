@@ -129,5 +129,5 @@ object ParquetDirFormat extends TableFormat {
     graft.operators.Materialize.deleteKeys(spark, path, partitionCol, keyCol, keys)
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
 }

@@ -5,14 +5,16 @@ import org.apache.spark.sql.functions._
 
 /** Typed loaders for the driver-generated test tables.
   *
-  * Every loader selects through `spark.read.parquet` so Catalyst can prune
-  * columns and push filters down to the scan. Operators never read files
-  * themselves — they take DataFrames — so at 100 TB the same operators run
-  * against bucketed/partitioned production tables unchanged.
+  * Every loader selects through the parquet read seam ([[Parquet.read]]:
+  * the schema comes from one driver-side footer read, no Spark job) so
+  * Catalyst can prune columns and push filters down to the scan.
+  * Operators never read files themselves — they take DataFrames — so at
+  * 100 TB the same operators run against bucketed/partitioned production
+  * tables unchanged.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

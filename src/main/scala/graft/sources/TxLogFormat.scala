@@ -463,7 +463,7 @@ object TxLogFormat extends TableFormat {
     if (idx.isEmpty || rels.isEmpty) return Nil
     try {
       val root = Paths.get(path)
-      val df = spark.read.parquet(rels.map(r => root.resolve(r).toString): _*)
+      val df = Parquet.read(spark, rels.map(r => root.resolve(r).toString))
       val cols = idx.keys.toSeq.filter(df.columns.contains)
       if (cols.isEmpty) return Nil
       val aggs = cols.map { c =>
@@ -722,7 +722,7 @@ object TxLogFormat extends TableFormat {
             col("_metadata.file_name").as(fnCol),
             col("_metadata.row_index").as(riCol)): _*)
       case None =>
-        spark.read.option("basePath", path).parquet(paths: _*)
+        Parquet.read(spark, paths, Map("basePath" -> path))
           .withColumn(fnCol, col("_metadata.file_name"))
           .withColumn(riCol, col("_metadata.row_index"))
     }
@@ -787,8 +787,7 @@ object TxLogFormat extends TableFormat {
           .parquet(live.map(r => s"$path/$r"): _*)
           .select(s.fieldNames.map(col).toSeq: _*)
       case None =>
-        spark.read.option("basePath", path)
-          .parquet(live.map(r => s"$path/$r"): _*)
+        Parquet.read(spark, live.map(r => s"$path/$r"), Map("basePath" -> path))
     }
   }
 

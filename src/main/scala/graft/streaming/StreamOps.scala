@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Det.centsSum
@@ -83,11 +84,11 @@ object StreamOps {
   }
 
   /** Streaming parquet read of `dir` (only `file` in it when given), its
-    * schema probed from a batch footer read. */
-  private def parquetStream(spark: SparkSession, dir: String,
-                            file: Option[String] = None): DataFrame = {
+    * schema probed through the batch read seam (a driver-side footer read). */
+  private[graft] def parquetStream(spark: SparkSession, dir: String,
+                                   file: Option[String] = None): DataFrame = {
     val r = spark.readStream
-      .schema(spark.read.parquet(file.fold(dir)(f => s"$dir/$f")).schema)
+      .schema(Parquet.read(spark, file.fold(dir)(f => s"$dir/$f")).schema)
     file.fold(r)(r.option("pathGlobFilter", _)).parquet(dir)
   }
 
@@ -290,7 +291,7 @@ object StreamOps {
     * equal the batch join — shares a batch oracle. */
   def runEnrich(spark: SparkSession, dir: String): DataFrame =
     stateRig(spark) { r =>
-      val customers = r.spark.read.parquet(s"$dir/customer.parquet")
+      val customers = Parquet.read(r.spark, s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_mktsegment"))
       drainToMemory(eventsStream(r.spark, dir)
         .join(broadcast(customers), col("user_id") === col("c_custkey"))
@@ -317,7 +318,7 @@ object StreamOps {
         .partitionBy("event_date")
         .parquet(outPath)
     }
-    spark.read.parquet(outPath)
+    Parquet.read(spark, outPath)
   }
 
   /** The event stream as partitioned-sink rows. */
@@ -389,7 +390,7 @@ object StreamOps {
     ingestRig(spark, s"$dir/documents.parquet") { r =>
       import graft.sources.TxLogFormat
       val table = r.table("t")
-      TxLogFormat.write(r.spark.read.parquet(s"$dir/documents.parquet")
+      TxLogFormat.write(Parquet.read(r.spark, s"$dir/documents.parquet")
         .select("doc_id", "lang", "source", "n_chars"), table, Some("lang"))
       def runOnce(): Unit = {
         drainBatches(r.source(dir, "documents.parquet")
@@ -426,7 +427,7 @@ object StreamOps {
       import graft.sources.TxLogFormat
       val t = r.table("t")
       val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      TxLogFormat.write(r.spark.read.parquet(s"$dir/orders.parquet")
+      TxLogFormat.write(Parquet.read(r.spark, s"$dir/orders.parquet")
         .select(cols.map(col): _*), t, Some("o_orderstatus"))
       def runOnce(): Unit = {
         drainBatches(r.source(dir, "orders.parquet").select(cols.map(col): _*)) {
@@ -1715,7 +1716,7 @@ object StreamOps {
     * spec-bounded (recall vs a fresh rebuild) where SQL can't reach. */
   def runIvfIngest(spark: SparkSession, dir: String): DataFrame =
     ingestRig(spark, s"$dir/embeddings.parquet") { r =>
-      val emb = r.spark.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Parquet.read(r.spark, s"$dir/embeddings.parquet")
         .select(col("vec_id"), col("embedding"))
       val n = emb.count()
       def cutId(k: Long): Long = emb.select(col("vec_id"))

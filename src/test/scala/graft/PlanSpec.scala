@@ -795,6 +795,29 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
   }
 
+  test("bm25 top-k and the minhash band frame: no Filter under the " +
+       "corpus scan re-evaluates a text kernel") {
+    // Catalyst infers size(arr) > 0 from each explode/size guard and
+    // pushes it below the projection by COPYING the kernel call into it:
+    // unfenced, graft_ngram_counts (bm25) and the hashed word set (the
+    // band frame's minhash input) ran twice per row — scan Filter, then
+    // Project. EvalOnce keeps the predicate above the projection.
+    import org.apache.spark.sql.catalyst.expressions.XxHash64
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val docs = Tables.documents(spark, sf)
+    Seq(
+      "bm25TopK" -> TextAnalysis.bm25TopK(docs.filter(col("doc_id") % 50 =!= 0),
+        docs.filter(col("doc_id") % 50 === 0)),
+      "bandedSignatures" -> Dedup.bandedSignatures(docs)).foreach { case (op, df) =>
+      val kernelFilters = df.queryExecution.optimizedPlan.collect {
+        case f: Filter if f.condition.exists(e =>
+          e.prettyName == "graft_ngram_counts" || e.isInstanceOf[XxHash64]) => f
+      }
+      assert(kernelFilters.isEmpty,
+        s"$op: a pushed-down Filter re-evaluates a text kernel:\n$kernelFilters")
+    }
+  }
+
   test("any-match near-dup (r14): the doc-level collapse aggregates the " +
        "VERIFIED match set, not candidates — the hamming filter sits " +
        "under the aggregation, the band join is the one shuffle join") {
