@@ -13,10 +13,19 @@ class ProjectYamlSpec extends SparkSpec {
 
   private val refDir = "/root/reference"
 
+  /** A file of the reference checkout; cancels the test (naming the file)
+    * where the checkout is absent. */
+  private def refFile(rel: String): java.nio.file.Path = {
+    val p = java.nio.file.Paths.get(refDir, rel)
+    assume(java.nio.file.Files.isRegularFile(p),
+      s"reference checkout absent: $p")
+    p
+  }
+
   test("reference dbt_project.yml: name, profile, folder config tree") {
     val p = ProjectYaml.loadProject(
       java.nio.file.Files.readString(
-        java.nio.file.Paths.get(refDir, "dbt_project.yml")))
+        refFile("dbt_project.yml")))
     assert(p.name == "dbt_gcloud" && p.profile == "dbt_gcloud")
     assert(p.modelPaths == Seq("models"))
     val staging = ProjectYaml.folderConfig(p.modelsTree, p.name, Seq("staging"))
@@ -29,7 +38,7 @@ class ProjectYamlSpec extends SparkSpec {
 
   test("reference profiles.yml: targets resolve with env_var defaults") {
     val yml = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(refDir, "profiles/profiles.yml"))
+      refFile("profiles/profiles.yml"))
     val (targets, default) =
       ProjectYaml.loadProfiles(yml, "dbt_cloud", "/tmp/wh")
     assert(default == "dev") // env_var('DBT_TARGET', 'dev') default
@@ -51,6 +60,7 @@ class ProjectYamlSpec extends SparkSpec {
   }
 
   test("reference model SQL: config headers, refs, tests load onto Model") {
+    refFile("dbt_project.yml")
     val (models, _) = ProjectYaml.loadModels(refDir, includeDisabled = true)
     assert(models.map(_.name).toSet ==
       Set("stg_example", "fct_example", "example_seed", "example_snapshot"))
@@ -77,6 +87,7 @@ class ProjectYamlSpec extends SparkSpec {
 
   test("the reference project RUNS: its own SQL executes through " +
        "spark.sql, bucket semantics match fct_example.sql") {
+    refFile("dbt_project.yml")
     import spark.implicits._
     val dag = ProjectYaml.load(refDir, includeDisabled = true)
     val raw = Seq(
@@ -113,6 +124,7 @@ class ProjectYamlSpec extends SparkSpec {
 
   test("unit_tests: blocks run the reference model against mocked inputs " +
        "(dbt 1.8 unit tests); wrong expectations and unmocked deps fail") {
+    refFile("dbt_project.yml")
     val (models, _) = ProjectYaml.loadModels(refDir, includeDisabled = true)
     val yaml =
       """unit_tests:
@@ -216,6 +228,7 @@ class ProjectYamlSpec extends SparkSpec {
 
   test("column-level lineage traces through the reference's SQL-built " +
        "models (temp-view resolution)") {
+    refFile("dbt_project.yml")
     import spark.implicits._
     val dag = ProjectYaml.load(refDir, includeDisabled = true)
     val raw = Seq((1L, "2024-01-01 10:00:00", 50.0))
@@ -372,10 +385,6 @@ class ProjectYamlSpec extends SparkSpec {
     assert(srcs == Seq(ProjectYaml.SourceTable("raw", "example",
       Some("created_at"), Some(24L * 3600), Some(72L * 3600))))
     assert(srcs.head.inputKey == "raw.example") // the Pipeline input key
-    // the real reference file ships fully commented → empty, no error
-    val real = java.nio.file.Files.readString(java.nio.file.Paths.get(
-      refDir, "models/staging/src_example.yml"))
-    assert(ProjectYaml.loadSources(real).isEmpty)
     // `dbt source freshness` over the declared contract: age of the
     // NEWEST row vs the warn/error periods, on exact seconds
     import spark.implicits._
@@ -422,9 +431,17 @@ class ProjectYamlSpec extends SparkSpec {
     assert(exps == Seq(Exposure("example_dashboard", "dashboard",
       "Data Team", Seq("fct_example"),
       "Example dashboard exposure depending on fct_example.")))
-    // reference exposures.yml ships fully commented out → empty, no error
+  }
+
+  test("reference src_example.yml ships fully commented: loads no sources") {
     val real = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(refDir, "models/exposures.yml"))
+      refFile("models/staging/src_example.yml"))
+    assert(ProjectYaml.loadSources(real).isEmpty)
+  }
+
+  test("reference exposures.yml ships fully commented: loads no exposures") {
+    val real = java.nio.file.Files.readString(
+      refFile("models/exposures.yml"))
     assert(ProjectYaml.loadExposures(real).isEmpty)
   }
 
