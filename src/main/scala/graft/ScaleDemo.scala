@@ -218,12 +218,10 @@ object ScaleDemo {
     // built via the cold path (= containmentPairs aggregate) and
     // parqueted, as the production loop persists them.
     def buildIndex(name: String, docs: DataFrame): (DataFrame, DataFrame) = {
-      // the cold-start empty state, the containmentIngestBatch idiom
+      // the cold-start empty state of the ingest loop's contracts
       val (_, idx, sizes) = Dedup.incrementalContainment(docs,
-        corpusIndex = spark.range(0).select(col("id").cast("string").as("sh"),
-          lit(null).cast("array<struct<doc_id:bigint,p:bigint>>").as("ds")),
-        corpusSizes = spark.range(0)
-          .select(col("id").as("doc_id"), col("id").as("n_sh")))
+        corpusIndex = graft.streaming.StreamOps.ContainmentIndex.empty(spark),
+        corpusSizes = graft.streaming.StreamOps.ContainmentSizes.empty(spark))
       idx.write.mode("overwrite").parquet(s"$workDir/$name.idx")
       sizes.write.mode("overwrite").parquet(s"$workDir/$name.sizes")
       (Parquet.read(spark, s"$workDir/$name.idx"),
@@ -245,7 +243,7 @@ object ScaleDemo {
     def winIndex(name: String, docs: DataFrame): DataFrame = {
       val path = s"$workDir/$name.winidx"
       val (_, hashes) = Dedup.incrementalSubstringDedup(docs,
-        spark.range(0).select(col("id").as("h")))
+        graft.streaming.StreamOps.SubstringHashes.empty(spark))
       hashes.write.mode("overwrite").parquet(path)
       Parquet.read(spark, path)
     }

@@ -700,10 +700,19 @@ object TxLogFormat extends TableFormat {
   }
 
   private def readAt(spark: SparkSession, path: String, upTo: Long): DataFrame = {
-    val st = fold(path, upTo)
-    require(st.version >= 0, s"txlog: no committed version at $path" +
+    val df = readIfCommitted(spark, path, upTo)
+    require(df.isDefined, s"txlog: no committed version at $path" +
       (if (upTo != Long.MaxValue) s" <= $upTo" else ""))
-    readFiles(spark, path, st.live.toSeq, st.schema, st.dvs)
+    df.get
+  }
+
+  /** The table as of `upTo`, or None when no commit is at or below it:
+    * the cold check and the read from one log resolution. */
+  def readIfCommitted(spark: SparkSession, path: String,
+                      upTo: Long = Long.MaxValue): Option[DataFrame] = {
+    val st = fold(path, upTo)
+    if (st.version < 0) None
+    else Some(readFiles(spark, path, st.live.toSeq, st.schema, st.dvs))
   }
 
   /** Live files read with per-row FILE IDENTITY: the committed-schema data

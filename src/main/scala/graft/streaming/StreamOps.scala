@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.sources.Parquet
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Det.centsSum
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
@@ -347,6 +347,84 @@ object StreamOps {
       }
     }
 
+  /** The shape a persisted state table must have for the ingest loop
+    * that reads it: its required columns and their types, as DDL. The
+    * schema is the version: a table persisted under an older layout
+    * (containment's string `sh` key before r18) fails [[open]] by name,
+    * before any stage runs or anything commits, not mid-stage on a
+    * cast. */
+  private[graft] final case class StateContract(name: String, ddl: String) {
+    lazy val schema: StructType = StructType.fromDDL(ddl)
+    /** The state before the table's first commit. */
+    def empty(spark: SparkSession): DataFrame =
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+  }
+
+  private[graft] val ExactDigests = StateContract("dedup corpus", "digest string")
+  private[graft] val NeardupCorpus =
+    StateContract("near-dup corpus", "doc_id bigint, text string")
+  private[graft] val LshBands = StateContract("LSH band index",
+    "doc_id bigint, sig array<bigint>, band_idx int, band_hash bigint")
+  private[graft] val HashChunks = StateContract("hash chunk index",
+    "doc_id bigint, sig bigint, chunk_idx int, chunk bigint")
+  private[graft] val SemanticCorpus =
+    StateContract("semantic corpus", "vec_id bigint, embedding array<float>")
+  private[graft] val SemanticBuckets = StateContract("semantic bucket index",
+    "vec_id bigint, bks array<bigint>, table_idx int, bucket bigint")
+  private[graft] val SegmentHashes = StateContract("segment index", "h bigint")
+  private[graft] val SubstringHashes = StateContract("substring index", "h bigint")
+  /** `sh` is the shingle's 8-byte xxhash64 key (r18): the inverted index
+    * carries fixed-width longs, never shingle strings. */
+  private[graft] val ContainmentIndex = StateContract("containment index",
+    "sh bigint, ds array<struct<doc_id:bigint,p:bigint>>")
+  private[graft] val ContainmentSizes =
+    StateContract("containment sizes", "doc_id bigint, n_sh bigint")
+  private[graft] val PackTotals =
+    StateContract("pack totals", "lang string, toks bigint")
+  private[graft] val ProcessedArchives =
+    StateContract("processed-archive table", "path string")
+  private[graft] val DigestDeltas =
+    StateContract("digest index", "digest string, batch_id bigint")
+  private[graft] val QuotaDeltas = StateContract("quota deltas",
+    "source string, survivors bigint, batch_id bigint")
+  private[graft] val BudgetDeltas = StateContract("budget deltas",
+    "lang string, used bigint, batch_id bigint")
+  private[graft] val UrlDeltas =
+    StateContract("URL index", "url_canonical string, batch_id bigint")
+  private[graft] val RespDeltas =
+    StateContract("response-digest index", "payload_digest string, batch_id bigint")
+  private[graft] val DsirWeights =
+    StateContract("DSIR weights", "b bigint, w_unats bigint")
+  private[graft] val IvfCells = StateContract("IVF cell table",
+    "vec_id bigint, embedding array<float>, cell int")
+  private[graft] val IvfLedger = StateContract("IVF ledger",
+    "batch_id bigint, retrained boolean, centroids array<array<double>>, " +
+      "build_mean_dist double, n bigint, sum_dist double")
+
+  /** The state table at `path` checked against `contract`, or None before
+    * its first commit — one log resolution. A declared column that is
+    * missing or of another type throws, naming the table, the column and
+    * both types. */
+  private[graft] def openIfCommitted(spark: SparkSession, path: String,
+      contract: StateContract): Option[DataFrame] =
+    graft.sources.TxLogFormat.readIfCommitted(spark, path).map { df =>
+      contract.schema.foreach { f =>
+        val found = df.schema.find(_.name == f.name).map(_.dataType.catalogString)
+        if (!found.contains(f.dataType.catalogString))
+          throw new IllegalStateException(
+            s"${contract.name} $path has `${f.name}` of type " +
+              s"${found.getOrElse("<missing>")}, expected " +
+              s"${f.dataType.catalogString}: rebuild index from the corpus")
+      }
+      df
+    }
+
+  /** [[openIfCommitted]], with the contract's empty state before the
+    * first commit. */
+  private[graft] def open(spark: SparkSession, path: String,
+                          contract: StateContract): DataFrame =
+    openIfCommitted(spark, path, contract).getOrElse(contract.empty(spark))
+
   /** Streaming → ACID txlog sink: each micro-batch lands in ONE commit
     * tagged `appId:batchId` ([[graft.sources.TxLogFormat.appendBatch]]);
     * a REPLAYED batch is skipped by its tag — transactional exactly-once
@@ -511,16 +589,9 @@ object StreamOps {
     * skips whole, so the loop is exactly-once under restart. Factored out
     * so specs can drive it from a MemoryStream batch-by-batch. */
   def dedupIngestBatch(table: String)(b: DataFrame, id: Long): Unit = {
-    import graft.sources.TxLogFormat
-    val corpusDigests =
-      if (TxLogFormat.versions(table).isEmpty)
-        b.sparkSession.createDataFrame(
-          b.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("digest", StringType))))
-      else TxLogFormat.read(b.sparkSession, table).select("digest")
-    val survivors =
-      graft.operators.Dedup.incrementalExactDigests(corpusDigests, b)
-    TxLogFormat.appendBatch(survivors, table, "dedup_ingest", id): Unit
+    val survivors = graft.operators.Dedup.incrementalExactDigests(
+      open(b.sparkSession, table, ExactDigests).select("digest"), b)
+    graft.sources.TxLogFormat.appendBatch(survivors, table, "dedup_ingest", id): Unit
   }
 
   /** Streaming dedup ingest — the corpus-growth production loop, composing
@@ -539,8 +610,78 @@ object StreamOps {
       graft.sources.TxLogFormat.read(r.spark, r.table("t")).orderBy("digest")
     }
 
+  /** One dedup step's result, handed to [[dedupIngest]]: the corpus rows
+    * to append, the index rows derived from those rows' checkpoint, and
+    * any checkpoints of the step's own to free with the batch's. */
+  private final case class Kept(rows: DataFrame,
+                                indexRows: DataFrame => DataFrame,
+                                scratch: Seq[DataFrame] = Nil)
+
+  /** The dedup-ingest skeleton: one micro-batch of a loop that keeps a
+    * corpus table and a persisted index (neardup, hash, multiHash,
+    * semantic, segment and substring). It checkpoints the batch's
+    * `cols`, opens the index against its contract, runs the loop's
+    * `step` on (batch, index), checkpoints the kept rows once — they
+    * feed both appends, so corpus and index describe exactly the same
+    * docs — and appends the corpus rows, then the index rows, under one
+    * `appId:id` tag.
+    *
+    * COMMIT ORDER IS LOAD-BEARING, and the same in every loop that
+    * persists state: derived outputs first, the INDEX — the table whose
+    * contents change what a recompute produces and whose absence is the
+    * cold rule (`index` is None before its first commit) — strictly
+    * last. A crash after any prefix of the commits then replays against
+    * the identical pre-state: the index is untouched, so the cold test
+    * still reads cold, already-committed tables skip by tag, and the
+    * remaining commits apply the bit-equal recompute. Cold is read from
+    * the index, never the corpus: after a crash between a first batch's
+    * appends the corpus exists and the index does not. */
+  private def dedupIngest(b: DataFrame, id: Long, cols: Seq[String],
+                          table: String, indexTable: String,
+                          index: StateContract, appId: String)(
+      step: (DataFrame, Option[DataFrame]) => Kept): Unit = {
+    import graft.sources.TxLogFormat
+    val idx = openIfCommitted(b.sparkSession, indexTable, index)
+    val batch = b.select(cols.map(col): _*).localCheckpoint()
+    val k = step(batch, idx)
+    val keptC = k.rows.localCheckpoint()
+    TxLogFormat.appendBatch(keptC, table, appId, id)
+    TxLogFormat.appendBatch(k.indexRows(keptC), indexTable, appId, id)
+    freeCheckpoints(batch +: keptC +: k.scratch: _*)
+  }
+
+  /** A pair-based loop's step: the batch's intra-batch near-dup pairs,
+    * the probe of the batch survivors against the persisted index, and
+    * the index rows of the kept rows. */
+  private final case class PairStep(pairs: DataFrame,
+                                    probe: (DataFrame, DataFrame) => DataFrame,
+                                    indexRows: DataFrame => DataFrame,
+                                    scratch: Seq[DataFrame] = Nil)
+
+  /** [[dedupIngest]] for the four pair-based loops. Items are keyed
+    * `<unit>_id` and pair frames name their sides `<unit>_a` and
+    * `<unit>_b`, the probe's batch side being `<unit>_b`. The greater
+    * side of every intra-batch pair drops (min id survives — the C13
+    * non-cascading rule); once warm, survivors that the index probe
+    * matches drop too. */
+  private def pairIngest(b: DataFrame, id: Long, unit: String,
+                         cols: Seq[String], table: String,
+                         indexTable: String, index: StateContract,
+                         appId: String)(step: DataFrame => PairStep): Unit =
+    dedupIngest(b, id, cols, table, indexTable, index, appId) { (batch, idx) =>
+      val s = step(batch)
+      val key = s"${unit}_id"
+      def without(df: DataFrame, drop: DataFrame, side: Column): DataFrame =
+        df.join(drop.select(side.as(key)).distinct(), Seq(key), "left_anti")
+      val batchKept = without(batch, s.pairs,
+        greatest(col(s"${unit}_a"), col(s"${unit}_b"))).localCheckpoint(false)
+      val kept = idx.fold(batchKept)(i =>
+        without(batchKept, s.probe(batchKept, i), col(s"${unit}_b")))
+      Kept(kept, s.indexRows, s.scratch :+ batchKept)
+    }
+
   /** One micro-batch of the streaming NEAR-dup ingest loop — the D36
-    * incremental-minhash production shape composed end-to-end:
+    * incremental-minhash production shape on [[pairIngest]]:
     *
     *  1. intra-batch near-dups collapse first (minhash-LSH on the batch
     *     alone; min doc_id survives a pair);
@@ -550,60 +691,38 @@ object StreamOps {
     *     batch's dup density, never corpus size, and corpus TEXT loads
     *     only for candidate verify;
     *  3. genuinely novel docs append to the corpus table AND their band
-    *     signatures append to the index table, both under the same
-    *     exactly-once txn tag — the index is maintained incrementally,
-    *     never recomputed from corpus text.
+    *     signatures append to the index table — the index is maintained
+    *     incrementally, never recomputed from corpus text.
     *
-    * A crash between the two appends replays safely: each table's txn
-    * ledger skips its own already-committed half. Exact copies are caught
-    * deterministically (J=1 collides in every band); near-copies up to
-    * LSH recall (spec-bounded on the batch operator). */
+    * Exact copies are caught deterministically (J=1 collides in every
+    * band); near-copies up to LSH recall (spec-bounded on the batch
+    * operator). */
   def neardupIngestBatch(table: String, indexTable: String,
                          numHashes: Int = 64, bands: Int = 8,
                          threshold: Double = 0.8,
                          prefilterSlackSd: Double = 2.5)
-                        (b: DataFrame, id: Long): Unit = {
-    import graft.sources.TxLogFormat
-    val spark = b.sparkSession
-    val batch = b.select(col("doc_id"), col("text")).localCheckpoint()
-    // ONE signature aggregation per batch (r17): the band frame — the
-    // token-scale explode + 64-hash MinHash, the loop's most expensive
-    // stage — used to run three times per batch (intra-batch LSH, the
-    // cross-batch probe, and the index append each re-derived it from
-    // text). Compute it once, checkpoint it, and slice it per consumer:
-    // signatures are a pure function of (doc_id, text), so every slice is
-    // bit-identical to the frame that consumer derived itself.
-    val bandedAll = graft.operators.Dedup
-      .bandedSignatures(batch, numHashes, bands).localCheckpoint()
-    val intraDrop = graft.operators.Dedup.minhashLsh(batch,
-        numHashes, bands, threshold, prefilterSlackSd = prefilterSlackSd,
-        precomputedBanded = Some(bandedAll))
-      .select(greatest(col("doc_a"), col("doc_b")).as("doc_id")).distinct()
-    val batchKept = batch.join(intraDrop, Seq("doc_id"), "left_anti")
-      .localCheckpoint(false)
-    val bandedKept = bandedAll
-      .join(batchKept.select("doc_id"), Seq("doc_id"), "left_semi")
-    val kept =
-      if (TxLogFormat.versions(table).isEmpty) batchKept
-      else {
-        val corpus = TxLogFormat.read(spark, table)
-        val idx = TxLogFormat.read(spark, indexTable)
-        val dup = graft.operators.Dedup.incrementalMinhash(corpus, batchKept,
-            numHashes, bands, threshold, corpusIndex = Some(idx),
-            prefilterSlackSd = prefilterSlackSd,
-            batchBanded = Some(bandedKept))
-          .select(col("doc_b").as("doc_id")).distinct()
-        batchKept.join(dup, Seq("doc_id"), "left_anti")
-      }
-    // checkpoint: the survivor set feeds BOTH appends — corpus rows and
-    // their band signatures must describe exactly the same docs
-    val keptC = kept.localCheckpoint()
-    TxLogFormat.appendBatch(keptC, table, "neardup_ingest", id)
-    TxLogFormat.appendBatch(
-      bandedAll.join(keptC.select("doc_id"), Seq("doc_id"), "left_semi"),
-      indexTable, "neardup_ingest", id)
-    freeCheckpoints(batch, bandedAll, batchKept, keptC)
-  }
+                        (b: DataFrame, id: Long): Unit =
+    pairIngest(b, id, "doc", Seq("doc_id", "text"), table, indexTable,
+        LshBands, "neardup_ingest") { batch =>
+      import graft.operators.Dedup
+      // ONE signature aggregation per batch (r17): the band frame — the
+      // token-scale explode + 64-hash MinHash, the loop's most expensive
+      // stage — is computed once, checkpointed, and sliced per consumer
+      // (intra-batch LSH, the cross-batch probe, the index append):
+      // signatures are a pure function of (doc_id, text), so every slice
+      // is bit-identical to the frame that consumer would derive itself.
+      val banded = Dedup.bandedSignatures(batch, numHashes, bands).localCheckpoint()
+      def bandsOf(docs: DataFrame): DataFrame =
+        banded.join(docs.select("doc_id"), Seq("doc_id"), "left_semi")
+      PairStep(
+        Dedup.minhashLsh(batch, numHashes, bands, threshold,
+          prefilterSlackSd = prefilterSlackSd, precomputedBanded = Some(banded)),
+        (kept, idx) => Dedup.incrementalMinhash(
+          open(batch.sparkSession, table, NeardupCorpus), kept, numHashes,
+          bands, threshold, corpusIndex = Some(idx),
+          prefilterSlackSd = prefilterSlackSd, batchBanded = Some(bandsOf(kept))),
+        bandsOf, Seq(banded))
+    }
 
   /** Driver wrapper: AvailableNow over the documents source through
     * [[neardupIngestBatch]] (one batch from a cold corpus → intra-batch
@@ -644,45 +763,28 @@ object StreamOps {
 
   /** One micro-batch of the streaming PERCEPTUAL-HASH dedup ingest loop
     * (r13 — the growing-corpus variant for the image/audio/video
-    * near-dup family, completing the modality side of the incremental
-    * symmetry; modality-agnostic: the input is (doc_id, sig), whatever
-    * decoded it):
-    *  1. intra-batch near-dups collapse via the shared chunk banding
-    *     (min doc_id survives a pair — the C13 rule, non-cascading);
+    * near-dup family, on [[pairIngest]]; modality-agnostic: the input is
+    * (doc_id, sig), whatever decoded it):
+    *  1. intra-batch near-dups collapse via the shared chunk banding;
     *  2. survivors probe the PERSISTED chunk index
     *     ([[graft.operators.Dedup.incrementalHammingPairs]] — the
     *     corpus side is only scanned, pruned by a broadcast of the
     *     batch's ≤ 4·|batch| distinct chunk values);
     *  3. novel docs append to the corpus table (doc_id, sig) AND their
-    *     four chunk rows to the index table, one exactly-once tag each —
-    *     the index is maintained, never recomputed.
+    *     four chunk rows to the index table — the index is maintained,
+    *     never recomputed.
     * Cold single batch ⇒ survivors = docs that are not the GREATER side
     * of any hamming-≤-radius pair — a closed form over the synthetic
     * corpus's hash arithmetic, which is what lets `dedup_image_inc`
     * state a plain SQL oracle. */
   def hashIngestBatch(table: String, indexTable: String, maxHamming: Int = 3)
-                     (sigs: DataFrame, id: Long): Unit = {
-    import graft.sources.TxLogFormat
-    val spark = sigs.sparkSession
-    val batch = sigs.select(col("doc_id"), col("sig")).localCheckpoint()
-    val intraDrop = graft.operators.Dedup.hammingBandPairs(batch, maxHamming)
-      .select(greatest(col("doc_a"), col("doc_b")).as("doc_id")).distinct()
-    val batchKept = batch.join(intraDrop, Seq("doc_id"), "left_anti")
-    val kept =
-      if (TxLogFormat.versions(table).isEmpty) batchKept
-      else {
-        val idx = TxLogFormat.read(spark, indexTable)
-        val dup = graft.operators.Dedup
-          .incrementalHammingPairs(batchKept, idx, maxHamming)
-          .select(col("doc_b").as("doc_id")).distinct()
-        batchKept.join(dup, Seq("doc_id"), "left_anti")
-      }
-    val keptC = kept.localCheckpoint()
-    TxLogFormat.appendBatch(keptC, table, "hash_ingest", id)
-    TxLogFormat.appendBatch(graft.operators.Dedup.sigChunks(keptC),
-      indexTable, "hash_ingest", id)
-    freeCheckpoints(batch, keptC)
-  }
+                     (sigs: DataFrame, id: Long): Unit =
+    pairIngest(sigs, id, "doc", Seq("doc_id", "sig"), table, indexTable,
+        HashChunks, "hash_ingest") { batch =>
+      import graft.operators.Dedup
+      PairStep(Dedup.hammingBandPairs(batch, maxHamming),
+        Dedup.incrementalHammingPairs(_, _, maxHamming), Dedup.sigChunks(_))
+    }
 
   /** Shared driver-query body of the three MODALITY ingest loops (r14 —
     * the loop itself was already modality-agnostic; this makes the
@@ -755,48 +857,28 @@ object StreamOps {
 
   /** One micro-batch of the streaming MULTI-SIGNATURE dedup ingest loop
     * (r14 — the growing-corpus variant for the ANY-MATCH family:
-    * multi-frame video clips, strided audio offsets): input
-    * (doc_id, slot, sig) with k signatures per item;
+    * multi-frame video clips, strided audio offsets), on
+    * [[pairIngest]]: input (doc_id, slot, sig) with k signatures per item;
     *  1. intra-batch: items collapse when ANY signature pair sits
-    *     within radius ([[graft.operators.Dedup.anyMatchNearDupPairs]],
-    *     min doc_id survives — the C13 non-cascading rule);
+    *     within radius ([[graft.operators.Dedup.anyMatchNearDupPairs]]);
     *  2. survivors' signatures probe the PERSISTED chunk index via
     *     [[graft.operators.Dedup.incrementalAnyMatchPairs]] (broadcast
     *     semi-prune — the corpus index is scanned, never shuffled);
     *  3. novel items append ALL their slot signatures to the corpus
-    *     table and their chunk rows to the index, one exactly-once tag
-    *     each.
+    *     table and their chunk rows to the index.
     * Cold single batch ⇒ survivors = items that are not the GREATER
     * side of any any-match pair — the closed form
     * `dedup_video_multi_inc` states over the per-frame md5 arithmetic. */
   def multiHashIngestBatch(table: String, indexTable: String,
                            maxHamming: Int = 3)
-                          (slotSigs: DataFrame, id: Long): Unit = {
-    import graft.sources.TxLogFormat
-    val spark = slotSigs.sparkSession
-    val batch = slotSigs.select(col("doc_id"), col("slot"), col("sig"))
-      .localCheckpoint()
-    val intraDrop = graft.operators.Dedup
-      .anyMatchNearDupPairs(batch, maxHamming)
-      .select(greatest(col("doc_a"), col("doc_b")).as("doc_id")).distinct()
-    val batchKept = batch.join(intraDrop, Seq("doc_id"), "left_anti")
-    val kept =
-      if (TxLogFormat.versions(table).isEmpty) batchKept
-      else {
-        val idx = TxLogFormat.read(spark, indexTable)
-        val dup = graft.operators.Dedup
-          .incrementalAnyMatchPairs(batchKept, idx, maxHamming)
-          .select(col("doc_b").as("doc_id")).distinct()
-        batchKept.join(dup, Seq("doc_id"), "left_anti")
-      }
-    val keptC = kept.localCheckpoint()
-    TxLogFormat.appendBatch(keptC, table, "multihash_ingest", id)
-    TxLogFormat.appendBatch(
-      graft.operators.Dedup.sigChunks(
-        keptC.select(col("doc_id"), col("sig"))),
-      indexTable, "multihash_ingest", id)
-    freeCheckpoints(batch, keptC)
-  }
+                          (slotSigs: DataFrame, id: Long): Unit =
+    pairIngest(slotSigs, id, "doc", Seq("doc_id", "slot", "sig"), table,
+        indexTable, HashChunks, "multihash_ingest") { batch =>
+      import graft.operators.Dedup
+      PairStep(Dedup.anyMatchNearDupPairs(batch, maxHamming),
+        Dedup.incrementalAnyMatchPairs(_, _, maxHamming),
+        kept => Dedup.sigChunks(kept.select(col("doc_id"), col("sig"))))
+    }
 
   /** Driver query: the MULTI-FRAME VIDEO ingest loop cold — per batch,
     * synthesize each %10=7 doc's 3-frame AVI, stride-hash it through
@@ -849,29 +931,32 @@ object StreamOps {
     * sequence_pack_spans closed-form oracle. */
   def packIngestBatch(table: String, totalsTable: String,
                       contextTokens: Long = 64)
-                     (b: DataFrame, id: Long): Unit = {
+                     (b: DataFrame, id: Long): Unit =
+    packTokens(b.select(col("doc_id"), col("lang"),
+        graft.util.TextNorm.estTokens(col("text")).as("n")),
+      table, totalsTable, contextTokens, "pack_ingest", id)
+
+  /** The shared tail of the two packing loops, given the batch's
+    * (doc_id, lang, n) token counts: per-lang exclusive offsets
+    * shifted by the stored prior totals, then the span rows and — last,
+    * as the table that feeds every recompute — the batch's per-lang
+    * token sums. */
+  private def packTokens(counts: DataFrame, table: String,
+                         totalsTable: String, contextTokens: Long,
+                         appId: String, id: Long): Unit = {
     import graft.sources.TxLogFormat
-    val spark = b.sparkSession
-    val est = graft.util.TextNorm.estTokens(col("text"))
-    val toks = b.select(col("doc_id"), col("lang"), est.as("n"))
-      .localCheckpoint()
+    val toks = counts.localCheckpoint()
     val withS0 = graft.util.PrefixSum.cumSum(toks, Seq("lang"), "doc_id",
       "n", "s0", inclusive = false)
-    val prior =
-      if (TxLogFormat.versions(totalsTable).isEmpty)
-        spark.range(0).select(col("id").cast("string").as("lang"),
-          col("id").as("prior"))
-      else TxLogFormat.read(spark, totalsTable)
-        .groupBy("lang").agg(sum("toks").as("prior"))
+    val prior = open(toks.sparkSession, totalsTable, PackTotals)
+      .groupBy("lang").agg(sum("toks").as("prior"))
     val withS = withS0.join(broadcast(prior), Seq("lang"), "left")
       .select(col("doc_id"), col("lang"), col("n"),
         (coalesce(col("prior"), lit(0L)) + col("s0")).as("s"))
     TxLogFormat.appendBatch(
-      graft.operators.Curation.spanRows(withS, contextTokens),
-      table, "pack_ingest", id)
-    TxLogFormat.appendBatch(
-      toks.groupBy("lang").agg(sum("n").as("toks")),
-      totalsTable, "pack_ingest", id)
+      graft.operators.Curation.spanRows(withS, contextTokens), table, appId, id)
+    TxLogFormat.appendBatch(toks.groupBy("lang").agg(sum("n").as("toks")),
+      totalsTable, appId, id)
     freeCheckpoints(toks)
   }
 
@@ -904,33 +989,11 @@ object StreamOps {
   def tokenizePackIngestBatch(table: String, totalsTable: String,
                               merges: Seq[(Int, String, String)],
                               contextTokens: Long = 64)
-                             (b: DataFrame, id: Long): Unit = {
-    import graft.sources.TxLogFormat
-    val spark = b.sparkSession
-    val counts = graft.operators.TextAnalysis.bpeTokenizeArr(b, merges)
-      .select(col("doc_id"), col("n_tokens").as("n"))
-    val toks = b.select(col("doc_id"), col("lang"))
-      .join(counts, Seq("doc_id"))
-      .localCheckpoint()
-    val withS0 = graft.util.PrefixSum.cumSum(toks, Seq("lang"), "doc_id",
-      "n", "s0", inclusive = false)
-    val prior =
-      if (TxLogFormat.versions(totalsTable).isEmpty)
-        spark.range(0).select(col("id").cast("string").as("lang"),
-          col("id").as("prior"))
-      else TxLogFormat.read(spark, totalsTable)
-        .groupBy("lang").agg(sum("toks").as("prior"))
-    val withS = withS0.join(broadcast(prior), Seq("lang"), "left")
-      .select(col("doc_id"), col("lang"), col("n"),
-        (coalesce(col("prior"), lit(0L)) + col("s0")).as("s"))
-    TxLogFormat.appendBatch(
-      graft.operators.Curation.spanRows(withS, contextTokens),
-      table, "tokenize_pack_ingest", id)
-    TxLogFormat.appendBatch(
-      toks.groupBy("lang").agg(sum("n").as("toks")),
-      totalsTable, "tokenize_pack_ingest", id)
-    freeCheckpoints(toks)
-  }
+                             (b: DataFrame, id: Long): Unit =
+    packTokens(b.select(col("doc_id"), col("lang")).join(
+        graft.operators.TextAnalysis.bpeTokenizeArr(b, merges)
+          .select(col("doc_id"), col("n_tokens").as("n")), Seq("doc_id")),
+      table, totalsTable, contextTokens, "tokenize_pack_ingest", id)
 
   /** Driver query: the tokenize-pack ingest loop cold — AvailableNow
     * over the documents table (with the rig's text expression applied
@@ -974,16 +1037,7 @@ object StreamOps {
         concat(lit("https://example.com/doc/"), col("doc_id")).as("url"),
         col("text")),
       landing, namePrefix = f"b$id%05d-")
-    // the landing-vs-processed diff stays IN THE ENGINE (left-anti
-    // join, [[Warc.landingDiff]]): only the FRESH names — batch-scale
-    // by definition — collect; the corpus-lifetime processed table
-    // never does (r15 VERDICT #2)
-    val all = Warc.listWarcFiles(spark, landing)
-    val fresh =
-      if (TxLogFormat.versions(processedTable).isEmpty) all
-      else Warc.landingDiff(spark, all,
-          TxLogFormat.read(spark, processedTable))
-        .as[String].collect().toSeq.sorted
+    val fresh = freshArchives(spark, landing, processedTable)
     if (fresh.nonEmpty) {
       TxLogFormat.appendBatch(Warc.readWarcPaths(spark, fresh),
         table, "warc_file_ingest", id)
@@ -991,6 +1045,20 @@ object StreamOps {
         processedTable, "warc_file_ingest", id)
       ()
     }
+  }
+
+  /** The archives listed in `landing` that the processed table does not
+    * hold, sorted. The diff stays IN THE ENGINE (left-anti join,
+    * [[graft.sources.Warc.landingDiff]]): only the FRESH names —
+    * batch-scale by definition — collect; the corpus-lifetime processed
+    * table never does (r15 VERDICT #2). */
+  private def freshArchives(spark: SparkSession, landing: String,
+                            processedTable: String): Seq[String] = {
+    import graft.sources.Warc
+    import spark.implicits._
+    val all = Warc.listWarcFiles(spark, landing)
+    openIfCommitted(spark, processedTable, ProcessedArchives).fold(all)(
+      Warc.landingDiff(spark, all, _).as[String].collect().toSeq.sorted)
   }
 
   /** Driver query: the WARC archive ingest loop cold — AvailableNow
@@ -1017,48 +1085,31 @@ object StreamOps {
     }
 
   /** One micro-batch of the streaming SEMANTIC-dedup ingest loop (r13 —
-    * the growing-corpus variant for the embedding family, the last
-    * dedup family without one): per batch, SemDeDup's greedy rule runs
-    * intra-batch first ([[graft.operators.Similarity.lshCandidates]] on
-    * the batch alone, min vec_id survives a pair), survivors probe the
-    * PERSISTED bucket index ([[graft.operators.Similarity
+    * the growing-corpus variant for the embedding family, on
+    * [[pairIngest]]): per batch, SemDeDup's greedy rule runs intra-batch
+    * first ([[graft.operators.Similarity.lshCandidates]] on the batch
+    * alone, min vec_id survives a pair), survivors probe the PERSISTED
+    * bucket index ([[graft.operators.Similarity
     * .incrementalLshCandidates]] — the corpus side is scanned through a
     * broadcast semi-prune, corpus EMBEDDINGS load only for candidates),
     * and novel vectors append to the corpus table AND their bucket rows
-    * to the index under one exactly-once tag each. The fixed seeded
-    * hyperplanes are what make an index built in one generation
-    * probe-compatible with every later batch. */
+    * to the index. The fixed seeded hyperplanes are what make an index
+    * built in one generation probe-compatible with every later batch. */
   def semanticIngestBatch(table: String, indexTable: String,
                           minCos: Double = 0.35, nTables: Int = 16,
                           planesPerTable: Int = 4, dim: Int = 64)
-                         (b: DataFrame, id: Long): Unit = {
-    import graft.sources.TxLogFormat
-    import graft.operators.Similarity
-    val spark = b.sparkSession
-    val batch = b.select(col("vec_id"), col("embedding"), col("label"))
-      .localCheckpoint()
-    val intraDrop = Similarity.lshCandidates(batch, nTables, planesPerTable,
-        dim, minCos)
-      .select(greatest(col("vec_a"), col("vec_b")).as("vec_id")).distinct()
-    val batchKept = batch.join(intraDrop, Seq("vec_id"), "left_anti")
-    val kept =
-      if (TxLogFormat.versions(table).isEmpty) batchKept
-      else {
-        val corpus = TxLogFormat.read(spark, table)
-        val idx = TxLogFormat.read(spark, indexTable)
-        val dup = Similarity.incrementalLshCandidates(batchKept, idx,
-            corpus.select("vec_id", "embedding"),
-            nTables, planesPerTable, dim, minCos)
-          .select(col("vec_b").as("vec_id")).distinct()
-        batchKept.join(dup, Seq("vec_id"), "left_anti")
-      }
-    val keptC = kept.localCheckpoint()
-    TxLogFormat.appendBatch(keptC, table, "semantic_ingest", id)
-    TxLogFormat.appendBatch(
-      Similarity.lshBuckets(keptC, nTables, planesPerTable, dim),
-      indexTable, "semantic_ingest", id)
-    freeCheckpoints(batch, keptC)
-  }
+                         (b: DataFrame, id: Long): Unit =
+    pairIngest(b, id, "vec", Seq("vec_id", "embedding", "label"), table,
+        indexTable, SemanticBuckets, "semantic_ingest") { batch =>
+      import graft.operators.Similarity
+      PairStep(
+        Similarity.lshCandidates(batch, nTables, planesPerTable, dim, minCos),
+        (kept, idx) => Similarity.incrementalLshCandidates(kept, idx,
+          open(batch.sparkSession, table, SemanticCorpus)
+            .select("vec_id", "embedding"),
+          nTables, planesPerTable, dim, minCos),
+        Similarity.lshBuckets(_, nTables, planesPerTable, dim))
+    }
 
   /** Driver query: the recall-1 adjudication of the semantic ingest loop
     * (the dedup_semantic_lsh_r1 config as a STREAM): cold AvailableNow
@@ -1079,35 +1130,21 @@ object StreamOps {
     }
 
   /** One micro-batch of the streaming SEGMENT-dedup ingest loop — the
-    * Dolma-BFF paragraph-dedup stage productionized with exact semantics:
-    * the batch's segments dedup within the batch and against the
-    * persisted one-column segment-hash index
+    * Dolma-BFF paragraph-dedup stage productionized with exact semantics,
+    * on [[dedupIngest]]: the batch's segments dedup within the batch and
+    * against the persisted one-column segment-hash index
     * ([[graft.operators.Dedup.incrementalSegmentDedup]]), surviving docs
     * (reassembled from their novel segments) append to the corpus table
-    * and the novel hashes append to the index table under the SAME
-    * exactly-once tag each — crash replay skips whichever half already
-    * landed; the index is incrementally maintained, never re-derived
-    * from corpus text. */
+    * and the novel hashes to the index table — the index is
+    * incrementally maintained, never re-derived from corpus text. */
   def segmentIngestBatch(table: String, indexTable: String,
-                         segWords: Int = 10)(b: DataFrame, id: Long): Unit = {
-    import graft.sources.TxLogFormat
-    val spark = b.sparkSession
-    val batch = b.select(col("doc_id"), col("text")).localCheckpoint()
-    val corpusHashes =
-      if (TxLogFormat.versions(indexTable).isEmpty)
-        spark.range(0).select(col("id").as("h"))
-      else TxLogFormat.read(spark, indexTable)
-    val (docs, newHashes) =
-      graft.operators.Dedup.incrementalSegmentDedup(batch, corpusHashes,
-        segWords)
-    // the two appends share one plan ancestry: checkpoint once so the
-    // dedup computes once, not per sink
-    val docsC = docs.localCheckpoint()
-    val hashesC = newHashes.localCheckpoint()
-    TxLogFormat.appendBatch(docsC, table, "graft_seg_ingest", id)
-    TxLogFormat.appendBatch(hashesC, indexTable, "graft_seg_ingest", id)
-    freeCheckpoints(batch, docsC, hashesC)
-  }
+                         segWords: Int = 10)(b: DataFrame, id: Long): Unit =
+    dedupIngest(b, id, Seq("doc_id", "text"), table, indexTable,
+        SegmentHashes, "graft_seg_ingest") { (batch, idx) =>
+      val (docs, hashes) = graft.operators.Dedup.incrementalSegmentDedup(batch,
+        idx.getOrElse(SegmentHashes.empty(batch.sparkSession)), segWords)
+      Kept(docs, _ => hashes)
+    }
 
   /** Driver query: AvailableNow over the documents source drives
     * [[segmentIngestBatch]] from a cold corpus — one batch, so the
@@ -1124,33 +1161,24 @@ object StreamOps {
     }
 
   /** One micro-batch of the streaming SUBSTRING-dedup ingest loop (the
-    * verbatim-run sibling of [[segmentIngestBatch]]): batch docs dedup
-    * within the batch and against the persisted one-column window-hash
-    * index ([[graft.operators.Dedup.incrementalSubstringDedup]] — the
-    * corpus side is an 8-byte-column scan at any size, corpus TEXT is
-    * never re-read), surviving docs append to the corpus table and the
-    * batch's novel window hashes to the index table under the SAME
-    * exactly-once tag each. The drop rule is global and non-cascading
-    * (duplicating a dropped doc still drops — every seen window is
-    * indexed), so replay and batch boundaries cannot change survivors. */
+    * verbatim-run sibling of [[segmentIngestBatch]], on [[dedupIngest]]):
+    * batch docs dedup within the batch and against the persisted
+    * one-column window-hash index
+    * ([[graft.operators.Dedup.incrementalSubstringDedup]] — the corpus
+    * side is an 8-byte-column scan at any size, corpus TEXT is never
+    * re-read), surviving docs append to the corpus table and the batch's
+    * novel window hashes to the index table. The drop rule is global
+    * and non-cascading (duplicating a dropped doc still drops — every
+    * seen window is indexed), so replay and batch boundaries cannot
+    * change survivors. */
   def substringIngestBatch(table: String, indexTable: String,
-                           minChars: Int = 40)(b: DataFrame, id: Long): Unit = {
-    import graft.sources.TxLogFormat
-    val spark = b.sparkSession
-    val batch = b.select(col("doc_id"), col("text")).localCheckpoint()
-    val corpusIndex =
-      if (TxLogFormat.versions(indexTable).isEmpty)
-        spark.range(0).select(col("id").as("h"))
-      else TxLogFormat.read(spark, indexTable)
-    val (docs, newHashes) =
-      graft.operators.Dedup.incrementalSubstringDedup(batch, corpusIndex,
-        minChars)
-    val docsC = docs.localCheckpoint()
-    val hashesC = newHashes.localCheckpoint()
-    TxLogFormat.appendBatch(docsC, table, "graft_substr_ingest", id)
-    TxLogFormat.appendBatch(hashesC, indexTable, "graft_substr_ingest", id)
-    freeCheckpoints(batch, docsC, hashesC)
-  }
+                           minChars: Int = 40)(b: DataFrame, id: Long): Unit =
+    dedupIngest(b, id, Seq("doc_id", "text"), table, indexTable,
+        SubstringHashes, "graft_substr_ingest") { (batch, idx) =>
+      val (docs, hashes) = graft.operators.Dedup.incrementalSubstringDedup(
+        batch, idx.getOrElse(SubstringHashes.empty(batch.sparkSession)), minChars)
+      Kept(docs, _ => hashes)
+    }
 
   /** Driver query: AvailableNow over the documents source drives
     * [[substringIngestBatch]] from a cold corpus — one batch, so the
@@ -1175,7 +1203,8 @@ object StreamOps {
     * shuffles only, corpus text never re-read), emitted batch-linked
     * pairs append to the pairs table, and the index/size state upserts
     * (MERGE on sh / doc_id) — all three under the SAME exactly-once tag,
-    * so a replayed batch skips each table and a crash between commits
+    * pairs first and the index last ([[dedupIngest]]'s commit rule), so
+    * a replayed batch skips each table and a crash between commits
     * recomputes idempotently (the per-shingle merge is a set-union by
     * doc_id). Cold start appends (creates) instead of merging. */
   def containmentIngestBatch(pairsTable: String, indexTable: String,
@@ -1183,51 +1212,20 @@ object StreamOps {
                              maxDf: Int = 100)(b: DataFrame, id: Long): Unit = {
     import graft.sources.TxLogFormat
     val spark = b.sparkSession
+    val idx = openIfCommitted(spark, indexTable, ContainmentIndex)
     val batch = b.select(col("doc_id"), col("text")).localCheckpoint()
-    val cold = TxLogFormat.versions(indexTable).isEmpty
-    // sh is the shingle's 8-byte xxhash64 key (r18 state-schema migration
-    // — the substring index's trade at containment granularity): the
-    // persisted inverted index carries fixed-width longs, never shingle
-    // strings
-    val corpusIndex =
-      if (cold) spark.range(0).select(col("id").as("sh"),
-        lit(null).cast("array<struct<doc_id:bigint,p:bigint>>").as("ds"))
-      else {
-        // an index persisted with the older string `sh` key would fail
-        // mid-stage on a cast: check the key type up front (analysis
-        // only, no job) and name the remedy
-        val idx = TxLogFormat.read(spark, indexTable)
-        val shType = idx.schema.find(_.name == "sh").map(_.dataType)
-        if (!shType.contains(org.apache.spark.sql.types.LongType))
-          throw new IllegalStateException(
-            s"containment index $indexTable has `sh` of type " +
-              s"${shType.map(_.simpleString).getOrElse("<missing>")}, " +
-              "expected bigint (the shingle's xxhash64): rebuild index " +
-              "from the corpus")
-        idx
-      }
-    val corpusSizes =
-      if (cold) spark.range(0).select(col("id").as("doc_id"), col("id").as("n_sh"))
-      else TxLogFormat.read(spark, sizesTable)
+    // cold reads no sizes either: a first batch whose sizes landed before
+    // a crash replays against the empty pre-state
     val (pairs, idxUp, szUp) = graft.operators.Dedup.incrementalContainment(
-      batch, corpusIndex, corpusSizes, threshold, maxDf)
+      batch, idx.getOrElse(ContainmentIndex.empty(spark)),
+      idx.fold(ContainmentSizes.empty(spark))(_ =>
+        open(spark, sizesTable, ContainmentSizes)), threshold, maxDf)
     val pairsC = pairs.localCheckpoint()
     val idxC = idxUp.localCheckpoint()
     val szC = szUp.localCheckpoint()
     val appId = "graft_containment_ingest"
-    // COMMIT ORDER IS LOAD-BEARING (the substringIngestBatch rule,
-    // r12): derived outputs first, the INDEX — the table whose contents
-    // change what a recompute produces AND whose emptiness defines the
-    // cold branch — strictly last. A crash after any prefix of commits
-    // then replays against the identical pre-state: the index is
-    // untouched (so batch docs still fold with the batch flag and the
-    // cold test still reads cold), already-committed tables skip by
-    // tag, and the remaining commits apply the bit-equal recompute.
-    // Index-first committed the min-folded flags to 0 on replay —
-    // permanently losing the batch's sizes, decrements, and pairs, and
-    // wedging a cold restart on the never-created sizes table.
     TxLogFormat.appendBatch(pairsC, pairsTable, appId, id)
-    if (cold) {
+    if (idx.isEmpty) {
       TxLogFormat.appendBatch(szC, sizesTable, appId, id)
       TxLogFormat.appendBatch(idxC, indexTable, appId, id)
     } else {
@@ -1279,18 +1277,12 @@ object StreamOps {
     val spark = b.sparkSession
     val batch = b.select(col("doc_id"), col("text"), col("lang"),
       col("source")).localCheckpoint()
-    def state(path: String, empty: DataFrame): DataFrame =
-      if (TxLogFormat.versions(path).isEmpty) empty
-      else TxLogFormat.read(spark, path).filter(col("batch_id") < id)
-    val seen = state(digestTable, spark.range(0)
-      .select(col("id").cast("string").as("digest"), col("id").as("batch_id")))
-    val quotaCounts = state(quotaTable, spark.range(0)
-        .select(col("id").cast("string").as("source"),
-          col("id").as("survivors"), col("id").as("batch_id")))
+    def state(path: String, contract: StateContract): DataFrame =
+      open(spark, path, contract).filter(col("batch_id") < id)
+    val seen = state(digestTable, DigestDeltas)
+    val quotaCounts = state(quotaTable, QuotaDeltas)
       .groupBy("source").agg(sum("survivors").as("survivors"))
-    val budgetUsed = state(budgetTable, spark.range(0)
-        .select(col("id").cast("string").as("lang"), col("id").as("used"),
-          col("id").as("batch_id")))
+    val budgetUsed = state(budgetTable, BudgetDeltas)
       .groupBy("lang").agg(sum("used").as("used"))
     val (report, dDelta, qDelta, bDelta) =
       graft.operators.Curation.incrementalCurationFunnel(
@@ -1324,9 +1316,8 @@ object StreamOps {
     * single-batch run equal [[graft.operators.DbtSurface.Curation
     * .dsirSelect]] and share its oracle. Later batches score AS-OF the
     * fit (the paper's semantics; re-fitting would revise published
-    * scores). Commit order: candidates first, the weights table — which
-    * defines the cold branch and feeds every recompute — strictly last
-    * (the containment-ingest rule). */
+    * scores). The weights table defines the cold branch and feeds every
+    * recompute, so it commits last ([[dedupIngest]]'s commit rule). */
   def dsirIngestBatch(weightsTable: String, candTable: String,
                       targetPred: org.apache.spark.sql.Column,
                       k: Int = 100, numBuckets: Int = 4096)
@@ -1336,18 +1327,16 @@ object StreamOps {
     val spark = b.sparkSession
     val batch = b.select(col("doc_id"), col("text"), col("lang"))
       .localCheckpoint()
-    val cold = TxLogFormat.versions(weightsTable).isEmpty
-    val weights =
-      if (cold) Curation.dsirWeights(batch, targetPred, numBuckets)
-        .localCheckpoint()
-      else TxLogFormat.read(spark, weightsTable)
+    val frozen = openIfCommitted(spark, weightsTable, DsirWeights)
+    val weights = frozen.getOrElse(
+      Curation.dsirWeights(batch, targetPred, numBuckets).localCheckpoint())
     val topk = Curation
       .dsirScore(batch, weights, targetPred, numBuckets)
       .orderBy(col("score_unats").desc, col("doc_id")).limit(k)
       .localCheckpoint()
     val appId = "graft_dsir_ingest"
     TxLogFormat.appendBatch(topk, candTable, appId, id)
-    if (cold) TxLogFormat.appendBatch(weights, weightsTable, appId, id)
+    if (frozen.isEmpty) TxLogFormat.appendBatch(weights, weightsTable, appId, id)
     freeCheckpoints(batch, topk, weights)
   }
 
@@ -1396,20 +1385,27 @@ object StreamOps {
   def compactCurationState(spark: SparkSession, digestTable: String,
                            quotaTable: String, budgetTable: String,
                            watermark: Long): Unit = {
-    import graft.sources.TxLogFormat
-    def fold(path: String)(f: DataFrame => DataFrame): Unit =
-      if (TxLogFormat.versions(path).nonEmpty) {
-        val all = TxLogFormat.read(spark, path)
-        val merged = f(all.filter(col("batch_id") <= watermark))
-          .unionByName(all.filter(col("batch_id") > watermark))
-        TxLogFormat.replace(spark, merged, path)
-      }
-    fold(quotaTable)(_.groupBy("source").agg(
-      sum("survivors").as("survivors"), max("batch_id").as("batch_id")))
-    fold(budgetTable)(_.groupBy("lang").agg(
-      sum("used").as("used"), max("batch_id").as("batch_id")))
-    fold(digestTable)(_.groupBy("digest").agg(max("batch_id").as("batch_id")))
+    foldBehind(spark, quotaTable, QuotaDeltas, watermark)(_.groupBy("source")
+      .agg(sum("survivors").as("survivors"), max("batch_id").as("batch_id")))
+    foldBehind(spark, budgetTable, BudgetDeltas, watermark)(_.groupBy("lang")
+      .agg(sum("used").as("used"), max("batch_id").as("batch_id")))
+    foldBehind(spark, digestTable, DigestDeltas, watermark)(
+      _.groupBy("digest").agg(max("batch_id").as("batch_id")))
   }
+
+  /** The watermark fold of both compactions: the rows of the state table
+    * at `path` with `batch_id <= watermark` fold through `f`, newer rows
+    * pass through untouched, and the table flips in one atomic
+    * [[graft.sources.TxLogFormat.replace]]. A table with no commit yet is
+    * left alone. */
+  private def foldBehind(spark: SparkSession, path: String,
+                         contract: StateContract, watermark: Long)(
+      f: DataFrame => DataFrame): Unit =
+    openIfCommitted(spark, path, contract).foreach { all =>
+      graft.sources.TxLogFormat.replace(spark,
+        f(all.filter(col("batch_id") <= watermark))
+          .unionByName(all.filter(col("batch_id") > watermark)), path)
+    }
 
   /** Driver query: AvailableNow over the documents source drives
     * [[curationIngestBatch]] from a cold corpus — one batch with empty
@@ -1455,15 +1451,13 @@ object StreamOps {
     val spark = b.sparkSession
     val batch = b.select(col("doc_id"), col("warc_type"), col("url"),
       col("payload_digest"), col("html")).localCheckpoint()
-    def state(path: String, c: String): DataFrame =
-      if (TxLogFormat.versions(path).isEmpty)
-        spark.range(0).select(col("id").cast("string").as(c))
-      else TxLogFormat.read(spark, path)
-        .filter(col("batch_id") < id).select(c)
+    def state(path: String, contract: StateContract, key: String): DataFrame =
+      open(spark, path, contract).filter(col("batch_id") < id).select(key)
     val (report, uDelta, dDelta, rDelta) =
       graft.operators.Curation.crawlCurateIncremental(batch,
-        state(urlTable, "url_canonical"), state(digestTable, "digest"),
-        state(respTable, "payload_digest"),
+        state(urlTable, UrlDeltas, "url_canonical"),
+        state(digestTable, DigestDeltas, "digest"),
+        state(respTable, RespDeltas, "payload_digest"),
         blockedDomains = blockedDomains)
     val appId = "graft_crawlcur_ingest"
     val repC = report.localCheckpoint()
@@ -1506,12 +1500,7 @@ object StreamOps {
                       (id: Long): Unit = {
     import graft.sources.{TxLogFormat, Warc}
     import spark.implicits._
-    val all = Warc.listWarcFiles(spark, landing)
-    val fresh =
-      if (TxLogFormat.versions(processedTable).isEmpty) all
-      else Warc.landingDiff(spark, all,
-          TxLogFormat.read(spark, processedTable))
-        .as[String].collect().toSeq.sorted
+    val fresh = freshArchives(spark, landing, processedTable)
     if (fresh.nonEmpty) {
       val recs = Warc.readWarcPaths(spark, fresh)
         .filter(col("warc_type").isin("response", "revisit"))
@@ -1569,20 +1558,14 @@ object StreamOps {
     * bit-identical either way (spec). */
   def compactCrawlCurateState(spark: SparkSession, urlTable: String,
                               digestTable: String, respTable: String,
-                              watermark: Long): Unit = {
-    import graft.sources.TxLogFormat
-    def fold(path: String, key: String): Unit =
-      if (TxLogFormat.versions(path).nonEmpty) {
-        val all = TxLogFormat.read(spark, path)
-        val merged = all.filter(col("batch_id") <= watermark)
-          .groupBy(key).agg(max("batch_id").as("batch_id"))
-          .unionByName(all.filter(col("batch_id") > watermark))
-        TxLogFormat.replace(spark, merged, path)
-      }
-    fold(urlTable, "url_canonical")
-    fold(digestTable, "digest")
-    fold(respTable, "payload_digest")
-  }
+                              watermark: Long): Unit =
+    Seq((urlTable, UrlDeltas, "url_canonical"),
+        (digestTable, DigestDeltas, "digest"),
+        (respTable, RespDeltas, "payload_digest")).foreach {
+      case (path, contract, key) =>
+        foldBehind(spark, path, contract, watermark)(
+          _.groupBy(key).agg(max("batch_id").as("batch_id")))
+    }
 
   /** Driver query: AvailableNow over the ingested crawl records drives
     * [[crawlCurateIngestBatch]] from a cold corpus — one batch with
@@ -1645,13 +1628,15 @@ object StreamOps {
     // window between the two commits.
     if (TxLogFormat.committedTxns(indexTable).contains(s"ivf_ingest:$id"))
       return
+    val ledger = openIfCommitted(spark, indexTable, IvfLedger)
     val batch = b.select(col("vec_id"), col("embedding")).localCheckpoint()
     def ledgerRow(retrained: Boolean, cs: Seq[Array[Double]],
                   baseline: Double, n: Long, sumDist: Double): DataFrame =
       Seq((id, retrained, cs.map(_.toSeq), baseline, n, sumDist))
         .toDF("batch_id", "retrained", "centroids", "build_mean_dist",
               "n", "sum_dist")
-    if (TxLogFormat.versions(indexTable).isEmpty) {
+    def cells(): DataFrame = open(spark, cellsTable, IvfCells)
+    if (ledger.isEmpty) {
       val idx = Similarity.buildIvfIndex(batch, nCells)
       val assignedC = idx.assigned.localCheckpoint()
       val n = assignedC.count()
@@ -1662,15 +1647,14 @@ object StreamOps {
         indexTable, "ivf_ingest", id)
       freeCheckpoints(batch, assignedC)
     } else {
-      val latest = TxLogFormat.read(spark, indexTable)
+      val latest = ledger.get
         .orderBy(col("batch_id").desc).limit(1).collect()(0)
       def f(c: String) = latest.fieldIndex(c)
       val centroids = latest.getSeq[scala.collection.Seq[Double]](f("centroids"))
         .map(_.toArray).toSeq
       val baseline = latest.getDouble(f("build_mean_dist"))
       val index = Similarity.IvfIndex(
-        TxLogFormat.read(spark, cellsTable).select("vec_id", "embedding", "cell"),
-        centroids, baseline)
+        cells().select("vec_id", "embedding", "cell"), centroids, baseline)
       val assignedB = Similarity.assignToCells(index, batch).localCheckpoint()
       val (bn, bsum) = assignedB
         .agg(count(lit(1)), coalesce(sum("cell_dist"), lit(0.0)))
@@ -1685,9 +1669,9 @@ object StreamOps {
         sum2 / math.max(n2, 1L), baseline)
       val entry =
         if (drift > driftTrigger) {
+          // read again: the retrain covers this batch's appended cells
           val idx2 = Similarity.buildIvfIndex(
-            TxLogFormat.read(spark, cellsTable).select("vec_id", "embedding"),
-            nCells)
+            cells().select("vec_id", "embedding"), nCells)
           val reassigned = idx2.assigned.localCheckpoint()
           val rn = reassigned.count()
           TxLogFormat.write(reassigned, cellsTable)

@@ -729,6 +729,124 @@ class StreamingSpec extends SparkSpec {
       TxLogFormat.versions(indexT) == Seq(0L))
   }
 
+  test("pair-based ingest loops: a crash between the first batch's two " +
+       "appends replays to the no-crash state (cold is read from the " +
+       "index, the table committed last)") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import graft.sources.TxLogFormat
+    type Ingest = (String, String) => (DataFrame, Long) => Unit
+    val textA = "the quick brown fox jumps over the lazy sleeping dog tonight"
+    val textB = "completely different content about training data pipelines here"
+    val textC = "fresh third document with its own unrelated vocabulary inside"
+    val (sigA, sigC) = (0x1111222233334444L, 0x5555666677778888L)
+    val (p0, p1, p3) = (0x0123456789ABCDEFL, 0x0FEDCBA987654321L,
+      0x5555666677778888L)
+    def v(a: Float, b: Float, c: Float, d: Float) = Array(a, b, c, d)
+    // (loop, its txn app id, the ingest, batch 0, batch 1): batch 0 holds
+    // an intra-batch dup, batch 1 a dup of a batch-0 survivor and a novel item
+    val cases: Seq[(String, String, Ingest, DataFrame, DataFrame)] = Seq(
+      ("neardup", "neardup_ingest",
+        (t, i) => StreamOps.neardupIngestBatch(t, i) _,
+        Seq((1L, textA), (2L, textB), (3L, textA)).toDF("doc_id", "text"),
+        Seq((10L, textA), (11L, textC)).toDF("doc_id", "text")),
+      ("hash", "hash_ingest",
+        (t, i) => StreamOps.hashIngestBatch(t, i) _,
+        Seq(1L -> sigA, 2L -> sigA, 3L -> sigC).toDF("doc_id", "sig"),
+        Seq(10L -> sigA, 12L -> 0x9999aaaabbbbccccL).toDF("doc_id", "sig")),
+      ("multiHash", "multihash_ingest",
+        (t, i) => StreamOps.multiHashIngestBatch(t, i) _,
+        Seq((1L, 0, p0), (1L, 1, p1), (2L, 0, p1), (2L, 1, p3))
+          .toDF("doc_id", "slot", "sig"),
+        Seq((10L, 0, sigA), (10L, 1, p0 ^ 3L), (11L, 0, ~p1), (11L, 1, ~p0))
+          .toDF("doc_id", "slot", "sig")),
+      ("semantic", "semantic_ingest",
+        (t, i) => StreamOps.semanticIngestBatch(t, i, minCos = 0.9,
+          nTables = 40, planesPerTable = 1, dim = 4) _,
+        Seq((1L, v(1, 0, 0, 0), "x"), (2L, v(1, 0.01f, 0, 0), "x"),
+          (3L, v(0, 1, 0, 0), "y")).toDF("vec_id", "embedding", "label"),
+        Seq((10L, v(0.99f, 0, 0.01f, 0), "x"), (12L, v(0, 0, 1, 0), "z"))
+          .toDF("vec_id", "embedding", "label")))
+    def dump(path: String): Set[String] =
+      TxLogFormat.read(spark, path).collect().map(_.toString).toSet
+    cases.foreach { case (loop, appId, ingest, b0, b1) =>
+      val root = java.nio.file.Files.createTempDirectory(s"graft_crash0_$loop")
+      def tables(tag: String) =
+        (root.resolve(s"$tag-corpus").toString, root.resolve(s"$tag-index").toString)
+      val ((cc, ci), (xc, xi), (sc, si)) =
+        (tables("clean"), tables("crash"), tables("scratch"))
+      ingest(cc, ci)(b0, 0)                              // the no-crash twin
+      // the crash: batch 0's corpus half (its survivors' rows, as a cold
+      // run on scratch tables keeps them) lands under its real tag, then
+      // the process dies before the index append
+      ingest(sc, si)(b0, 0)
+      val key = b0.columns.head
+      TxLogFormat.appendBatch(b0.join(TxLogFormat.read(spark, sc).select(key),
+        Seq(key), "left_semi"), xc, appId, 0)
+      assert(TxLogFormat.versions(xi).isEmpty)
+      val corpusBefore = (TxLogFormat.versions(xc), dump(xc))
+      ingest(xc, xi)(b0, 0)                              // the replay
+      assert((TxLogFormat.versions(xc), dump(xc)) == corpusBefore,
+        s"$loop: the replay must leave the corpus unchanged")
+      assert(dump(xi) == dump(ci), s"$loop: index diverges after the replay")
+      ingest(cc, ci)(b1, 1)
+      ingest(xc, xi)(b1, 1)
+      assert(dump(xc) == dump(cc) && dump(xi) == dump(ci),
+        s"$loop: the batch after the replay diverges from the twin")
+      assert(dump(xc).size < b0.count() + b1.count(),
+        s"$loop: the cases must drop something")
+    }
+  }
+
+  test("every persisted index refuses a mistyped schema with a named " +
+       "rebuild error before committing anything") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import graft.sources.TxLogFormat
+    type Ingest = (String, String) => (DataFrame, Long) => Unit
+    val docs = Seq((1L, "a b c d e f g h i j k l")).toDF("doc_id", "text")
+    val sigs = Seq(1L -> 0x1111222233334444L).toDF("doc_id", "sig")
+    // (index kind, its ingest over (corpus, index), a batch, the index
+    // as persisted under a wrong layout, the column that names it)
+    val cases: Seq[(String, Ingest, DataFrame, DataFrame, String)] = Seq(
+      ("LSH band", (t, i) => StreamOps.neardupIngestBatch(t, i) _, docs,
+        Seq((1L, "sig", 0, 5L)).toDF("doc_id", "sig", "band_idx", "band_hash"),
+        "sig"),
+      ("hash chunk", (t, i) => StreamOps.hashIngestBatch(t, i) _, sigs,
+        Seq((1L, 2L, 0, "c")).toDF("doc_id", "sig", "chunk_idx", "chunk"),
+        "chunk"),
+      ("multiHash chunk", (t, i) => StreamOps.multiHashIngestBatch(t, i) _,
+        Seq((1L, 0, 0x1111222233334444L)).toDF("doc_id", "slot", "sig"),
+        Seq((1L, 2L, "0", 3L)).toDF("doc_id", "sig", "chunk_idx", "chunk"),
+        "chunk_idx"),
+      ("semantic bucket", (t, i) => StreamOps.semanticIngestBatch(t, i,
+          nTables = 4, planesPerTable = 1, dim = 4) _,
+        Seq((1L, Array(1f, 0f, 0f, 0f), "x")).toDF("vec_id", "embedding", "label"),
+        Seq((1L, Seq(1L), 0, 1)).toDF("vec_id", "bks", "table_idx", "bucket"),
+        "bucket"),
+      ("segment", (t, i) => StreamOps.segmentIngestBatch(t, i, segWords = 3) _,
+        docs, Seq("a b c").toDF("h"), "h"),
+      ("substring", (t, i) => StreamOps.substringIngestBatch(t, i, minChars = 5) _,
+        docs, Seq(7).toDF("h"), "h"),
+      ("IVF ledger", (t, i) => StreamOps.ivfIngestBatch(t, i, nCells = 1) _,
+        Seq((1L, Array(1f, 0f))).toDF("vec_id", "embedding"),
+        Seq((0L, true, 0.5, 1L, 0.5))
+          .toDF("batch_id", "retrained", "build_mean_dist", "n", "sum_dist"),
+        "centroids"))
+    cases.foreach { case (kind, ingest, batch, stale, column) =>
+      val root = java.nio.file.Files.createTempDirectory("graft_stale_index")
+      val (corpus, index) =
+        (root.resolve("corpus").toString, root.resolve("index").toString)
+      TxLogFormat.write(stale, index)
+      val e = intercept[IllegalStateException](ingest(corpus, index)(batch, 1L))
+      val msg = e.getMessage
+      assert(msg.contains("rebuild index") && msg.contains(index) &&
+        msg.contains(s"`$column`"), s"$kind: $msg")
+      assert(TxLogFormat.versions(corpus).isEmpty &&
+        TxLogFormat.versions(index) == Seq(0L), s"$kind committed")
+    }
+  }
+
   test("streaming CONTAINMENT ingest with an uncrossed cap: the union of " +
        "per-batch emissions equals the batch closed form on the full corpus") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
