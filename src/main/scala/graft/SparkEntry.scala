@@ -1582,17 +1582,14 @@ object SparkEntry {
     // output cell from the same doc_id arithmetic — a hash-adjudicated
     // proof the pixel path decodes real pixels, not header echoes.
     "video_frame_probe" -> ((s, d) => {
-      import s.implicits._
       import org.apache.spark.sql.functions._
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") % 25 === 0).as[Long]
-      val media = ids.mapPartitions(_.map { id =>
+      val media = Multimodal.syntheticMedia(
+          Tables.documents(s, d), 25, 0, "video") { id =>
         val w = 16 + (id % 8).toInt * 4
         val h = 16 + (id % 5).toInt * 4
         val gray = 16 + (id % 7).toInt * 32
-        graft.operators.MediaRow(id, "video",
-          Multimodal.syntheticMjpegAvi(w, h, gray), "synth")
-      }).toDF()
+        Multimodal.syntheticMjpegAvi(w, h, gray)
+      }
       Multimodal.videoFrameFeatures(media)
         .select(col("doc_id"), col("header_w"), col("header_h"),
           col("frame_w"), col("frame_h"), col("dims_match"),
@@ -1609,30 +1606,16 @@ object SparkEntry {
     // hamming predicate over the same md5 arithmetic: a hash-adjudicated
     // proof of the entire decode→hash→band→verify pipeline.
     "dedup_image" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") % 10 === 0).as[Long]
-      val media = ids.mapPartitions(_.map { id =>
-        graft.operators.MediaRow(id, "image",
-          Multimodal.syntheticGridPng(Multimodal.syntheticImagePattern(id)),
-          "synth")
-      }).toDF()
+      val media = Multimodal.syntheticMedia(Tables.documents(s, d), 10, 0, "image")(
+        Multimodal.patternPng)
       Dedup.imageNearDupPairs(Multimodal.imageHashes(media), maxHamming = 3)
         .orderBy("doc_a", "doc_b")
     }),
     // the radius-0 exact-regime twin (the dedup_simhash_x convention):
     // identical-pixel pairs ⇔ equal hashes — one per group by mask design
     "dedup_image_x" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") % 10 === 0).as[Long]
-      val media = ids.mapPartitions(_.map { id =>
-        graft.operators.MediaRow(id, "image",
-          Multimodal.syntheticGridPng(Multimodal.syntheticImagePattern(id)),
-          "synth")
-      }).toDF()
+      val media = Multimodal.syntheticMedia(Tables.documents(s, d), 10, 0, "image")(
+        Multimodal.patternPng)
       Dedup.imageNearDupPairs(Multimodal.imageHashes(media), maxHamming = 0)
         .orderBy("doc_a", "doc_b")
     }),
@@ -1642,28 +1625,14 @@ object SparkEntry {
     // javax.sound decode recovers exactly), paired by the shared chunk
     // banding; the oracle is again the plain cross-join hamming predicate
     "dedup_audio" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") % 10 === 5).as[Long]
-      val media = ids.mapPartitions(_.map { id =>
-        graft.operators.MediaRow(id, "audio",
-          Multimodal.syntheticEnvelopeWav(Multimodal.syntheticImagePattern(id)),
-          "synth")
-      }).toDF()
+      val media = Multimodal.syntheticMedia(Tables.documents(s, d), 10, 5, "audio")(
+        Multimodal.patternWav)
       Dedup.audioNearDupPairs(Multimodal.audioHashes(media), maxHamming = 3)
         .orderBy("doc_a", "doc_b")
     }),
     "dedup_audio_x" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") % 10 === 5).as[Long]
-      val media = ids.mapPartitions(_.map { id =>
-        graft.operators.MediaRow(id, "audio",
-          Multimodal.syntheticEnvelopeWav(Multimodal.syntheticImagePattern(id)),
-          "synth")
-      }).toDF()
+      val media = Multimodal.syntheticMedia(Tables.documents(s, d), 10, 5, "audio")(
+        Multimodal.patternWav)
       Dedup.audioNearDupPairs(Multimodal.audioHashes(media), maxHamming = 0)
         .orderBy("doc_a", "doc_b")
     }),
@@ -1672,15 +1641,8 @@ object SparkEntry {
     // text edges, now over perceptual-hash edges; the hash arithmetic is
     // doc_id-closed-form, so the clustering is recursive-CTE-adjudicated)
     "dedup_image_clusters" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") % 10 === 0).as[Long]
-      val media = ids.mapPartitions(_.map { id =>
-        graft.operators.MediaRow(id, "image",
-          Multimodal.syntheticGridPng(Multimodal.syntheticImagePattern(id)),
-          "synth")
-      }).toDF()
+      val media = Multimodal.syntheticMedia(Tables.documents(s, d), 10, 0, "image")(
+        Multimodal.patternPng)
       Dedup.clustersFromPairs(
         Dedup.imageNearDupPairs(Multimodal.imageHashes(media), maxHamming = 3))
     }),
@@ -1710,28 +1672,14 @@ object SparkEntry {
     // container walk + pixel decode + dHash; oracle = the cross-join
     // hamming predicate on the %10=2 slice
     "dedup_video" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") % 10 === 2).as[Long]
-      val media = ids.mapPartitions(_.map { id =>
-        graft.operators.MediaRow(id, "video",
-          Multimodal.syntheticGridMjpegAvi(Multimodal.syntheticImagePattern(id)),
-          "synth")
-      }).toDF()
+      val media = Multimodal.syntheticMedia(Tables.documents(s, d), 10, 2, "video")(
+        Multimodal.patternAvi)
       Dedup.videoNearDupPairs(Multimodal.videoHashes(media), maxHamming = 3)
         .orderBy("doc_a", "doc_b")
     }),
     "dedup_video_x" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") % 10 === 2).as[Long]
-      val media = ids.mapPartitions(_.map { id =>
-        graft.operators.MediaRow(id, "video",
-          Multimodal.syntheticGridMjpegAvi(Multimodal.syntheticImagePattern(id)),
-          "synth")
-      }).toDF()
+      val media = Multimodal.syntheticMedia(Tables.documents(s, d), 10, 2, "video")(
+        Multimodal.patternAvi)
       Dedup.videoNearDupPairs(Multimodal.videoHashes(media), maxHamming = 0)
         .orderBy("doc_a", "doc_b")
     }),
@@ -1743,17 +1691,12 @@ object SparkEntry {
     // without the fingerprint arithmetic — the match count is still only
     // right if the whole decode→window→stride→band pipeline is
     "dedup_audio_shift" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") % 10 === 9).as[Long]
-      val media = ids.mapPartitions(_.map { id =>
+      val media = Multimodal.syntheticMedia(
+          Tables.documents(s, d), 10, 9, "audio") { id =>
         val amps = Multimodal.syntheticShiftAmps(id - id % 20)
-        graft.operators.MediaRow(id, "audio",
-          Multimodal.syntheticEnvelopeWavAmps(
-            if (id % 20 == 9) amps else amps.drop(8)),
-          "synth")
-      }).toDF()
+        Multimodal.syntheticEnvelopeWavAmps(
+          if (id % 20 == 9) amps else amps.drop(8))
+      }
       Dedup.audioNearDupPairsMulti(Multimodal.audioHashesStrided(media),
           maxHamming = 3)
         .orderBy("doc_a", "doc_b")
@@ -1767,17 +1710,12 @@ object SparkEntry {
     // group; match COUNT varies with each group's peak layout, so the
     // report is the pair + min-hamming closed form
     "dedup_audio_const" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") % 10 === 5).as[Long]
-      val media = ids.mapPartitions(_.map { id =>
+      val media = Multimodal.syntheticMedia(
+          Tables.documents(s, d), 10, 5, "audio") { id =>
         val amps = Multimodal.syntheticShiftAmps(id - id % 20)
-        graft.operators.MediaRow(id, "audio",
-          Multimodal.syntheticEnvelopeWavAmps(amps,
-            dropSamples = if (id % 20 == 5) 0 else 32),
-          "synth")
-      }).toDF()
+        Multimodal.syntheticEnvelopeWavAmps(amps,
+          dropSamples = if (id % 20 == 5) 0 else 32)
+      }
       Dedup.audioNearDupPairsMulti(Multimodal.audioHashesPeaks(media),
           maxHamming = 3)
         .select("doc_a", "doc_b", "hamming")
@@ -1793,17 +1731,12 @@ object SparkEntry {
     // quadruples make the pair set the structural closed form; match
     // at hamming 0 (bin sets, not a similarity scale)
     "dedup_audio_fft" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") % 10 === 8).as[Long]
-      val media = ids.mapPartitions(_.map { id =>
+      val media = Multimodal.syntheticMedia(
+          Tables.documents(s, d), 10, 8, "audio") { id =>
         val a = id - id % 20
-        graft.operators.MediaRow(id, "audio",
-          Multimodal.syntheticToneWav(a / 20,
-            dropSamples = if (id % 20 == 8) 0 else 13),
-          "synth")
-      }).toDF()
+        Multimodal.syntheticToneWav(a / 20,
+          dropSamples = if (id % 20 == 8) 0 else 13)
+      }
       Dedup.audioNearDupPairsMulti(Multimodal.audioHashesSpectral(media),
           maxHamming = 0)
         .select("doc_a", "doc_b", "hamming")
@@ -1818,16 +1751,9 @@ object SparkEntry {
     // min-hamming + match-count per clip pair; the oracle restates the
     // per-frame md5 arithmetic and the any-frame min/count closed form
     "dedup_video_multi" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") % 10 === 7).as[Long]
-      val media = ids.mapPartitions(_.map { id =>
-        graft.operators.MediaRow(id, "video",
-          Multimodal.syntheticMultiMjpegAvi(
-            Multimodal.syntheticVideoFramePatterns(id)),
-          "synth")
-      }).toDF()
+      val media = Multimodal.syntheticMedia(Tables.documents(s, d), 10, 7,
+        "video")(id => Multimodal.syntheticMultiMjpegAvi(
+          Multimodal.syntheticVideoFramePatterns(id)))
       Dedup.videoNearDupPairsMulti(Multimodal.videoHashesStrided(media, 3),
           maxHamming = 3)
         .orderBy("doc_a", "doc_b")
@@ -1836,16 +1762,9 @@ object SparkEntry {
     // frame matches are bit-identical), proving the cross-slot pairing
     // and the match COUNT at the strictest threshold
     "dedup_video_multi_x" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") % 10 === 7).as[Long]
-      val media = ids.mapPartitions(_.map { id =>
-        graft.operators.MediaRow(id, "video",
-          Multimodal.syntheticMultiMjpegAvi(
-            Multimodal.syntheticVideoFramePatterns(id)),
-          "synth")
-      }).toDF()
+      val media = Multimodal.syntheticMedia(Tables.documents(s, d), 10, 7,
+        "video")(id => Multimodal.syntheticMultiMjpegAvi(
+          Multimodal.syntheticVideoFramePatterns(id)))
       Dedup.videoNearDupPairsMulti(Multimodal.videoHashesStrided(media, 3),
           maxHamming = 0)
         .orderBy("doc_a", "doc_b")

@@ -1378,6 +1378,27 @@ object Multimodal {
     baos.toByteArray
   }
 
+  /** The synthetic media fixture: one [[MediaRow]] per doc of the
+    * `doc_id % m == r` slice of `documents`, its `modality` payload built
+    * from the doc_id by `payload` (source "synth") — the driver queries'
+    * and ingest rigs' media corpus, since none ships. */
+  def syntheticMedia(documents: DataFrame, m: Int, r: Int, modality: String)
+                    (payload: Long => Array[Byte]): DataFrame = {
+    import documents.sparkSession.implicits._
+    documents.select(col("doc_id")).filter(col("doc_id") % m === r).as[Long]
+      .mapPartitions(_.map(id => MediaRow(id, modality, payload(id), "synth")))
+      .toDF()
+  }
+
+  /** [[syntheticImagePattern]] as an image, an audio clip and a video —
+    * the three one-pattern payloads of the near-dup fixtures. */
+  def patternPng(docId: Long): Array[Byte] =
+    syntheticGridPng(syntheticImagePattern(docId))
+  def patternWav(docId: Long): Array[Byte] =
+    syntheticEnvelopeWav(syntheticImagePattern(docId))
+  def patternAvi(docId: Long): Array[Byte] =
+    syntheticGridMjpegAvi(syntheticImagePattern(docId))
+
   /** The driver queries' doc_id-arithmetic hash pattern (both engines
     * state it): docs in the same 4-slot group (anchor = doc_id − doc_id
     * % 40 over the %10 slice) share one 60-bit md5-derived base pattern,

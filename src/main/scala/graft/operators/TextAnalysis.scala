@@ -25,10 +25,88 @@ object TextAnalysis {
     * frequencies (spec-pinned); grams with an empty side skip, rows
     * under n tokens yield nothing, exactly the old guards. */
   private def ngramTf(documents: DataFrame, n: Int): DataFrame = {
-    val fields = (1 to n).map(i => col(s"e.w$i").as(s"w$i"))
+    val fields = grams(n).map(w => col(s"e.$w").as(w))
     documents.select(col("doc_id"),
         explode(graft.functions.TermFunctions.ngramCounts(words, n)).as("e"))
       .select(col("doc_id") +: fields :+ col("e.tf").as("tf"): _*)
+  }
+
+  /** The gram columns w1…wn of an n-gram table. */
+  private def grams(n: Int): Seq[String] = (1 to n).map(i => s"w$i")
+
+  // ---- the n-gram language-model core ------------------------------------
+  // Every model here (the perplexity ladder, the trained lang-ID) is a
+  // weight table joined to per-doc gram frequencies. The pieces below are
+  // the shared scaffolding; each model keeps only its smoothing formula.
+
+  /** (w1…wn, c1…n) — the corpus n-gram TYPE table, aggregated from the
+    * per-doc frequencies `tf`. When `tf` is the scoring side's own, the
+    * model tables reuse this one exchange (PlanSpec pins the reuse). */
+  private def typeCounts(tf: DataFrame, n: Int): DataFrame =
+    tf.groupBy(grams(n).map(col): _*)
+      .agg(sum("tf").as("c" + (1 to n).mkString))
+
+  /** The micro-nat discipline — the ONE rounding point of every
+    * engine-portable model here (the D56 trick): a model's per-TYPE
+    * float value (`−ln P`, or `ln(num/den)` for a log-probability)
+    * is computed in one chain with every operand an explicit double and
+    * products/ratios left-associated, so both engines execute the
+    * identical IEEE op sequence on identical inputs; it then rounds ONCE
+    * to integer micro-nats here. Everything downstream — per-doc NLLs,
+    * class scores, flags — is an EXACT integer sum or cross-
+    * multiplication (associative, partitioning-independent), so the
+    * whole report hash-adjudicates. */
+  private def microNats(e: Column): Column = round(e * 1e6, 0).cast("long")
+
+  /** The integer scorer of the micro-nat models: `tf` ⋈ `model` (gram
+    * columns w1…wn, plus `unats`) on the grams, per-doc `n_<grams>` and
+    * `nll_unats` exact sums, and the flag as the integer cross-
+    * multiplication nll_unats > round(flagNats·1e6) · n. Docs with no
+    * scored gram drop, as in any n-gram scorer. */
+  private def scoreUnats(tf: DataFrame, model: DataFrame, n: Int,
+                         flagNats: Double): DataFrame = {
+    val cnt = if (n == 2) "n_bigrams" else "n_trigrams"
+    val flagUnats = math.round(flagNats * 1e6)
+    tf.join(model, grams(n))
+      .groupBy("doc_id")
+      .agg(sum("tf").as(cnt), sum(col("tf") * col("unats")).as("nll_unats"))
+      .select(col("doc_id"), col(cnt), col("nll_unats"),
+        when(col("nll_unats") > lit(flagUnats) * col(cnt), "high")
+          .otherwise("ok").as("ppl_flag"))
+  }
+
+  /** The float tail of the add-one models: per-doc `cnt` = Σ tf and the
+    * mean NLL Σ tf·−ln p / Σ tf, round4'd; the flag compares the ROUNDED
+    * mean so both engines flag identically. */
+  private def addOneMean(joined: DataFrame, cnt: String, p: Column,
+                         flagNats: Double): DataFrame = {
+    val avgNll = round4(col("nll") / col(cnt))
+    joined.groupBy("doc_id")
+      .agg(sum("tf").as(cnt), sum(col("tf") * -log(p)).as("nll"))
+      .select(col("doc_id"), col(cnt), avgNll.as("avg_nll"),
+        when(avgNll > flagNats, "high").otherwise("ok").as("ppl_flag"))
+  }
+
+  /** The bigram Kneser-Ney skeleton shared by [[perplexityKn]],
+    * [[perplexityKnMod]] and [[perplexityKnPruned]]: the type table cb
+    * (w1, w2, c12) → the context table ctx (w1, c1 + `ctxAggs`) → the
+    * continuation table pre (w2, nprec) → the 1-row broadcast totals
+    * (ntypes + `totAggs`) → the model, one micro-nat `−ln p` per bigram
+    * type, scored by [[scoreUnats]]. Every model table aggregates from
+    * the scoring side's bigram frequencies (the corpus tokenizes once);
+    * each variant states only its extra aggregates and its `p`. */
+  private def knBigram(documents: DataFrame, flagNats: Double,
+                       ctxAggs: Seq[Column], totAggs: Seq[Column])
+                      (p: Column): DataFrame = {
+    val tfb = ngramTf(documents, 2)
+    val cb = typeCounts(tfb, 2)
+    val ctx = cb.groupBy("w1").agg(sum("c12").as("c1"), ctxAggs: _*)
+    val pre = cb.groupBy("w2").agg(count(lit(1)).as("nprec"))
+    val tot = cb.agg(count(lit(1)).as("ntypes"), totAggs: _*)
+    val model = cb.join(ctx, Seq("w1")).join(pre, Seq("w2"))
+      .crossJoin(broadcast(tot))
+      .select(col("w1"), col("w2"), microNats(-log(p)).as("unats"))
+    scoreUnats(tfb, model, 2, flagNats)
   }
 
   /** Tiny per-language function-word lexicons for the n-gram/stopword
@@ -41,19 +119,25 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "de", "et", "est", "pas", "avec", "un"),
   )
 
-  def langId(documents: DataFrame): DataFrame = {
+  /** The lexicon vote shared by [[langId]] and [[langIdWeak]]: the
+    * per-language distinct-hit columns `hits_<l>`, their max `best`
+    * (over those columns, once selected), and the when-chain in lexicon
+    * order — the first language hitting a non-zero max wins, else 'und'. */
+  private val (lexHits, lexBest, lexChain): (Seq[Column], Column, Column) = {
     val hitCols = lexicons.map { case (l, lex) =>
       size(array_intersect(distinctWords, array(lex.map(lit): _*))).as(s"hits_$l")
     }
     val best = greatest(lexicons.map { case (l, _) => col(s"hits_$l") }: _*)
-    // when-chain in lexicon order: the first language hitting the max wins.
     val chain = lexicons.reverse.foldLeft(lit("und"): Column) { case (e, (l, _)) =>
       when(col(s"hits_$l") === best && best > 0, l).otherwise(e)
     }
-    documents.select((col("doc_id") +: hitCols): _*)
-      .withColumn("predicted_lang", chain)
-      .orderBy("doc_id")
+    (hitCols, best, chain)
   }
+
+  def langId(documents: DataFrame): DataFrame =
+    documents.select((col("doc_id") +: lexHits): _*)
+      .withColumn("predicted_lang", lexChain)
+      .orderBy("doc_id")
 
   /** Per-language word pools for the TRAINED lang-ID rig (public
     * function words; shared by the driver query, its DuckDB oracle, and
@@ -77,6 +161,32 @@ object TextAnalysis {
       "anche", "quando", "ma", "tempo"),
   )
 
+  /** The char-bigram prologue of the trained lang-ID ([[langIdModel]],
+    * [[langIdModelWide]] — two model layouts over one feature table):
+    * `docs` (doc_id, lang, __t, __train); the per-doc char-bigram
+    * frequencies `tf` (doc_id, gram, tf), counted in-row by
+    * graft_ngram_counts over the gram array (r18: no (doc, gram)
+    * token-scale exchange); and the train-split class-gram table `cg`
+    * (cand, gram, c), which aggregates one row per DISTINCT (doc, gram),
+    * summing tf — bit-equal to counting occurrences. */
+  private def charBigrams(documents: DataFrame, labelCol: String,
+      trainGate: Column): (DataFrame, DataFrame, DataFrame) = {
+    val docs = documents.select(col("doc_id"), col(labelCol).as("lang"),
+      lower(col("text")).as("__t"), trainGate.as("__train"))
+    val t = col("__t")
+    val gramArr = when(length(t) >= 2,
+        transform(sequence(lit(1), length(t) - 1), i => t.substr(i, lit(2))))
+      .otherwise(array().cast("array<string>"))
+    val counted = docs.select(col("doc_id"), col("lang"), col("__train"),
+        explode(graft.functions.TermFunctions.ngramCounts(gramArr, 1)).as("e"))
+      .select(col("doc_id"), col("lang"), col("__train"),
+        col("e.w1").as("gram"), col("e.tf").as("tf"))
+    val cg = counted.filter(col("__train"))
+      .groupBy(col("lang").as("cand"), col("gram"))
+      .agg(sum("tf").as("c"))
+    (docs, counted.select("doc_id", "gram", "tf"), cg)
+  }
+
   /** TRAINED language ID (r16 — [[langId]]'s lexicon intersection is a
     * driver-query signal, not a production classifier: it can only
     * answer from its hand-listed languages, and a real crawl is mostly
@@ -89,15 +199,13 @@ object TextAnalysis {
     * rows as weak supervision — gated to the `trainGate` split; every
     * doc (train and held-out alike) is scored.
     *
-    * Engine portability is the D56 micro-nat discipline — ONE rounding
-    * point: each (language, bigram TYPE)'s Laplace-smoothed log
-    * probability ln((c+1)/(N_lang+V)) (V = distinct train bigrams;
-    * unseen bigrams take the ln(1/(N_lang+V)) default; class priors
-    * ln(docs_lang/docs_train)) rounds once to integer micro-nats —
-    * every operand an explicit double, the ratio left-associated —
-    * then per-(doc, language) scores are EXACT integer sums
-    * (tf · unats, associative, partitioning-independent) and argmax
-    * breaks ties on language asc: the whole report hash-adjudicates.
+    * Engine portability is the [[microNats]] discipline: each
+    * (language, bigram TYPE)'s Laplace-smoothed log probability
+    * ln((c+1)/(N_lang+V)) (V = distinct train bigrams; unseen bigrams
+    * take the ln(1/(N_lang+V)) default; class priors
+    * ln(docs_lang/docs_train)) rounds once to integer micro-nats, the
+    * per-(doc, language) scores are exact integer sums (tf · unats),
+    * and argmax breaks ties on language asc.
     *
     * Scale shape: training is two gram-scale aggregations (doc-term
     * and class-term counts — the model table is vocabulary-scale,
@@ -114,46 +222,22 @@ object TextAnalysis {
                   trainGate: Column =
                     substring(md5(col("doc_id").cast("string")), 1, 1)
                       < lit("d")): DataFrame = {
-    val docs = documents.select(col("doc_id"), col(labelCol).as("lang"),
-      lower(col("text")).as("__t"), trainGate.as("__train"))
-    val t = col("__t")
-    // r18: per-doc char-bigram frequencies in-row (graft_ngram_counts
-    // over the gram array) — the (doc, gram) token-scale Exchange is
-    // gone, and the class-gram counts aggregate one row per DISTINCT
-    // (doc, gram), summing tf (bit-equal to counting occurrences).
-    val gramArr = when(length(t) >= 2,
-        transform(sequence(lit(1), length(t) - 1), i => t.substr(i, lit(2))))
-      .otherwise(array().cast("array<string>"))
-    val counted = docs.select(col("doc_id"), col("lang"), col("__train"),
-        explode(graft.functions.TermFunctions.ngramCounts(gramArr, 1)).as("e"))
-      .select(col("doc_id"), col("lang"), col("__train"),
-        col("e.w1").as("gram"), col("e.tf").as("tf"))
-    val tf = counted.select("doc_id", "gram", "tf")
-    // model tables, train split only
-    val cg = counted.filter(col("__train"))
-      .groupBy(col("lang").as("cand"), col("gram"))
-      .agg(sum("tf").as("c"))
+    val (docs, tf, cg) = charBigrams(documents, labelCol, trainGate)
     val totals = cg.groupBy("cand").agg(sum("c").as("n"))
     val vocab = cg.agg(countDistinct("gram").as("v"))
-    // the single rounding point: explicit doubles, left-associated
-    // ratio, one ln, one round to micro-nats — identical IEEE sequence
-    // in both engines
-    def unatsOf(num: Column, den: Column): Column =
-      round(log(num / den) * 1e6, 0).cast("long")
     val model = cg.join(totals, Seq("cand")).crossJoin(broadcast(vocab))
       .select(col("cand"), col("gram"),
-        unatsOf(col("c").cast("double") + lit(1.0),
-          col("n").cast("double") + col("v").cast("double")).as("unats"))
+        microNats(log((col("c").cast("double") + lit(1.0)) /
+          (col("n").cast("double") + col("v").cast("double")))).as("unats"))
     val defaults = totals.crossJoin(broadcast(vocab))
-      .select(col("cand"),
-        unatsOf(lit(1.0),
-          col("n").cast("double") + col("v").cast("double")).as("d_unats"))
+      .select(col("cand"), microNats(log(lit(1.0) /
+          (col("n").cast("double") + col("v").cast("double")))).as("d_unats"))
     val trainDocs = docs.filter(col("__train"))
     val priors = trainDocs.groupBy(col("lang").as("cand"))
       .agg(count(lit(1)).as("dl"))
       .crossJoin(broadcast(trainDocs.agg(count(lit(1)).as("dt"))))
       .select(col("cand"),
-        unatsOf(col("dl").cast("double"), col("dt").cast("double"))
+        microNats(log(col("dl").cast("double") / col("dt").cast("double")))
           .as("prior_unats"))
     val cands = priors.select("cand")
     // score: per-doc bigram frequencies x candidate set, unseen grams
@@ -190,24 +274,15 @@ object TextAnalysis {
     * character bigrams; what it cannot do is NAME a language no
     * lexicon labels — that needs a labeled frame through
     * [[langIdModel]] directly, the pluggable-stage path the curation
-    * funnel exposes. Same determinism as D83 (micro-nat single
-    * rounding point, exact integer sums, total-order argmax), so the
-    * whole weak chain hash-adjudicates. Scale: the labeling pass is
+    * funnel exposes. Same determinism as [[langIdModel]] (the
+    * [[microNats]] discipline, total-order argmax), so the whole weak
+    * chain hash-adjudicates. Scale: the labeling pass is
     * scan-bound; everything after is [[langIdModel]]'s two gram-scale
     * aggregations + broadcast-model scoring. */
   def langIdWeak(documents: DataFrame, minHits: Int = 3): DataFrame = {
-    val hitCols = lexicons.map { case (l, lex) =>
-      size(array_intersect(distinctWords, array(lex.map(lit): _*)))
-        .as(s"hits_$l")
-    }
-    val best = greatest(lexicons.map { case (l, _) => col(s"hits_$l") }: _*)
-    val chain = lexicons.reverse.foldLeft(lit("und"): Column) {
-      case (e, (l, _)) => when(col(s"hits_$l") === best && best > 0, l)
-        .otherwise(e)
-    }
     val labeled = documents
-      .select(col("doc_id") +: col("text") +: hitCols: _*)
-      .withColumn("__lbl", when(best >= minHits, chain))
+      .select(col("doc_id") +: col("text") +: lexHits: _*)
+      .withColumn("__lbl", when(lexBest >= minHits, lexChain))
       .select(col("doc_id"), col("text"), col("__lbl"))
     langIdModel(labeled, "__lbl", trainGate = col("__lbl").isNotNull)
   }
@@ -223,27 +298,14 @@ object TextAnalysis {
     * `lang_id_model`'s oracle verbatim; the spec asserts row equality
     * with the narrow layout). Candidate labels, totals, and priors are
     * LABEL-scale (≤ a few hundred) and collect into literals — the
-    * centroid-seed exception class, never corpus-scale. */
+    * centroid-seed exception class, never corpus-scale. The per-(cand,
+    * gram) weights round engine-side through [[microNats]]; the label-
+    * scale defaults and priors round in its driver-side twin. */
   def langIdModelWide(documents: DataFrame, labelCol: String = "lang",
                       trainGate: Column =
                         substring(md5(col("doc_id").cast("string")), 1, 1)
                           < lit("d")): DataFrame = {
-    val docs = documents.select(col("doc_id"), col(labelCol).as("lang"),
-      lower(col("text")).as("__t"), trainGate.as("__train"))
-    val t = col("__t")
-    // r18: in-row char-bigram counts (see langIdModel) — same kernel,
-    // same bit-equal frequencies, no (doc, gram) exchange
-    val gramArr = when(length(t) >= 2,
-        transform(sequence(lit(1), length(t) - 1), i => t.substr(i, lit(2))))
-      .otherwise(array().cast("array<string>"))
-    val counted = docs.select(col("doc_id"), col("lang"), col("__train"),
-        explode(graft.functions.TermFunctions.ngramCounts(gramArr, 1)).as("e"))
-      .select(col("doc_id"), col("lang"), col("__train"),
-        col("e.w1").as("gram"), col("e.tf").as("tf"))
-    val tf = counted.select("doc_id", "gram", "tf")
-    val cg = counted.filter(col("__train"))
-      .groupBy(col("lang").as("cand"), col("gram"))
-      .agg(sum("tf").as("c"))
+    val (docs, tf, cg) = charBigrams(documents, labelCol, trainGate)
     // label-scale driver constants: totals/vocab/priors (bounded by the
     // language count, the documented collect exception class)
     val totals: Map[String, Long] = cg.groupBy("cand").agg(sum("c").as("n"))
@@ -266,11 +328,10 @@ object TextAnalysis {
     val candsLit = typedlit(cands)
     val defaultsLit = typedlit(defaults)
     val priorsLit = typedlit(priors)
-    // the single rounding point stays engine-side for the per-(cand,
-    // gram) table — identical chain to the narrow layout
-    val unats = round(log((col("c").cast("double") + lit(1.0)) /
-      (col("__n").cast("double") + lit(v).cast("double"))) * 1e6, 0)
-      .cast("long")
+    // the per-(cand, gram) rounding stays engine-side: the narrow
+    // layout's chain through the one rounding point
+    val unats = microNats(log((col("c").cast("double") + lit(1.0)) /
+      (col("__n").cast("double") + lit(v).cast("double"))))
     val gramVecs = cg
       .withColumn("__n",
         element_at(typedlit(cands.map(totals)),
@@ -499,15 +560,14 @@ object TextAnalysis {
     * arXiv:2112.11446 §A1.1): the fraction of tokens taken by the single
     * most frequent word and the fraction of duplicate tokens; heavily
     * repetitive documents are the classic low-quality web-text signature.
-    * Distributed as explode → (doc, word) counts → per-doc max/sum — two
-    * map-side-combined shuffles, NOT a per-row O(len²) higher-order scan,
-    * so million-token documents cost the same per token as short ones. */
+    * Computed in-row (r18): one hashed word-count pass per doc
+    * (graft_ngram_counts, skipEmpty = false — "" is a countable word
+    * here) and a per-row max/sum over the counts array — zero exchanges
+    * before the presentation sort, and linear in the doc's length, so
+    * million-token documents cost the same per token as short ones. A
+    * NULL-text doc has no words and no row. */
   def repetitionScore(documents: DataFrame): DataFrame = {
-    // r18: both "shuffles" were counting duplicates that live in one
-    // row — the whole signal is now a per-row reduction over the in-row
-    // counts array (skipEmpty = false: "" is a countable word here, as
-    // the unfiltered explode had it). Zero exchanges.
-    val counted = documents.select(col("doc_id"),
+    val counted = documents.filter(col("text").isNotNull).select(col("doc_id"),
       graft.functions.TermFunctions.ngramCounts(words, 1, skipEmpty = false)
         .as("__tc"))
     counted.select(col("doc_id"),
@@ -815,32 +875,26 @@ object TextAnalysis {
     * KenLM 5-gram; the unigram model is the same pipeline shape with the
     * model trained in-engine). Two stages, both distributed:
     *
-    *  1. TRAIN: corpus unigram counts `c_w` — explode → (doc, word) partial
-    *     counts → per-word totals. The word-count aggregation REUSES the
-    *     (doc_id, word) exchange the scoring stage needs anyway (same
-    *     ReusedExchange shape as [[tfidfTopTerms]]).
+    *  1. TRAIN: corpus unigram counts `c_w` — per-doc term frequencies
+    *     counted in-row ([[ngramTf]], no (doc, word) exchange), then one
+    *     partial-aggregated word-keyed exchange to per-word totals; the
+    *     (N, V) totals row REUSES that exchange.
     *  2. SCORE: each doc's mean negative log-likelihood in nats,
     *     `avg_nll = Σ_w tf_dw · −ln((c_w+1)/(N+V)) / Σ_w tf_dw` (add-one
     *     smoothing keeps the form total even when scoring against a model
-    *     trained elsewhere). The model joins on `word` — a hash join that
-    *     broadcasts when the vocabulary is small and shuffles when a 100 TB
-    *     vocabulary isn't; N and V ride one broadcast row either way.
+    *     trained elsewhere; the [[addOneMean]] tail). The model joins on
+    *     the word — a hash join that broadcasts when the vocabulary is
+    *     small and shuffles when a 100 TB vocabulary isn't; N and V ride
+    *     one broadcast row either way.
     *
     * High `avg_nll` = improbable text (gibberish, boilerplate soup); the
     * flag thresholds on the ROUNDED score so both engines flag identically. */
   def perplexityScore(documents: DataFrame, flagNats: Double = 7.0): DataFrame = {
-    val tf = ngramTf(documents, 1).withColumnRenamed("w1", "word")
-    val cw = tf.groupBy("word").agg(sum("tf").as("c"))
-    val tot = cw.agg(sum("c").as("n"), count(lit(1)).as("v"))
-    val avgNll = round4(col("nll") / col("n_tokens"))
-    tf.join(cw, "word")
-      .crossJoin(broadcast(tot))
-      .groupBy("doc_id")
-      .agg(sum("tf").as("n_tokens"),
-           sum(col("tf") * -log((col("c") + 1).cast("double") /
-                                (col("n") + col("v")))).as("nll"))
-      .select(col("doc_id"), col("n_tokens"), avgNll.as("avg_nll"),
-              when(avgNll > flagNats, "high").otherwise("ok").as("ppl_flag"))
+    val tf = ngramTf(documents, 1)
+    val cw = typeCounts(tf, 1)
+    val tot = cw.agg(sum("c1").as("n"), count(lit(1)).as("v"))
+    addOneMean(tf.join(cw, "w1").crossJoin(broadcast(tot)), "n_tokens",
+      (col("c1") + 1).cast("double") / (col("n") + col("v")), flagNats)
       .orderBy("doc_id")
   }
 
@@ -1220,18 +1274,12 @@ object TextAnalysis {
     * identically; no presentation sort on the corpus-sized output. */
   def perplexityBigram(documents: DataFrame, flagNats: Double = 3.5): DataFrame = {
     val tfb = ngramTf(documents, 2)
-    val cb = tfb.groupBy("w1", "w2").agg(sum("tf").as("c12"))
+    val cb = typeCounts(tfb, 2)
     val c1 = cb.groupBy("w1").agg(sum("c12").as("c1"))
     val vrow = c1.agg(count(lit(1)).as("v"))
-    val avgNll = round4(col("nll") / col("n_bigrams"))
-    tfb.join(cb, Seq("w1", "w2")).join(c1, Seq("w1"))
-      .crossJoin(broadcast(vrow))
-      .groupBy("doc_id")
-      .agg(sum("tf").as("n_bigrams"),
-           sum(col("tf") * -log((col("c12") + 1).cast("double") /
-                                (col("c1") + col("v")))).as("nll"))
-      .select(col("doc_id"), col("n_bigrams"), avgNll.as("avg_nll"),
-              when(avgNll > flagNats, "high").otherwise("ok").as("ppl_flag"))
+    addOneMean(tfb.join(cb, Seq("w1", "w2")).join(c1, Seq("w1"))
+        .crossJoin(broadcast(vrow)), "n_bigrams",
+      (col("c12") + 1).cast("double") / (col("c1") + col("v")), flagNats)
   }
 
   /** Interpolated Kneser-Ney bigram perplexity — the rung of the quality
@@ -1255,49 +1303,22 @@ object TextAnalysis {
     * Self-scoring only ever evaluates seen pairs, so the model join
     * stays inner.
     *
-    * Engine-portability is the D56 micro-nat trick — ONE rounding point:
-    * each distinct bigram TYPE's −ln P rounds once to integer micro-nats
-    * (the only float op, identical doubles in identical operation order
-    * in both engines — every operand explicitly double, products/ratios
-    * left-associated), then per-doc NLLs are EXACT integer sums
-    * (associative, partitioning-independent — no float-summation seam)
-    * and the flag is an integer cross-multiplication
-    * (nll > flagNats · n), so the whole report hash-adjudicates.
+    * Engine portability is the [[microNats]] discipline: each distinct
+    * bigram TYPE's −ln P rounds once to integer micro-nats, per-doc NLLs
+    * are exact integer sums, the flag an integer cross-multiplication
+    * ([[scoreUnats]]).
     *
-    * Pipeline shape = [[perplexityBigram]]'s: the corpus tokenizes ONCE
-    * into per-doc bigram frequencies; the model (c12 / context totals /
+    * Pipeline shape ([[knBigram]]): the corpus tokenizes ONCE into
+    * per-doc bigram frequencies; the model (c12 / context totals /
     * continuation counts / type count) aggregates FROM those frequencies
     * (ReusedExchange, PlanSpec-pinned), the two corpus-scale pieces join
     * on (w1,w2), the 1-row type count broadcasts. Docs under 2 tokens
     * drop (no bigrams), as in any n-gram scorer. */
-  def perplexityKn(documents: DataFrame, flagNats: Double = 3.0): DataFrame = {
-    val tfb = ngramTf(documents, 2)
-    // model tables — all derived from the TYPE table cb, which itself
-    // aggregates from tfb (the scoring side's own exchange)
-    val cb = tfb.groupBy("w1", "w2").agg(sum("tf").as("c12"))
-    val ctx = cb.groupBy("w1")
-      .agg(sum("c12").as("c1"), count(lit(1)).as("n1w1"))
-    val pre = cb.groupBy("w2").agg(count(lit(1)).as("nprec"))
-    val tot = cb.agg(count(lit(1)).as("ntypes"))
-    // the single rounding point: every operand an explicit double, the
-    // product/ratio chain left-associated — both engines execute the
-    // identical IEEE op sequence on identical inputs
-    val p = (greatest(col("c12").cast("double") - lit(0.75), lit(0.0)) +
-      lit(0.75) * col("n1w1").cast("double") * col("nprec").cast("double") /
-        col("ntypes").cast("double")) / col("c1").cast("double")
-    val model = cb.join(ctx, Seq("w1")).join(pre, Seq("w2"))
-      .crossJoin(broadcast(tot))
-      .select(col("w1"), col("w2"),
-        round(-log(p) * 1e6, 0).cast("long").as("unats"))
-    val flagUnats = math.round(flagNats * 1e6)
-    tfb.join(model, Seq("w1", "w2"))
-      .groupBy("doc_id")
-      .agg(sum("tf").as("n_bigrams"),
-           sum(col("tf") * col("unats")).as("nll_unats"))
-      .select(col("doc_id"), col("n_bigrams"), col("nll_unats"),
-        when(col("nll_unats") > lit(flagUnats) * col("n_bigrams"), "high")
-          .otherwise("ok").as("ppl_flag"))
-  }
+  def perplexityKn(documents: DataFrame, flagNats: Double = 3.0): DataFrame =
+    knBigram(documents, flagNats, Seq(count(lit(1)).as("n1w1")), Nil)(
+      (greatest(col("c12").cast("double") - lit(0.75), lit(0.0)) +
+        lit(0.75) * col("n1w1").cast("double") * col("nprec").cast("double") /
+          col("ntypes").cast("double")) / col("c1").cast("double"))
 
   /** MODIFIED Kneser-Ney bigram perplexity — KenLM's default smoothing
     * (Chen & Goodman 1998 §3, the config CCNet's filter actually ships):
@@ -1317,24 +1338,13 @@ object TextAnalysis {
     * 4-count types) fall back to the fixed 0.75 — estimation needs the
     * classes it estimates from.
     *
-    * Same engine-portability contract as [[perplexityKn]]: the discount
+    * Same [[microNats]] discipline as [[perplexityKn]]: the discount
     * estimation adds three more double expressions, but every float op
-    * still sits in ONE chain per bigram type (explicit doubles,
-    * left-associated, clamps via GREATEST/LEAST — both engines execute
-    * the identical IEEE sequence) rounded ONCE to micro-nats; per-doc
-    * NLLs are exact integer sums, the flag an integer
-    * cross-multiplication. Same ReusedExchange plan shape. */
+    * still sits in ONE chain per bigram type (clamps via GREATEST/LEAST,
+    * a CASE both engines state). Same [[knBigram]] plan shape. */
   def perplexityKnMod(documents: DataFrame, flagNats: Double = 3.0): DataFrame = {
-    val tfb = ngramTf(documents, 2)
-    val cb = tfb.groupBy("w1", "w2").agg(sum("tf").as("c12"))
     def cls(k: Column => Column, name: String) =
       sum(when(k(col("c12")), 1L).otherwise(0L)).as(name)
-    val ctx = cb.groupBy("w1").agg(sum("c12").as("c1"),
-      cls(_ === 1, "k1"), cls(_ === 2, "k2"), cls(_ >= 3, "k3"))
-    val pre = cb.groupBy("w2").agg(count(lit(1)).as("nprec"))
-    val tot = cb.agg(count(lit(1)).as("ntypes"),
-      cls(_ === 1, "n1"), cls(_ === 2, "n2"),
-      cls(_ === 3, "n3"), cls(_ === 4, "n4"))
     // estimated discounts, clamped into [0, k]; fixed 0.75 when any
     // count-of-count class is empty (both engines state the same CASE)
     val haveCls = col("n1") > 0 && col("n2") > 0 && col("n3") > 0 && col("n4") > 0
@@ -1352,21 +1362,13 @@ object TextAnalysis {
     val dOfC = when(col("c12") === 1, d1).when(col("c12") === 2, d2)
       .otherwise(d3)
     val gamma = d1 * col("k1") + d2 * col("k2") + d3 * col("k3")
-    val p = (greatest(col("c12").cast("double") - dOfC, lit(0.0)) +
-      gamma * col("nprec").cast("double") / col("ntypes").cast("double")) /
-      col("c1").cast("double")
-    val model = cb.join(ctx, Seq("w1")).join(pre, Seq("w2"))
-      .crossJoin(broadcast(tot))
-      .select(col("w1"), col("w2"),
-        round(-log(p) * 1e6, 0).cast("long").as("unats"))
-    val flagUnats = math.round(flagNats * 1e6)
-    tfb.join(model, Seq("w1", "w2"))
-      .groupBy("doc_id")
-      .agg(sum("tf").as("n_bigrams"),
-           sum(col("tf") * col("unats")).as("nll_unats"))
-      .select(col("doc_id"), col("n_bigrams"), col("nll_unats"),
-        when(col("nll_unats") > lit(flagUnats) * col("n_bigrams"), "high")
-          .otherwise("ok").as("ppl_flag"))
+    knBigram(documents, flagNats,
+      Seq(cls(_ === 1, "k1"), cls(_ === 2, "k2"), cls(_ >= 3, "k3")),
+      Seq(cls(_ === 1, "n1"), cls(_ === 2, "n2"),
+        cls(_ === 3, "n3"), cls(_ === 4, "n4")))(
+      (greatest(col("c12").cast("double") - dOfC, lit(0.0)) +
+        gamma * col("nprec").cast("double") / col("ntypes").cast("double")) /
+        col("c1").cast("double"))
   }
 
   /** COUNT-PRUNED interpolated Kneser-Ney — the model-size lever
@@ -1397,43 +1399,22 @@ object TextAnalysis {
     * pruned type scores λ(w1)·Pcont(w2) — before r14 only the
     * cross-corpus op reached it), which is exactly what deployment does:
     * most of a crawl's bigrams are singletons the pruned model never
-    * stored. Engine-portability unchanged: ONE float chain per distinct
-    * scored type (explicit doubles, left-associated, the pruned/
-    * surviving split a CASE both engines state), rounded once to
-    * micro-nats; per-doc NLLs exact integer sums; flag an integer
-    * cross-multiplication. Same one-corpus-exchange ReusedExchange
-    * shape — the pruning adds two integer aggregates to the context
-    * table, no new pass. */
+    * stored. The [[microNats]] discipline holds: ONE float chain per
+    * distinct scored type, the pruned/surviving split a CASE both
+    * engines state. Same [[knBigram]] plan shape — the pruning adds two
+    * integer aggregates to the context table, no new pass. */
   def perplexityKnPruned(documents: DataFrame, prune: Long = 1,
                          flagNats: Double = 3.0): DataFrame = {
     require(prune >= 1, s"prune >= 1 keeps surviving counts > D, got $prune")
-    val tfb = ngramTf(documents, 2)
-    val cb = tfb.groupBy("w1", "w2").agg(sum("tf").as("c12"))
     val surv = col("c12") > prune
-    val ctx = cb.groupBy("w1").agg(sum("c12").as("c1"),
-      sum(when(surv, 1L).otherwise(0L)).as("n1s"),
-      sum(when(surv, 0L).otherwise(col("c12"))).as("s1"))
-    val pre = cb.groupBy("w2").agg(count(lit(1)).as("nprec"))
-    val tot = cb.agg(count(lit(1)).as("ntypes"))
-    // the single rounding point (the perplexityKn discipline): pruned
-    // types keep only the redistributed term — same chain, CASE'd
-    val p = (when(surv, col("c12").cast("double") - lit(0.75))
-        .otherwise(lit(0.0)) +
-      (lit(0.75) * col("n1s").cast("double") + col("s1").cast("double")) *
-        col("nprec").cast("double") / col("ntypes").cast("double")) /
-      col("c1").cast("double")
-    val model = cb.join(ctx, Seq("w1")).join(pre, Seq("w2"))
-      .crossJoin(broadcast(tot))
-      .select(col("w1"), col("w2"),
-        round(-log(p) * 1e6, 0).cast("long").as("unats"))
-    val flagUnats = math.round(flagNats * 1e6)
-    tfb.join(model, Seq("w1", "w2"))
-      .groupBy("doc_id")
-      .agg(sum("tf").as("n_bigrams"),
-           sum(col("tf") * col("unats")).as("nll_unats"))
-      .select(col("doc_id"), col("n_bigrams"), col("nll_unats"),
-        when(col("nll_unats") > lit(flagUnats) * col("n_bigrams"), "high")
-          .otherwise("ok").as("ppl_flag"))
+    // pruned types keep only the redistributed term — one chain, CASE'd
+    knBigram(documents, flagNats,
+      Seq(sum(when(surv, 1L).otherwise(0L)).as("n1s"),
+        sum(when(surv, 0L).otherwise(col("c12"))).as("s1")), Nil)(
+      (when(surv, col("c12").cast("double") - lit(0.75)).otherwise(lit(0.0)) +
+        (lit(0.75) * col("n1s").cast("double") + col("s1").cast("double")) *
+          col("nprec").cast("double") / col("ntypes").cast("double")) /
+        col("c1").cast("double"))
   }
 
   /** CROSS-corpus Kneser-Ney scoring — the deployment shape the
@@ -1457,16 +1438,16 @@ object TextAnalysis {
     * words; the conditional therefore sums to < 1 by design — an open
     * vocabulary is not a closed one).
     *
-    * Engine-portability unchanged: one float chain per distinct SCORED
-    * bigram type, rounded once to micro-nats; per-doc NLLs exact integer
-    * sums; flag an integer cross-multiplication. The model tables are
-    * train-vocabulary-scale; the score side pays one (doc,w1,w2)
-    * exchange and three left joins against them. */
+    * The [[microNats]] discipline holds: one float chain per distinct
+    * SCORED bigram type. The model tables are train-vocabulary-scale.
+    * The score side counts its bigrams in-row (no (doc, w1, w2)
+    * exchange) and pays one partial-aggregated (w1, w2) exchange for
+    * its distinct scored types, which left-join the three model
+    * tables. */
   def perplexityKnCross(score: DataFrame, train: DataFrame,
                         flagNats: Double = 3.0): DataFrame = {
-    def bigramTf(documents: DataFrame): DataFrame = ngramTf(documents, 2)
-    val tfbS = bigramTf(score)
-    val cb = bigramTf(train).groupBy("w1", "w2").agg(sum("tf").as("c12"))
+    val tfbS = ngramTf(score, 2)
+    val cb = typeCounts(ngramTf(train, 2), 2)
     val ctx = cb.groupBy("w1")
       .agg(sum("c12").as("c1"), count(lit(1)).as("n1w1"))
     val pre = cb.groupBy("w2").agg(count(lit(1)).as("nprec"))
@@ -1490,16 +1471,9 @@ object TextAnalysis {
         lit(0.0)) + lit(0.75) * col("n1w1").cast("double") * pcont) /
         col("c1").cast("double"))
       .otherwise(pcont)
-    val model = st.select(col("w1"), col("w2"),
-      round(-log(p) * 1e6, 0).cast("long").as("unats"))
-    val flagUnats = math.round(flagNats * 1e6)
-    tfbS.join(model, Seq("w1", "w2"))
-      .groupBy("doc_id")
-      .agg(sum("tf").as("n_bigrams"),
-           sum(col("tf") * col("unats")).as("nll_unats"))
-      .select(col("doc_id"), col("n_bigrams"), col("nll_unats"),
-        when(col("nll_unats") > lit(flagUnats) * col("n_bigrams"), "high")
-          .otherwise("ok").as("ppl_flag"))
+    scoreUnats(tfbS,
+      st.select(col("w1"), col("w2"), microNats(-log(p)).as("unats")),
+      2, flagNats)
   }
 
   /** Interpolated Kneser-Ney TRIGRAM perplexity — the order-3 rung with
@@ -1518,9 +1492,9 @@ object TextAnalysis {
     * self-scoring keeps every count ≥ 1 so no back-off path degenerates
     * and the conditional sums to exactly 1 at both levels (spec-pinned).
     *
-    * Engine-portability: the ENTIRE two-level float chain per distinct
-    * trigram type — P₂ feeding P₃ unrounded — rounds ONCE to
-    * micro-nats; per-doc NLLs exact integer sums; integer flag. Plan:
+    * The [[microNats]] discipline: the ENTIRE two-level float chain
+    * per distinct trigram type — P₂ feeding P₃ unrounded — rounds ONCE.
+    * Plan:
     * the corpus tokenizes once into per-doc trigram frequencies, every
     * model table (trigram counts, order-2 contexts, mid-level
     * continuation tables, bigram-type continuation counts) aggregates
@@ -1528,7 +1502,7 @@ object TextAnalysis {
     * under 3 tokens drop, as in any n-gram scorer. */
   def perplexityKn3(documents: DataFrame, flagNats: Double = 3.0): DataFrame = {
     val tfb3 = ngramTf(documents, 3)
-    val cb3 = tfb3.groupBy("w1", "w2", "w3").agg(sum("tf").as("c123"))
+    val cb3 = typeCounts(tfb3, 3)
     val ctx3 = cb3.groupBy("w1", "w2")
       .agg(sum("c123").as("c12"), count(lit(1)).as("n3"))
     // mid level: continuation counts over TRIGRAM types
@@ -1548,16 +1522,8 @@ object TextAnalysis {
       .join(mid, Seq("w2"))
       .join(pre2.withColumnRenamed("w2", "w3"), Seq("w3"))
       .crossJoin(broadcast(tot2))
-      .select(col("w1"), col("w2"), col("w3"),
-        round(-log(p3) * 1e6, 0).cast("long").as("unats"))
-    val flagUnats = math.round(flagNats * 1e6)
-    tfb3.join(model, Seq("w1", "w2", "w3"))
-      .groupBy("doc_id")
-      .agg(sum("tf").as("n_trigrams"),
-           sum(col("tf") * col("unats")).as("nll_unats"))
-      .select(col("doc_id"), col("n_trigrams"), col("nll_unats"),
-        when(col("nll_unats") > lit(flagUnats) * col("n_trigrams"), "high")
-          .otherwise("ok").as("ppl_flag"))
+      .select(col("w1"), col("w2"), col("w3"), microNats(-log(p3)).as("unats"))
+    scoreUnats(tfb3, model, 3, flagNats)
   }
 
   /** Document fingerprinting: full md5 digest, 8-hex prefix bucket, and a

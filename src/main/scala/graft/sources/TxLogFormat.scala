@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.graftbridge.Bridge
 import java.nio.file.{FileAlreadyExistsException, Files, Path => JPath, Paths}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
@@ -803,18 +804,26 @@ object TxLogFormat extends TableFormat {
   /** Delta-style additive schema evolution: existing columns keep their
     * position and type (a type change is refused loudly — silent
     * cross-type reads corrupt), columns new in `next` append at the end.
-    * Old data files simply lack the new columns; [[readAt]]'s explicit
-    * committed schema null-fills them, so no rewrite ever happens. */
+    * A type that differs only in nullability (an array's containsNull, a
+    * map's valueContainsNull, a nested field's nullable) is the same
+    * type: the committed schema keeps the more nullable of the two, so
+    * every committed file reads under it. Old data files simply lack the
+    * new columns; [[readAt]]'s explicit committed schema null-fills
+    * them, so no rewrite ever happens. */
   private def mergeSchemas(prevJson: Option[String], next: StructType): StructType =
     prevJson.map(DataType.fromJson(_).asInstanceOf[StructType]) match {
       case None => next
       case Some(prev) =>
-        for (f <- next.fields; p <- prev.fields.find(_.name == f.name))
-          require(p.dataType == f.dataType,
-            s"txlog: column ${f.name} would change type " +
-              s"${p.dataType.simpleString} -> ${f.dataType.simpleString}; " +
-              "rewrite the table with write/replace to change a type")
-        StructType(prev.fields ++
+        val kept = prev.fields.map { p =>
+          next.fields.find(_.name == p.name).fold(p) { f =>
+            require(Bridge.equalsIgnoreNullability(p.dataType, f.dataType),
+              s"txlog: column ${f.name} would change type " +
+                s"${p.dataType.simpleString} -> ${f.dataType.simpleString}; " +
+                "rewrite the table with write/replace to change a type")
+            p.copy(dataType = Bridge.moreNullable(p.dataType, f.dataType))
+          }
+        }
+        StructType(kept ++
           next.fields.filterNot(f => prev.fieldNames.contains(f.name)))
     }
 

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Column ⇄ Expression bridge. `ExpressionUtils` is `private[sql]`, so this
   * one-liner lives under `org.apache.spark.sql` — the standard pattern for
@@ -10,6 +11,16 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `DataType.equalsIgnoreNullability` is `private[sql]`: the same type
+    * up to array containsNull, map valueContainsNull and nested field
+    * nullable flags. */
+  def equalsIgnoreNullability(a: DataType, b: DataType): Boolean =
+    DataType.equalsIgnoreNullability(a, b)
+
+  /** Of two types equal up to nullability, the more nullable form — every
+    * nullability flag OR'd (`StructType.merge`, `private[sql]`). */
+  def moreNullable(a: DataType, b: DataType): DataType = StructType.merge(a, b)
 
   /** Wrap a logical plan into a DataFrame (classic Dataset.ofRows). */
   def ofRows(spark: org.apache.spark.sql.SparkSession,

@@ -227,6 +227,15 @@ class ClusterSpec extends SparkSpec {
     assert(got(3L)._3 == "repetitive" && got(3L)._2 == 0.9)
   }
 
+  test("repetition score: a NULL-text doc has no words and no row " +
+       "(the oracle's unnest of NULL drops it too)") {
+    val docs = Seq[(Long, String)]((1L, "spam spam eggs"), (2L, null),
+      (3L, "")).toDF("doc_id", "text")
+    val got = graft.operators.TextAnalysis.repetitionScore(docs).collect()
+    assert(got.map(_.getLong(0)).toSeq == Seq(1L, 3L),
+      s"NULL-text doc surfaced: ${got.toSeq}")
+  }
+
   test("source mix: shares sum to ~1, tokens match per-source totals") {
     val docs = Tables.documents(spark, sf)
     val out = graft.operators.Curation.sourceMix(docs).collect()

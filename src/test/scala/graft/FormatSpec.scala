@@ -412,6 +412,39 @@ class FormatSpec extends SparkSpec {
       Seq("o_orderkey", "o_totalprice"))
   }
 
+  test("schema evolution: a type that differs only in nullability is the " +
+       "same type; the committed schema keeps the more nullable form") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def batch(ids: Seq[Long], containsNull: Boolean) = spark.createDataFrame(
+      spark.sparkContext.parallelize(ids.map(i => Row(i, Seq(i.toFloat, 0.5f)))),
+      StructType(Seq(StructField("id", LongType),
+        StructField("vec", ArrayType(FloatType, containsNull)))))
+    def vecs(path: String) = TxLogFormat.read(spark, path).orderBy("id")
+      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toSeq
+    val nullableVec = ArrayType(FloatType, containsNull = true)
+    // committed containsNull = true, appended containsNull = false
+    val t = tmp()
+    TxLogFormat.write(batch(Seq(1L, 2L), containsNull = true), t)
+    assert(TxLogFormat.appendBatch(batch(Seq(3L), containsNull = false),
+      t, "app", 1L))
+    assert(TxLogFormat.read(spark, t).schema("vec").dataType == nullableVec)
+    assert(vecs(t) == Seq(1L -> Seq(1f, 0.5f), 2L -> Seq(2f, 0.5f),
+      3L -> Seq(3f, 0.5f)))
+    // the other way round widens the committed schema
+    val t2 = tmp()
+    TxLogFormat.write(batch(Seq(1L), containsNull = false), t2)
+    assert(TxLogFormat.appendBatch(batch(Seq(2L), containsNull = true),
+      t2, "app", 1L))
+    assert(TxLogFormat.read(spark, t2).schema("vec").dataType == nullableVec)
+    assert(vecs(t2) == Seq(1L -> Seq(1f, 0.5f), 2L -> Seq(2f, 0.5f)))
+    // a real element-type change is still refused
+    val e = intercept[IllegalArgumentException](TxLogFormat.appendBatch(
+      batch(Seq(4L), containsNull = false)
+        .withColumn("vec", col("vec").cast("array<double>")), t, "app", 2L))
+    assert(e.getMessage.contains("array<float> -> array<double>"))
+  }
+
   test("compactClustered: files cover disjoint cluster-key ranges, " +
        "rows untouched") {
     val orders = Tables.orders(spark, sf)

@@ -553,6 +553,34 @@ class PlanSpec extends SparkSpec {
       s"corpus-sized output globally sorts:\n$plan")
   }
 
+  test("the n-gram models without a pin of their own keep their shape: " +
+       "partial aggregation, no cartesian, the exchange reused where the " +
+       "model aggregates from the scoring side, no global sort but the " +
+       "presentation one") {
+    val docs = Tables.documents(spark, sf)
+    // (model, frame, reuses an exchange, ends in a presentation sort)
+    Seq(
+      ("perplexityKnMod", TextAnalysis.perplexityKnMod(docs), true, false),
+      ("perplexityKn3", TextAnalysis.perplexityKn3(docs), true, false),
+      ("perplexityKnCross", TextAnalysis.perplexityKnCross(
+        docs.filter(col("doc_id") % 2 === 1),
+        docs.filter(col("doc_id") % 2 === 0)), true, false),
+      ("langIdModelWide", TextAnalysis.langIdModelWide(docs), false, true),
+    ).foreach { case (name, df, reuses, sorted) =>
+      df.collect() // ReusedExchange appears in the final adaptive plan
+      val plan = df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==")(0)
+      assert(plan.contains("partial_sum") || plan.contains("partial_count"),
+        s"$name: no map-side combine:\n$plan")
+      assert(!plan.contains("CartesianProduct"), s"$name: cartesian:\n$plan")
+      if (reuses) assert(plan.contains("ReusedExchange"),
+        s"$name: the model re-tokenizes the corpus:\n$plan")
+      val ranges = "Exchange rangepartitioning".r.findAllIn(plan).size
+      assert(ranges == (if (sorted) 1 else 0),
+        s"$name: $ranges range exchanges:\n$plan")
+    }
+  }
+
   test("hashed segment dedup: first occurrence reduces map-side over " +
        "8-byte hashes; no global sort") {
     val df = Dedup.segmentDedupHashed(Tables.documents(spark, sf))
