@@ -345,7 +345,16 @@ object SparkEntry {
           ivf = grown.ivf.copy(assigned = grown.ivf.assigned.localCheckpoint()))
       }).asInstanceOf[Similarity.PqIndex]
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2.
+    *
+    * Row order: an operator sorts only when order is its result — a
+    * sort that feeds `limit`, `first` or a limited prefix (top-k, the
+    * vocabulary cuts), a query whose reference SQL orders (TPC-H q1,
+    * q3, q5), a window's order. Every other output is a row multiset:
+    * the correctness gate sorts rows itself and a parquet read-back
+    * keeps no order, while a global sort costs two jobs (the range-bound
+    * sample, which re-executes the plan, and the range exchange). A
+    * caller that reads rows by position sorts first. */
   def queries: Map[String, Q] = Map[String, Q](
     // A. dbt-surface transformations
     "stg_orders"        -> ((s, d) => Relational.stgOrders(Tables.orders(s, d))),
@@ -374,7 +383,6 @@ object SparkEntry {
             col("order_key").as("id"), col("total_price").as("value"),
             when(col("total_price") > 200000, "high").otherwise("regular").as("bucket")))))
       dag.run(s, Map("orders" -> Tables.orders(s, d)), dir)("fct_bucket")
-        .orderBy("id")
     }),
     // PR data diff: prod built at threshold 100k, dev PR moves it to 200k
     // (checksum-visible) — state selection picks both models, the report
@@ -474,11 +482,10 @@ object SparkEntry {
         .filter(col("o_orderdate") >= lit("1998-01-01") && col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") + 1)
       Incremental.microbatch(base, delta, "o_orderdate", "month")
-        .orderBy("o_orderkey")
     }),
     "unpivot_orders"    -> ((s, d) => DbtUtils.unpivot(Tables.orders(s, d),
         Seq("o_orderkey"), Seq("o_custkey", "o_orderstatus", "o_orderpriority"))
-      .orderBy("o_orderkey", "field_name")),
+      ),
     "union_relations"   -> ((s, d) => {
       import org.apache.spark.sql.functions._
       val o = Tables.orders(s, d)
@@ -488,7 +495,6 @@ object SparkEntry {
       val dev = o.filter(col("o_orderkey") % 10 === 0)
         .select(col("o_orderkey"), col("o_orderpriority"), lit(1L).as("build_id"))
       DbtUtils.unionRelations(Seq("prod" -> prod, "dev" -> dev))
-        .orderBy("_dbt_source_relation", "o_orderkey")
     }),
     // salted star join: revenue per market segment with the orders side
     // salted 8 ways — row set identical to the plain join (spec + oracle),
@@ -504,7 +510,6 @@ object SparkEntry {
           bigSaltSource = col("o_orderkey"))
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_orders"), centsSum(col("o_totalprice")).as("revenue"))
-        .orderBy("c_mktsegment")
     }),
     "bloom_join"        -> ((s, d) => {
       import org.apache.spark.sql.functions._
@@ -513,7 +518,6 @@ object SparkEntry {
         "o_custkey",
         Tables.customer(s, d).filter(col("c_acctbal") > 5000), "c_custkey",
         numBits = 1 << 17)
-        .orderBy("o_orderkey")
     }),
     "schema_evolution"  -> ((s, d) => Incremental.schemaEvolution(Tables.orders(s, d))),
     "schema_sync"       -> ((s, d) => Incremental.schemaSync(Tables.orders(s, d))),
@@ -563,7 +567,6 @@ object SparkEntry {
       import org.apache.spark.sql.functions._
       Similarity.embeddingQuantize(Tables.embeddings(s, d))
         .withColumn("q", concat_ws(",", transform(col("q"), _.cast("string"))))
-        .orderBy("vec_id")
     }),
     // B. analytic core
     "q1_agg"          -> ((s, d) => Analytics.pricingSummary(Tables.lineitem(s, d))),
@@ -867,7 +870,6 @@ object SparkEntry {
       Similarity.embeddingPca(Tables.embeddings(s, d))
         .withColumn("pc",
           concat_ws(",", transform(col("pc"), x => format_string("%.4f", x))))
-        .orderBy("vec_id")
     }),
     "dedup_semantic_lsh" -> ((s, d) => Similarity.semanticDedupApprox(
                             Tables.embeddings(s, d),
@@ -984,7 +986,6 @@ object SparkEntry {
       val rig = bpeRig(s, d)
       Curation.packedTokenSequences(rig,
         TextAnalysis.trainBpeMerges(rig, nMerges = 2), contextTokens = 64)
-        .orderBy(col("lang"), col("seq_id"))
     }),
     // the GROWING-corpus tokenize-pack loop, cold single batch (r16 —
     // tokenize_pack's incremental twin: the tokenizer is FROZEN —
@@ -1114,7 +1115,6 @@ object SparkEntry {
           col("url"), col("body").cast("string").as("html"))
       Curation.urlDedup(TextAnalysis.htmlToText(pages))
         .select("doc_id", "url_canonical", "keep", "text")
-        .orderBy("doc_id")
         .localCheckpoint()
     }),
     // HTML text extraction (r14 — between the crawl archive and every
@@ -1133,7 +1133,6 @@ object SparkEntry {
       TextAnalysis.htmlToText(
           docs.select(col("doc_id"), html.as("html")))
         .select(col("doc_id"), col("text"))
-        .orderBy("doc_id")
     }),
     // the FULL CRAWL-CURATION pipeline (r15 capstone; r17: the lang
     // stage is the TRAINED weak-supervised model and refetched pages
@@ -1154,7 +1153,7 @@ object SparkEntry {
     // the heuristic would call 'und'.
     "crawl_curation" -> ((s, d) =>
       Curation.crawlCurate(crawlRecsRig(s, d),
-        blockedDomains = crawlRigBlocklist).orderBy("doc_id")),
+        blockedDomains = crawlRigBlocklist)),
     // the SAME funnel as a STREAMING ingest loop (r17 — C23): the
     // identical rig's records drive crawlCurateIngestBatch cold, and a
     // cold single batch with empty indexes IS the batch funnel (same
@@ -1202,7 +1201,6 @@ object SparkEntry {
       TextAnalysis.htmlToMainText(
           docs.select(col("doc_id"), html.as("html")))
         .select(col("doc_id"), col("text"))
-        .orderBy("doc_id")
     }),
     // DOM-grade boilerplate removal (r16 — htmlMainText's stated
     // limitation closed): the SAME planted chrome page as
@@ -1229,7 +1227,6 @@ object SparkEntry {
       TextAnalysis.domToMainText(
           docs.select(col("doc_id"), html.as("html")))
         .select(col("doc_id"), col("text"))
-        .orderBy("doc_id")
     }),
     // URL host + registered domain + blocklist gate (r16 — the domain
     // unit every crawl quota/blocklist groups on, from RAW urls):
@@ -1251,7 +1248,6 @@ object SparkEntry {
       Curation.urlDomains(
           docs.select(col("doc_id"), url.as("url")),
           blocklist = Seq("example.com", "192.168.1.9"))
-        .orderBy("doc_id")
     }),
     // LOADED Public Suffix List (r17, VERDICT #2 — the mechanism the
     // 24-entry subset honestly documented as missing): a PSL-format
@@ -1268,7 +1264,6 @@ object SparkEntry {
       Curation.urlDomains(
           docs.select(col("doc_id"), pslRigUrl.as("url")),
           "url", blocklist = Seq("example.co.uk"), rules = pslRigRules(s))
-        .orderBy("doc_id")
     }),
     // per-domain quota under the LOADED eTLD+1 (r17 — D50's cap keyed
     // on what a real crawl funnel groups by): the PSL-derived
@@ -1314,7 +1309,6 @@ object SparkEntry {
             lit("?id=2&ref=home")))
       Curation.urlDedup(docs.select(col("doc_id"), url.as("url")))
         .select("doc_id", "url", "url_canonical", "keep")
-        .orderBy("doc_id")
     }),
     // revisit-record dedup (r16 — fetch-time dedup info CONSUMED, not
     // just surfaced: CommonCrawl writes a refetched-unchanged page as a
@@ -1362,7 +1356,6 @@ object SparkEntry {
         .unionByName(recs.filter(col("warc_type") === "response")
           .select(col("doc_id"), col("warc_type"),
             lit("kept").as("fate"), lit(null).cast("long").as("dup_of")))
-        .orderBy("doc_id")
     }),
     // WARC crawl ingestion (r14, E9): per doc, a crawl-shaped
     // warcinfo+request+response WARC with per-record gzip members (the
@@ -1383,7 +1376,6 @@ object SparkEntry {
         .select(col("doc_id"), col("rec_idx"), col("warc_type"), col("url"),
           col("warc_date"), col("http_status"), col("mime"),
           col("body").cast("string").as("body_text"))
-        .orderBy("doc_id", "rec_idx")
     }),
     // FILE-scale WARC ingestion (r15, VERDICT #1 — the difference
     // between "parses WARC" and "ingests a crawl"): the %2-slice docs
@@ -1410,7 +1402,6 @@ object SparkEntry {
           col("rec_idx"), col("rec_id"), col("warc_type"), col("url"),
           col("warc_date"), col("http_status"), col("mime"),
           col("body").cast("string").as("body_text"))
-        .orderBy("doc_id", "rec_idx")
         .localCheckpoint() // materialize so the rig files can go away
     }),
     // Unicode NFC normalization (r15 — fix_mojibake's companion: the
@@ -1427,7 +1418,6 @@ object SparkEntry {
           graft.functions.TextFunctions.nfc(
             concat(col("text"), lit(" cafe\u0301 A\u030A n\u0303 \uFB01n")))
             .as("text"))
-        .orderBy("doc_id")
     }),
     // mojibake repair (r15 — the ftfy fix_encoding core, the C4/Dolma
     // fix_text step): UTF-8 text decoded as cp1252 somewhere upstream
@@ -1444,7 +1434,6 @@ object SparkEntry {
           graft.functions.TextFunctions.fixMojibake(
             concat(col("text"), lit(" CafÃ© â€” naÃ¯ve â€™s")))
             .as("text"))
-        .orderBy("doc_id")
     }),
     // HTTP body decoding (r15 — the wire shapes real CommonCrawl
     // responses carry): every page's response body is chunk-framed,
@@ -1471,7 +1460,6 @@ object SparkEntry {
         .select(col("doc_id"), col("http_status"), col("mime"),
           col("body").cast("string").as("body_text"),
           col("body_decoded"))
-        .orderBy("doc_id")
     }),
     // the GROWING-crawl archive ingest loop, cold single batch (r15 —
     // warc_file_ingest's incremental twin, completing the E-family's
@@ -1504,7 +1492,7 @@ object SparkEntry {
     // shared span closed form; one groupBy on (lang, seq_id)
     "sequence_pack_mat" -> ((s, d) =>
       Curation.packedSequences(Tables.documents(s, d), contextTokens = 64)
-        .orderBy("lang", "seq_id")),
+        ),
     // the GROWING-corpus packing loop, cold single batch (r14): per-lang
     // running token totals are the only cross-batch state, so sequences
     // continue across batches; cold ≡ the batch op's closed form
@@ -1560,7 +1548,6 @@ object SparkEntry {
       Multimodal.extractFeatures(Tables.documents(s, d))
         .withColumn("feat",
           concat_ws(",", transform(col("feat"), x => format_string("%.6f", x))))
-        .orderBy("doc_id")
     }),
     // The oracle-adjudicated twin of the mapPartitions decode path: the
     // integer features (byte length, 4-byte header hex, stub dims) are
@@ -1571,7 +1558,7 @@ object SparkEntry {
       Multimodal.extractFeatures(Tables.documents(s, d))
         .select("doc_id", "modality", "source", "byte_len", "header_hex",
           "width", "height")
-        .orderBy("doc_id")),
+        ),
     // REAL video pixel decode, oracle-adjudicated (r12 — the one
     // codec-free case): synthesize per-doc MJPEG AVIs with
     // doc_id-derived dims + a mid-bin solid gray (the StreamOps-feed
@@ -1594,7 +1581,6 @@ object SparkEntry {
         .select(col("doc_id"), col("header_w"), col("header_h"),
           col("frame_w"), col("frame_h"), col("dims_match"),
           col("dominant_bin"))
-        .orderBy("doc_id")
     }),
     // IMAGE near-dup dedup (r13 — the LAION/DataComp pHash stage): per-doc
     // synthetic PNGs whose dHash is a KNOWN doc_id-arithmetic pattern
@@ -1609,7 +1595,6 @@ object SparkEntry {
       val media = Multimodal.syntheticMedia(Tables.documents(s, d), 10, 0, "image")(
         Multimodal.patternPng)
       Dedup.imageNearDupPairs(Multimodal.imageHashes(media), maxHamming = 3)
-        .orderBy("doc_a", "doc_b")
     }),
     // the radius-0 exact-regime twin (the dedup_simhash_x convention):
     // identical-pixel pairs ⇔ equal hashes — one per group by mask design
@@ -1617,7 +1602,6 @@ object SparkEntry {
       val media = Multimodal.syntheticMedia(Tables.documents(s, d), 10, 0, "image")(
         Multimodal.patternPng)
       Dedup.imageNearDupPairs(Multimodal.imageHashes(media), maxHamming = 0)
-        .orderBy("doc_a", "doc_b")
     }),
     // AUDIO near-dup dedup (r13): the image trick on the %10=5 slice —
     // per-doc synthetic WAVs whose RMS-energy-contour fingerprint is the
@@ -1628,13 +1612,11 @@ object SparkEntry {
       val media = Multimodal.syntheticMedia(Tables.documents(s, d), 10, 5, "audio")(
         Multimodal.patternWav)
       Dedup.audioNearDupPairs(Multimodal.audioHashes(media), maxHamming = 3)
-        .orderBy("doc_a", "doc_b")
     }),
     "dedup_audio_x" -> ((s, d) => {
       val media = Multimodal.syntheticMedia(Tables.documents(s, d), 10, 5, "audio")(
         Multimodal.patternWav)
       Dedup.audioNearDupPairs(Multimodal.audioHashes(media), maxHamming = 0)
-        .orderBy("doc_a", "doc_b")
     }),
     // image near-dup pairs → the SoCC'14 CC loop → per-doc cluster table
     // (the composition dedup_clusters/containment_clusters prove over
@@ -1675,13 +1657,11 @@ object SparkEntry {
       val media = Multimodal.syntheticMedia(Tables.documents(s, d), 10, 2, "video")(
         Multimodal.patternAvi)
       Dedup.videoNearDupPairs(Multimodal.videoHashes(media), maxHamming = 3)
-        .orderBy("doc_a", "doc_b")
     }),
     "dedup_video_x" -> ((s, d) => {
       val media = Multimodal.syntheticMedia(Tables.documents(s, d), 10, 2, "video")(
         Multimodal.patternAvi)
       Dedup.videoNearDupPairs(Multimodal.videoHashes(media), maxHamming = 0)
-        .orderBy("doc_a", "doc_b")
     }),
     // SHIFT-robust audio near-dup (r14, VERDICT #5): 2-doc groups on the
     // %10=9 slice — the full clip (97 md5-derived windows) and its
@@ -1699,7 +1679,6 @@ object SparkEntry {
       }
       Dedup.audioNearDupPairsMulti(Multimodal.audioHashesStrided(media),
           maxHamming = 3)
-        .orderBy("doc_a", "doc_b")
     }),
     // CONSTELLATION audio dedup (r15, VERDICT stretch #7 — closes the
     // r14 stated limitation): the groupmate clip is trimmed by HALF a
@@ -1719,7 +1698,6 @@ object SparkEntry {
       Dedup.audioNearDupPairsMulti(Multimodal.audioHashesPeaks(media),
           maxHamming = 3)
         .select("doc_a", "doc_b", "hamming")
-        .orderBy("doc_a", "doc_b")
     }),
     // SPECTRAL constellation audio dedup (r16 — closes the r15 stated
     // residual: the time-domain peaks recover only hop-multiple trims):
@@ -1740,7 +1718,6 @@ object SparkEntry {
       Dedup.audioNearDupPairsMulti(Multimodal.audioHashesSpectral(media),
           maxHamming = 0)
         .select("doc_a", "doc_b", "hamming")
-        .orderBy("doc_a", "doc_b")
     }),
     // MULTI-frame video near-dup (r14, VERDICT #1 — the production
     // shape): 3-frame synthetic MJPEG AVIs whose per-frame dHashes are
@@ -1756,7 +1733,6 @@ object SparkEntry {
           Multimodal.syntheticVideoFramePatterns(id)))
       Dedup.videoNearDupPairsMulti(Multimodal.videoHashesStrided(media, 3),
           maxHamming = 3)
-        .orderBy("doc_a", "doc_b")
     }),
     // the radius-0 exact twin: only the re-cut pair survives (its two
     // frame matches are bit-identical), proving the cross-slot pairing
@@ -1767,7 +1743,6 @@ object SparkEntry {
           Multimodal.syntheticVideoFramePatterns(id)))
       Dedup.videoNearDupPairsMulti(Multimodal.videoHashesStrided(media, 3),
           maxHamming = 0)
-        .orderBy("doc_a", "doc_b")
     }),
     // Structured Streaming twins (driven with Trigger.AvailableNow)
     "stream_tumbling"   -> ((s, d) => graft.streaming.StreamOps.runTumbling(s, d)),

@@ -49,6 +49,5 @@ object TypedAggs {
       .select(col("o_orderstatus"),
         col("stats._1").as("n_orders"),
         col("stats._2").as("total_spend"))
-      .orderBy("o_orderstatus")
   }
 }

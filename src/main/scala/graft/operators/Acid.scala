@@ -35,7 +35,7 @@ object Acid {
           lit("U").as("o_orderstatus"),
           (col("o_totalprice") + 1).as("o_totalprice")))
       .run(spark, Map("orders" -> orders), dir)
-    out("m").orderBy("o_orderkey")
+    out("m")
   }
 
   /** `MERGE INTO` through the txlog ([[TxLogFormat.merge]]): one atomic
@@ -55,7 +55,7 @@ object Acid {
         lit("N").as("o_orderstatus"), col("o_totalprice"))
     TxLogFormat.merge(spark, t, "o_orderkey", updates.unionAll(inserts),
       Some("o_orderstatus"))
-    TxLogFormat.read(spark, t).orderBy("o_orderkey")
+    TxLogFormat.read(spark, t)
   }
 
   /** [[graft.operators.Materialize.gdprDelete]] through the txlog:
@@ -73,7 +73,6 @@ object Acid {
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
         graft.util.Det.centsSum(col("o_totalprice")).as("revenue"))
-      .orderBy("o_orderpriority")
   }
 
   /** Data skipping + clustered compaction end-to-end: fragment the table
@@ -101,7 +100,6 @@ object Acid {
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_orders"),
         graft.util.Det.centsSum(col("o_totalprice")).as("revenue"))
-      .orderBy("o_orderstatus")
   }
 
   /** Bloom file-skipping on STRING equality (min/max stats cannot serve
@@ -121,7 +119,6 @@ object Acid {
     TxLogFormat.appendBatch(base.filter(col("o_orderkey") % 3 === 2)
       .repartition(2), t, "bloomq", 2L)
     TxLogFormat.scan(spark, t, col("o_orderpriority") === "1-URGENT")
-      .orderBy("o_orderkey")
   }
 
   /** Change-data-feed shape: seed (v0), append a delta (v1), compact
@@ -137,7 +134,7 @@ object Acid {
     TxLogFormat.appendBatch(base.filter(col("o_orderkey") % 5 === 0), t,
       "cdc", 1L, Some("o_orderstatus"))
     TxLogFormat.compact(spark, t, "o_orderstatus")
-    TxLogFormat.readChanges(spark, t, 0L).orderBy("o_orderkey")
+    TxLogFormat.readChanges(spark, t, 0L)
   }
 
   /** Merge-on-read DELETE through deletion vectors
@@ -165,7 +162,6 @@ object Acid {
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
         graft.util.Det.centsSum(col("o_totalprice")).as("revenue"))
-      .orderBy("o_orderpriority")
   }
 
   /** Snapshot isolation dividend: overwrite the table, then read version
@@ -177,6 +173,6 @@ object Acid {
     TxLogFormat.write(base, t)
     TxLogFormat.replace(spark,
       TxLogFormat.read(spark, t).filter(col("o_orderkey") % 2 === 0), t)
-    TxLogFormat.readVersion(spark, t, 0).orderBy("o_orderkey")
+    TxLogFormat.readVersion(spark, t, 0)
   }
 }

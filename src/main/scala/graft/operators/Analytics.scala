@@ -86,7 +86,7 @@ object Analytics {
       centsSumOver(col("o_totalprice"), w).as("running_spend"),
       row_number().over(Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")).as("order_seq"),
-    ).orderBy("o_custkey", "o_orderkey")
+    )
   }
 
   /** Multi-aggregate stats per group: exact counts/min/max/avg; stddev is
@@ -101,7 +101,6 @@ object Analytics {
         centsAvg(col("o_totalprice")).as("avg_price"),
         round2(stddev_samp(col("o_totalprice"))).as("stddev_price"),
       )
-      .orderBy("o_orderpriority")
 
   /** Semi/anti join expressed as existence flag: customers with/without
     * orders. The distinct-keys side is aggregated before the join (map-side
@@ -112,17 +111,13 @@ object Analytics {
       .join(buyers, col("c_custkey") === col("o_custkey"), "left")
       .select(col("c_custkey"), col("c_name"),
               col("o_custkey").isNotNull.as("has_orders"))
-      .orderBy("c_custkey")
   }
 
-  /** Shared grouping-set measure block: count + exact cent sum, null
-    * grouping rows pinned NULLS FIRST for cross-engine order. */
+  /** Shared grouping-set measure block: count + exact cent sum. */
   private def groupingSetAgg(grouped: org.apache.spark.sql.RelationalGroupedDataset): DataFrame =
     grouped
       .agg(count(lit(1)).as("n_orders"),
            centsSum(col("o_totalprice")).as("total_price"))
-      .orderBy(col("o_orderstatus").asc_nulls_first,
-               col("o_orderpriority").asc_nulls_first)
 
   /** GROUP BY ROLLUP hierarchy totals. */
   def rollupAgg(orders: DataFrame): DataFrame =
@@ -165,7 +160,6 @@ object Analytics {
     flags.filter(col("b96"))
       .select(when(col("b97"), "both_years").otherwise("only_1996").as("set_op"),
               col("o_custkey"))
-      .orderBy("set_op", "o_custkey")
   }
 
   /** Long→wide pivot on event_type with exact cent sums per cell. */
@@ -178,7 +172,7 @@ object Analytics {
     // in the pivoted columns, not inside the pre-pivot aggregate
     types.foldLeft(agged) { (df, t) =>
       df.withColumn(s"${t}_value", coalesce(col(t), lit(0L)) / 100.0).drop(t)
-    }.orderBy("user_id")
+    }
   }
 
   /** Exact interpolated quantiles per group (percentile = sort + linear
@@ -192,14 +186,12 @@ object Analytics {
         round2(expr("percentile(o_totalprice, 0.9)")).as("p90"),
         round2(expr("percentile(o_totalprice, 0.99)")).as("p99"),
       )
-      .orderBy("o_orderpriority")
 
   /** HLL++ sketch count-distinct — constant memory per group at any scale,
     * spec-bounded within 5% of exact. */
   def approxDistinct(orders: DataFrame): DataFrame =
     orders.groupBy(col("o_orderpriority"))
       .agg(approx_count_distinct(col("o_custkey"), rsd = 0.02).as("approx_customers"))
-      .orderBy("o_orderpriority")
 
   /** Theta-sketch count-distinct per group at an EXACT configuration
     * (k above every group's cardinality ⇒ θ = 1 ⇒ the sketch IS the
@@ -212,7 +204,6 @@ object Analytics {
     orders.groupBy(col("o_orderpriority"))
       .agg(ThetaAgg.estimate(ThetaAgg.sketch(col("o_custkey"), k), k)
         .cast("long").as("approx_customers"))
-      .orderBy("o_orderpriority")
   }
 
   /** Sketch quantiles (Greenwald-Khanna): mergeable constant-ish memory per
@@ -224,7 +215,6 @@ object Analytics {
           .as("p50_approx"),
         percentile_approx(col("o_totalprice"), lit(0.9), lit(accuracy))
           .as("p90_approx"))
-      .orderBy("o_orderpriority")
   // accuracy=1e7 pins the GK rank error under one rank at the driver's
   // group sizes (eps·n = n/1e7 < 1), so the sketch answers the EXACT
   // lower-rank order statistic — DuckDB's quantile_disc — and the approx
@@ -252,7 +242,6 @@ object Analytics {
         round(element_at(col("qs"), 1), 2).as("p50_est"),
         round(element_at(col("qs"), 2), 2).as("p90_est"),
         round(element_at(col("qs"), 3), 2).as("p99_est"))
-      .orderBy("o_orderpriority")
 
   /** Exact-regime twin of [[tdigestQuantiles]] with compression derived
     * from the DATA, not hard-coded: the all-singleton-centroid regime
@@ -281,7 +270,7 @@ object Analytics {
       dayofmonth(d).as("d"),
       (dayofweek(d) - 1).as("dow"),
       weekofyear(d).as("week"),
-    ).orderBy("o_orderkey")
+    )
   }
 
   /** Customer lifetime-value mart: per-customer order aggregates + a
@@ -304,14 +293,12 @@ object Analytics {
         col("first_order"), col("last_order"),
         datediff(col("last_order"), col("first_order")).as("tenure_days"),
         rank().over(w).cast("long").as("segment_spend_rank"))
-      .orderBy("c_custkey")
   }
 
   /** Exact dedup via DISTINCT (one shuffle, map-side partial distinct). */
   def distinctStatusPriority(orders: DataFrame): DataFrame =
     orders.select(col("o_orderstatus"), col("o_orderpriority"))
       .distinct()
-      .orderBy("o_orderstatus", "o_orderpriority")
 
   /** Cohort retention: customers grouped by first-order month, counted in
     * each subsequent month they re-order. The cohort month rides a window
@@ -330,7 +317,6 @@ object Analytics {
          (month(col("order_month")) - month(col("cohort_month")))).cast("long"))
       .groupBy("cohort_month", "month_offset")
       .agg(countDistinct(col("o_custkey")).as("n_customers"))
-      .orderBy("cohort_month", "month_offset")
   }
 
   /** Fixed-width value histogram. Bucketing happens on exact integer cents
@@ -347,7 +333,6 @@ object Analytics {
            centsSum(col("o_totalprice")).as("total_price"))
       .withColumn("bucket_lo", col("bucket") * (widthCents / 100.0))
       .select("bucket", "bucket_lo", "n_orders", "total_price")
-      .orderBy("bucket")
 
   /** Join-key skew report — the diagnostic that decides whether a join
     * needs `Skew.saltedJoin` or AQE skew handling: the k heaviest keys
@@ -377,7 +362,6 @@ object Analytics {
       .agg(count(lit(1)).as("n"),
            round4(corr(col("l_quantity"), col("l_extendedprice"))).as("corr_qty_price"),
            round2(covar_samp(col("l_quantity"), col("l_extendedprice"))).as("covar_qty_price"))
-      .orderBy("l_returnflag")
 
   /** Equal-frequency (quartile) bucketing WITHOUT a global sort. ntile(n)
     * needs one total ordering of the table — at 100 TB that
@@ -408,7 +392,6 @@ object Analytics {
       .agg(count(lit(1)).as("n_orders"),
            min(col("o_totalprice")).as("min_price"),
            max(col("o_totalprice")).as("max_price"))
-      .orderBy("bucket")
   }
 
   /** Trailing-window z-score anomaly flags on an operational metric
@@ -497,7 +480,6 @@ object Analytics {
     cells.groupBy("event_type")
       .agg(sum("n_events").as("n_events"),
         ThetaAgg.estimate(merged, k).cast("long").as("distinct_users"))
-      .orderBy("event_type")
   }
 
   /** Time-series gap fill — regularize a sparse daily series onto a dense
@@ -524,7 +506,6 @@ object Analytics {
         coalesce(col("n"), lit(0L)).as("n_orders"),
         last(col("mx"), ignoreNulls = true).over(w).as("last_max_price"),
         col("n").isNull.as("was_gap"))
-      .orderBy("o_orderpriority", "day")
   }
 
   def metricAnomaly(orders: DataFrame): DataFrame = {
@@ -547,7 +528,6 @@ object Analytics {
           .when(abs(col("z")) > lit(2.0), "anomaly")
           .otherwise("ok"))
       .select("o_orderpriority", "day", "n_orders", "avg30", "sd30", "z", "flag")
-      .orderBy("o_orderpriority", "day")
   }
 
   /** Gap-and-islands: consecutive-active-day streaks per user. Distinct
@@ -570,6 +550,5 @@ object Analytics {
       .agg(sum(col("len")).as("n_active_days"),
            count(lit(1)).as("n_streaks"),
            max(col("len")).as("longest_streak"))
-      .orderBy("user_id")
   }
 }

@@ -17,7 +17,6 @@ object Seeds {
       .schema("id BIGINT, name STRING")
       .option("header", "true")
       .csv(path)
-      .orderBy("id")
 }
 
 /** Semi-structured column handling: typed extraction from a JSON string
@@ -30,8 +29,6 @@ object Json {
         Seq(StructField("k", LongType)))))
       .select(col("event_id"), col("user_id"),
               col("j").getField("k").as("k"))
-    // no presentation sort: events is the largest input table; the JSON
-    // extraction is map-only and stays that way without the range exchange
 }
 
 /** SCD-2 snapshot, dbt `strategy='timestamp'` — reference:
@@ -63,7 +60,6 @@ object Snapshot {
       .withColumn("is_current", col("valid_to").isNull)
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderstatus"),
               col("valid_from"), col("valid_to"), col("is_current"))
-      .orderBy("o_custkey", "valid_from", "o_orderkey")
   }
 
   /** Generic dbt timestamp-strategy snapshot for ANY frame (the YAML
@@ -113,7 +109,7 @@ object Snapshot {
       col("o_orderdate").cast("date").as("valid_from"),
       lead(col("o_orderdate").cast("date"), 1).over(w).as("valid_to"),
       lead(col("o_orderkey"), 1).over(w).isNull.as("is_current"),
-    ).orderBy("o_custkey", "valid_from", "o_orderkey")
+    )
   }
 
   /** dbt `invalidate_hard_deletes`: when a tracked entity disappears from
@@ -134,7 +130,6 @@ object Snapshot {
       .withColumn("is_current",
         when(col("_live").isNull, lit(false)).otherwise(col("is_current")))
       .drop("_live")
-      .orderBy(key, "valid_from", "o_orderkey")
   }
 }
 
@@ -207,7 +202,6 @@ object Incremental {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      .orderBy("o_orderkey")
   }
 
   /** dbt's `merge_update_columns` config: a matched key UPDATES only the
@@ -257,7 +251,6 @@ object Incremental {
         lit("N").as("o_orderstatus"), col("o_totalprice"))
     mergeColumns(base, updates.unionAll(inserts), "o_orderkey",
         updateColumns = Seq("o_totalprice"))
-      .orderBy("o_orderkey")
   }
 
   /** CDC changelog apply — materialize a Debezium/Delta-CDF-style change
@@ -294,7 +287,6 @@ object Incremental {
       .select((col("o_orderkey") + 6000000L).as("o_orderkey"),
         lit("N").as("o_orderstatus"), col("o_totalprice")), 1L, "I")
     cdcApply(base, upd.unionByName(del).unionByName(ins), "o_orderkey")
-      .orderBy("o_orderkey")
   }
 
   /** `append_new_columns`: a new batch arrives with an extra column; old
@@ -305,7 +297,7 @@ object Incremental {
       .select(col("o_orderkey"), col("o_totalprice"))
     val delta = orders.filter(col("o_orderdate") >= cutoff)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-    base.unionByName(delta, allowMissingColumns = true).orderBy("o_orderkey")
+    base.unionByName(delta, allowMissingColumns = true)
   }
 
   /** dbt 1.9 `microbatch` incremental strategy: rows carry an `event_time`;
@@ -338,33 +330,34 @@ object Incremental {
     val delta = orders.filter(col("o_orderdate") >= cutoff)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_custkey"))
     val (b, d) = OnSchemaChange.align(base, delta, OnSchemaChange.SyncAllColumns)
-    b.unionByName(d).orderBy("o_orderkey")
+    b.unionByName(d)
   }
 }
 
 /** dbt data tests — reference: the models' yml (`unique`, `not_null`) plus the
   * other two dbt built-ins. Each test is a distributed aggregate returning a
-  * violation count; the suite unions the one-row summaries.
+  * violation count; the suite unions the summary rows. The three tests
+  * on `orders` alone share one scan: the row-local counts
+  * (`accepted_values`, `not_null`) ride as conditional counts on the
+  * per-key aggregate that `unique` needs.
   */
 object Checks {
   def testSuite(orders: DataFrame, customer: DataFrame): DataFrame = {
-    def row(name: String, violations: DataFrame): DataFrame =
-      violations.select(lit(name).as("test_name"), col("violations"))
-
-    val acceptedValues = row("accepted_values_o_orderstatus",
-      orders.filter(!col("o_orderstatus").isin("O", "F", "P"))
-        .agg(count(lit(1)).as("violations")))
-    val notNull = row("not_null_o_custkey",
-      orders.filter(col("o_custkey").isNull).agg(count(lit(1)).as("violations")))
-    val relationships = row("relationships_o_custkey",
+    val onOrders = orders.groupBy("o_orderkey")
+      .agg(count(lit(1)).as("n"),
+           count(when(!col("o_orderstatus").isin("O", "F", "P"), lit(1))).as("av"),
+           count(when(col("o_custkey").isNull, lit(1))).as("nn"))
+      .agg(coalesce(sum("av"), lit(0L)).as("av"),
+           coalesce(sum("nn"), lit(0L)).as("nn"),
+           count(when(col("n") > 1, lit(1))).as("uq"))
+      .select(expr("stack(3, 'accepted_values_o_orderstatus', av, " +
+        "'not_null_o_custkey', nn, 'unique_o_orderkey', uq) " +
+        "AS (test_name, violations)"))
+    val relationships =
       orders.join(customer, col("o_custkey") === col("c_custkey"), "left_anti")
-        .agg(count(lit(1)).as("violations")))
-    val unique = row("unique_o_orderkey",
-      orders.groupBy("o_orderkey").count().filter(col("count") > 1)
-        .agg(count(lit(1)).as("violations")))
-
-    acceptedValues.unionAll(notNull).unionAll(relationships).unionAll(unique)
-      .orderBy("test_name")
+        .agg(count(lit(1)).as("violations"))
+        .select(lit("relationships_o_custkey").as("test_name"), col("violations"))
+    onOrders.unionAll(relationships)
   }
 }
 
@@ -376,7 +369,6 @@ object StoreFailures {
     orders.filter(!col("o_orderpriority").isin(accepted: _*))
       .select(lit("accepted_values_o_orderpriority").as("test_name"),
               col("o_orderkey"), col("o_orderpriority"))
-      .orderBy("o_orderkey")
 }
 
 /** Column-level data profiling (the dbt-utils / warehouse-profiler
@@ -408,7 +400,6 @@ object Profile {
     row.select(col("__rows").as("n_rows"), melted)
       .select(col("m.column_name").as("column_name"), col("n_rows"),
               col("m.n_nulls").as("n_nulls"), col("m.n_distinct").as("n_distinct"))
-      .orderBy("column_name")
   }
 }
 
@@ -428,7 +419,6 @@ object Curation {
         documents.select(col("doc_id"), col("lang"), est.as("est_tokens")),
         Seq("lang"), "doc_id", "est_tokens", "cum_tokens")
       .filter(col("cum_tokens") <= budgetPerLang)
-      .orderBy("lang", "doc_id")
   }
 
   /** SPAN-level sequence packing (r14 — [[sequencePack]]'s refinement:
@@ -452,10 +442,8 @@ object Curation {
     * The per-lang token offsets ride [[graft.util.PrefixSum]]'s
     * two-phase exchange (never a whole-language serial window); every
     * span is then per-row integer arithmetic exploded over the
-    * ≤ n/seqLen+1 sequences a doc touches. No presentation sort
-    * (corpus-sized output, the sequencePack sort is its own
-    * presentation choice). Exactly SQL-expressible — the oracle states
-    * the window cumsum + span arithmetic verbatim. */
+    * ≤ n/seqLen+1 sequences a doc touches. Exactly SQL-expressible —
+    * the oracle states the window cumsum + span arithmetic verbatim. */
   def sequencePackSpans(documents: DataFrame,
                         contextTokens: Long = 2048): DataFrame = {
     require(contextTokens >= 1, s"contextTokens must be positive, got $contextTokens")
@@ -504,8 +492,7 @@ object Curation {
     * form is engine-portable and total-ordered. collect_list is
     * bounded by construction: a sequence holds at most contextTokens
     * spans (each span ≥ 1 token), so no group outgrows memory at any
-    * corpus size; the offsets already rode the distributed prefix sum.
-    * No presentation sort (corpus-token-scale output). */
+    * corpus size; the offsets already rode the distributed prefix sum. */
   def packedSequences(documents: DataFrame,
                       contextTokens: Long = 2048): DataFrame = {
     val spans = sequencePackSpans(documents, contextTokens)
@@ -1116,7 +1103,6 @@ object Curation {
             s"(CAST(n_seqs AS DECIMAL(38,0)) * ${contextTokens}L) AS BIGINT)")
           .as("util_ppm"),
         col("split_docs"))
-      .orderBy("lang")
   }
 
   /** Per-domain quota sampling (the CCNet/RefinedWeb cap that stops one
@@ -1135,7 +1121,6 @@ object Curation {
       .select(col("doc_id"), col("source"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= perDomain)
-      .orderBy("doc_id")
   }
 
   /** CCNet-style quality-bucketed deterministic sampling: structural
@@ -1150,8 +1135,7 @@ object Curation {
     * identically — no RNG state, no float thresholds, no overflow-prone
     * multiplicative hashing (BIGINT overflow silently wraps in one engine
     * and errors in the other; hex compare has no such seam). Scan-bound:
-    * bucket + gate are per-row expressions, no shuffle before the
-    * presentation sort. */
+    * bucket + gate are per-row expressions, no shuffle. */
   def qualitySample(documents: DataFrame): DataFrame = {
     val len = length(col("text"))
     val nWords = size(graft.util.TextNorm.words(col("text")))
@@ -1165,7 +1149,6 @@ object Curation {
         (col("bucket") === "middle" && col("g") < "80") ||
         (col("bucket") === "tail" && col("g") < "1a"))
       .select(col("doc_id"), col("lang"), col("bucket"))
-      .orderBy("doc_id")
   }
 
   /** Corpus composition by source (the CCNet-style mix report that drives
@@ -1182,7 +1165,6 @@ object Curation {
       .select(col("source"), col("docs"), col("est_tokens"),
         round4(col("est_tokens").cast("double") / col("total_tokens"))
           .as("token_share"))
-      .orderBy("source")
   }
 
   /** Per-document curation FUNNEL report — the "why did doc X drop"
@@ -1403,7 +1385,6 @@ object Curation {
         extra.map(col) ++ Seq(col("pass_quota"), col("pass_budget"),
         (col("pass_dedup") && col("pass_quality") && col("pass_quota") &&
           col("pass_budget")).as("kept")): _*)
-      .orderBy("doc_id")
   }
 
   /** The end-to-end curation flagship — every stage is an existing operator
@@ -1429,7 +1410,6 @@ object Curation {
     graft.util.PrefixSum.cumSum(
         survivors, Seq("lang"), "doc_id", "est_tokens", "cum_tokens")
       .filter(col("cum_tokens") <= budgetPerLang)
-      .orderBy("lang", "doc_id")
   }
 
   /** Context-window sequence packing — the pretraining batch-prep step:
@@ -1455,7 +1435,6 @@ object Curation {
         (col("cum_before") % contextTokens).as("bin_offset"),
         (expr(s"(cum_before + est_tokens - 1) div $contextTokens") >
           expr(s"cum_before div $contextTokens")).as("spans_boundary"))
-      .orderBy("lang", "doc_id")
   }
 
   /** Stratified sampling by language: deterministic Bernoulli per stratum
@@ -1476,7 +1455,6 @@ object Curation {
     }
     documents.filter(draw < threshold)
       .select(col("doc_id"), col("lang"))
-      .orderBy("doc_id")
   }
 
   /** Overlapping token-window chunking — the doc→chunk explosion that
@@ -1501,7 +1479,6 @@ object Curation {
       .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
         size(col("cw")).cast("long").as("n_tokens"),
         array_join(col("cw"), " ").as("chunk_text"))
-      .orderBy("doc_id", "chunk_idx")
   }
 
   /** Temperature-based source rebalancing — the multilingual/multi-source
@@ -1536,7 +1513,6 @@ object Curation {
       .filter(draw * 10000L < col("rate_bp") * 16777216L)
       .select(col("doc_id"), col("source"),
               (col("rate_bp") / 10000.0).as("keep_rate"))
-      .orderBy("doc_id")
   }
 
   /** Curation to an EXPLICIT target mixture — the "data recipe" stage a
@@ -1578,7 +1554,6 @@ object Curation {
       .filter(draw * 10000L < col("rate_bp") * 16777216L)
       .select(col("doc_id"), col("source"),
               (col("rate_bp") / 10000.0).as("keep_rate"))
-      .orderBy("doc_id")
   }
 
   /** DSIR-style importance SELECTION (Xie et al. 2023, arXiv:2302.03169
@@ -1695,7 +1670,6 @@ object Curation {
         when(draw < tTrain, "train")
           .when(draw < tVal, "val")
           .otherwise("test").as("split"))
-      .orderBy("doc_id")
   }
 
   /** LEAKAGE-SAFE split: near-duplicate documents must land in the SAME
@@ -1728,7 +1702,6 @@ object Curation {
       when(draw < tTrain, "train")
         .when(draw < tVal, "val")
         .otherwise("test").as("split"))
-    // no presentation sort — corpus-sized output; the gate lexsorts rows
   }
 
   /** Deterministic EXACT-k uniform sample per stratum: each doc draws
@@ -1742,7 +1715,6 @@ object Curation {
     val keyed = documents.select(col("lang"), col("doc_id"),
       md5(col("doc_id").cast("string")).as("draw"))
     graft.plans.TopKPerGroup(keyed, Seq("lang"), Seq("draw" -> true, "doc_id" -> true), k)
-      .orderBy("lang", "draw")
   }
 }
 
@@ -1771,7 +1743,7 @@ object Diff {
       .unionAll(prod.agg(count(lit(1)).as("id"))
         .select(lit("summary_prod_rows").as("diff_type"), col("id"),
                 lit(null).cast("string").as("bucket")))
-    diff.unionAll(summary).orderBy("diff_type", "id")
+    diff.unionAll(summary)
   }
 
   /** Schema diff — reference scripts/pr_schema_diff.sh:1-30: columns
@@ -1786,7 +1758,6 @@ object Diff {
     import spark.implicits._
     columnDiff(dev.schema, prod.schema)
       .toDF("change", "column_name", "dev_type", "prod_type")
-      .orderBy("change", "column_name")
   }
 
   /** Column-level diff rows (change, column, dev_type, prod_type) — the
@@ -1924,7 +1895,6 @@ object Diff {
     }
     rows.toDF("model", "status", "moved", "type_change", "cols_added",
       "cols_removed", "cols_changed", "layout_changes", "layout_detail")
-      .orderBy("model")
   }
 
   /** Orphaned prod relations: directories under the prod warehouse root
@@ -1972,7 +1942,6 @@ object Freshness {
         // source run up to 59m59s past the threshold unnoticed
         when(ageSeconds > errorH * 3600, "error")
           .when(ageSeconds > warnH * 3600, "warn").otherwise("ok").as("status"))
-      .orderBy("event_type")
   }
 
   /** dbt 1.7 METADATA-based source freshness: no `loaded_at_field`, no
@@ -2010,6 +1979,5 @@ object AsOf {
       .select(col("event_id"), col("user_id"), col("ts_s").as("purchase_ts"),
               col("last_signup_ts"),
               (col("ts_s") - col("last_signup_ts")).as("seconds_since_signup"))
-      .orderBy("event_id")
   }
 }

@@ -23,7 +23,6 @@ object DbtUtils {
     orders.select(col("o_orderkey"),
         surrogateKey(Seq(col("o_custkey"), col("o_orderstatus"),
           col("o_orderpriority"))).as("surrogate_key"))
-      .orderBy("o_orderkey")
 
   /** `dbt_utils.date_spine` at day grain over [start, endExclusive).
     * Distributed via `spark.range` (not a driver-side collection), so a
@@ -36,7 +35,6 @@ object DbtUtils {
     spark.range(n)
       .select(date_add(lit(java.sql.Date.valueOf(start)), col("id").cast("int"))
         .as("date_day"))
-      .orderBy("date_day")
   }
 
   /** `dbt_utils.star`: every column of `from` except `except`, each
@@ -118,6 +116,5 @@ object DbtUtils {
 
     equalSelf.unionAll(equalCust).unionAll(atLeastOne).unionAll(notConstant)
       .unionAll(uniqueCombo).unionAll(acceptedRange)
-      .orderBy("test_name")
   }
 }

@@ -34,7 +34,6 @@ object Dedup {
       .select(col("doc_id"), md5(lower(trim(col("text")))).as("digest"))
       .groupBy(col("digest"))
       .agg(min(col("doc_id")).as("survivor_id"), count(lit(1)).as("dup_count"))
-      .orderBy("digest")
 
   /** Incremental exact dedup — the production shape for a GROWING corpus:
     * each new BATCH dedups against everything already ingested, returning
@@ -93,7 +92,7 @@ object Dedup {
       .distinct()
     val confirmedNew = candidates
       .join(broadcast(dupDigests), Seq("digest"), "left_anti")
-    definiteNew.unionByName(confirmedNew).orderBy("digest")
+    definiteNew.unionByName(confirmedNew)
   }
 
   /** Incremental NEAR-dup detection for a growing corpus: verified
@@ -151,7 +150,6 @@ object Dedup {
       .join(payloadJoin.hint(cw), "doc_c"),
       col("wb"), col("wc"), threshold)
       .select(col("doc_b"), col("doc_c"), col("jaccard"))
-    // no presentation sort: pair-set output (see minhashLsh)
   }
 
   /** Blocked pair enumeration + set-jaccard verify, shared by the exact
@@ -191,9 +189,6 @@ object Dedup {
       .withColumn("jaccard", verify(col("pa"), col("pb")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), round4(col("jaccard")).as("jaccard"))
-    // pair-set output, no presentation sort: the range sampler of a global
-    // orderBy would re-execute the verify stage (see minhashLsh); the
-    // correctness gate lexsorts rows itself
   }
 
   /** Word-set Jaccard near-dup pairs with (lang, length-band) blocking.
@@ -336,10 +331,6 @@ object Dedup {
       .join(payloadJoin.hint(docsW.select(col("doc_id").as("doc_b"), col("w").as("wb"))), "doc_b"),
       col("wa"), col("wb"), threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    // NO presentation sort: the output is a pair SET, and a global orderBy
-    // would range-sample the plan — re-executing the whole verify stage just
-    // to pick sort bounds (measured 3x cost at sf0.1). Callers needing a
-    // canonical order sort the (small) verified output themselves.
   }
 
   /** (doc_a, doc_b) LSH candidates of a band frame (doc_id, sig, band_idx,
@@ -454,8 +445,7 @@ object Dedup {
     * ratio: shingles with df > maxDf count on neither side; pass
     * `Int.MaxValue` for the uncapped (and unbounded-state) ratio.
     *
-    * Output: (doc_a, doc_b, shared, containment) — pair-set semantics,
-    * no presentation sort (see [[minhashLsh]]). */
+    * Output: (doc_a, doc_b, shared, containment) — pair-set semantics. */
   /** (doc_id, sh) — one row per distinct 3-word shingle per doc; the
     * shared front end of [[containmentPairs]] and
     * [[incrementalContainment]] (same shingles — the operators measure
@@ -829,7 +819,6 @@ object Dedup {
     cc.select(col("id").as("doc_id"), col("label").as("cluster_id"))
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
-      .orderBy("doc_id")
   }
 
   /** Near-dup clusters: exact blocked-Jaccard pairs → connected components.
@@ -856,7 +845,6 @@ object Dedup {
       .select(col("doc_id"))
     documents.join(removed, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"))
-      .orderBy("doc_id")
   }
 
   /** Survivor selection by QUALITY instead of seniority — what production
@@ -885,7 +873,6 @@ object Dedup {
       .select("doc_id")
     documents.join(losers, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"))
-      .orderBy("doc_id")
   }
 
   /** The 100 TB clustering path: edges come from [[minhashLsh]] band
@@ -927,7 +914,6 @@ object Dedup {
       .select(col("doc_id"),
         coalesce(col("n_overlapping_ngrams"), lit(0L)).as("n_overlapping_ngrams"))
       .withColumn("contaminated", col("n_overlapping_ngrams") >= minOverlap)
-    // no presentation sort — corpus-sized output; the gate lexsorts rows
   }
 
   /** Segment-level (sub-document) dedup — the Dolma/RefinedWeb "paragraph
@@ -996,7 +982,6 @@ object Dedup {
           x => x.getField("seg")), delimiter.getOrElse(" ")).as("text_dedup"),
         count(lit(1)).as("n_kept"),
         (min(col("n_segs")).cast("long") - count(lit(1))).as("n_dropped"))
-    // no presentation sort — corpus-sized output; the gate lexsorts rows
   }
 
   /** The 100 TB twin of [[segmentDedup]]: identical output (modulo
@@ -1153,7 +1138,6 @@ object Dedup {
                                       pairBands: Boolean = false): DataFrame =
     bandedPairFrame(sigs, maxHamming, nChunks, pairBands)
       .select(col("doc_a"), col("doc_b"), col("hamming"))
-    // no presentation sort — pair-set output, same rationale as minhashLsh
 
   /** The band descriptor set for a config: per band, the chunk pieces
     * whose agreement defines it. */
@@ -1403,8 +1387,7 @@ object Dedup {
     *
     * Output: (doc_a, doc_b, shared_windows = distinct shared windows
     * with document frequency ≤ `maxDf` — the boilerplate cap, see the
-    * body) — pair-set semantics, no presentation sort (see
-    * [[minhashLsh]]).
+    * body) — pair-set semantics.
     *
     * BEHAVIOR NOTE (r11): `maxDf` defaulted to 100 when the df cap
     * landed — pairs sharing ONLY corpus-hot windows (df > maxDf, i.e.

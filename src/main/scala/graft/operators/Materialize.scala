@@ -65,8 +65,8 @@ object Materialize {
   /** Driver query: per-customer order stats computed through BUCKETED
     * tables — both sides bucketed on the customer key with the same bucket
     * count, so the join AND the group-by run exchange-free (PlanSpec pins
-    * exactly one exchange: the final presentation sort). Result is
-    * oracle-identical to the plain join on the raw tables. */
+    * that no exchange is planned). Result is oracle-identical to the
+    * plain join on the raw tables. */
   def bucketedSpend(spark: SparkSession, customer: DataFrame, orders: DataFrame,
                     nBuckets: Int = 8): DataFrame = {
     bucketedTable(customer.select("c_custkey", "c_name"),
@@ -81,7 +81,6 @@ object Materialize {
       .groupBy("c_custkey", "c_name")
       .agg(count(lit(1)).as("n_orders"),
            graft.util.Det.centsSum(col("o_totalprice")).as("total_spend"))
-      .orderBy("c_custkey")
   }
 
   /** Small-files compaction — the table-maintenance pass every long-lived
@@ -185,7 +184,6 @@ object Materialize {
         (col("o_custkey") % 256).cast("long").as("x"),
         ((dayofyear(col("o_orderdate").cast("date")) - 1) % 256).cast("long").as("y"))
       .withColumn("zval", zValue(col("x"), col("y")).cast("long"))
-      .orderBy("o_orderkey")
 
   /** Z-order clustered rewrite: range-partition the table on the Morton
     * key of (xCol, yCol) into `nFiles` files, each sorted by z within.
@@ -235,7 +233,6 @@ object Materialize {
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
            graft.util.Det.centsSum(col("o_totalprice")).as("revenue"))
-      .orderBy("o_orderpriority")
   }
 
   /** Right-to-erasure (GDPR/CCPA) delete propagation — the table-maintenance
@@ -310,7 +307,6 @@ object Materialize {
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
            graft.util.Det.centsSum(col("o_totalprice")).as("revenue"))
-      .orderBy("o_orderpriority")
   }
 
   /** `materialized='incremental'`: append new rows into the same layout;

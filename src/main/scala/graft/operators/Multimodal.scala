@@ -519,7 +519,6 @@ object Multimodal {
           VideoMetaRow(id, v.container, v.width, v.height, v.duration_sec, v.codec))
       })
       .toDF()
-      .orderBy("doc_id")
   }
 
   /** Real video PIXEL decode over a binary media frame — for the one
@@ -533,8 +532,7 @@ object Multimodal {
     * ImageIO cannot decode (e.g. the tables-omitted AVI1 convention),
     * are DROPPED — pixel facts are only ever emitted from real pixels.
     * Scan-bound per partition like every decode in this file: no
-    * shuffle before the presentation sort, payload never leaves its
-    * partition. */
+    * shuffle, payload never leaves its partition. */
   def videoFrameFeatures(media: DataFrame): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
@@ -555,7 +553,6 @@ object Multimodal {
         }
       })
       .toDF()
-      .orderBy("doc_id")
   }
 
   /** Deterministic single-frame MJPEG AVI synthesizer — the TEST RIG for
@@ -1496,7 +1493,6 @@ object Multimodal {
           scale, feat)
       }
       .toDF()
-      .orderBy("doc_id")
   }
 
   /** Frame sampling over a binary payload (the video/audio pattern: take
@@ -1520,7 +1516,6 @@ object Multimodal {
       .select(col("doc_id"), col("frame_idx"),
               length(col("frame")).as("frame_len"),
               md5(col("frame")).as("frame_md5"))
-      .orderBy("doc_id", "frame_idx")
   }
 
   /** Binary-column feature extraction pipeline. The `documents` text is cast
@@ -1576,6 +1571,5 @@ object Multimodal {
         }
       }
       .toDF()
-      .orderBy("doc_id")
   }
 }

@@ -45,6 +45,5 @@ object QualityModel {
     model.transform(assembled)
       .select(col("doc_id"), round4(prob1).as("quality_prob"),
         (col("prediction") === 1.0).as("predicted_ok"))
-      .orderBy("doc_id")
   }
 }

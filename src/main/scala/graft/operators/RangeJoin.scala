@@ -76,6 +76,5 @@ object RangeJoin {
       .select(col("window_id"),
               coalesce(col("n_ship"), lit(0L)).as("n_ship"),
               coalesce(col("sum_qty"), lit(0L)).as("sum_qty"))
-      .orderBy("window_id")
   }
 }

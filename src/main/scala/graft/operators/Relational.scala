@@ -22,10 +22,6 @@ object Relational {
       col("o_orderdate").cast("date").as("order_date"),
       col("o_orderpriority").as("order_priority"),
     )
-    // no presentation sort (same rule as stgLineitem): staging the full
-    // orders table through a range exchange buys nothing — the correctness
-    // gate lexsorts rows before hashing — and its bounds sampling would
-    // re-execute the scan at any scale
 
   /** Staging view over `lineitem` with derived per-row price columns.
     * Per-row arithmetic on doubles is IEEE-deterministic (no accumulation),
@@ -42,9 +38,6 @@ object Relational {
       col("l_returnflag"),
       col("l_shipdate").cast("date").as("ship_date"),
     )
-    // no presentation sort: this is the fact-table staging path — a global
-    // sort of the largest table buys nothing (the correctness gate lexsorts
-    // rows before hashing) and costs a full range shuffle per run
   }
 
   /** Mart with CASE bucketing (fct_example.sql:8-11:
@@ -56,5 +49,4 @@ object Relational {
       col("o_orderdate").as("created_at_ts"),
       when(col("o_totalprice") > threshold, "high").otherwise("regular").as("bucket"),
     )
-    // no presentation sort: fact-scale mart output, map-only over the scan
 }

@@ -30,7 +30,6 @@ object Sessions {
         count(lit(1)).as("n_events"),
         centsSum(col("value")).as("total_value"),
       )
-      .orderBy("user_id", "sess_seq")
   }
 
   /** Sessionization via Spark's NATIVE `session_window` aggregate — same
@@ -54,7 +53,6 @@ object Sessions {
         col("w.start").cast("long").as("session_start"),
         (col("w.end").cast("long") - gapSeconds).as("session_end"),
         col("n_events"), col("total_value"))
-      .orderBy("user_id", "session_start")
 
   /** Event-time tumbling window (1h) aggregation — the batch twin of the
     * Structured Streaming version in streaming/StreamOps. */
@@ -64,7 +62,6 @@ object Sessions {
       .groupBy(col("event_type"), col("window_start"))
       .agg(count(lit(1)).as("n_events"),
            centsSum(col("value")).as("total_value"))
-      .orderBy("event_type", "window_start")
 
   /** signup→purchase funnel per user: first signup, first purchase at/after
     * it, conversion flag + latency. Two small aggregates + one join. */
@@ -80,6 +77,5 @@ object Sessions {
       .select(col("user_id"), col("signup_ts"), col("first_purchase_ts"),
               col("first_purchase_ts").isNotNull.as("converted"),
               (col("first_purchase_ts") - col("signup_ts")).as("seconds_to_convert"))
-      .orderBy("user_id")
   }
 }

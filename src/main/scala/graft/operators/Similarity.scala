@@ -36,7 +36,6 @@ object Similarity {
       .select(col("vec_id"), col("label"),
         round4(cosine(col("embedding"), col("q"))).as("cos_sim"))
       .filter(col("cos_sim") >= minCos)
-      .orderBy("vec_id")
   }
 
   /** Exact top-K neighbors for a set of query vectors: broadcast the query
@@ -54,7 +53,6 @@ object Similarity {
       Seq("cos_sim" -> false, "vec_id" -> true), k)
     val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("vec_id"))
     top.withColumn("rank", row_number().over(w).cast("long"))
-      .orderBy("query_id", "rank")
   }
 
   /** Embedding-cosine (semantic) dedup, SemDeDup-style greedy survivor
@@ -91,7 +89,6 @@ object Similarity {
       .select(greatest(col("x.vec_id"), col("y.vec_id")).as("vec_id")).distinct()
     embeddings.join(removed, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("label"))
-      .orderBy("vec_id")
   }
 
   /** Approximate SemDeDup for corpora where exact O(n²) compare work is the
@@ -114,8 +111,6 @@ object Similarity {
       .select(col("vec_b").as("vec_id")).distinct()
     embeddings.join(removed, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("label"))
-    // survivor-set output, rows-only checked: no presentation sort (the
-    // range sampler would re-run the whole LSH + anti-join upstream)
   }
 
   /** IVF-Flat ANN: k-means centroids partition the vector space (the
@@ -284,7 +279,6 @@ object Similarity {
     val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
   }
 
   /** FILTERED ANN — the "vector search with a metadata predicate" shape
@@ -319,7 +313,6 @@ object Similarity {
       .orderBy(col("cos_sim").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
   }
 
   /** IVF search over the int8-QUANTIZED corpus with exact re-ranking — the
@@ -367,7 +360,6 @@ object Similarity {
     val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("vec_id"))
     exact.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
   }
 
   /** Offline half of IVF-PQ (FAISS's IVFPQ, the billion-vector workhorse):
@@ -547,7 +539,6 @@ object Similarity {
     val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("vec_id"))
     exact.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
   }
 
   /** Corpus clustering for curation: the k-means cells [[buildIvfIndex]]
@@ -573,7 +564,6 @@ object Similarity {
       .agg(count(lit(1)).as("n_vecs"),
         graft.util.Det.round4(avg(col("dist"))).as("cohesion"))
       .withColumn("share", graft.util.Det.round4(col("n_vecs") / lit(total.toDouble)))
-      .orderBy("cell")
   }
 
   /** Multi-table LSH ANN: per table, sign bits against `planesPerTable`
@@ -647,9 +637,6 @@ object Similarity {
       .select(col("vec_a"), col("vec_b"),
         round4(cosine(col("ea"), col("eb"))).as("cos_sim"))
       .filter(col("cos_sim") >= minCos)
-    // no presentation sort: pair-set output; a global orderBy would
-    // range-sample the plan and re-execute the verify stage (see
-    // Dedup.minhashLsh)
   }
 
   /** Asymmetric LSH probe — a batch of vectors against the PERSISTED
@@ -725,7 +712,6 @@ object Similarity {
           transform(e, x => round((x.cast("double") - col("mn")) / col("scale"), 0).cast("int")))
           .otherwise(transform(e, _ => lit(0)))
           .as("q"))
-      .orderBy("vec_id")
   }
 
   /** PCA dimensionality reduction over the embedding column — the standard
@@ -753,7 +739,6 @@ object Similarity {
     model.transform(vecs)
       .select(col("vec_id"), col("label"),
         transform(vector_to_array(col("pc")), round4(_)).as("pc"))
-      .orderBy("vec_id")
   }
 
   /** Exact-regime twin base for [[embeddingPca]]: at k = full dimension
@@ -779,6 +764,5 @@ object Similarity {
       .select(col("vec_id"),
         round4(aggregate(vector_to_array(col("pc")), lit(0.0),
           (acc, x) => acc + x * x)).as("sq_norm"))
-      .orderBy("vec_id")
   }
 }

@@ -137,7 +137,6 @@ object TextAnalysis {
   def langId(documents: DataFrame): DataFrame =
     documents.select((col("doc_id") +: lexHits): _*)
       .withColumn("predicted_lang", lexChain)
-      .orderBy("doc_id")
 
   /** Per-language word pools for the TRAINED lang-ID rig (public
     * function words; shared by the driver query, its DuckDB oracle, and
@@ -258,7 +257,6 @@ object TextAnalysis {
         col("b.cand").as("predicted_lang"),
         (-col("b.ns")).as("score_unats"),
         col("__train").as("is_train"))
-      .orderBy("doc_id")
   }
 
   /** WEAK-SUPERVISED trained language ID (r17, VERDICT #1 — the
@@ -368,7 +366,6 @@ object TextAnalysis {
         element_at(candsLit, col("b.idx") + 1).as("predicted_lang"),
         (-col("b.ns")).as("score_unats"),
         col("__train").as("is_train"))
-      .orderBy("doc_id")
   }
 
   /** Quality scoring: structural ratios + a low-quality flag. */
@@ -389,7 +386,7 @@ object TextAnalysis {
       round4(digits.cast("double") / len).as("digit_ratio"),
       round4(stop.cast("double") / nWords).as("stopword_ratio"),
       when(len >= 100 && nWords >= 20, "ok").otherwise("low").as("quality_flag"),
-    ).orderBy("doc_id")
+    )
   }
 
   /** Quality-filter CASCADE — the FineWeb/Gopher-style gauntlet as ONE
@@ -431,7 +428,6 @@ object TextAnalysis {
         firstFail.isNull.as("passed"),
         coalesce(firstFail, lit("")).as("first_fail"),
         round4(col("top_share")).as("top_share"))
-    // no presentation sort — corpus-sized output; the gate lexsorts rows
   }
 
   /** Token counting: whitespace tokens, a BPE-ish regex segmentation, and
@@ -443,7 +439,7 @@ object TextAnalysis {
       size(regexp_extract_all(col("text"),
         lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"), lit(0))).as("bpe_tokens"),
       TextNorm.estTokens(col("text")).as("est_llm_tokens"),
-    ).orderBy("doc_id")
+    )
 
   /** Rolling-window fingerprint (winnowing-style): hash every sliding
     * `window`-char substring and keep the k smallest — robust to small
@@ -480,7 +476,6 @@ object TextAnalysis {
       .select(col("doc_id"),
         concat_ws(",", kmin).as("fingerprint"),
         (len - window + 1).as("n_windows"))
-      .orderBy("doc_id")
   }
 
   /** Cross-document verbatim-overlap candidates — the scalable stand-in for
@@ -553,7 +548,6 @@ object TextAnalysis {
       .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("shared_windows"))
       .filter(col("shared_windows") >= minShared)
-    // pair-set output — no presentation sort (see Dedup.minhashLsh)
   }
 
   /** Repetition signals (the Gopher-rules family — Rae et al. 2021,
@@ -562,8 +556,8 @@ object TextAnalysis {
     * repetitive documents are the classic low-quality web-text signature.
     * Computed in-row (r18): one hashed word-count pass per doc
     * (graft_ngram_counts, skipEmpty = false — "" is a countable word
-    * here) and a per-row max/sum over the counts array — zero exchanges
-    * before the presentation sort, and linear in the doc's length, so
+    * here) and a per-row max/sum over the counts array — zero exchanges,
+    * and linear in the doc's length, so
     * million-token documents cost the same per token as short ones. A
     * NULL-text doc has no words and no row. */
   def repetitionScore(documents: DataFrame): DataFrame = {
@@ -583,7 +577,6 @@ object TextAnalysis {
       .withColumn("rep_flag",
         when(col("top_word_frac") > 0.2 || col("dup_word_frac") > 0.5,
           "repetitive").otherwise("ok"))
-      .orderBy("doc_id")
   }
 
   /** The MassiveText quality gauntlet (Rae et al. 2021 §A1.1 — the
@@ -603,7 +596,7 @@ object TextAnalysis {
     *  6. too_few_stopwords  < 2 occurrences of the MassiveText stop list
     *     (the, be, to, of, and, that, have, with)
     * Entirely scan-bound — every signal is per-row string arithmetic,
-    * NO shuffle at all before the presentation sort (the repetition
+    * NO shuffle at all (the repetition
     * rules live in [[qualityCascade]]/[[repetitionNgrams]], which pay
     * their word shuffles; this is the pure gate). Wordless docs fail
     * rule 1; nothing divides, so there is no zero-denominator case. */
@@ -628,7 +621,6 @@ object TextAnalysis {
       .otherwise(null)
     documents.select(col("doc_id"), nWords.as("n_words"),
         ff.isNull.as("passed"), coalesce(ff, lit("")).as("first_fail"))
-      .orderBy("doc_id")
   }
 
   /** Gopher-style n-gram repetition CHARACTER fractions (Rae et al. 2021
@@ -697,7 +689,6 @@ object TextAnalysis {
         when(col("n_chars") > 0, round4(
           coalesce(col("dup_chars"), lit(0L)).cast("double") / col("n_chars")))
           .otherwise(0.0).as("dup_frac"))
-      .orderBy("doc_id", "n")
   }
 
   /** PII scrubbing: masks emails, IPv4 addresses, and phone-like digit
@@ -721,7 +712,6 @@ object TextAnalysis {
     val clean = piiClean(col("text"))
     documents.select(col("doc_id"), clean.as("clean_text"),
         (col("text") =!= clean).as("pii_found"))
-      .orderBy("doc_id")
   }
 
   /** Corpus-wide exact heavy hitters: top-k words by total frequency. One
@@ -763,7 +753,6 @@ object TextAnalysis {
       .agg(sum("tf").as("n_words"),
            coalesce(sum(when(col("in_vocab").isNull, col("tf"))), lit(0L))
              .as("n_oov"))
-      .orderBy("doc_id")
   }
 
   /** Sublinear heavy hitters: a single Misra-Gries summary aggregate
@@ -810,7 +799,6 @@ object TextAnalysis {
       .groupBy("lang", "word").agg(count(lit(1)).as("n"))
     graft.plans.TopKPerGroup(counts, Seq("lang"),
         Seq("n" -> false, "word" -> true), topN)
-      .orderBy("lang", "word")
   }
 
   def heavyHittersPerGroup(documents: DataFrame, summaryK: Int = 64,
@@ -824,7 +812,6 @@ object TextAnalysis {
       .select(col("lang"), col("e.item").as("word"), col("e.est_count"))
     graft.plans.TopKPerGroup(perLang, Seq("lang"),
         Seq("est_count" -> false, "word" -> true), topN)
-      .orderBy("lang", "word")
   }
 
   /** Point-frequency estimates from ONE Count-Min sketch pass
@@ -846,7 +833,6 @@ object TextAnalysis {
       .select(col("word"), col("n"),
         graft.functions.CountMinAgg.estimate(col("sk"), col("word"), depth, width)
           .as("est_n"))
-      .orderBy(col("n").desc, col("word"))
   }
 
   /** TF-IDF top terms per document. tf shuffles once on (doc, word); df
@@ -867,7 +853,6 @@ object TextAnalysis {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("doc_id", "word", "tfidf", "rank")
-      .orderBy("doc_id", "rank")
   }
 
   /** Unigram language-model perplexity scoring — the CCNet-style "does this
@@ -895,7 +880,6 @@ object TextAnalysis {
     val tot = cw.agg(sum("c1").as("n"), count(lit(1)).as("v"))
     addOneMean(tf.join(cw, "w1").crossJoin(broadcast(tot)), "n_tokens",
       (col("c1") + 1).cast("double") / (col("n") + col("v")), flagNats)
-      .orderBy("doc_id")
   }
 
   /** HTML → text extraction (r14 — the step between a crawl archive
@@ -1254,7 +1238,6 @@ object TextAnalysis {
     val w = Window.partitionBy("query_id")
       .orderBy(col("score_micro").desc, col("doc_id"))
     top.withColumn("rank", row_number().over(w).cast("long"))
-      .orderBy("query_id", "rank")
   }
 
   /** Bigram-LM mean negative log-likelihood per doc — the next rung of
@@ -1271,7 +1254,7 @@ object TextAnalysis {
     * bigrams and drop out, as in any n-gram scorer.
     *
     * Determinism contract: round4'd mean so both engines flag
-    * identically; no presentation sort on the corpus-sized output. */
+    * identically. */
   def perplexityBigram(documents: DataFrame, flagNats: Double = 3.5): DataFrame = {
     val tfb = ngramTf(documents, 2)
     val cb = typeCounts(tfb, 2)
@@ -1534,7 +1517,7 @@ object TextAnalysis {
       md5(col("text")).as("digest"),
       substring(md5(col("text")), 1, 8).as("prefix8"),
       array_min(transform(distinctWords, w => md5(w))).as("min_word_md5"),
-    ).orderBy("doc_id")
+    )
 
   /** BPE pair counting (Sennrich et al. 2016, arXiv:1508.07909) — the
     * distributed primitive of subword-tokenizer training: corpus-wide
@@ -1705,7 +1688,6 @@ object TextAnalysis {
       .groupBy("doc_id")
       .agg(sum(col("occ")).as("n_words"),
            sum(tokensOf(col("w")) * col("occ")).as("n_tokens"))
-      .orderBy("doc_id")
   }
 
   /** Corpus BPE VOCABULARY (r16 — the apply table between trained merge
@@ -1781,7 +1763,6 @@ object TextAnalysis {
     arr.select(col("doc_id"), col("n_words"), col("n_tokens"),
         array_join(transform(col("ids"), i => i.cast("string")), ",")
           .as("token_ids"))
-      .orderBy("doc_id")
 
   /** [[bpeTokenizeDocs]] with the id sequence as an ARRAY column —
     * the slice-able form [[Curation.packedTokenSequences]] consumes:

@@ -67,12 +67,8 @@ object Metrics {
       date_trunc(g, col(m.timeDimension.get).cast("timestamp")),
       "yyyy-MM-dd").as(grainName.get))
     val keys = dims.map(col) ++ grainCol.toSeq
-    val agged =
-      if (keys.isEmpty) base.agg(expr(m.agg).as(m.name))
-      else base.groupBy(keys: _*).agg(expr(m.agg).as(m.name))
-    val sortCols = dims ++ grainName.toSeq
-    if (sortCols.isEmpty) agged
-    else agged.orderBy(sortCols.head, sortCols.tail: _*)
+    if (keys.isEmpty) base.agg(expr(m.agg).as(m.name))
+    else base.groupBy(keys: _*).agg(expr(m.agg).as(m.name))
   }
 
   /** Aggregate functions `queryAll` can push a metric filter into (the
@@ -117,9 +113,7 @@ object Metrics {
       }
       org.apache.spark.sql.graftbridge.Bridge.column(withFilter).as(m.name)
     }
-    val out =
-      if (dims.isEmpty) frame.agg(aggs.head, aggs.tail: _*)
-      else frame.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    if (dims.isEmpty) out else out.orderBy(dims.head, dims.tail: _*)
+    if (dims.isEmpty) frame.agg(aggs.head, aggs.tail: _*)
+    else frame.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 }

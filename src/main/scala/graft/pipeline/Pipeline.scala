@@ -741,30 +741,15 @@ final class Pipeline(models: Seq[Model], exposures: Seq[Exposure] = Nil,
     * marks `error`, its downstream closure marks `skipped`, siblings keep
     * building. Returns the resolved frames of successful models plus the
     * status map [[retry]] resumes from. `threads` parallelizes independent
-    * models exactly as in [[run]] (dbt `threads`). */
+    * models exactly as in [[run]] (dbt `threads`). It is [[build]] with
+    * no tests: without a test no `warn` arises, so build's skip rule is
+    * this one. */
   def runTolerant(spark: SparkSession, sources: Map[String, DataFrame],
                   targetDir: String, hooks: RunHooks = RunHooks.none,
                   fullRefresh: Boolean = false,
-                  threads: Int = 1): (Map[String, DataFrame], RunResults) = {
-    val status = scala.collection.concurrent.TrieMap[String, String]()
-    val good = scala.collection.concurrent.TrieMap[String, DataFrame]() ++ sources
-    def execOne(m: Model): Unit = {
-      if (!m.deps.forall(d => sources.contains(d) || status.get(d).contains("success")))
-        status(m.name) = "skipped"
-      else try {
-        val out = new Pipeline(Seq(m.copy(deps = Nil)), format = format)
-          .run(spark, good.toMap, targetDir, hooks, fullRefresh)(m.name)
-        good(m.name) = out
-        status(m.name) = "success"
-      } catch { case e: Exception =>
-        status(m.name) = s"error: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(200)}"
-      }
-    }
-    val ordered = topoOrder(sources.keySet)
-    if (threads <= 1) ordered.foreach(execOne)
-    else scheduleDag(ordered, sources.keySet, threads)(execOne).foreach(t => throw t)
-    ((good -- sources.keys).toMap, status.toMap)
-  }
+                  threads: Int = 1): (Map[String, DataFrame], RunResults) =
+    new Pipeline(models.map(_.copy(tests = Nil)), format = format)
+      .build(spark, sources, targetDir, hooks, fullRefresh, threads)
 
   /** dbt `build`: run + test interleaved in DAG order — each model's
     * attached tests (a function returning VIOLATION rows, the dbt test
@@ -781,20 +766,25 @@ final class Pipeline(models: Seq[Model], exposures: Seq[Exposure] = Nil,
     * fail-level test gates (dbt stops at the model's worst outcome);
     * warns accumulate across all tests on the model.
     * [[retry]] resumes a failed build the same way it resumes a run.
-    * `threads` parallelizes independent models exactly as in [[run]]. */
+    * `threads` parallelizes independent models exactly as in [[run]];
+    * hooks fire as in [[run]]: start and end once per call, before/after
+    * once per materialized model. */
   def build(spark: SparkSession, sources: Map[String, DataFrame],
             targetDir: String, hooks: RunHooks = RunHooks.none,
             fullRefresh: Boolean = false,
             threads: Int = 1): (Map[String, DataFrame], RunResults) = {
     val status = scala.collection.concurrent.TrieMap[String, String]()
     val good = scala.collection.concurrent.TrieMap[String, DataFrame]() ++ sources
+    val ordered = topoOrder(sources.keySet)
+    hooks.onRunStart(ordered)
     def execOne(m: Model): Unit = {
       if (!m.deps.forall(d => sources.contains(d) ||
           status.get(d).exists(s => s == "success" || s.startsWith("warn"))))
         status(m.name) = "skipped"
       else try {
-        val out = new Pipeline(Seq(m.copy(deps = Nil)), format = format)
-          .run(spark, good.toMap, targetDir, hooks, fullRefresh)(m.name)
+        hooks.beforeModel(m)
+        val out = materializeModel(spark, m, m.build(good.toMap), targetDir, fullRefresh)
+        hooks.afterModel(m, out)
         // cap the count scan at the config-derived limit (default 1001;
         // larger when a threshold needs it — TestConfig.countCap proves
         // the capped count evaluates every condition exactly) and report
@@ -845,9 +835,9 @@ final class Pipeline(models: Seq[Model], exposures: Seq[Exposure] = Nil,
         status(m.name) = s"error: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(200)}"
       }
     }
-    val ordered = topoOrder(sources.keySet)
     if (threads <= 1) ordered.foreach(execOne)
     else scheduleDag(ordered, sources.keySet, threads)(execOne).foreach(t => throw t)
+    hooks.onRunEnd(good.toMap)
     ((good -- sources.keys).toMap, status.toMap)
   }
 
@@ -980,7 +970,6 @@ final class Pipeline(models: Seq[Model], exposures: Seq[Exposure] = Nil,
       .getOrElse(dev.values.head.sparkSession.emptyDataFrame
         .select(lit("").as("model"), lit("").as("diff_type"), lit(0L).as("n"))
         .limit(0))
-      .orderBy("model", "diff_type")
   }
 
   /** Runs the DAG. `targetDir` holds table/incremental materializations.

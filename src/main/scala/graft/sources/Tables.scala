@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Scoped
 
 /** Typed loaders for the driver-generated test tables.
   *
@@ -60,7 +61,6 @@ object Tables {
     readJsonl(s, tmp, docs.schema)
       .filter(col("doc_id").isNotNull)
       .select(docs.columns.map(col): _*)
-      .orderBy("doc_id")
   }
 
   /** `events.parquet` stores `ts` as INT64 TIMESTAMP(NANOS), which Spark's
@@ -68,10 +68,12 @@ object Tables {
     * (legacy nanosAsLong) and derive both a microsecond timestamp and an
     * epoch-seconds column with *integer* arithmetic — never double division,
     * which would lose precision above 2^53 (epoch-nanos ≈ 1.7e18).
+    * The setting lives on a scoped clone that the scan keeps; the frame
+    * is rebound to `s`, whose conf stays as the caller left it.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table(s, d, "events")
+    val raw = table(
+      Scoped.session(s, "spark.sql.legacy.parquet.nanosAsLong" -> "true"), d, "events")
     val withTs =
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         raw
@@ -81,6 +83,6 @@ object Tables {
         raw
           .withColumn("ts", date_trunc("second", col("ts")))
           .withColumn("ts_s", unix_timestamp(col("ts")))
-    withTs
+    Scoped.rebind(withTs, s)
   }
 }

@@ -70,18 +70,21 @@ object StreamOps {
   /** Streaming source over the events file with derived event-time cols.
     * The schema is probed from the file (batch footer read) so both the
     * INT64-nanos and genuine-timestamp `ts` variants work — the same two
-    * branches as [[graft.sources.Tables.events]]. */
+    * branches, and the same scoped nanos-as-long read, as
+    * [[graft.sources.Tables.events]]. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = parquetStream(spark, dir, Some("events.parquet"))
-    if (raw.schema("ts").dataType == LongType)
-      raw
-        .withColumn("ts_s", expr("ts div 1000000000"))
-        .withColumn("event_time", timestamp_seconds(expr("ts div 1000000000")))
-    else
-      raw
-        .withColumn("event_time", date_trunc("second", col("ts")))
-        .withColumn("ts_s", unix_timestamp(date_trunc("second", col("ts"))))
+    val raw = parquetStream(graft.util.Scoped.session(spark,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true"), dir, Some("events.parquet"))
+    graft.util.Scoped.rebind(
+      if (raw.schema("ts").dataType == LongType)
+        raw
+          .withColumn("ts_s", expr("ts div 1000000000"))
+          .withColumn("event_time", timestamp_seconds(expr("ts div 1000000000")))
+      else
+        raw
+          .withColumn("event_time", date_trunc("second", col("ts")))
+          .withColumn("ts_s", unix_timestamp(date_trunc("second", col("ts")))),
+      spark)
   }
 
   /** Streaming parquet read of `dir` (only `file` in it when given), its
@@ -237,7 +240,6 @@ object StreamOps {
   def runTumbling(spark: SparkSession, dir: String): DataFrame =
     stateRig(spark) { r =>
       drainToMemory(tumblingAgg(eventsStream(r.spark, dir)), OutputMode.Complete())
-        .orderBy("event_type", "window_start")
     }
 
   /** Native session_window sessionization AS a streaming query. This
@@ -263,7 +265,6 @@ object StreamOps {
           col("w.start").cast("long").as("session_start"),
           (col("w.end").cast("long") - gapSeconds).as("session_end"),
           col("n_events"), col("total_value")), OutputMode.Complete())
-        .orderBy("user_id", "session_start")
     }
 
   /** Streaming exact dedup: two sources over the same events (a simulated
@@ -283,7 +284,6 @@ object StreamOps {
         .dropDuplicatesWithinWatermark("event_id")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events")), OutputMode.Complete())
-        .orderBy("event_type")
     }
 
   /** Stream-static enrichment: the event stream joins a broadcast static
@@ -299,7 +299,6 @@ object StreamOps {
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_events"),
              centsSum(col("value")).as("total_value")), OutputMode.Complete())
-        .orderBy("c_mktsegment")
     }
 
   /** Streaming → partitioned-parquet sink via foreachBatch + dynamic
@@ -450,7 +449,6 @@ object StreamOps {
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
              centsSum(col("value")).as("total_value"))
-        .orderBy("event_type")
     }
 
   /** Streaming right-to-erasure — the GDPR loop at corpus scale: a stream
@@ -487,7 +485,6 @@ object StreamOps {
       TxLogFormat.read(r.spark, table)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"))
-        .orderBy("lang")
     }
 
   /** Streaming CDC UPSERT — the Delta `foreachBatch MERGE INTO` loop:
@@ -527,7 +524,7 @@ object StreamOps {
       }
       runOnce()
       runOnce() // full replay: the tagged merge must skip, not double-apply
-      TxLogFormat.read(r.spark, t).orderBy("o_orderkey")
+      TxLogFormat.read(r.spark, t)
     }
 
   /** Runs [[RunningTotalsProcessor]] over the parquet source to completion.
@@ -544,7 +541,6 @@ object StreamOps {
         .transformWithState(new RunningTotalsProcessor,
           TimeMode.None(), OutputMode.Append())
         .toDF("user_id", "n_events", "total_value"), OutputMode.Append())
-        .orderBy("user_id")
     }
 
   /** Stream-stream event-time interval join: each signup joins the same
@@ -579,7 +575,6 @@ object StreamOps {
           OutputMode.Append())
         .groupBy(col("s_user").as("user_id"))
         .agg(count(lit(1)).as("n_pairs"), centsSum(col("value")).as("purchase_value"))
-        .orderBy("user_id")
     }
 
   /** One micro-batch of the streaming dedup ingest loop: dedup `b`
@@ -608,7 +603,7 @@ object StreamOps {
     ingestRig(spark, s"$dir/documents.parquet") { r =>
       drainBatches(r.source(dir, "documents.parquet")
         .select(col("doc_id"), col("text")))(dedupIngestBatch(r.table("t")) _)
-      graft.sources.TxLogFormat.read(r.spark, r.table("t")).orderBy("digest")
+      graft.sources.TxLogFormat.read(r.spark, r.table("t"))
     }
 
   /** One dedup step's result, handed to [[dedupIngest]]: the corpus rows
@@ -759,7 +754,7 @@ object StreamOps {
           numHashes = 48, bands = 48, threshold = 0.8,
           prefilterSlackSd = Double.PositiveInfinity) _)
       graft.sources.TxLogFormat.read(r.spark, r.table("corpus"))
-        .select("doc_id").orderBy("doc_id")
+        .select("doc_id")
     }
 
   /** One micro-batch of the streaming PERCEPTUAL-HASH dedup ingest loop
@@ -809,7 +804,7 @@ object StreamOps {
           hash(media).select(col("doc_id"), col(sigCol).as("sig")), id)
       }
       graft.sources.TxLogFormat.read(r.spark, r.table("corpus"))
-        .select("doc_id").orderBy("doc_id")
+        .select("doc_id")
     }
 
   /** Driver query: the IMAGE ingest loop on the %10=0 slice (grid PNGs
@@ -876,7 +871,7 @@ object StreamOps {
             col("frame_slot").as("slot"), col("vhash").as("sig")), id)
       }
       graft.sources.TxLogFormat.read(r.spark, r.table("corpus"))
-        .select("doc_id").distinct().orderBy("doc_id")
+        .select("doc_id").distinct()
     }
 
   /** One micro-batch of the streaming SEQUENCE-PACKING ingest loop
@@ -1054,7 +1049,6 @@ object StreamOps {
           col("rec_idx"), col("rec_id"), col("warc_type"), col("url"),
           col("warc_date"), col("http_status"), col("mime"),
           col("body").cast("string").as("body_text"))
-        .orderBy("doc_id", "rec_idx")
     }
 
   /** One micro-batch of the streaming SEMANTIC-dedup ingest loop (r13 —
@@ -1099,7 +1093,7 @@ object StreamOps {
         semanticIngestBatch(r.table("corpus"), r.table("index"),
           minCos = 0.35, nTables = 40, planesPerTable = 1) _)
       graft.sources.TxLogFormat.read(r.spark, r.table("corpus"))
-        .select("vec_id", "label").orderBy("vec_id")
+        .select("vec_id", "label")
     }
 
   /** One micro-batch of the streaming SEGMENT-dedup ingest loop — the
@@ -1165,7 +1159,7 @@ object StreamOps {
           .select(col("doc_id"), col("text")))(
         substringIngestBatch(r.table("corpus"), r.table("index")) _)
       graft.sources.TxLogFormat.read(r.spark, r.table("corpus"))
-        .select("doc_id").orderBy("doc_id")
+        .select("doc_id")
     }
 
   /** One micro-batch of the streaming CONTAINMENT-screen ingest loop
@@ -1222,7 +1216,6 @@ object StreamOps {
         containmentIngestBatch(r.table("pairs"), r.table("index"),
           r.table("sizes")) _)
       graft.sources.TxLogFormat.read(r.spark, r.table("pairs"))
-        .orderBy("doc_a", "doc_b")
     }
 
   /** One micro-batch of the streaming CURATION-FUNNEL ingest loop — the
@@ -1394,7 +1387,7 @@ object StreamOps {
           .select(col("doc_id"), col("text"), col("lang"), col("source")))(
         curationIngestBatch(r.table("report"), r.table("digests"),
           r.table("quota"), r.table("budget")) _)
-      graft.sources.TxLogFormat.read(r.spark, r.table("report")).orderBy("doc_id")
+      graft.sources.TxLogFormat.read(r.spark, r.table("report"))
     }
 
   /** One micro-batch of the streaming CRAWL-CURATION loop (r17 — the
@@ -1515,7 +1508,6 @@ object StreamOps {
   private def crawlReport(r: Rig): DataFrame =
     graft.sources.TxLogFormat.read(r.spark, r.table("report"))
       .select("doc_id", "url_canonical", "predicted_lang", "n_words", "fate")
-      .orderBy("doc_id")
 
   /** Compact the streaming crawl-funnel's three append-only KEY
     * indexes: fold every committed delta at or below `watermark` into
@@ -1688,7 +1680,7 @@ object StreamOps {
           ivfIngestBatch(r.table("cells"), r.table("index"))(b, id.toLong)
         }
       graft.sources.TxLogFormat.read(r.spark, r.table("cells"))
-        .select("vec_id").orderBy("vec_id")
+        .select("vec_id")
     }
 
   /** Stateful gap sessionization via flatMapGroupsWithState: per user, an
@@ -1801,6 +1793,6 @@ object StreamOps {
         .na.drop() // Ev has primitive fields; a null row would fail encoding
         .as[Ev]
       drainToMemory(sessionizeStream(evs).toDF(), OutputMode.Append())
-        .filter(col("user_id") >= 0).orderBy("user_id", "sess_seq")
+        .filter(col("user_id") >= 0)
     }
 }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.graftbridge.Bridge
 /** Scoping for work that needs its own session conf or scratch files
   * without touching the caller's: the streaming rigs' widths and state
   * provider ([[graft.streaming.StreamOps]]), the connected-components
-  * loop's data-sized width, and a dbt target's `sparkConf`.
+  * loop's data-sized width, a dbt target's `sparkConf`, and the events
+  * table's nanos-as-long read ([[graft.sources.Tables.events]]).
   *
   * The scoped session is a CLONE of the caller's session (`cloneSession`).
   * A `newSession` would rebuild its conf from the SparkContext and

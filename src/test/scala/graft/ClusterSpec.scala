@@ -248,9 +248,10 @@ class ClusterSpec extends SparkSpec {
     assert(totalTokens == expected)
   }
 
-  test("pii scrub plan is shuffle-free up to the presentation sort") {
+  test("pii scrub plan is shuffle-free") {
     val df = TextAnalysis.piiScrub(Tables.documents(spark, sf))
-    val body = df.queryExecution.executedPlan.toString.replaceAll("(?s)Sort .*", "")
-    assert("Exchange".r.findAllIn(body).size <= 1, "pii scrub shuffles")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange") && !plan.contains("Sort"),
+      s"pii scrub shuffles or sorts:\n$plan")
   }
 }

@@ -1189,7 +1189,7 @@ class OperatorsSpec extends SparkSpec {
     import spark.implicits._
     val docs = Tables.documents(spark, sf)
     val got = Curation.domainQuota(docs, perDomain = 3).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).sortBy(_._1)
     // plain-Scala reference: same md5-hex order per source
     val want = docs.select("doc_id", "source").collect()
       .map(r => (r.getLong(0), r.getString(1)))
@@ -1205,7 +1205,7 @@ class OperatorsSpec extends SparkSpec {
     assert(all == docs.count())
     // partition layout must not change a hash-ordered deterministic pick
     val reparted = Curation.domainQuota(docs.repartition(7), perDomain = 3)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).sortBy(_._1)
     assert(reparted.toSeq == got.toSeq)
   }
 

@@ -226,10 +226,19 @@ class PipelineSpec extends SparkSpec {
       beforeModel = m => events += s"before:${m.name}",
       afterModel = (m, df) => events += s"after:${m.name}:${df.count()}")
     val src = Tables.orders(spark, sf).limit(3)
-    dag.run(spark, Map("src" -> src), tmp(), hooks)
-    assert(events.toSeq == Seq(
-      "start:a,b", "before:a", "after:a:3", "before:b", "after:b:3",
-      "end:a,b,src"))
+    // build and runTolerant too: one start/end per invocation, never one
+    // per model
+    Seq[(String, () => Any)](
+      "run" -> (() => dag.run(spark, Map("src" -> src), tmp(), hooks)),
+      "build" -> (() => dag.build(spark, Map("src" -> src), tmp(), hooks)),
+      "runTolerant" -> (() => dag.runTolerant(spark, Map("src" -> src), tmp(), hooks)),
+    ).foreach { case (entry, invoke) =>
+      events.clear()
+      invoke()
+      assert(events.toSeq == Seq(
+        "start:a,b", "before:a", "after:a:3", "before:b", "after:b:3",
+        "end:a,b,src"), entry)
+    }
   }
 
   test("full refresh rebuilds an incremental table from scratch") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.operators._
+import graft.pipeline.{Metric, Metrics}
 
 /** Physical-plan assertions: pushdown, pruning, broadcast — the properties
   * that make these plans survive a 100× scale-up. */
@@ -37,12 +38,9 @@ class PlanSpec extends SparkSpec {
       TextAnalysis.tokenCount(Tables.documents(spark, sf)),
       TextAnalysis.fingerprint(Tables.documents(spark, sf)),
     ).foreach { df =>
-      // drop the final presentation sort; the computation itself must not shuffle
-      val plan = df.queryExecution.optimizedPlan.toString
-      val exchanges = "Exchange|Repartition".r.findAllIn(
-        df.drop("doc_id").queryExecution.executedPlan.toString
-          .replaceAll("(?s)Sort .*", "")).size
-      assert(plan.nonEmpty && exchanges <= 1, s"text op shuffles more than the output sort")
+      val plan = explained(df)
+      assert(!"Exchange|Repartition|Sort".r.findFirstIn(plan).isDefined,
+        s"text op shuffles or sorts:\n$plan")
     }
   }
 
@@ -100,11 +98,119 @@ class PlanSpec extends SparkSpec {
       "stgLineitem" -> Relational.stgLineitem(Tables.lineitem(spark, sf)),
       "fctBucket" -> Relational.fctBucket(Tables.orders(spark, sf)),
       "extractProps" -> Json.extractProps(Tables.events(spark, sf)),
+      // an operator sorts only when order is its result: every output
+      // below is a row multiset, so a trailing orderBy would cost its two
+      // jobs (bounds sample + range exchange) for an order nobody reads
+      "mergeLatest" -> Incremental.mergeLatest(Tables.orders(spark, sf)),
+      "mergeColumnsQuery" -> Incremental.mergeColumnsQuery(Tables.orders(spark, sf)),
+      "schemaEvolution" -> Incremental.schemaEvolution(Tables.orders(spark, sf)),
+      "schemaSync" -> Incremental.schemaSync(Tables.orders(spark, sf)),
+      "scd2" -> Snapshot.scd2(Tables.orders(spark, sf)),
+      "scd2Check" -> Snapshot.scd2Check(Tables.orders(spark, sf)),
+      "testSuite" -> Checks.testSuite(Tables.orders(spark, sf), Tables.customer(spark, sf)),
+      "utilsTests" -> DbtUtils.utilsTests(Tables.orders(spark, sf), Tables.customer(spark, sf)),
+      "surrogateKeyQuery" -> DbtUtils.surrogateKeyQuery(Tables.orders(spark, sf)),
+      "dateSpine" -> DbtUtils.dateSpine(spark, "1998-01-01", "1998-02-01"),
+      "priorityFailures" -> StoreFailures.priorityFailures(Tables.orders(spark, sf)),
+      "runningSpend" -> Analytics.runningSpend(Tables.orders(spark, sf)),
+      "aggStats" -> Analytics.aggStats(Tables.orders(spark, sf)),
+      "customerHasOrders" -> Analytics.customerHasOrders(
+        Tables.customer(spark, sf), Tables.orders(spark, sf)),
+      "rollupAgg" -> Analytics.rollupAgg(Tables.orders(spark, sf)),
+      "setOps" -> Analytics.setOps(Tables.orders(spark, sf)),
+      "pivotEventValues" -> Analytics.pivotEventValues(Tables.events(spark, sf)),
+      "quantiles" -> Analytics.quantiles(Tables.orders(spark, sf)),
+      "customerLtv" -> Analytics.customerLtv(
+        Tables.customer(spark, sf), Tables.orders(spark, sf)),
+      "cohortRetention" -> Analytics.cohortRetention(Tables.orders(spark, sf)),
+      "histogram" -> Analytics.histogram(Tables.orders(spark, sf)),
+      "gapFill" -> Analytics.gapFill(Tables.orders(spark, sf)),
+      "streaks" -> Analytics.streaks(Tables.events(spark, sf)),
+      "sessionize" -> Sessions.sessionize(Tables.events(spark, sf)),
+      "tumbling" -> Sessions.tumbling(Tables.events(spark, sf)),
+      "funnel" -> Sessions.funnel(Tables.events(spark, sf)),
+      "lastSignupBeforePurchase" -> AsOf.lastSignupBeforePurchase(Tables.events(spark, sf)),
+      "shipmentsInWindows" -> RangeJoin.shipmentsInWindows(
+        Tables.orders(spark, sf), Tables.lineitem(spark, sf)),
+      "zorderKey" -> Materialize.zorderKey(Tables.orders(spark, sf)),
+      "typedOrderStats" -> graft.functions.TypedAggs.typedOrderStats(
+        spark, Tables.orders(spark, sf)),
+      "exact" -> Dedup.exact(Tables.documents(spark, sf)),
+      "langId" -> TextAnalysis.langId(Tables.documents(spark, sf)),
+      "repetitionNgrams" -> TextAnalysis.repetitionNgrams(Tables.documents(spark, sf)),
+      "tfidfTopTerms" -> TextAnalysis.tfidfTopTerms(Tables.documents(spark, sf)),
+      "perplexityScore" -> TextAnalysis.perplexityScore(Tables.documents(spark, sf)),
+      "heavyHittersPerGroupExact" ->
+        TextAnalysis.heavyHittersPerGroupExact(Tables.documents(spark, sf)),
+      "bm25TopK" -> TextAnalysis.bm25TopK(
+        Tables.documents(spark, sf).filter(col("doc_id") % 50 =!= 0),
+        Tables.documents(spark, sf).filter(col("doc_id") % 50 === 0)),
+      "tokenBudget" -> Curation.tokenBudget(Tables.documents(spark, sf)),
+      "domainQuota" -> Curation.domainQuota(Tables.documents(spark, sf)),
+      "sourceMix" -> Curation.sourceMix(Tables.documents(spark, sf)),
+      "docChunk" -> Curation.docChunk(Tables.documents(spark, sf)),
+      "samplePerGroup" -> Curation.samplePerGroup(Tables.documents(spark, sf)),
+      "topK" -> Similarity.topK(Tables.embeddings(spark, sf)),
+      "semanticDedup" -> Similarity.semanticDedup(Tables.embeddings(spark, sf)),
+      "embeddingQuantize" -> Similarity.embeddingQuantize(Tables.embeddings(spark, sf)),
+      "Metrics.query" -> Metrics.query(Tables.orders(spark, sf),
+        Metric("revenue", "orders", "sum(o_totalprice)",
+          dimensions = Seq("o_orderpriority"), timeDimension = Some("o_orderdate")),
+        Seq("o_orderpriority"), grain = Some("month")),
+      "Metrics.queryAll" -> Metrics.queryAll(Tables.orders(spark, sf),
+        Seq(Metric("revenue", "orders", "sum(o_totalprice)",
+          dimensions = Seq("o_orderpriority"))), Seq("o_orderpriority")),
     ).foreach { case (name, df) =>
       val sorts = df.queryExecution.optimizedPlan.collect {
         case s: org.apache.spark.sql.catalyst.plans.logical.Sort if s.global => s
       }
       assert(sorts.isEmpty, s"$name plans a global sort: $sorts")
+    }
+  }
+
+  test("the perfbench dbt DAG's table writes plan no global sort") {
+    import graft.pipeline._
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    import org.apache.spark.sql.execution.command.DataWritingCommand
+    // the models of perfbench's DbtDag (dbt_marts workload)
+    val dag = new Pipeline(Seq(
+      Model("stg_orders", Seq("orders"), ViewMat,
+        in => Relational.stgOrders(in("orders"))),
+      Model("fct_bucket", Seq("stg_orders"), TableMat(Some("bucket"), Seq("id")),
+        in => in("stg_orders").select(
+          col("order_key").as("id"), col("total_price").as("value"),
+          when(col("total_price") > 200000, "high").otherwise("regular").as("bucket"))),
+      Model("orders_merged", Seq("orders"), TableMat(),
+        in => Incremental.mergeLatest(in("orders"))),
+      Model("orders_snapshot", Seq("orders"), TableMat(),
+        in => Snapshot.scd2(in("orders"))),
+      Model("data_tests", Seq("orders", "customer"), TableMat(),
+        in => Checks.testSuite(in("orders"), in("customer")))))
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.exists(_.isInstanceOf[DataWritingCommand])) {
+          writes.add(qe.analyzed); ()
+        }
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_dag_writes_").toString
+    spark.listenerManager.register(listener)
+    try {
+      dag.run(spark, Map("orders" -> Tables.orders(spark, sf),
+        "customer" -> Tables.customer(spark, sf)), dir)
+      org.apache.spark.graftbridge.CoreBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val plans = writes.toArray.toSeq
+      .map(_.asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan])
+    assert(plans.size >= 4, s"expected the 4 TableMat writes, saw ${plans.size}")
+    plans.foreach { p =>
+      val sorts = p.collect { case s: Sort if s.global => s }
+      assert(sorts.isEmpty, s"a table write plans a global sort:\n$p")
     }
   }
 
@@ -227,14 +333,14 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("Window"), s"per-group sample fell back to a window:\n$plan")
   }
 
-  test("bucketed join + group-by run exchange-free (presentation sort only)") {
+  test("bucketed join + group-by run exchange-free") {
     val df = Materialize.bucketedSpend(
       spark, Tables.customer(spark, sf), Tables.orders(spark, sf), nBuckets = 4)
     val plan = explained(df)
     val exchanges = "Exchange".r.findAllIn(plan).size
     assert(plan.contains("SortMergeJoin"), s"expected SMJ over bucketed scans:\n$plan")
-    assert(exchanges == 1,
-      s"bucketed join should only exchange for the final sort, got $exchanges:\n$plan")
+    assert(exchanges == 0,
+      s"bucketed join should not exchange, got $exchanges:\n$plan")
   }
 
   test("binned range join plans an equi hash join, never a nested loop") {
@@ -313,7 +419,7 @@ class PlanSpec extends SparkSpec {
     val df = Curation.temperatureSample(Tables.documents(spark, sf))
     val plan = explained(df)
     // the documents scan flows through a broadcast join + filter; the only
-    // exchanges are the #sources-row aggregates and the presentation sort
+    // exchanges are the #sources-row aggregates
     val bhj = "BroadcastHashJoin".r.findAllIn(plan).size
     assert(bhj >= 1, s"rate map not broadcast:\n$plan")
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
@@ -555,18 +661,17 @@ class PlanSpec extends SparkSpec {
 
   test("the n-gram models without a pin of their own keep their shape: " +
        "partial aggregation, no cartesian, the exchange reused where the " +
-       "model aggregates from the scoring side, no global sort but the " +
-       "presentation one") {
+       "model aggregates from the scoring side, no global sort") {
     val docs = Tables.documents(spark, sf)
-    // (model, frame, reuses an exchange, ends in a presentation sort)
+    // (model, frame, reuses an exchange)
     Seq(
-      ("perplexityKnMod", TextAnalysis.perplexityKnMod(docs), true, false),
-      ("perplexityKn3", TextAnalysis.perplexityKn3(docs), true, false),
+      ("perplexityKnMod", TextAnalysis.perplexityKnMod(docs), true),
+      ("perplexityKn3", TextAnalysis.perplexityKn3(docs), true),
       ("perplexityKnCross", TextAnalysis.perplexityKnCross(
         docs.filter(col("doc_id") % 2 === 1),
-        docs.filter(col("doc_id") % 2 === 0)), true, false),
-      ("langIdModelWide", TextAnalysis.langIdModelWide(docs), false, true),
-    ).foreach { case (name, df, reuses, sorted) =>
+        docs.filter(col("doc_id") % 2 === 0)), true),
+      ("langIdModelWide", TextAnalysis.langIdModelWide(docs), false),
+    ).foreach { case (name, df, reuses) =>
       df.collect() // ReusedExchange appears in the final adaptive plan
       val plan = df.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
@@ -575,9 +680,8 @@ class PlanSpec extends SparkSpec {
       assert(!plan.contains("CartesianProduct"), s"$name: cartesian:\n$plan")
       if (reuses) assert(plan.contains("ReusedExchange"),
         s"$name: the model re-tokenizes the corpus:\n$plan")
-      val ranges = "Exchange rangepartitioning".r.findAllIn(plan).size
-      assert(ranges == (if (sorted) 1 else 0),
-        s"$name: $ranges range exchanges:\n$plan")
+      assert(!plan.contains("Exchange rangepartitioning"),
+        s"$name: a range exchange:\n$plan")
     }
   }
 
@@ -667,15 +771,15 @@ class PlanSpec extends SparkSpec {
   }
 
   test("gopher quality: the gate is scan-bound — no join, no aggregate, " +
-       "no window, no hash exchange (presentation sort only)") {
+       "no window, no exchange, no sort") {
     val df = TextAnalysis.gopherQuality(Tables.documents(spark, sf))
     val plan = explained(df)
     assert(!plan.contains("Join"), s"gate plans a join:\n$plan")
     assert(!plan.contains("HashAggregate") && !plan.contains("SortAggregate"),
       s"gate plans an aggregate:\n$plan")
     assert(!plan.contains("Window"), s"gate plans a window:\n$plan")
-    assert(!plan.contains("hashpartitioning"),
-      s"gate plans a hash exchange:\n$plan")
+    assert(!plan.contains("Exchange") && !plan.contains("Sort"),
+      s"gate plans an exchange or a sort:\n$plan")
   }
 
   test("boilerplate removal (r15): the block classifier is scan-bound " +

@@ -16,6 +16,26 @@ class StreamingSpec extends SparkSpec {
     assert(stream == batch)
   }
 
+  test("events reads leave the caller's nanosAsLong as it was and read " +
+       "the same rows as a session that sets it") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val caller = graft.util.Scoped.session(spark, key -> "false")
+    val preset = graft.util.Scoped.session(spark, key -> "true")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("event_id", "ts_s").collect().map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
+    val want = ids(Tables.events(preset, sf))
+    assert(ids(Tables.events(caller, sf)) == want)
+    assert(caller.conf.get(key) == "false", "Tables.events set the caller's conf")
+    val stream = StreamOps.eventsStream(caller, sf)
+    assert(caller.conf.get(key) == "false", "eventsStream set the caller's conf")
+    val q = stream.select("event_id", "ts_s").writeStream.format("memory")
+      .queryName("graft_events_scoped")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+    assert(ids(caller.table("graft_events_scoped")) == want)
+    assert(caller.conf.get(key) == "false")
+  }
+
   test("stream dedup of a doubled source equals batch per-type counts") {
     val batch = Tables.events(spark, sf).groupBy("event_type").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
