@@ -239,7 +239,7 @@ object OracleSql {
       """SELECT o_orderkey, o_totalprice, CAST(NULL AS BIGINT) AS o_custkey FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01' UNION ALL SELECT o_orderkey, o_totalprice, o_custkey FROM orders WHERE o_orderdate >= TIMESTAMP '1998-01-01' ORDER BY o_orderkey""",
 
     "test_suite" ->
-      """SELECT * FROM (SELECT 'accepted_values_o_orderstatus' AS test_name, (SELECT COUNT(*) FROM orders WHERE o_orderstatus NOT IN ('O','F','P')) AS violations UNION ALL SELECT 'not_null_o_custkey', (SELECT COUNT(*) FROM orders WHERE o_custkey IS NULL) UNION ALL SELECT 'relationships_o_custkey', (SELECT COUNT(*) FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey WHERE c.c_custkey IS NULL) UNION ALL SELECT 'unique_o_orderkey', (SELECT COUNT(*) FROM (SELECT o_orderkey FROM orders GROUP BY 1 HAVING COUNT(*) > 1) v)) ORDER BY test_name""",
+      """SELECT * FROM (SELECT 'accepted_values_o_orderstatus' AS test_name, (SELECT COUNT(*) FROM orders WHERE o_orderstatus NOT IN ('O','F','P')) AS violations UNION ALL SELECT 'not_null_o_custkey', (SELECT COUNT(*) FROM orders WHERE o_custkey IS NULL) UNION ALL SELECT 'relationships_o_custkey', (SELECT COUNT(*) FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey WHERE o.o_custkey IS NOT NULL AND c.c_custkey IS NULL) UNION ALL SELECT 'unique_o_orderkey', (SELECT COUNT(*) FROM (SELECT o_orderkey FROM orders GROUP BY 1 HAVING COUNT(*) > 1) v)) ORDER BY test_name""",
 
     "dev_prod_diff" ->
       """WITH dev AS (SELECT o_orderkey AS id, CASE WHEN o_totalprice > 200000 THEN 'high' ELSE 'regular' END AS bucket FROM orders), prod AS (SELECT o_orderkey AS id, CASE WHEN o_totalprice > 300000 THEN 'high' ELSE 'regular' END AS bucket FROM orders), diff AS (SELECT 'in_dev_not_in_prod' AS diff_type, id, bucket FROM (SELECT * FROM dev EXCEPT SELECT * FROM prod) UNION ALL SELECT 'in_prod_not_in_dev' AS diff_type, id, bucket FROM (SELECT * FROM prod EXCEPT SELECT * FROM dev)), capped AS (SELECT * FROM diff ORDER BY diff_type, id LIMIT 100), summary AS (SELECT 'summary_dev_rows' AS diff_type, (SELECT COUNT(*) FROM dev) AS id, CAST(NULL AS VARCHAR) AS bucket UNION ALL SELECT 'summary_prod_rows', (SELECT COUNT(*) FROM prod), NULL) SELECT * FROM (SELECT * FROM capped UNION ALL SELECT * FROM summary) ORDER BY diff_type, id""",

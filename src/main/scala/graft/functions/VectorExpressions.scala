@@ -205,33 +205,11 @@ case class JaccardSortedLongs(left: Expression, right: Expression)
     val y = b.asInstanceOf[ArrayData]
     if (checkLeft) rejectNulls(x, "left")
     if (checkRight) rejectNulls(y, "right")
-    val n = x.numElements(); val m = y.numElements()
-    var i = 0; var j = 0
-    var inter = 0; var union = 0
-    var last = 0L; var hasLast = false
-    while (i < n || j < m) {
-      val takeA = j >= m || (i < n && x.getLong(i) <= y.getLong(j))
-      val v = if (takeA) x.getLong(i) else y.getLong(j)
-      if (!hasLast || v != last) {
-        val inA = i < n && x.getLong(i) == v
-        val inB = j < m && y.getLong(j) == v
-        union += 1
-        if (inA && inB) inter += 1
-        last = v; hasLast = true
-      }
-      if (takeA) i += 1 else j += 1
-    }
-    if (union == 0) 0.0 else inter.toDouble / union
+    JaccardSortedLongs.walk(x, y)
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val m = ctx.freshName("m")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val inter = ctx.freshName("inter"); val union = ctx.freshName("union")
-      val last = ctx.freshName("last"); val hasLast = ctx.freshName("hasLast")
-      val takeA = ctx.freshName("takeA"); val v = ctx.freshName("v")
-      val inA = ctx.freshName("inA"); val inB = ctx.freshName("inB")
       lazy val ref = ctx.addReferenceObj("jaccardSorted", this,
         classOf[JaccardSortedLongs].getName)
       val guard =
@@ -239,29 +217,45 @@ case class JaccardSortedLongs(left: Expression, right: Expression)
         (if (checkRight) s"""$ref.rejectNulls($b, "right");\n""" else "")
       s"""
         $guard
-        int $n = $a.numElements(); int $m = $b.numElements();
-        int $i = 0; int $j = 0;
-        int $inter = 0; int $union = 0;
-        long $last = 0L; boolean $hasLast = false;
-        while ($i < $n || $j < $m) {
-          boolean $takeA = $j >= $m || ($i < $n && $a.getLong($i) <= $b.getLong($j));
-          long $v = $takeA ? $a.getLong($i) : $b.getLong($j);
-          if (!$hasLast || $v != $last) {
-            boolean $inA = $i < $n && $a.getLong($i) == $v;
-            boolean $inB = $j < $m && $b.getLong($j) == $v;
-            $union++;
-            if ($inA && $inB) $inter++;
-            $last = $v; $hasLast = true;
-          }
-          if ($takeA) $i++; else $j++;
-        }
-        ${ev.value} = ($union == 0) ? 0.0 : ((double) $inter) / $union;
+        ${ev.value} = ${classOf[JaccardSortedLongs].getName}.walk($a, $b);
       """
     })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object JaccardSortedLongs {
+  /** The merge walk behind both `eval` and codegen (a static call from
+    * the generated code). `a` and `b` hold the current distinct value of
+    * each side: each element is read once, a run of equal values is
+    * skipped as it is read, and nothing is allocated. `x` and `y` are
+    * sorted and null-free. */
+  def walk(x: ArrayData, y: ArrayData): Double = {
+    val n = x.numElements(); val m = y.numElements()
+    var i = 0; var j = 0
+    var inter = 0; var union = 0
+    var a = if (n > 0) x.getLong(0) else 0L
+    var b = if (m > 0) y.getLong(0) else 0L
+    while (i < n && j < m) {
+      union += 1
+      if (a < b) {
+        val v = a; i += 1; while (i < n && { a = x.getLong(i); a == v }) i += 1
+      } else if (b < a) {
+        val v = b; j += 1; while (j < m && { b = y.getLong(j); b == v }) j += 1
+      } else {
+        inter += 1
+        val v = a
+        i += 1; while (i < n && { a = x.getLong(i); a == v }) i += 1
+        j += 1; while (j < m && { b = y.getLong(j); b == v }) j += 1
+      }
+    }
+    // one side is spent: the other's distinct tail joins the union
+    while (i < n) { union += 1; val v = a; i += 1; while (i < n && { a = x.getLong(i); a == v }) i += 1 }
+    while (j < m) { union += 1; val v = b; j += 1; while (j < m && { b = y.getLong(j); b == v }) j += 1 }
+    if (union == 0) 0.0 else inter.toDouble / union
+  }
 }
 
 /** Index of the first length-`width` aligned block ("band") on which the two

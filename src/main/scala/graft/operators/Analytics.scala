@@ -17,7 +17,7 @@ import graft.util.Det._
 object Analytics {
 
   private def revenueCents: Column =
-    round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100, 0).cast("long")
+    cents(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
 
   /** TPC-H Q1-shaped pricing summary: one shuffle (partial agg → 6 groups). */
   def pricingSummary(lineitem: DataFrame): DataFrame =
@@ -167,7 +167,7 @@ object Analytics {
     val types = Seq("click", "error", "purchase", "signup", "view")
     val agged = events.groupBy(col("user_id"))
       .pivot("event_type", types)
-      .agg(sum(round(col("value") * 100, 0).cast("long")))
+      .agg(sum(cents(col("value"))))
     // zero-fill AFTER the pivot: missing (user, type) cells surface as NULL
     // in the pivoted columns, not inside the pre-pivot aggregate
     types.foldLeft(agged) { (df, t) =>
@@ -281,7 +281,7 @@ object Analytics {
     val perCustomer = orders.groupBy(col("o_custkey"))
       .agg(
         count(lit(1)).as("n_orders"),
-        sum(round(col("o_totalprice") * 100, 0).cast("long")).as("spend_cents"),
+        sum(cents(col("o_totalprice"))).as("spend_cents"),
         min(col("o_orderdate").cast("date")).as("first_order"),
         max(col("o_orderdate").cast("date")).as("last_order"))
     val w = Window.partitionBy("c_mktsegment")
@@ -325,7 +325,7 @@ object Analytics {
     * shuffle to ≤ #buckets groups. */
   def histogram(orders: DataFrame, widthCents: Long = 5000000L): DataFrame =
     orders
-      .select((round(col("o_totalprice") * 100, 0).cast("long") / widthCents)
+      .select((cents(col("o_totalprice")) / widthCents)
         .cast("long").as("bucket"),
         col("o_totalprice"))
       .groupBy("bucket")

@@ -339,7 +339,9 @@ object Incremental {
   * violation count; the suite unions the summary rows. The three tests
   * on `orders` alone share one scan: the row-local counts
   * (`accepted_values`, `not_null`) ride as conditional counts on the
-  * per-key aggregate that `unique` needs.
+  * per-key aggregate that `unique` needs. `relationships` drops NULL child
+  * keys first, as dbt does: a NULL `o_custkey` is `not_null`'s violation,
+  * not a dangling reference.
   */
 object Checks {
   def testSuite(orders: DataFrame, customer: DataFrame): DataFrame = {
@@ -354,7 +356,8 @@ object Checks {
         "'not_null_o_custkey', nn, 'unique_o_orderkey', uq) " +
         "AS (test_name, violations)"))
     val relationships =
-      orders.join(customer, col("o_custkey") === col("c_custkey"), "left_anti")
+      orders.filter(col("o_custkey").isNotNull)
+        .join(customer, col("o_custkey") === col("c_custkey"), "left_anti")
         .agg(count(lit(1)).as("violations"))
         .select(lit("relationships_o_custkey").as("test_name"), col("violations"))
     onOrders.unionAll(relationships)
@@ -1503,7 +1506,7 @@ object Curation {
     val minN = counts.agg(min("n_docs").as("n_min"))
     val rates = counts.crossJoin(broadcast(minN))
       .select(col("source"),
-        round(pow(col("n_min").cast("double") / col("n_docs"), 1 - alpha) * 10000, 0)
+        halfUp(pow(col("n_min").cast("double") / col("n_docs"), 1 - alpha) * 10000)
           .cast("long").as("rate_bp"))
     // draw ∈ [0, 16^6): first 6 hex chars of md5; accept iff
     // draw/16^6 < rate_bp/10^4, cross-multiplied to stay integral
@@ -1546,8 +1549,8 @@ object Curation {
       .limit(1).select(col("tok").as("tok_star"), col("w").as("w_star"))
     val rates = toks.crossJoin(broadcast(star))
       .select(col("source"),
-        round(lit(10000.0) * col("w") * col("tok_star") /
-          (col("w_star") * col("tok")), 0).cast("long").as("rate_bp"))
+        halfUp(lit(10000.0) * col("w") * col("tok_star") /
+          (col("w_star") * col("tok"))).cast("long").as("rate_bp"))
     val draw = conv(substring(md5(col("doc_id").cast("string")), 1, 6), 16, 10)
       .cast("long")
     documents.join(broadcast(rates), "source")
@@ -1621,9 +1624,9 @@ object Curation {
     // the double products are exact below 2^53 and IEEE-identical above
     // it (same longs, same operation order in both engines)
     cnt.crossJoin(broadcast(tot))
-      .select(col("b"), round(log(
+      .select(col("b"), halfUp(log(
         ((col("ct") + 1.0) * (col("nr") + numBuckets)) /
-          ((col("cr") + 1.0) * (col("nt") + numBuckets))) * 1e6, 0)
+          ((col("cr") + 1.0) * (col("nt") + numBuckets))) * 1e6)
         .cast("long").as("w_unats"))
   }
 

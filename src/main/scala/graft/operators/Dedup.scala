@@ -664,10 +664,7 @@ object Dedup {
     // at sf0.1 for nothing — the cheap projection over the existing cached
     // blocks serves every reference.
     val eSel = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-    val e0 =
-      if (pairs.queryExecution.analyzed
-          .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) eSel
-      else eSel.localCheckpoint()
+    val e0 = if (materialized(pairs)) eSel else eSel.localCheckpoint()
     // Scale-adaptive loop parallelism (guide §2.2/§2.4: derive the
     // partitioning from the data, never from a constant): every exchange
     // inside the iterative loop is edge/node-scale, the loop runs O(log D)
@@ -801,6 +798,19 @@ object Dedup {
       graft.util.Scoped.rebind(labels, callerSession)
     }
   }
+
+  /** Whether `df` reads blocks that are already stored: an RDD-backed
+    * frame whose RDD is checkpointed or persisted (a `localCheckpoint`
+    * result, as the memoized shared pair builds are). A plain
+    * `createDataFrame(rdd)` frame is RDD-backed too, but it recomputes its
+    * source on every reference. */
+  private[graft] def materialized(df: DataFrame): Boolean =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.isCheckpointed ||
+          lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
+      case _ => false
+    }
 
   /** Drop a materialized localCheckpoint's cached blocks (the frame must
     * never be recomputed afterwards — lineage is truncated). */

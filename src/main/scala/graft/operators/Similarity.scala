@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.util.Det.round4
+import graft.util.Det.{halfUp, round4}
 import graft.util.{FanOut, PayloadJoin}
 import graft.functions.VectorFunctions.cosine
 
@@ -709,7 +709,7 @@ object Similarity {
       .select(col("vec_id"), col("label"),
         round4(col("mn")).as("qmin"), round4(col("mx")).as("qmax"),
         when(col("scale") > 0,
-          transform(e, x => round((x.cast("double") - col("mn")) / col("scale"), 0).cast("int")))
+          transform(e, x => halfUp((x.cast("double") - col("mn")) / col("scale")).cast("int")))
           .otherwise(transform(e, _ => lit(0)))
           .as("q"))
   }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.util.Det.round4
+import graft.util.Det.{halfUp, round4}
 import graft.util.{FanOut, TextNorm}
 
 /** Text analysis for training-data curation: language ID, quality scoring,
@@ -56,7 +56,7 @@ object TextAnalysis {
     * class scores, flags — is an EXACT integer sum or cross-
     * multiplication (associative, partitioning-independent), so the
     * whole report hash-adjudicates. */
-  private def microNats(e: Column): Column = round(e * 1e6, 0).cast("long")
+  private def microNats(e: Column): Column = halfUp(e * 1e6).cast("long")
 
   /** The integer scorer of the micro-nat models: `tf` ⋈ `model` (gram
     * columns w1…wn, plus `unats`) on the grams, per-doc `n_<grams>` and
@@ -1226,7 +1226,7 @@ object TextAnalysis {
     val wtd = FanOut.pin(tf.join(dftSized, Seq("t"))
       .crossJoin(broadcast(stats))
       .select(col("t"), col("doc_id"),
-        round(idf * (col("tf").cast("double") * lit(2.2)) / denom * 1e6, 0)
+        halfUp(idf * (col("tf").cast("double") * lit(2.2)) / denom * 1e6)
           .cast("long").as("w_micro")), col("doc_id"))
     val qt = queries.select(col("doc_id").as("query_id"),
         explode(distinctWords).as("t"))

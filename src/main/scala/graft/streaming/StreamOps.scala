@@ -4,7 +4,7 @@ import graft.sources.Parquet
 import graft.operators.Multimodal
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.Det.centsSum
+import graft.util.Det.{cents, centsSum}
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
   OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -225,14 +225,14 @@ object StreamOps {
       import r.spark.implicits._
       val observed = eventsStream(r.spark, dir)
         .observe("ingest", count(lit(1)).as("n_rows"),
-          sum(round(col("value") * 100, 0).cast("long")).as("cents"))
+          sum(cents(col("value"))).as("cents"))
       val q = drain(tumblingAgg(observed).writeStream
         .format("noop").outputMode(OutputMode.Complete()))
       val perBatch = q.recentProgress.toSeq
         .flatMap(p => Option(p.observedMetrics.get("ingest")))
       val nRows = perBatch.map(_.getLong(0)).sum
-      val cents = perBatch.map(m => if (m.isNullAt(1)) 0L else m.getLong(1)).sum
-      Seq((nRows, cents / 100.0)).toDF("n_rows", "total_value")
+      val totalCents = perBatch.map(m => if (m.isNullAt(1)) 0L else m.getLong(1)).sum
+      Seq((nRows, totalCents / 100.0)).toDF("n_rows", "total_value")
     }
 
   /** Runs [[tumblingAgg]] over the parquet source to completion and returns

@@ -54,6 +54,28 @@ class ClusterSpec extends SparkSpec {
     assert(checks > 0, "loop finished before any concurrent plan was checked")
   }
 
+  test("connected components checkpoint an RDD-built pair frame once, and " +
+       "reuse a checkpointed one as it is") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val edges = (0L until 40L).map(i => (i, i + 1))
+    val reads = spark.sparkContext.longAccumulator("pair-source reads")
+    val rdd = spark.sparkContext.parallelize(edges, 2)
+      .map { case (a, b) => reads.add(1); Row(a, b) }
+    val fromRdd = spark.createDataFrame(rdd, StructType(Seq(
+      StructField("doc_a", LongType), StructField("doc_b", LongType))))
+    assert(!Dedup.materialized(fromRdd))
+    val labels = Dedup.connectedComponents(fromRdd, maxIter = 10)
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(labels.length == 41 && labels.forall(_._2 == 0L))
+    // the loop reads the source once, for its checkpoint, not per reference
+    assert(reads.value == edges.size, s"source read ${reads.value} rows")
+    // the memoized shared pair builds are localCheckpoint results
+    val shared = edges.toDF("doc_a", "doc_b").localCheckpoint()
+    assert(Dedup.materialized(shared))
+    assert(!Dedup.materialized(edges.toDF("doc_a", "doc_b")))
+  }
+
   test("connected components require maxIter >= 1 (loop-scratch frees " +
        "assume one materialized round)") {
     val edges = Seq((1L, 2L)).toDF("doc_a", "doc_b")

@@ -77,6 +77,19 @@ class OperatorsSpec extends SparkSpec {
     assert(suite.agg(sum("violations")).head.getLong(0) == 0)
   }
 
+  test("test_suite: a NULL child key is a not_null violation, never a " +
+       "relationships one (dbt drops NULL child values first)") {
+    import spark.implicits._
+    val orders = Seq((1L, Option(7L), "O"), (2L, Option.empty[Long], "F"))
+      .toDF("o_orderkey", "o_custkey", "o_orderstatus")
+    val customer = Seq(7L).toDF("c_custkey")
+    val got = Checks.testSuite(orders, customer).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got == Map("accepted_values_o_orderstatus" -> 0L,
+      "not_null_o_custkey" -> 1L, "relationships_o_custkey" -> 0L,
+      "unique_o_orderkey" -> 0L))
+  }
+
   test("stratified sample: deterministic with seed, rates within bounds") {
     val docs = Tables.documents(spark, sf)
     val fr = Map("en" -> 0.5, "de" -> 0.5, "es" -> 0.5, "fr" -> 0.5, "zh" -> 0.5)

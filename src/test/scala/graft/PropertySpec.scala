@@ -447,4 +447,94 @@ class PropertySpec extends AnyFunSuite {
         s"hot-only pair: maxBandDf=$maxBandDf minAgree=$minAgree")
     }
   }
+
+  test("sorted-long jaccard: interpreted and generated code both equal the " +
+       "Set reference on random sorted arrays (duplicates, empty sides)") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeArrayData}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    import graft.functions.JaccardSortedLongs
+    val extremes = Seq(Long.MinValue, -1L, 0L, Long.MaxValue)
+    val side = for {
+      n <- Gen.frequency(1 -> Gen.const(0), 6 -> Gen.choose(1, 40))
+      range <- Gen.oneOf(4L, 30L, 1000L)
+      xs <- Gen.listOfN(n, Gen.frequency(
+        8 -> Gen.choose(-range, range), 1 -> Gen.oneOf(extremes)))
+    } yield xs.sorted.toArray
+    val gen = Gen.listOfN(40, Gen.zip(side, side))
+    // both null-free and containsNull-typed inputs (the latter add the
+    // null guard to the generated code)
+    val exprs = Seq(false, true).map { containsNull =>
+      val t = ArrayType(LongType, containsNull)
+      JaccardSortedLongs(BoundReference(0, t, nullable = false),
+        BoundReference(1, t, nullable = false))
+    }
+    val compiled = exprs.map(e => GenerateMutableProjection.generate(Seq(e)))
+    forAllSampled(gen, 20) { pairs =>
+      pairs.foreach { case (a, b) =>
+        val (sa, sb) = (a.toSet, b.toSet)
+        val union = (sa | sb).size
+        val want = if (union == 0) 0.0 else (sa & sb).size.toDouble / union
+        val inputs = Seq(
+          InternalRow(UnsafeArrayData.fromPrimitiveArray(a),
+            UnsafeArrayData.fromPrimitiveArray(b)),
+          InternalRow(new GenericArrayData(a.toSeq), new GenericArrayData(b.toSeq)))
+        for (row <- inputs; (e, proj) <- exprs.zip(compiled)) {
+          val ctx = s"${a.toSeq} vs ${b.toSeq}"
+          assert(e.eval(row) == want, s"interpreted: $ctx")
+          assert(proj(row).getDouble(0) == want, s"generated: $ctx")
+        }
+      }
+    }
+  }
+
+  test("scale-0 half-up round equals functions.round(x, 0) bit for bit " +
+       "(sign of zero, NaN and infinities included), in generated code and " +
+       "interpreted; a non-double input fails analysis") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Round}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types.DoubleType
+    import graft.functions.RoundHalfUp
+    import graft.util.Det
+    val rnd = new scala.util.Random(97)
+    val edges = Seq(0.49999999999999994, 0.5, -0.5, 1.5, -1.5, 2.5, -2.5,
+      0.0, -0.0, -0.3, 4.9e-324, -4.9e-324, 4503599627370495.5,
+      -4503599627370495.5, 4503599627370496.0, 9007199254740993.0,
+      Double.MaxValue, -Double.MaxValue, Double.NaN,
+      Double.PositiveInfinity, Double.NegativeInfinity)
+    val halves = (0 until 2000).flatMap { _ =>
+      val n = (rnd.nextLong() >> rnd.nextInt(63)).toDouble + 0.5
+      Seq(n, Math.nextUp(n), Math.nextDown(n), -n)
+    }
+    val cents = (0 until 20000).map(_ => (rnd.nextInt(2000000) - 1000000) / 100.0 * 100)
+    val uniform = (0 until 20000).map(_ => (rnd.nextDouble() - 0.5) * 2e4)
+    val bits = (0 until 60000).map(_ => java.lang.Double.longBitsToDouble(rnd.nextLong()))
+    val xs = edges ++ halves ++ cents ++ uniform ++ bits
+    def raw(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    // whole-stage generated code on both sides
+    val got = xs.toDF("x").select(Det.halfUp(col("x")), round(col("x"), 0))
+      .collect().map(r => (r.getDouble(0), r.getDouble(1)))
+    assert(got.length == xs.length)
+    got.zip(xs).foreach { case ((mine, theirs), x) =>
+      assert(raw(mine) == raw(theirs), s"x=$x: $mine vs Spark's $theirs")
+    }
+    // the interpreted paths of both expressions
+    val in = BoundReference(0, DoubleType, nullable = true)
+    val mine = RoundHalfUp(in)
+    val theirs = Round(in, Literal(0))
+    xs.foreach { x =>
+      val row = InternalRow(x)
+      val (m, s) = (mine.eval(row).asInstanceOf[Double], theirs.eval(row).asInstanceOf[Double])
+      assert(raw(m) == raw(s), s"interpreted x=$x: $m vs Spark's $s")
+    }
+    assert(mine.eval(InternalRow(null)) == null)
+    for (bad <- Seq(lit(1L), lit(1), lit(1.5f), lit(BigDecimal("1.5")))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.range(1).select(Det.halfUp(bad)).collect())
+      assert(e.getMessage.contains("graft_round_half_up expects double"), e.getMessage)
+    }
+  }
 }
