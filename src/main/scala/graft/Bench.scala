@@ -105,7 +105,7 @@ object Bench {
       "orders", "lineitem", "events", "documents", "embeddings")
     tables.foreach { t =>
       try Parquet.read(spark, s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () } // warm-up only; absence is fine
+      catch { case scala.util.control.NonFatal(_) => () } // warm-up only; absence is fine
     }
 
     // ---- calibration probe: fixed CPU-bound work, identical every round ----
@@ -255,7 +255,8 @@ object Bench {
         try System.err.println(s"=== $name ===\n" +
           fn(spark, sfDir).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode))
-        catch { case e: Throwable => System.err.println(s"=== $name === explain failed: $e") }
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"=== $name === explain failed: $e") }
       }
       // (wall, cpu) per successful attempt
       def once(): Option[(Double, Double)] = {
@@ -269,7 +270,7 @@ object Bench {
           val w = (System.nanoTime() - t0) / 1e9
           Some((w, (cpuSnapshot() - c0) / 1e9))
         } catch {
-          case e: Throwable =>
+          case scala.util.control.NonFatal(e) =>
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
               .replaceAll("[\"\\\\\n\r\t]", " ").take(300)
             None
@@ -439,7 +440,7 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")),
       (full + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case scala.util.control.NonFatal(_) => () }
     spark.stop()
   }
 }

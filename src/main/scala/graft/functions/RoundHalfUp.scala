@@ -43,4 +43,18 @@ object RoundHalfUp {
     val r = if (ax - f >= 0.5) f + 1.0 else f
     if (r == 0.0) 0.0 else if (x < 0) -r else r
   }
+
+  private val TwoTo63 = math.pow(2, 63) // -2^63 is Long.MinValue
+
+  /** [[round]] as a long: the one per-row scalar HALF_UP for the integer
+    * cents and micro-unit twins of the column rounds. NaN, ±Inf and
+    * values outside the long range have no such integer and fail with an
+    * `IllegalArgumentException` naming the value, never a silent 0 or a
+    * wrapped long. */
+  def toLong(x: Double): Long = {
+    val r = round(x)
+    if (!(r >= -TwoTo63 && r < TwoTo63)) // NaN, ±Inf, out of range
+      throw new IllegalArgumentException(s"no half-up long for $x")
+    r.toLong
+  }
 }

@@ -18,13 +18,9 @@ case class OrderRow(o_orderkey: Long, o_custkey: Long, o_orderstatus: String,
   * `round(x*100)` in Spark SQL and to the DuckDB oracle's ROUND (see
   * Det.scala's integer-scale rounding argument). */
 object OrderStatsAgg extends Aggregator[OrderRow, (Long, Long), (Long, Double)] {
-  private def cents(v: Double): Long =
-    java.math.BigDecimal.valueOf(v * 100)
-      .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-
   override def zero: (Long, Long) = (0L, 0L)
   override def reduce(b: (Long, Long), a: OrderRow): (Long, Long) =
-    (b._1 + 1, b._2 + cents(a.o_totalprice))
+    (b._1 + 1, b._2 + RoundHalfUp.toLong(a.o_totalprice * 100))
   override def merge(x: (Long, Long), y: (Long, Long)): (Long, Long) =
     (x._1 + y._1, x._2 + y._2)
   override def finish(r: (Long, Long)): (Long, Double) = (r._1, r._2 / 100.0)

@@ -136,13 +136,13 @@ object Dedup {
         Seq("band_idx", "band_hash"))
       .filter(graft.functions.VectorFunctions.firstEqualBand(
         col("sig_b"), col("sig_c"), r) === col("band_idx"))
-    val cand = FanOut.pin((if (minAgree == 0) cand0
+    // no id-pair exchange before the verify, as in minhashLsh: the payload
+    // joins run in the band-join stage (sf0.1, 4 cores: executor cpu
+    // 2.2-2.7 s with the barrier, 1.4-1.7 s without)
+    val cand = (if (minAgree == 0) cand0
       else cand0.filter(graft.functions.VectorFunctions.equalPositions(
         col("sig_b"), col("sig_c")) >= minAgree))
-      .select(col("doc_b"), col("doc_c")),
-      // id-pair stage barrier before the payload verify (same finding as
-      // minhashLsh: fused, the verify rides the pair-amplifying iterator)
-      col("doc_b"))
+      .select(col("doc_b"), col("doc_c"))
     val bw = batch.select(col("doc_id").as("doc_b"), hashedWordSet.as("wb"))
     val cw = corpus.select(col("doc_id").as("doc_c"), hashedWordSet.as("wc"))
     verifiedJaccard(cand
@@ -177,10 +177,10 @@ object Dedup {
         col("lang") === col("lang_b") && col("band") === col("band_b") &&
           col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b")
-    // stage barrier before the verify — same finding as minhashLsh: fused
-    // into the block-join emit stage, the payload probes + set jaccard run
-    // inside the pair-amplifying iterator and cost 3x (id-pair exchange is
-    // 16 B/row and co-partitions the first payload attach)
+    // stage barrier before the verify: fused into the block-join emit
+    // stage, the payload probes + set jaccard run inside the
+    // pair-amplifying iterator and cost 3x (id-pair exchange is 16 B/row
+    // and co-partitions the first payload attach)
     val pinned = FanOut.pin(pairs, col("doc_a"))
     val pay = documents.select(col("doc_id"), payload.as("p"))
     pinned
@@ -314,19 +314,16 @@ object Dedup {
     // generation and the exact verify.
     val minAgree = math.max(0.0, (threshold - prefilterSlackSd * math.sqrt(
       threshold * (1 - threshold) / numHashes)) * numHashes).floor.toInt
-    val cand = bandCandidates(banded, bands, r, minAgree, maxBandDf)
-    // Stage barrier before the verify: without it the payload probes +
-    // set-jaccard fuse INTO the pair-emit stage and the whole verify rides
-    // the pair iterator (measured 12.5 s vs 4.3 s at sf0.1 on the former
-    // band join). The exchange is id-pairs only (16 B/row), co-partitions
-    // the first payload attach, and gives AQE a replan point with true
-    // pair stats.
-    val pinned = FanOut.pin(cand, col("doc_a"))
+    // The verify runs in the bucket stage, on the pairs as the kernel emits
+    // them. An id-pair exchange between the two (the band-join-era
+    // barrier) only shuffles every candidate: warm sf0.1, 4 cores,
+    // executor cpu 3.4-4.0 s with it, 2.1-2.6 s without, wall flat
+    // (plans/r22). A shuffled payload join brings its own doc_a exchange.
     // The docs side is usually tiny next to millions of candidate pairs, but
     // the choice is the caller's PayloadJoin strategy (default: AQE decides),
     // never a hardcoded hint that would OOM at corpus scale.
     val docsW = documents.select(col("doc_id"), hashedWordSet.as("w"))
-    verifiedJaccard(pinned
+    verifiedJaccard(bandCandidates(banded, bands, r, minAgree, maxBandDf)
       .join(payloadJoin.hint(docsW.select(col("doc_id").as("doc_a"), col("w").as("wa"))), "doc_a")
       .join(payloadJoin.hint(docsW.select(col("doc_id").as("doc_b"), col("w").as("wb"))), "doc_b"),
       col("wa"), col("wb"), threshold)
@@ -664,7 +661,8 @@ object Dedup {
     // at sf0.1 for nothing — the cheap projection over the existing cached
     // blocks serves every reference.
     val eSel = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-    val e0 = if (materialized(pairs)) eSel else eSel.localCheckpoint()
+    val ownEdges = !materialized(pairs)
+    val e0 = if (ownEdges) eSel.localCheckpoint() else eSel
     // Scale-adaptive loop parallelism (guide §2.2/§2.4: derive the
     // partitioning from the data, never from a constant): every exchange
     // inside the iterative loop is edge/node-scale, the loop runs O(log D)
@@ -793,6 +791,8 @@ object Dedup {
       // still IS `init` here)
       if (prevMin ne null) freeLocalCheckpoint(prevMin)
       if (labels ne init) freeLocalCheckpoint(init)
+      // the edge checkpoint is ours unless the caller's frame was reused
+      if (ownEdges) freeLocalCheckpoint(e0)
       // hand the final (checkpointed) labels back on the CALLER's session
       // so downstream plans use the caller's width, not the loop's
       graft.util.Scoped.rebind(labels, callerSession)

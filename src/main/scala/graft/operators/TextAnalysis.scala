@@ -317,8 +317,7 @@ object TextAnalysis {
     // the driver-side twin of the engine chain: same IEEE ops, same
     // HALF_UP rounding (Spark's round(x, 0) semantics)
     def unatsOf(num: Double, den: Double): Long =
-      BigDecimal(math.log(num / den) * 1e6)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+      graft.functions.RoundHalfUp.toLong(math.log(num / den) * 1e6)
     val defaults: Seq[Long] =
       cands.map(c => unatsOf(1.0, totals(c).toDouble + v.toDouble))
     val priors: Seq[Long] =

@@ -1103,12 +1103,16 @@ final class Pipeline(models: Seq[Model], exposures: Seq[Exposure] = Nil,
     def submit(m: Model): Unit = {
       inFlight += 1 // callers hold `lock`
       pool.execute { () =>
-        val res =
-          try Right(exec(m))
-          catch { case t: Throwable => Left(t) }
-        lock.synchronized {
+        // a fatal error (OOM, stack overflow, interrupt) is not a model
+        // failure: it leaves the pool thread uncaught, and the finally
+        // still stops the DAG, so the caller fails instead of waiting
+        var res: Option[Either[Throwable, Unit]] = None
+        try res = Some(try Right(exec(m)) catch {
+          case scala.util.control.NonFatal(t) => Left(t) })
+        finally lock.synchronized {
           inFlight -= 1
-          res match {
+          res.getOrElse(Left(new IllegalStateException(
+            s"model ${m.name} died of a fatal error on the DAG pool"))) match {
             case Right(_) =>
               remaining -= 1
               if (failure.isEmpty)

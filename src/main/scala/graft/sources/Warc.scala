@@ -420,13 +420,12 @@ object Warc {
         Option(org.apache.spark.TaskContext.get())
           .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
         val in =
-          if (p.endsWith(".gz"))
-            try {
-              val g = new java.util.zip.GZIPInputStream(raw, 1 << 16)
-              toClose = g
-              g
-            } catch { case e: Throwable => closeOnce(); throw e }
-          else raw
+          if (p.endsWith(".gz")) {
+            // a bad gzip header throws here: close raw, then let it pass
+            var g: java.io.InputStream = null
+            try { g = new java.util.zip.GZIPInputStream(raw, 1 << 16); toClose = g; g }
+            finally if (g eq null) closeOnce()
+          } else raw
         val recs = recordIterator(in).zipWithIndex.map {
           case ((hdrs, block), i) =>
             val wtype = hdrs.getOrElse("warc-type", "")

@@ -52,8 +52,7 @@ class RunningTotalsProcessor
     var (n, cents) = if (totals.exists()) totals.get() else (0L, 0L)
     rows.foreach { case (_, v) =>
       n += 1
-      cents += java.math.BigDecimal.valueOf(v * 100)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+      cents += graft.functions.RoundHalfUp.toLong(v * 100)
     }
     totals.update((n, cents))
     Iterator.single((key, n, cents / 100.0))
@@ -1698,9 +1697,7 @@ object StreamOps {
     import spark.implicits._
     // Same HALF_UP-on-shortest-repr rounding as Det.centsSum / the batch
     // twin (math.round would floor negative half-cents the other way).
-    def cents(v: Double): Long =
-      java.math.BigDecimal.valueOf(v * 100)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+    def cents(v: Double): Long = graft.functions.RoundHalfUp.toLong(v * 100)
     events.groupByKey(_.user_id).flatMapGroupsWithState(
       OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
       (userId: Long, it: Iterator[Ev], state: GroupState[SessState]) => {

@@ -657,6 +657,13 @@ class ApproxSpec extends SparkSpec {
     val shuf = Dedup.minhashLsh(docs, payloadJoin = PayloadJoin.Shuffle)
       .collect().map(_.toSeq).toSet
     assert(auto == bcast && bcast == shuf)
+    // the same for the incremental twin (batch against corpus)
+    val corpus = docs.filter(col("doc_id") % 5 =!= 0)
+    val batch = docs.filter(col("doc_id") % 5 === 0)
+    val inc = Seq(PayloadJoin.Auto, PayloadJoin.Broadcast, PayloadJoin.Shuffle)
+      .map(pj => Dedup.incrementalMinhash(corpus, batch, payloadJoin = pj)
+        .collect().map(_.toSeq).toSet)
+    assert(inc.head.nonEmpty && inc.forall(_ == inc.head))
   }
 
   test("ann_topk ranks are dense 1..k per query") {

@@ -76,6 +76,25 @@ class ClusterSpec extends SparkSpec {
     assert(!Dedup.materialized(edges.toDF("doc_a", "doc_b")))
   }
 
+  test("connected components free the edge checkpoint they make: after " +
+       "two calls the block manager holds only the two label frames") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    def cached(): Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    def rddId(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed match { case lr: LogicalRDD => lr.rdd.id }
+    val before = cached()
+    val edges = (0L until 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val labels = Seq.fill(2)(Dedup.connectedComponents(edges, maxIter = 10))
+    val kept = labels.map(rddId).toSet
+    // frees are asynchronous: poll the storage status until they land
+    eventually(timeout(30.seconds), interval(100.millis)) {
+      assert(cached() -- before == kept)
+    }
+    assert(labels.forall(_.count() == 41))
+  }
+
   test("connected components require maxIter >= 1 (loop-scratch frees " +
        "assume one materialized round)") {
     val edges = Seq((1L, 2L)).toDF("doc_a", "doc_b")

@@ -730,6 +730,24 @@ class PipelineSpec extends SparkSpec {
     assert(!childRan, "descendant of the failed model must never run")
   }
 
+  test("run(threads=2): a fatal error is no model failure — it leaves the " +
+       "pool thread, and the run fails naming the model instead of hanging") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val orders = Tables.orders(spark, sf)
+    @volatile var childRan = false
+    val fatal = Model("fatal_t", Seq("orders"), TableMat(),
+      _ => throw new StackOverflowError("deep"))
+    val child = Model("fatal_child", Seq("fatal_t"), TableMat(),
+      in => { childRan = true; in("fatal_t") })
+    val run = Future(new Pipeline(Seq(fatal, child))
+      .run(spark, Map("orders" -> orders), tmp(), threads = 2))
+    val err = intercept[IllegalStateException](Await.result(run, 120.seconds))
+    assert(err.getMessage.contains("fatal_t"), err.getMessage)
+    assert(!childRan, "descendant of the failed model must never run")
+  }
+
   test("build(threads=2): failing test still gates downstream; parallel " +
        "statuses match sequential semantics") {
     val orders = Tables.orders(spark, sf)

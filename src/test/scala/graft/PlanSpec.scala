@@ -299,6 +299,36 @@ class PlanSpec extends SparkSpec {
       "candidates no longer come from the bucket-pair kernel")
   }
 
+  test("minhash verify runs in the stage that emits the candidates: with a " +
+       "broadcast payload the band exchanges are the only shuffles, and " +
+       "none is keyed on a doc id") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.util.PayloadJoin
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // the keys of every shuffle in the final adaptive plan
+    def shuffleKeys(df: org.apache.spark.sql.DataFrame): Seq[Set[String]] = {
+      df.collect()
+      aqe.collect(df.queryExecution.executedPlan) {
+        case s: ShuffleExchangeExec => s.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)).toSet
+          case p => Set(p.toString)
+        }
+      }
+    }
+    val band = Set("band_idx", "band_hash")
+    val docs = Tables.documents(spark, sf)
+    val lsh = shuffleKeys(Dedup.minhashLsh(docs, payloadJoin = PayloadJoin.Broadcast))
+    assert(lsh == Seq(band), s"minhashLsh shuffles other than the band exchange: $lsh")
+    // the incremental twin: the batch and corpus band sides, nothing more
+    val inc = shuffleKeys(Dedup.incrementalMinhash(
+      docs.filter(col("doc_id") % 5 =!= 0), docs.filter(col("doc_id") % 5 === 0),
+      payloadJoin = PayloadJoin.Broadcast))
+    assert(inc.nonEmpty && inc.forall(_ == band),
+      s"incrementalMinhash shuffles other than the band exchanges: $inc")
+  }
+
   test("bloom semi join probes on the fact side BELOW the join") {
     // the whole point: non-matching fact rows die at the scan, before the
     // join's exchange — the probe must sit under the semi join's left child

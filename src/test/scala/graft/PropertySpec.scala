@@ -537,4 +537,46 @@ class PropertySpec extends AnyFunSuite {
       assert(e.getMessage.contains("graft_round_half_up expects double"), e.getMessage)
     }
   }
+
+  test("scalar half-up long equals the BigDecimal HALF_UP it replaced on " +
+       "every finite input below 2^53, is exact up to the long range; NaN, " +
+       "infinities and out-of-range values fail with an IllegalArgumentException") {
+    import graft.functions.RoundHalfUp
+    val rnd = new scala.util.Random(131)
+    val (p53, p63) = (math.pow(2, 53), math.pow(2, 63))
+    // the replaced twins: java.math.BigDecimal.valueOf (cents) and Scala's
+    // BigDecimal(d) (micro-units) both round the shortest decimal repr
+    def javaTwin(x: Double): Long = java.math.BigDecimal.valueOf(x)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+    def scalaTwin(x: Double): Long =
+      BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+    val edges = Seq(0.49999999999999994, 0.5, -0.5, 1.5, -1.5, 2.5, -2.5,
+      0.0, -0.0, -0.3, 4.9e-324, -4.9e-324, 4503599627370495.5,
+      -4503599627370495.5, 9007199254740993.0, -p63,
+      Math.nextDown(p63), -Math.nextDown(p63))
+    val halves = (0 until 2000).flatMap { _ =>
+      val n = (rnd.nextLong() >> rnd.nextInt(63)).toDouble + 0.5
+      Seq(n, Math.nextUp(n), Math.nextDown(n), -n)
+    }
+    // the call sites' shapes: price * 100 and log-ratio * 1e6
+    val cents = (0 until 20000).map(_ => (rnd.nextInt(2000000) - 1000000) / 100.0 * 100)
+    val unats = (0 until 20000).map(_ =>
+      math.log((rnd.nextInt(5000) + 1).toDouble / (rnd.nextInt(90000) + 1)) * 1e6)
+    val bits = (0 until 60000).map(_ => java.lang.Double.longBitsToDouble(rnd.nextLong()))
+      .filter(x => Math.abs(x) < p63)
+    (edges ++ halves ++ cents ++ unats ++ bits).foreach { x =>
+      if (Math.abs(x) < p53) {
+        val want = javaTwin(x)
+        assert(RoundHalfUp.toLong(x) == want, s"x=$x")
+        assert(scalaTwin(x) == want, s"the two twins disagree at x=$x")
+      } else // every double is an integer here: toLong is its exact value,
+             // where the twins took the shortest repr's (2^60 reads ...847E18)
+        assert(RoundHalfUp.toLong(x) == new java.math.BigDecimal(x).longValueExact, s"x=$x")
+    }
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+                    p63, Math.nextDown(-p63), Double.MaxValue, -Double.MaxValue)) {
+      val e = intercept[IllegalArgumentException](RoundHalfUp.toLong(bad))
+      assert(e.getMessage == s"no half-up long for $bad", e.getMessage)
+    }
+  }
 }
