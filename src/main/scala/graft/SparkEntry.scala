@@ -27,6 +27,26 @@ object SparkEntry {
   private val memo =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
 
+  /** Stand-ins for inputs a deployment already has persisted (the crawl
+    * archives' records, the corpus band index, the stored sketch cells),
+    * built once per (session, sf-dir) and kept across timing attempts;
+    * the ANN indexes live in `objMemo` on the same terms. */
+  private val inputs =
+    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+
+  /** Drop the session's memoized shared RESULTS (`memo`: the pair and
+    * cluster builds) and free their checkpoint blocks, so the next query
+    * that needs one pays for its build. `graft.Bench` calls this before
+    * every timing attempt: it reports the minimum over attempts, and a
+    * build paid only in the first attempt would leave every memo-backed
+    * query timed as a re-read of cached blocks. Persisted-input stand-ins
+    * stay. */
+  private[graft] def dropSharedResults(s: SparkSession): Unit = {
+    val prefix = s"${s.sparkContext.applicationId}|"
+    memo.keys.filter(_.startsWith(prefix)).foreach(key =>
+      memo.remove(key).foreach(Dedup.freeLocalCheckpoint))
+  }
+
   /** The BPE tokenize/pack rig (r16): each doc's text is ONE word
     * family repeated — family by doc_id % 4, repetition weights
     * (8, 4, 2, 1) — so 2-round merge training has STRICT margins at
@@ -78,7 +98,7 @@ object SparkEntry {
     // record set, so the synthesis + parse runs once per (session, sf),
     // not once per consumer per attempt. The funnel itself is never
     // memoized — every query run computes its fates from these records.
-    memo.getOrElseUpdate(
+    inputs.getOrElseUpdate(
       s"${s.sparkContext.applicationId}|$d|crawlRecs",
       Scoped.tempDir("graft_crawlcur_") { tmp =>
         writeCrawlArchives(s, d, tmp.toString)
@@ -248,6 +268,10 @@ object SparkEntry {
                     (build: => DataFrame): DataFrame =
     memo.getOrElseUpdate(s"${s.sparkContext.applicationId}|$d|$tag",
       build.localCheckpoint())
+  private def sharedInput(s: SparkSession, d: String, tag: String)
+                         (build: => DataFrame): DataFrame =
+    inputs.getOrElseUpdate(s"${s.sparkContext.applicationId}|$d|$tag",
+      build.localCheckpoint())
   private def sharedClusters(s: SparkSession, d: String): DataFrame =
     shared(s, d, "clusters")(Dedup.clusters(Tables.documents(s, d)))
   private def sharedMinhashPairs(s: SparkSession, d: String): DataFrame =
@@ -264,7 +288,7 @@ object SparkEntry {
     * item 4), not an inline index rebuild. */
   private def sharedCorpusBandIndex(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    shared(s, d, "bandIndex")(Dedup.bandedSignatures(
+    sharedInput(s, d, "bandIndex")(Dedup.bandedSignatures(
       Tables.documents(s, d).filter(col("doc_id") % 3 =!= 0)))
   }
   /** The PERSISTED sketch-rollup cell table (Analytics.sketchCells written
@@ -273,7 +297,7 @@ object SparkEntry {
     * TABLE and pays only the merge — the pattern a 100 TB deployment runs,
     * where cells materialize per ingest period and dashboards merge them. */
   private def sharedSketchCells(s: SparkSession, d: String): DataFrame =
-    shared(s, d, "sketchCells") {
+    sharedInput(s, d, "sketchCells") {
       val dir = java.nio.file.Files.createTempDirectory("graft_cells")
         .resolve("sketch_cells").toString
       graft.sources.TxLogFormat.write(

@@ -201,11 +201,17 @@ case class NGramHashes(child: Expression, n: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Column-API entry points for the in-row n-gram kernels. */
+/** Column-API entry points for the in-row n-gram and term-scoring kernels. */
 object TermFunctions {
   def ngramCounts(tokens: Column, n: Int, skipEmpty: Boolean = true): Column =
     Bridge.column(NGramCounts(Bridge.expression(tokens), n, skipEmpty))
 
   def ngramHashes(tokens: Column, n: Int): Column =
     Bridge.column(NGramHashes(Bridge.expression(tokens), n))
+
+  /** Generator: one document's `(query_id, score_micro)` sums over its
+    * weighted postings and a per-task query-term index (see
+    * [[TermScores]]). */
+  def termScores(postings: Column, index: Column): Column =
+    Bridge.column(TermScores(Bridge.expression(postings), Bridge.expression(index)))
 }

@@ -814,7 +814,7 @@ object Dedup {
 
   /** Drop a materialized localCheckpoint's cached blocks (the frame must
     * never be recomputed afterwards — lineage is truncated). */
-  private def freeLocalCheckpoint(df: DataFrame): Unit =
+  private[graft] def freeLocalCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false); ()

@@ -40,8 +40,10 @@ object Similarity {
 
   /** Exact top-K neighbors for a set of query vectors: broadcast the query
     * side, then the custom [[graft.plans.TopKPerKey]] bounded-heap operator
-    * — O(n log k) per partition with no full per-group sort; the rank
-    * window runs only on the surviving k·|queries| rows. */
+    * — O(n log k) per partition with no full per-group sort, and a partial
+    * pass before the one query_id exchange, so it ships at most
+    * partitions × queries × k rows; the rank window reuses that exchange
+    * and runs only on the surviving k·|queries| rows. */
   def topK(embeddings: DataFrame, queryIds: Seq[Long] = Seq(0L, 1L, 2L),
            k: Int = 10): DataFrame = {
     val q = embeddings.filter(col("vec_id").isin(queryIds: _*))

@@ -1149,12 +1149,21 @@ object TextAnalysis {
     * (query, doc) scores are exact integer sums, and the top-k order
     * (score desc, doc_id asc) is total.
     *
-    * Shape at scale: tf/dl/df aggregate from one corpus tokenization
-    * (the weighted postings table is corpus-token-scale, 16 B/posting);
-    * the 1-row stats broadcast; query terms join the postings on term —
-    * the classic inverted-index probe, costing Σ_{t ∈ queries} df(t)
-    * rows. `maxDf` is the stop-term cap (the F12 df-cap stance at
-    * retrieval granularity): a term in half the corpus contributes
+    * Shape at scale: the corpus is scanned and tokenized once, into
+    * per-doc term counts pinned on `doc_id`; tf/dl/df and the 1-row stats
+    * all derive from that one exchange (the weighted postings are
+    * corpus-token-scale, 16 B/posting). Scoring runs one document at a
+    * time: each doc's weighted postings collect into one row on the same
+    * pin ([[graft.plans.CollectPerKey]], no exchange of its own), and
+    * [[graft.functions.TermScores]] adds them into per-query `long`
+    * accumulators through a term → query index that reaches each task
+    * once, as one scalar-subquery value. The work is still the
+    * inverted-index probe's Σ_{t ∈ queries} df(t), now as in-row adds
+    * rather than join rows folded back by a (query, doc) aggregate;
+    * per-task memory is O(|queries| + index) beyond one doc's postings,
+    * and the query side must fit in memory, as it had to for the
+    * broadcast join this replaced. `maxDf` is the stop-term cap (the
+    * F12 df-cap stance at retrieval granularity): a term in half the corpus contributes
     * ~zero idf but df(t) join rows, so production retrieval drops it —
     * the cap states the same trade as every other df cap here (default
     * uncapped; the oracle states the identical filter).
@@ -1174,9 +1183,11 @@ object TextAnalysis {
     * PlanSpec pins BOTH shapes.
     *
     * Per-query top-k rides the bounded-heap [[graft.plans.TopKPerKey]]
-    * node (no full per-query sort); the rank window runs on the
-    * surviving k·|queries| rows. Output
-    * (query_id, doc_id, score_micro, rank). */
+    * node (no full per-query sort). Its partial pass runs in the scoring
+    * stage, so the one `query_id` exchange carries at most
+    * partitions × queries × k rows, not every scored (query, doc) pair;
+    * the rank window reuses that exchange and runs on the surviving
+    * k·|queries| rows. Output (query_id, doc_id, score_micro, rank). */
   def bm25TopK(corpus: DataFrame, queries: DataFrame, k: Int = 5,
                maxDf: Long = Long.MaxValue,
                dfBroadcastBudget: Long = Long.MaxValue): DataFrame = {
@@ -1189,25 +1200,33 @@ object TextAnalysis {
     // gone too), and dft aggregates one row per DISTINCT (doc, term).
     // tf/df/dl values are bit-equal to the explode form (spec-pinned),
     // so every weight and the oracle hash are unchanged. The counted array
-    // is fenced (EvalOnce): Catalyst infers size(__tc) > 0 from the explode
-    // and pushes it, with the dl > 0 stats filter, below the projection by
-    // copying the kernel call — unfenced, every corpus scan counted each
-    // row twice (scan Filter, then Project).
-    val counted = corpus.select(col("doc_id"), graft.functions.EvalOnce(
-        graft.functions.TermFunctions.ngramCounts(words, 1)).as("__tc"))
-      .select(col("doc_id"),
-        aggregate(col("__tc"), lit(0L), (acc, e) => acc + e.getField("tf"))
-          .as("dl"),
-        col("__tc"))
-    val tf = counted.select(col("doc_id"), col("dl"),
-        explode(col("__tc")).as("e"))
-      .select(col("doc_id"), col("dl"), col("e.w1").as("t"), col("e.tf").as("tf"))
-    // docs with zero non-empty tokens have no postings and never counted
-    // toward nd/toklen in the explode form either
-    val stats = counted.filter(col("dl") > 0)
-      .agg(count(lit(1)).as("nd"), sum("dl").as("toklen"))
-    val dft = tf.groupBy("t").agg(count(lit(1)).as("df"))
+    // is fenced (EvalOnce): unfenced, Catalyst copied the kernel call into
+    // each filter it inferred, and every corpus scan counted a row twice.
+    //
+    // The counted docs are width-pinned on doc_id (the corpus scan is often
+    // ONE split, and the scoring above is the pass's widest stage), and the
+    // df, stats and scoring branches all read that one exchange, so the
+    // corpus is scanned and tokenized once. Reuse needs the same plan under
+    // the exchange in every branch, so no branch may push a filter below
+    // it: the postings come from an outer explode (a plain explode infers a
+    // size(__tc) > 0 filter), and its null row is dropped above.
+    val counted = FanOut.pin(corpus.select(col("doc_id"), graft.functions.EvalOnce(
+        graft.functions.TermFunctions.ngramCounts(words, 1)).as("__tc")), col("doc_id"))
+    def postings(d: DataFrame): DataFrame =
+      d.select(col("*"), posexplode_outer(col("__tc")).as(Seq("pos", "e")))
+        .filter(col("e").isNotNull)
+        .select(col("*"), col("e.w1").as("t"), col("e.tf").as("tf"))
+    // nd counts the docs with a posting (each has one at pos 0), toklen
+    // sums every posting's tf: docs with zero non-empty tokens count toward
+    // neither, as before
+    val terms = postings(counted)
+    val stats = terms.agg(count_if(col("pos") === 0).as("nd"),
+      sum(col("tf").cast("long")).as("toklen"))
+    val dft = terms.groupBy("t").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
+    val tf = postings(counted.select(col("doc_id"), graft.functions.EvalOnce(
+        aggregate(col("__tc"), lit(0L), (acc, e) => acc + e.getField("tf"))).as("dl"),
+      col("__tc")))
     // ONE double chain per (term, doc), rounded once to micro-units
     val idf = log((col("nd").cast("double") - col("df").cast("double") +
       lit(0.5)) / (col("df").cast("double") + lit(0.5)) + lit(1.0))
@@ -1218,20 +1237,25 @@ object TextAnalysis {
       if (dfBroadcastBudget == Long.MaxValue ||
           dft.count() <= dfBroadcastBudget) broadcast(dft)
       else dft
-    // The weighted postings are width-pinned before the query-term probe:
-    // they come straight off the corpus scan (often ONE split), and the
-    // probe + partial (query, doc) aggregate above them is the pass's
-    // widest stage — unpinned it ran on the scan's task count.
-    val wtd = FanOut.pin(tf.join(dftSized, Seq("t"))
+    // With a broadcast df table the weighted postings keep the pin's
+    // doc_id partitioning, so collecting them per doc adds no exchange; a
+    // shuffled df table re-partitions them on t, and the collect then
+    // plans its own doc_id exchange.
+    val wtd = tf.join(dftSized, Seq("t"))
       .crossJoin(broadcast(stats))
       .select(col("t"), col("doc_id"),
         halfUp(idf * (col("tf").cast("double") * lit(2.2)) / denom * 1e6)
-          .cast("long").as("w_micro")), col("doc_id"))
-    val qt = queries.select(col("doc_id").as("query_id"),
+          .cast("long").as("w_micro"))
+    // the query side as ONE scalar-subquery value: evaluated once per
+    // execution, it reaches each scoring task once (never per doc row)
+    val index = queries.select(col("doc_id").as("query_id"),
         explode(distinctWords).as("t"))
       .filter(col("t") =!= "")
-    val scored = qt.join(wtd, Seq("t"))
-      .groupBy("query_id", "doc_id").agg(sum("w_micro").as("score_micro"))
+      .agg(collect_list(struct(col("t"), col("query_id"))))
+    val scored = graft.plans.CollectPerKey(wtd, "doc_id", Seq("t", "w_micro"), "__postings")
+      .select(col("doc_id"), graft.functions.TermFunctions.termScores(
+        col("__postings"), index.scalar()))
+      .select("query_id", "doc_id", "score_micro")
     val top = graft.plans.TopKPerGroup(scored, Seq("query_id"),
       Seq("score_micro" -> false, "doc_id" -> true), k)
     val w = Window.partitionBy("query_id")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -26,14 +26,29 @@ case class TopKPerKey(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
     copy(child = newChild)
 }
 
-/** Physical bounded-heap top-K-per-group. Child is hash-partitioned by the
-  * keys (EnsureRequirements inserts the single exchange); each partition
-  * streams once through per-key heaps of size ≤ k. */
+/** Physical bounded-heap top-K-per-group, planned as two passes of this
+  * node around one hash exchange on the keys:
+  *  - the PARTIAL pass (`partial = true`) runs on the child's partitions
+  *    as they are, before the exchange, and keeps each partition's best
+  *    `k` rows per key;
+  *  - the FINAL pass (`partial = false`) requires the keys' clustered
+  *    distribution (EnsureRequirements inserts the exchange) and keeps the
+  *    best `k` of what the partial passes sent.
+  * A row in a key's global top k is in its partition's top k, so the two
+  * passes return the one-pass rows, and the exchange carries at most
+  * partitions × keys × k rows instead of every input row. Under a total
+  * `order` the result is exact; ties at the k-th row keep some k of the
+  * tied rows, as a `row_number` window does. Each pass streams its
+  * partition once through per-key heaps of size ≤ k and emits the heaps
+  * unsorted. Both passes drop rows only, so they report the child's
+  * partitioning: a window or group-by on the keys after the final pass
+  * plans no second exchange. */
 case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
-                          child: SparkPlan) extends UnaryExecNode {
+                          partial: Boolean, child: SparkPlan) extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
+  override def outputPartitioning: Partitioning = child.outputPartitioning
   override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(keys) :: Nil
+    (if (partial) UnspecifiedDistribution else ClusteredDistribution(keys)) :: Nil
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
@@ -45,7 +60,7 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
       val ord = new LazilyGeneratedOrdering(orderLocal, childOutput)
       // max-heap on the ordering: head = worst retained row per key
       val heapOrd: Ordering[InternalRow] = (a, b) => ord.compare(a, b)
-      val heaps = mutable.LinkedHashMap[UnsafeRow, mutable.PriorityQueue[InternalRow]]()
+      val heaps = mutable.HashMap[UnsafeRow, mutable.PriorityQueue[InternalRow]]()
       it.foreach { row =>
         val key = keyProj(row)
         // copy the key only when inserting a new group — the hot loop
@@ -60,7 +75,7 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
           heap.dequeue(); heap.enqueue(row.copy())
         }
       }
-      heaps.valuesIterator.flatMap(_.toSeq.sorted(ord))
+      heaps.valuesIterator.flatMap(_.iterator)
     }
   }
 
@@ -68,13 +83,23 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
     copy(child = newChild)
 }
 
-/** Planner strategy mapping the logical node to the exec node. */
+/** Planner strategy for the graft logical nodes: a top-k maps to its
+  * partial and final exec passes, a collect-per-key to its run walk. */
 object GraftStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKey(keys, order, k, child) =>
-      TopKPerKeyExec(keys, order, k, planLater(child)) :: Nil
+      TopKPerKeyExec(keys, order, k, partial = false,
+        TopKPerKeyExec(keys, order, k, partial = true, planLater(child))) :: Nil
+    case CollectPerKey(key, values, collected, child) =>
+      CollectPerKeyExec(key, values, collected, planLater(child)) :: Nil
     case _ => Nil
   }
+
+  /** Register the strategy on `spark` unless it is there already. */
+  private[plans] def install(spark: org.apache.spark.sql.SparkSession): Unit =
+    if (!spark.experimental.extraStrategies.contains(GraftStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ GraftStrategy
 }
 
 /** Public API: `TopKPerGroup(df, Seq("query_id"), Seq("cos_sim" -> false,
@@ -85,9 +110,7 @@ object TopKPerGroup {
     require(k >= 1, s"k must be >= 1, got $k")
     require(keyCols.nonEmpty, "at least one key column required")
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(GraftStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GraftStrategy
+    GraftStrategy.install(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(name: String): Attribute = analyzed.output
       .find(_.name.equalsIgnoreCase(name))

@@ -338,13 +338,7 @@ object StreamOps {
     * blocks, so the release is one non-blocking unpersist per frame;
     * non-checkpoint frames pass through as a no-op. */
   private def freeCheckpoints(dfs: DataFrame*): Unit =
-    dfs.foreach { df =>
-      df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false); ()
-        case _ => ()
-      }
-    }
+    dfs.foreach(graft.operators.Dedup.freeLocalCheckpoint)
 
   /** The shape a persisted state table must have for the ingest loop
     * that reads it: its required columns and their types, as DDL. The

@@ -20,6 +20,31 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("dropSharedResults frees the session's memoized pair builds, and " +
+       "the next query builds them again (each graft.Bench attempt pays " +
+       "for its build)") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    def cached(): Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    def rddId(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed match { case lr: LogicalRDD => lr.rdd.id }
+    // dedup_clusters is the memoized clusters frame itself
+    val first = SparkEntry.queries("dedup_clusters")(spark, sf)
+    assert(rddId(SparkEntry.queries("dedup_clusters")(spark, sf)) == rddId(first),
+      "the memo did not serve the second call")
+    val n = first.count()
+    assert(cached().contains(rddId(first)), "the memo holds no stored blocks")
+    SparkEntry.dropSharedResults(spark)
+    // frees are asynchronous: poll the storage status until they land
+    eventually(timeout(30.seconds), interval(100.millis)) {
+      assert(!cached().contains(rddId(first)))
+    }
+    val rebuilt = SparkEntry.queries("dedup_clusters")(spark, sf)
+    assert(rddId(rebuilt) != rddId(first), "the dropped memo was served again")
+    assert(rebuilt.count() == n)
+  }
+
   test("every oracle key has a matching query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")

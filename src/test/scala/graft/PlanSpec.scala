@@ -954,7 +954,85 @@ class PlanSpec extends SparkSpec {
         s"over-budget vocab still forced a broadcast:\n$plan")
       assert(!plan.contains("BroadcastHashJoin [t#"),
         s"the df table still broadcast-joins on t over budget:\n$plan")
+      // the shuffled df table scores the same rows
+      assert(df.collect().toSet == TextAnalysis.bm25TopK(
+        docs.filter(col("doc_id") % 50 =!= 0),
+        docs.filter(col("doc_id") % 50 === 0)).collect().toSet)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+  }
+
+  test("bm25 top-k scores one document at a time: no (query_id, doc_id) " +
+       "aggregate, no shuffle beyond the df, stats and doc_id ones but ONE " +
+       "query_id exchange, and that exchange carries at most " +
+       "partitions × queries × k rows") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val docs = Tables.documents(spark, sf)
+    val corpus = docs.filter(col("doc_id") % 5 =!= 0)
+    val queries = docs.filter(col("doc_id") % 5 === 0)
+    val k = 3
+    val df = TextAnalysis.bm25TopK(corpus, queries, k = k)
+    df.collect()
+    val exec = df.queryExecution.executedPlan
+    val aggKeys = aqe.collect(exec) { case a: BaseAggregateExec =>
+      a.groupingExpressions.flatMap(_.references.map(_.name)).toSet }
+    assert(!aggKeys.contains(Set("query_id", "doc_id")),
+      s"a (query_id, doc_id) aggregate is back:\n$exec")
+    def keys(s: ShuffleExchangeExec): String = s.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)).mkString(",")
+      case p => p.getClass.getSimpleName.stripSuffix("$")
+    }
+    val shuffles = aqe.collect(exec) { case s: ShuffleExchangeExec => s }
+    assert(shuffles.map(keys).sorted == Seq("SinglePartition", "doc_id", "query_id", "t"),
+      s"unexpected shuffles ${shuffles.map(keys)}:\n$exec")
+    // the df, stats and scoring branches read the one doc_id exchange: the
+    // corpus is tokenized once
+    val tokenize = aqe.collect(exec) { case p: org.apache.spark.sql.execution.ProjectExec
+      if p.projectList.exists(_.exists(_.prettyName == "graft_ngram_counts")) => p }
+    assert(tokenize.size == 1, s"the corpus is tokenized ${tokenize.size} times:\n$exec")
+    // the partial top-k pass runs before the query_id exchange: it ships
+    // at most k rows per (scoring partition, query), fewer than the
+    // scored (query, doc) pairs the unsplit node shuffled
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val nQueries = queries.count()
+    val written = shuffles.filter(keys(_) == "query_id").head
+      .metrics("shuffleRecordsWritten").value
+    def terms(d: org.apache.spark.sql.DataFrame, id: String) =
+      d.select(col("doc_id").as(id),
+        explode(graft.util.TextNorm.distinctWords(col("text"))).as("t"))
+        .filter(col("t") =!= "")
+    val pairs = terms(corpus, "doc_id").join(terms(queries, "query_id"), "t")
+      .select("query_id", "doc_id").distinct().count()
+    assert(written > 0 && written <= width * nQueries * k,
+      s"query_id exchange wrote $written rows, bound ${width * nQueries * k}")
+    assert(written < pairs, s"the exchange carried every scored pair ($written of $pairs)")
+  }
+
+  test("bm25 top-k with default arguments builds lazily: no Spark job " +
+       "runs while the frame is built") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val docs = Tables.documents(spark, sf)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftbridge.CoreBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val df = TextAnalysis.bm25TopK(
+        docs.filter(col("doc_id") % 50 =!= 0), docs.filter(col("doc_id") % 50 === 0))
+      df.queryExecution.executedPlan
+      org.apache.spark.graftbridge.CoreBridge.drainListenerBus(sc)
+      assert(jobs.get == 0, s"building bm25TopK ran ${jobs.get} Spark job(s)")
+      // the listener sees jobs: running the frame starts some
+      df.collect()
+      org.apache.spark.graftbridge.CoreBridge.drainListenerBus(sc)
+      assert(jobs.get > 0, "the job listener saw no job at all")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("bm25 top-k and the minhash band frame: no Filter under the " +

@@ -579,4 +579,51 @@ class PropertySpec extends AnyFunSuite {
       assert(e.getMessage == s"no half-up long for $bad", e.getMessage)
     }
   }
+
+  test("term-score kernel equals the query-term join + (query, doc) sum it " +
+       "replaced (duplicate terms, zero weights, empty and null postings, " +
+       "a query sharing no term, a term in every query)") {
+    import spark.implicits._
+    import graft.functions.TermFunctions.termScores
+    val vocab = Seq("a", "b", "c", "d", "e", "f", "g", "h")
+    val gen = for {
+      nDocs <- Gen.choose(1, 12)
+      docs <- Gen.listOfN(nDocs, Gen.listOf(for {
+        t <- Gen.oneOf(vocab)
+        w <- Gen.frequency(3 -> Gen.const(0L), 7 -> Gen.choose(-5L, 1000000L))
+      } yield (t, w)))
+      nQueries <- Gen.choose(1, 6)
+      queries <- Gen.listOfN(nQueries, Gen.listOf(Gen.oneOf(vocab)))
+    } yield (docs, queries)
+    forAllSampled(gen, 16) { case (docs, queries) =>
+      // planted: a doc with empty postings, one with a null array, a doc
+      // whose terms no query holds, a doc of zero weights on a repeated
+      // term, a query whose terms no doc holds, and "a" in every query
+      // (random lists may repeat a term on either side)
+      val postings: Seq[(Long, Option[Seq[(String, Long)]])] =
+        docs.zipWithIndex.map { case (ps, i) => i.toLong -> Some(ps) } ++
+          Seq(100L -> Some(Nil), 101L -> None, 102L -> Some(Seq("zz" -> 7L)),
+            103L -> Some(Seq("a" -> 0L, "a" -> 0L)))
+      val qt = (queries.zipWithIndex.flatMap { case (ts, q) =>
+        ("a" +: ts).map(t => (1000L + q, t)) } ++ Seq(2000L -> "yy"))
+        .toDF("query_id", "t")
+      val pdf = postings.toDF("doc_id", "postings")
+      val want = pdf.select(col("doc_id"), explode(col("postings")).as("p"))
+        .select(col("doc_id"), col("p._1").as("t"), col("p._2").as("w"))
+        .join(qt, Seq("t"))
+        .groupBy("query_id", "doc_id").agg(sum("w").as("score_micro"))
+        .select("query_id", "doc_id", "score_micro")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+      val index = qt.agg(collect_list(struct(col("t"), col("query_id"))))
+      val got = pdf.select(col("doc_id"), termScores(col("postings"), index.scalar()))
+        .select("query_id", "doc_id", "score_micro")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+      assert(got == want, s"docs=$docs queries=$queries")
+      assert(!got.exists(r => Set(100L, 101L, 102L)(r._2) || r._1 == 2000L),
+        "a doc or query without a shared term got a row")
+      // zero weights still make a row, as the join + sum does
+      assert(got.filter(_._2 == 103L) ==
+        queries.indices.map(q => (1000L + q, 103L, 0L)), "a zero-sum row was lost")
+    }
+  }
 }
