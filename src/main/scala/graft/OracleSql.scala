@@ -934,8 +934,9 @@ object OracleSql {
     "embedding_pca_x" ->
       """SELECT vec_id, ROUND((SELECT SUM(CAST(x AS DOUBLE)*CAST(x AS DOUBLE)) FROM (SELECT unnest(embedding) AS x))*10000,0)/10000.0 AS sq_norm FROM embeddings ORDER BY vec_id""",
 
-    // theta segments below saturation (k derived above the distinct-user
-    // count): θ = 1, the sketches ARE the sets, every estimate is exact
+    // theta segments below saturation (2^lg derived above the
+    // distinct-user count): θ = 1, the sketches ARE the sets, every
+    // estimate is exact
     "theta_segments_x" ->
       """WITH per AS (SELECT user_id, MAX(CASE WHEN event_type='click' THEN 1 ELSE 0 END) AS ha, MAX(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END) AS hb FROM events WHERE event_type IN ('click','purchase') GROUP BY user_id) SELECT CAST(SUM(ha) AS DOUBLE) AS est_click, CAST(SUM(hb) AS DOUBLE) AS est_purchase, CAST(COUNT(*) AS DOUBLE) AS est_union, CAST(SUM(ha*hb) AS DOUBLE) AS est_intersect, CAST(SUM(ha) AS BIGINT) AS exact_click, CAST(SUM(hb) AS BIGINT) AS exact_purchase, COUNT(*) AS exact_union, CAST(SUM(ha*hb) AS BIGINT) AS exact_intersect FROM per""",
 
@@ -1081,7 +1082,7 @@ object OracleSql {
     "heavy_hitters_per_lang_exact" ->
       """WITH t AS (SELECT lang, unnest(string_split(lower(trim(text)), ' ')) AS word FROM documents), c AS (SELECT lang, word, COUNT(*) AS n FROM t WHERE word <> '' GROUP BY lang, word), r AS (SELECT lang, word, n, ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n DESC, word) AS rk FROM c) SELECT lang, word, n FROM r WHERE rk <= 5 ORDER BY lang, word""",
 
-    // theta at k above every group's cardinality: θ=1, the sketch IS the
+    // theta at 2^lg above every group's cardinality: θ=1, the sketch IS the
     // distinct set — the HLL twin has no such exact regime to pin
     "approx_distinct_theta" ->
       """SELECT o_orderpriority, COUNT(DISTINCT o_custkey) AS approx_customers FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""",

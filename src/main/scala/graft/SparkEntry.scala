@@ -635,20 +635,22 @@ object SparkEntry {
     "metric_anomaly"  -> ((s, d) => Analytics.metricAnomaly(Tables.orders(s, d))),
     "gap_fill"        -> ((s, d) => Analytics.gapFill(Tables.orders(s, d))),
     "theta_segments"  -> ((s, d) => Analytics.thetaSegments(Tables.events(s, d))),
-    // exact-regime twin: k derived from the DATA (above the distinct-user
-    // count — the tdigest_quantiles_x lesson: no hidden SF ceiling), so
-    // every sketch stays below saturation, θ = 1, the retained hashes ARE
-    // the user sets, and all four estimates equal the exact SQL counts
+    // exact-regime twin: lg derived from the DATA (2^lg above the
+    // distinct-user count — the tdigest_quantiles_x lesson: no hidden SF
+    // ceiling), so every sketch stays below saturation, θ = 1, the
+    // retained hashes ARE the user sets, and all four estimates equal
+    // the exact SQL counts
     "theta_segments_x" -> ((s, d) => {
       val ev = Tables.events(s, d)
       val n = ev.agg(org.apache.spark.sql.functions
         .countDistinct(org.apache.spark.sql.functions.col("user_id")))
         .head.getLong(0)
-      // toIntExact: 2n+2 past Int.MaxValue would wrap negative and
-      // silently leave the exact regime this query exists to pin — at
-      // that cardinality fail loudly (the twin is a test fixture; the
-      // production query is the unsaturated theta_segments itself)
-      Analytics.thetaSegments(ev, k = math.toIntExact(2 * n + 2))
+      val lg = math.max(4, 64 - java.lang.Long.numberOfLeadingZeros(n))
+      // past lg 26 (DataSketches' largest sketch) no exact regime exists:
+      // fail loudly (the twin is a test fixture; the production query is
+      // the unsaturated theta_segments itself)
+      require(lg <= 26, s"theta_segments_x: $n distinct users need lg $lg > 26")
+      Analytics.thetaSegments(ev, lg)
     }),
     // merge-only over the PERSISTED cell table (the production stored-
     // sketch pattern): stage 1 writes once via the shared memo; the

@@ -33,6 +33,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * n/(k+1) is guaranteed present (spec-verified against exact counts).
   * Estimated counts themselves MAY vary with partition layout (like any
   * MG deployment); consumers rank on them, not hash them.
+  *
+  * Spark's `approx_top_k` does not replace it: its count is DataSketches'
+  * `ItemsSketch.Row.getEstimate` (count + offset), an UPPER bound, so at
+  * saturation it would flip the `est ≤ true` contract above.
   */
 case class MisraGriesSummary(child: Expression, k: Int,
                              mutableAggBufferOffset: Int = 0,

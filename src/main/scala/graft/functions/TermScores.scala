@@ -15,24 +15,26 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * `postings` is the document's `array<struct<t: string, w: bigint>>` (a
   * `collect_list` over its weighted postings), `index` the query side's
-  * `array<struct<t: string, query_id: bigint>>` — one element per (query,
-  * term) pair, a value that is the same for every row (a scalar
+  * `array<struct<query_id: bigint, terms: array<string>>>` — one element
+  * per query, a value that is the same for every row (a scalar
   * subquery), so it reaches the kernel once per task and its term →
   * query-slot map is built once per task. The generator adds each
-  * posting's weight into a per-query `long` accumulator for every index
-  * entry with the posting's term, and emits `(query_id, score_micro)` for
-  * each query that shares at least one term with the document — a zero
-  * sum included, as the group-by would. Multiplicities are the join's: a
-  * term listed twice in the postings, or a (query, term) pair listed
-  * twice in the index, adds twice.
+  * posting's weight into a per-query `long` accumulator for every
+  * (query, term) index entry with the posting's term, and emits
+  * `(query_id, score_micro)` for each query that shares at least one
+  * term with the document — a zero sum included, as the group-by would.
+  * Multiplicities are the join's: a term listed twice in the postings, or
+  * a (query, term) pair listed twice in the index (twice in one query's
+  * terms, or under two elements of the same query), adds twice.
   *
   * Exact: integer adds (`Math.addExact`, as ANSI `sum` overflows), no
   * cap or threshold. Per-row work is Σ over the row's postings of the
   * term's index entries — the join's row count, as in-array adds; memory
   * is the index map plus two arrays of |queries|. A null or empty postings
   * array, a null element and a null term emit nothing (the join drops
-  * them); a null index yields no rows; a null weight or a null query id
-  * throws. */
+  * them); a null index yields no rows; a null index element, a null
+  * terms array and a null term add no entry; a null weight or a null
+  * query id throws. */
 case class TermScores(postings: Expression, index: Expression)
     extends Generator with CodegenFallback with BinaryLike[Expression] {
 
@@ -45,18 +47,18 @@ case class TermScores(postings: Expression, index: Expression)
     StructField("query_id", LongType, nullable = false),
     StructField("score_micro", LongType, nullable = false)))
 
-  private def termLongPairs(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-    case ArrayType(StructType(Array(
-        StructField(_, StringType, _, _), StructField(_, LongType, _, _))), _) => true
-    case _ => false
-  }
-
   override def checkInputDataTypes(): TypeCheckResult =
-    if (termLongPairs(postings.dataType) && termLongPairs(index.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (array<struct<string, bigint>>, array<struct<string, bigint>>), " +
-        s"got (${postings.dataType.simpleString}, ${index.dataType.simpleString})")
+    (postings.dataType, index.dataType) match {
+      case (ArrayType(StructType(Array(StructField(_, StringType, _, _),
+              StructField(_, LongType, _, _))), _),
+            ArrayType(StructType(Array(StructField(_, LongType, _, _),
+              StructField(_, ArrayType(StringType, _), _, _))), _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects (array<struct<string, bigint>>, " +
+          "array<struct<bigint, array<string>>>), " +
+          s"got (${postings.dataType.simpleString}, ${index.dataType.simpleString})")
+    }
 
   // per-task state: the index value it was built from, the term → query
   // slots map, the slots' query ids, and the scoring scratch
@@ -75,16 +77,23 @@ case class TermScores(postings: Expression, index: Expression)
     while (i < ix.numElements()) {
       if (!ix.isNullAt(i)) {
         val e = ix.getStruct(i, 2)
-        if (e.isNullAt(1))
+        if (e.isNullAt(0))
           throw new IllegalArgumentException(s"$prettyName: null query id in the index")
-        if (!e.isNullAt(0)) {
-          val q = e.getLong(1)
+        if (!e.isNullAt(1)) {
+          val q = e.getLong(0)
           var slot = slotOf.get(q)
           if (slot == null) { slot = ids.size; slotOf.put(q, slot); ids += q }
-          val t = e.getUTF8String(0).copy()
-          var b = lists.get(t)
-          if (b == null) { b = new scala.collection.mutable.ArrayBuilder.ofInt; lists.put(t, b) }
-          b += slot.intValue
+          val terms = e.getArray(1)
+          var j = 0
+          while (j < terms.numElements()) {
+            if (!terms.isNullAt(j)) {
+              val t = terms.getUTF8String(j).copy()
+              var b = lists.get(t)
+              if (b == null) { b = new scala.collection.mutable.ArrayBuilder.ofInt; lists.put(t, b) }
+              b += slot.intValue
+            }
+            j += 1
+          }
         }
       }
       i += 1

@@ -760,14 +760,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         CountMinSketch(children.head, litInt("graft_cms", children(1)),
           litInt("graft_cms", children(2))).toAggregateExpression()
       }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_theta"),
-      new ExpressionInfo(classOf[ThetaSketch].getName, "graft_theta"),
-      (children: Seq[Expression]) => {
-        arity2("graft_theta", children)
-        ThetaSketch(children.head,
-          litInt("graft_theta", children(1))).toAggregateExpression()
-      }))
     // whole-operator extension: plans graft.plans.TopKPerKey logical nodes
     ext.injectPlannerStrategy(_ => graft.plans.GraftStrategy)
   }

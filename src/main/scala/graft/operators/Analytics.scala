@@ -193,18 +193,17 @@ object Analytics {
     orders.groupBy(col("o_orderpriority"))
       .agg(approx_count_distinct(col("o_custkey"), rsd = 0.02).as("approx_customers"))
 
-  /** Theta-sketch count-distinct per group at an EXACT configuration
-    * (k above every group's cardinality ⇒ θ = 1 ⇒ the sketch IS the
+  /** Theta-sketch count-distinct per group (Spark's DataSketches
+    * `theta_sketch_agg`) at an EXACT configuration (2^lg nominal entries
+    * above every group's cardinality ⇒ θ = 1 ⇒ the sketch IS the
     * distinct set): the oracle-adjudicated twin of [[approxDistinct]]'s
     * HLL — which has no exact regime to pin — proving the mergeable
-    * sketch path against plain COUNT(DISTINCT) SQL; production sizes k
-    * down (256 ⇒ ~6% rse, 2 KB/group) on the same plan. */
-  def approxDistinctTheta(orders: DataFrame, k: Int = 1 << 16): DataFrame = {
-    import graft.functions.ThetaAgg
+    * sketch path against plain COUNT(DISTINCT) SQL; production sizes lg
+    * down (8 ⇒ ~6% rse) on the same plan. */
+  def approxDistinctTheta(orders: DataFrame, lg: Int = 16): DataFrame =
     orders.groupBy(col("o_orderpriority"))
-      .agg(ThetaAgg.estimate(ThetaAgg.sketch(col("o_custkey"), k), k)
-        .cast("long").as("approx_customers"))
-  }
+      .agg(theta_sketch_estimate(theta_sketch_agg(col("o_custkey"), lg))
+        .as("approx_customers"))
 
   /** Sketch quantiles (Greenwald-Khanna): mergeable constant-ish memory per
     * group — the 100 TB path for [[quantiles]]; spec-bounded vs exact. */
@@ -404,24 +403,27 @@ object Analytics {
     * windows are 'na'. */
   /** Theta-sketch segment algebra — "how many distinct users are in
     * segment A, B, their union, their INTERSECTION" from one scan and two
-    * k-long arrays (functions/ThetaAgg.scala). HLL answers the first
-    * three; only a sampling sketch composes under intersection. Exact
-    * ground truth rides beside the estimates (one user-grouped aggregate)
-    * so the output is self-auditing; at 100 TB you'd drop the exact half
-    * — that is the half that shuffles one row per distinct user, while the
-    * sketch half ships k longs per partition. Rows-only (estimates); the
-    * spec bounds relative error at saturation and pins exact mode under
-    * k + partition invariance. */
-  def thetaSegments(events: DataFrame, k: Int = 256): DataFrame = {
-    import graft.functions.ThetaAgg._
+    * sketches (Spark's DataSketches `theta_*` built-ins, 2^lg nominal
+    * entries). HLL answers the first three; only a sampling sketch
+    * composes under intersection. Exact ground truth rides beside the
+    * estimates (one user-grouped aggregate) so the output is
+    * self-auditing; at 100 TB you'd drop the exact half — that is the
+    * half that shuffles one row per distinct user, while the sketch half
+    * ships one sketch per partition. The union passes `lg` (without it
+    * `theta_union` falls back to 12). Rows-only (estimates); the spec
+    * bounds relative error at saturation and pins exact mode below 2^lg
+    * + partition invariance. */
+  def thetaSegments(events: DataFrame, lg: Int = 8): DataFrame = {
     val a = when(col("event_type") === "click", col("user_id"))
     val b = when(col("event_type") === "purchase", col("user_id"))
-    val sk = events.agg(sketch(a, k).as("ska"), sketch(b, k).as("skb"))
+    def est(sk: Column) = theta_sketch_estimate(sk).cast("double")
+    val sk = events.agg(theta_sketch_agg(a, lg).as("ska"),
+        theta_sketch_agg(b, lg).as("skb"))
       .select(
-        round4(estimate(col("ska"), k)).as("est_click"),
-        round4(estimate(col("skb"), k)).as("est_purchase"),
-        round4(unionEstimate(col("ska"), col("skb"), k)).as("est_union"),
-        round4(intersectionEstimate(col("ska"), col("skb"), k)).as("est_intersect"))
+        est(col("ska")).as("est_click"),
+        est(col("skb")).as("est_purchase"),
+        est(theta_union(col("ska"), col("skb"), lg)).as("est_union"),
+        est(theta_intersection(col("ska"), col("skb"))).as("est_intersect"))
     val per = events.filter(col("event_type").isin("click", "purchase"))
       .groupBy("user_id")
       .agg(max(when(col("event_type") === "click", 1).otherwise(0)).as("ha"),
@@ -438,49 +440,43 @@ object Analytics {
     * stage 1 materializes a sketch TABLE at (day, event_type) grain (one
     * KB-scale theta sketch + exact event count per cell — the only pass
     * over the raw events); stage 2 answers "distinct users per type" by
-    * MERGING the stored sketches — k smallest distinct hashes of the
-    * cells' union, plain array arithmetic over collect_list — without
-    * rescanning a single event row. Any slice (a day range, one type, all
+    * MERGING the stored sketches (`theta_union_agg`) without rescanning a
+    * single event row. Any slice (a day range, one type, all
     * types) is the same merge over fewer or more cells; theta sketches
     * compose under union AND intersection, which is why the stored grain
     * can be finer than every query it serves.
     *
-    * At the driver's scales every per-type user set is far below `k`, so
+    * At SparkEntry's scales every per-type user set is below 2^lg, so
     * the sketch path is EXACT by the theta contract (θ = 1 until
     * saturation) and the oracle is plain COUNT(DISTINCT) SQL — the
-    * ann_pq_q adjudication pattern; production sizes k down (4096 ⇒ ~2%
-    * error, 32 KB/cell) and the merge cost doesn't change. */
-  def sketchRollup(events: DataFrame, k: Int = 1 << 14): DataFrame =
-    sketchRollupFromCells(sketchCells(events, k), k)
+    * ann_pq_q adjudication pattern; production sizes lg down (12 ⇒ ~2%
+    * error) and the merge cost doesn't change. */
+  def sketchRollup(events: DataFrame, lg: Int = 14): DataFrame =
+    sketchRollupFromCells(sketchCells(events, lg), lg)
 
   /** Stage 1: the STORED rollup table — one theta sketch + event count per
-    * (day, event_type) cell. In production this is written once per
+    * (day, event_type) cell. `sk` is DataSketches' binary compact theta
+    * sketch, the format Druid and Pinot store, so any DataSketches
+    * reader merges the cells. In production this is written once per
     * ingest period (a TxLogFormat table) and every rollup query reads
     * only it; [[sketchRollupFromCells]] is that query. */
-  def sketchCells(events: DataFrame, k: Int = 1 << 14): DataFrame = {
-    import graft.functions.ThetaAgg
+  def sketchCells(events: DataFrame, lg: Int = 14): DataFrame =
     events
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(ThetaAgg.sketch(col("user_id"), k).as("sk"),
+      .agg(theta_sketch_agg(col("user_id"), lg).as("sk"),
         count(lit(1)).as("n_events"))
-  }
 
   /** Stage 2: merge-only — "distinct users per type" from the stored
     * cells, never touching an event row. Any slice (a day range, one
-    * type, all types) is the same merge over fewer or more cells. */
-  def sketchRollupFromCells(cells: DataFrame, k: Int = 1 << 14): DataFrame = {
-    import graft.functions.ThetaAgg
-    // KMV union aggregate, NOT collect_list-then-trim: the collect
-    // formulation buffered every cell's full sketch in one aggregation
-    // row (k longs × #cells — a year of daily cells at k=2¹⁴ is ~500 MB
-    // per group) before the slice could drop anything; the union agg
-    // folds each cell into O(k) state, map-side partials included, and
-    // returns the identical k-smallest-distinct array by construction.
-    val merged = ThetaAgg.union(col("sk"), k)
+    * type, all types) is the same merge over fewer or more cells. The
+    * union aggregate folds each cell into one sketch of 2^lg nominal
+    * entries, map-side partials included, so a group's state does not
+    * grow with its number of cells. */
+  def sketchRollupFromCells(cells: DataFrame, lg: Int = 14): DataFrame =
     cells.groupBy("event_type")
       .agg(sum("n_events").as("n_events"),
-        ThetaAgg.estimate(merged, k).cast("long").as("distinct_users"))
-  }
+        theta_sketch_estimate(theta_union_agg(col("sk"), lg))
+          .as("distinct_users"))
 
   /** Time-series gap fill — regularize a sparse daily series onto a dense
     * per-key day spine: missing days materialize with count 0 and the last

@@ -74,6 +74,19 @@ case class VideoFrameRow(doc_id: Long, header_w: Int, header_h: Int,
   */
 object Multimodal {
 
+  /** The typed per-payload decode behind every media wrapper: `f` maps one
+    * (doc_id, payload) to its output rows in one scan-bound
+    * `mapPartitions` pass, so no payload leaves its partition. */
+  private def decodeEach[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      media: DataFrame)(f: (Long, Array[Byte]) => IterableOnce[T]): DataFrame = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    media.select(col("doc_id"), col("payload"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions(_.flatMap { case (id, payload) => f(id, payload) })
+      .toDF()
+  }
+
   /** Magic-byte sniff: only payloads that LOOK like a supported image
     * format reach ImageIO — on a corpus of mostly-text payloads the
     * decoder is never even consulted, so the real-decode path costs the
@@ -510,15 +523,10 @@ object Multimodal {
     * the metadata-curation entry point (filter a 100 TB video corpus by
     * duration/resolution/codec BEFORE any expensive decode fan-out). */
   def videoMetadata(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        probeVideo(payload).map(v =>
-          VideoMetaRow(id, v.container, v.width, v.height, v.duration_sec, v.codec))
-      })
-      .toDF()
+    decodeEach(media) { (id, payload) =>
+      probeVideo(payload).map(v =>
+        VideoMetaRow(id, v.container, v.width, v.height, v.duration_sec, v.codec))
+    }
   }
 
   /** Real video PIXEL decode over a binary media frame — for the one
@@ -534,25 +542,20 @@ object Multimodal {
     * Scan-bound per partition like every decode in this file: no
     * shuffle, payload never leaves its partition. */
   def videoFrameFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        for {
-          meta <- probeVideo(payload)
-          if meta.container == "avi"
-          frame <- firstMjpegFrame(payload)
-          (w, h, hist) <- decodeImage(frame)
-        } yield {
-          var bin = 0
-          var i = 1
-          while (i < hist.length) { if (hist(i) > hist(bin)) bin = i; i += 1 }
-          VideoFrameRow(id, meta.width, meta.height, w, h,
-            w == meta.width && h == meta.height, bin, hist)
-        }
-      })
-      .toDF()
+    decodeEach(media) { (id, payload) =>
+      for {
+        meta <- probeVideo(payload)
+        if meta.container == "avi"
+        frame <- firstMjpegFrame(payload)
+        (w, h, hist) <- decodeImage(frame)
+      } yield {
+        var bin = 0
+        var i = 1
+        while (i < hist.length) { if (hist(i) > hist(bin)) bin = i; i += 1 }
+        VideoFrameRow(id, meta.width, meta.height, w, h,
+          w == meta.width && h == meta.height, bin, hist)
+      }
+    }
   }
 
   /** Deterministic single-frame MJPEG AVI synthesizer — the TEST RIG for
@@ -650,14 +653,9 @@ object Multimodal {
     * frames drop. A production corpus would key frame k of every clip
     * the same way (the [[sampleFrames]] stride). */
   def videoHashes(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        firstMjpegFrame(payload).flatMap(dHash64).map(VideoHashRow(id, _))
-      })
-      .toDF()
+    decodeEach(media) { (id, payload) =>
+      firstMjpegFrame(payload).flatMap(dHash64).map(VideoHashRow(id, _))
+    }
   }
 
   /** (doc_id, frame_slot, vhash) over a binary media frame — the
@@ -675,24 +673,19 @@ object Multimodal {
     * clip); non-MJPEG-AVI payloads contribute nothing. */
   def videoHashesStrided(media: DataFrame, k: Int = 3): DataFrame = {
     require(k >= 1, s"need at least one frame slot, got $k")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        val frames = mjpegFrames(payload)
-        if (frames.isEmpty) Iterator.empty
-        else {
-          val n = frames.length
-          (0 until k).iterator
-            .map(j => (j, (j.toLong * n / k).toInt))
-            .distinctBy(_._2) // short clip: each frame hashed once
-            .flatMap { case (slot, idx) =>
-              dHash64(frames(idx)).map(VideoFrameHashRow(id, slot, _))
-            }
-        }
-      })
-      .toDF()
+    decodeEach(media) { (id, payload) =>
+      val frames = mjpegFrames(payload)
+      if (frames.isEmpty) Iterator.empty
+      else {
+        val n = frames.length
+        (0 until k).iterator
+          .map(j => (j, (j.toLong * n / k).toInt))
+          .distinctBy(_._2) // short clip: each frame hashed once
+          .flatMap { case (slot, idx) =>
+            dHash64(frames(idx)).map(VideoFrameHashRow(id, slot, _))
+          }
+      }
+    }
   }
 
   /** Hard ceiling on DECLARED pixel count before any pixel allocates:
@@ -837,14 +830,9 @@ object Multimodal {
     * only pass that touches pixels; everything downstream works on the
     * 8-byte hash column. */
   def imageHashes(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        dHash64(payload).map(ImageHashRow(id, _))
-      })
-      .toDF()
+    decodeEach(media) { (id, payload) =>
+      dHash64(payload).map(ImageHashRow(id, _))
+    }
   }
 
   /** Deterministic synthetic image whose [[dHash64]] equals `pattern` —
@@ -1093,15 +1081,10 @@ object Multimodal {
     * downstream. */
   def audioHashesPeaks(media: DataFrame, winSamples: Int = 64,
       hopDiv: Int = 2, maxSlots: Int = 8): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        audioFingerprintsPeaks(payload, winSamples, hopDiv, maxSlots)
-          .map { case (slot, h) => AudioSlotHashRow(id, slot, h) }
-      })
-      .toDF()
+    decodeEach(media) { (id, payload) =>
+      audioFingerprintsPeaks(payload, winSamples, hopDiv, maxSlots)
+        .map { case (slot, h) => AudioSlotHashRow(id, slot, h) }
+    }
   }
 
   /** In-place iterative radix-2 FFT (Cooley-Tukey) over a real input —
@@ -1231,15 +1214,10 @@ object Multimodal {
     * maxHamming = 0 (bin-set signatures). */
   def audioHashesSpectral(media: DataFrame, winSamples: Int = 64,
       hopDiv: Int = 2, maxSlots: Int = 8): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        audioFingerprintsSpectral(payload, winSamples, hopDiv, maxSlots)
-          .map { case (slot, h) => AudioSlotHashRow(id, slot, h) }
-      })
-      .toDF()
+    decodeEach(media) { (id, payload) =>
+      audioFingerprintsSpectral(payload, winSamples, hopDiv, maxSlots)
+        .map { case (slot, h) => AudioSlotHashRow(id, slot, h) }
+    }
   }
 
   /** (doc_id, off_slot, ahash) over a binary media frame — the strided
@@ -1247,29 +1225,19 @@ object Multimodal {
     * one scan-bound decode pass, ≤ 8·maxSlots bytes/clip out. */
   def audioHashesStrided(media: DataFrame, winSamples: Int = 64,
       slotStride: Int = 8, maxSlots: Int = 8): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        audioFingerprintsStrided(payload, winSamples, slotStride, maxSlots)
-          .map { case (slot, h) => AudioSlotHashRow(id, slot, h) }
-      })
-      .toDF()
+    decodeEach(media) { (id, payload) =>
+      audioFingerprintsStrided(payload, winSamples, slotStride, maxSlots)
+        .map { case (slot, h) => AudioSlotHashRow(id, slot, h) }
+    }
   }
 
   /** (doc_id, ahash) over a binary media frame — the audio twin of
     * [[imageHashes]]: one scan-bound mapPartitions decode, 8 bytes per
     * clip out, non-WAV / sub-65-frame payloads drop. */
   def audioHashes(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        audioFingerprint64(payload).map(AudioHashRow(id, _))
-      })
-      .toDF()
+    decodeEach(media) { (id, payload) =>
+      audioFingerprint64(payload).map(AudioHashRow(id, _))
+    }
   }
 
   /** Deterministic synthetic WAV whose [[audioFingerprint64]] equals

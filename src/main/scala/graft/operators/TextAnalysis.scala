@@ -1246,12 +1246,11 @@ object TextAnalysis {
       .select(col("t"), col("doc_id"),
         halfUp(idf * (col("tf").cast("double") * lit(2.2)) / denom * 1e6)
           .cast("long").as("w_micro"))
-    // the query side as ONE scalar-subquery value: evaluated once per
-    // execution, it reaches each scoring task once (never per doc row)
-    val index = queries.select(col("doc_id").as("query_id"),
-        explode(distinctWords).as("t"))
-      .filter(col("t") =!= "")
-      .agg(collect_list(struct(col("t"), col("query_id"))))
+    // the query side as ONE scalar-subquery value, one element per query:
+    // evaluated once per execution, it reaches each scoring task once
+    // (never per doc row)
+    val index = queries.agg(collect_list(struct(col("doc_id").as("query_id"),
+      filter(distinctWords, t => t =!= "").as("terms"))))
     val scored = graft.plans.CollectPerKey(wtd, "doc_id", Seq("t", "w_micro"), "__postings")
       .select(col("doc_id"), graft.functions.TermFunctions.termScores(
         col("__postings"), index.scalar()))

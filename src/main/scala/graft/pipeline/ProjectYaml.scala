@@ -2,184 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 
-/** Minimal YAML reader for dbt project files (dbt_project.yml,
-  * profiles/profiles.yml, model/source/exposure schema .yml) — the subset
-  * those files actually use: indentation-nested maps, `- ` sequences
-  * (scalar items and map items), quoted/plain scalars, flow lists
-  * (`["a", "b"]`), flow maps (`{count: 24, period: hour}` — the dbt
-  * freshness shape), comments. No anchors/aliases/multi-doc — out of
-  * scope for dbt config files. Zero dependencies by design: the build
-  * resolves nothing beyond Spark's own jars.
-  *
-  * Scalars are typed: `true`/`false` → Boolean, integers → Long,
-  * everything else → String (quotes stripped). Jinja templates stay
-  * verbatim strings — [[ProjectYaml.renderJinja]] resolves the `env_var`
-  * forms dbt profiles use.
-  */
-object YamlLite {
-
-  /** Parse a YAML document into Map[String, Any] / Seq[Any] / scalars. */
-  def parse(text: String): Any = {
-    val lines = text.linesIterator.map(stripComment)
-      .zipWithIndex.filter(_._1.trim.nonEmpty).map(_._1).toVector
-    if (lines.isEmpty) Map.empty[String, Any]
-    else parseBlock(lines, 0, lines.length, indentOf(lines.head))
-  }
-
-  private def indentOf(l: String): Int = l.takeWhile(_ == ' ').length
-
-  /** Cut an unquoted ` #` comment (or a full-line `#`). */
-  private def stripComment(l: String): String = {
-    var inS = false; var inD = false
-    var i = 0
-    while (i < l.length) {
-      val c = l.charAt(i)
-      if (c == '\'' && !inD) inS = !inS
-      else if (c == '"' && !inS) inD = !inD
-      else if (c == '#' && !inS && !inD &&
-               (i == 0 || l.charAt(i - 1) == ' ')) return l.substring(0, i)
-      i += 1
-    }
-    l
-  }
-
-  private def scalar(s: String): Any = {
-    val t = s.trim
-    if (t.length >= 2 && ((t.head == '"' && t.last == '"') ||
-                          (t.head == '\'' && t.last == '\'')))
-      t.substring(1, t.length - 1)
-    else if (t.startsWith("[") && t.endsWith("]"))
-      splitTop(t.substring(1, t.length - 1), ',').map(scalar)
-    else if (t.startsWith("{") && t.endsWith("}"))
-      // flow map ({count: 24, period: hour} — the dbt freshness shape)
-      splitTop(t.substring(1, t.length - 1), ',').flatMap { kv =>
-        val i = kv.indexOf(':')
-        if (i < 0) None
-        else Some(scalar(kv.substring(0, i)).toString ->
-          scalar(kv.substring(i + 1)))
-      }.toMap
-    else if (t == "true") true
-    else if (t == "false") false
-    else if (t == "null" || t == "~") null
-    else if (t.matches("-?\\d+")) t.toLong
-    else if (t.matches("-?\\d+\\.\\d+")) t.toDouble
-    else t
-  }
-
-  /** Split on `sep` at paren/bracket/quote depth 0. */
-  private[pipeline] def splitTop(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0; var inS = false; var inD = false
-    s.foreach { c =>
-      if (c == '\'' && !inD) { inS = !inS; cur += c }
-      else if (c == '"' && !inS) { inD = !inD; cur += c }
-      else if (!inS && !inD && "([{".contains(c)) { depth += 1; cur += c }
-      else if (!inS && !inD && ")]}".contains(c)) { depth -= 1; cur += c }
-      else if (!inS && !inD && depth == 0 && c == sep) {
-        out += cur.toString; cur.clear()
-      } else cur += c
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** `key:` split at the first unquoted colon that is followed by a space
-    * or ends the line (so `"a:b": v` and timestamps survive). */
-  private def keySplit(l: String): Option[(String, String)] = {
-    var inS = false; var inD = false
-    var i = 0
-    while (i < l.length) {
-      val c = l.charAt(i)
-      if (c == '\'' && !inD) inS = !inS
-      else if (c == '"' && !inS) inD = !inD
-      else if (c == ':' && !inS && !inD &&
-               (i == l.length - 1 || l.charAt(i + 1) == ' '))
-        return Some((scalar(l.substring(0, i)).toString,
-                     l.substring(math.min(i + 1, l.length)).trim))
-      i += 1
-    }
-    None
-  }
-
-  private def parseBlock(lines: Vector[String], from: Int, until: Int,
-                         indent: Int): Any = {
-    if (from >= until) return Map.empty[String, Any]
-    if (lines(from).trim.startsWith("- "))
-      parseSeq(lines, from, until, indent)
-    else parseMap(lines, from, until, indent)
-  }
-
-  private def childrenEnd(lines: Vector[String], from: Int, until: Int,
-                          indent: Int): Int = {
-    var j = from
-    while (j < until && indentOf(lines(j)) > indent) j += 1
-    j
-  }
-
-  private def parseMap(lines: Vector[String], from: Int, until: Int,
-                       indent: Int): Map[String, Any] = {
-    val out = scala.collection.mutable.LinkedHashMap[String, Any]()
-    var i = from
-    while (i < until) {
-      val l = lines(i)
-      if (indentOf(l) != indent)
-        throw new IllegalArgumentException(s"yaml: bad indent at: $l")
-      keySplit(l.trim) match {
-        // block scalar (`description: |` / `>`): the deeper-indented lines
-        // are TEXT, not structure — dbt descriptions use this routinely
-        case Some((k, v)) if v == "|" || v == ">" ||
-            v.matches("[|>][+-]?") =>
-          val end = childrenEnd(lines, i + 1, until, indent)
-          val body = lines.slice(i + 1, end)
-          val strip = body.map(indentOf).minOption.getOrElse(0)
-          out(k) = body.map(_.drop(strip))
-            .mkString(if (v.startsWith(">")) " " else "\n")
-          i = end
-        case Some((k, v)) if v.nonEmpty =>
-          out(k) = scalar(v); i += 1
-        case Some((k, _)) =>
-          val end = childrenEnd(lines, i + 1, until, indent)
-          out(k) =
-            if (end == i + 1) null
-            else parseBlock(lines, i + 1, end, indentOf(lines(i + 1)))
-          i = end
-        case None =>
-          throw new IllegalArgumentException(s"yaml: expected key: at: $l")
-      }
-    }
-    out.toMap
-  }
-
-  private def parseSeq(lines: Vector[String], from: Int, until: Int,
-                       indent: Int): Seq[Any] = {
-    val out = Seq.newBuilder[Any]
-    var i = from
-    while (i < until) {
-      val l = lines(i)
-      require(indentOf(l) == indent && l.trim.startsWith("- "),
-        s"yaml: expected '- ' item at: $l")
-      val end = childrenEnd(lines, i + 1, until, indent)
-      val content = l.trim.drop(2)
-      if (end == i + 1 && (keySplit(content).isEmpty ||
-          // a flow map/seq item (`- {a: 1, b: 2}` — the dbt unit-test row
-          // form) is ONE scalar, not a block map keyed on "{a"
-          (content.startsWith("{") && content.endsWith("}")) ||
-          (content.startsWith("[") && content.endsWith("]")))) {
-        out += scalar(content) // plain scalar item
-      } else {
-        // map item: re-indent the inline first entry to align with the
-        // item's continuation lines and parse the block as one map
-        val head = (" " * (indent + 2)) + content
-        val block = head +: lines.slice(i + 1, end)
-        out += parseBlock(block, 0, block.length, indent + 2)
-      }
-      i = end
-    }
-    out.result()
-  }
-}
-
 /** Loads the dbt project-file surface onto the engine's case classes:
   *
   *  - `dbt_project.yml` (reference dbt_project.yml:1-40): project name,
@@ -218,6 +40,50 @@ object ProjectYaml {
     case _ => Nil
   }
 
+  /** A YAML document through Spark's bundled SnakeYAML (YAML 1.1, as
+    * dbt's PyYAML reads it: anchors, merge keys, flow collections,
+    * escapes; `yes`/`on` are booleans) with safe types only, as
+    * `Map[String, Any]` / `Seq[Any]` / Long / Double / Boolean / String
+    * / null. A timestamp-tagged scalar keeps its text, so `2024-01-01`
+    * stays a string. An empty or all-comment document is an empty map. */
+  private def parse(yaml: String): Any = {
+    import org.yaml.snakeyaml.{LoaderOptions, Yaml}
+    import org.yaml.snakeyaml.constructor.SafeConstructor
+    import org.yaml.snakeyaml.nodes.Tag
+    import scala.jdk.CollectionConverters._
+    def toScala(v: Any): Any = v match {
+      case mm: java.util.Map[_, _] =>
+        mm.asScala.iterator.map { case (k, x) => str(toScala(k)) -> toScala(x) }.toMap
+      case l: java.util.List[_] => l.asScala.iterator.map(toScala).toList
+      case i: java.lang.Integer => i.longValue
+      case b: java.math.BigInteger => b.toString
+      case other => other
+    }
+    val loader = new Yaml(new SafeConstructor(new LoaderOptions) {
+      yamlConstructors.put(Tag.TIMESTAMP, new ConstructYamlStr)
+    })
+    Option(loader.load[Any](yaml)).map(toScala).getOrElse(Map.empty[String, Any])
+  }
+
+  /** Split on `sep` at paren/bracket/quote depth 0: the Jinja and Python
+    * argument lists of `env_var(...)` and `config(...)`. */
+  private def splitTop(s: String, sep: Char): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    val cur = new StringBuilder
+    var depth = 0; var inS = false; var inD = false
+    s.foreach { c =>
+      if (c == '\'' && !inD) { inS = !inS; cur += c }
+      else if (c == '"' && !inS) { inD = !inD; cur += c }
+      else if (!inS && !inD && "([{".contains(c)) { depth += 1; cur += c }
+      else if (!inS && !inD && ")]}".contains(c)) { depth -= 1; cur += c }
+      else if (!inS && !inD && depth == 0 && c == sep) {
+        out += cur.toString; cur.clear()
+      } else cur += c
+    }
+    if (cur.nonEmpty) out += cur.toString
+    out.result().map(_.trim).filter(_.nonEmpty)
+  }
+
   // ---- jinja env_var resolution (the profiles.yml surface) ----
 
   /** Resolve a dbt profile string: `{{ env_var('A') }}`,
@@ -248,7 +114,7 @@ object ProjectYaml {
 
   /** literal | env_var(expr[, expr]) | expr ~ expr */
   private def evalExpr(e: String, env: Map[String, String]): Option[String] = {
-    val parts = YamlLite.splitTop(e, '~')
+    val parts = splitTop(e, '~')
     if (parts.length > 1) {
       val vals = parts.map(p => evalExpr(p.trim, env))
       if (vals.forall(_.isDefined)) Some(vals.flatten.mkString) else None
@@ -258,7 +124,7 @@ object ProjectYaml {
                             (t.head == '"' && t.last == '"')))
         Some(t.substring(1, t.length - 1))
       else if (t.startsWith("env_var(") && t.endsWith(")")) {
-        val args = YamlLite.splitTop(t.substring(8, t.length - 1), ',')
+        val args = splitTop(t.substring(8, t.length - 1), ',')
           .map(a => evalExpr(a.trim, env))
         if (args.isEmpty || args.head.isEmpty) None
         else env.get(args.head.get)
@@ -276,7 +142,7 @@ object ProjectYaml {
   def loadProfiles(yaml: String, profileName: String, warehouseBase: String,
                    env: Map[String, String] = Map.empty)
       : (Seq[Target], String) = {
-    val root = m(YamlLite.parse(yaml))
+    val root = m(parse(yaml))
     val prof = m(root.getOrElse(profileName, throw new IllegalArgumentException(
       s"profiles.yml: no profile '$profileName' (have: ${root.keys.mkString(", ")})")))
     val defaultTarget = renderJinja(str(prof.getOrElse("target", "dev")), env)
@@ -304,7 +170,7 @@ object ProjectYaml {
                                  seedsTree: Map[String, Any] = Map.empty)
 
   def loadProject(yaml: String): ProjectConfig = {
-    val root = m(YamlLite.parse(yaml))
+    val root = m(parse(yaml))
     ProjectConfig(
       name = str(root.getOrElse("name", "project")),
       profile = str(root.getOrElse("profile", "")),
@@ -380,8 +246,8 @@ object ProjectYaml {
     require(close >= 0, "model sql: unterminated {{ config(...) }}")
     val args = sql.substring(cfg.end, argsEnd)
     val body = sql.substring(0, cfg.start) + sql.substring(close + 2)
-    val kwargs = YamlLite.splitTop(args, ',').flatMap { kv =>
-      YamlLite.splitTop(kv, '=') match {
+    val kwargs = splitTop(args, ',').flatMap { kv =>
+      splitTop(kv, '=') match {
         case Seq(k, v) => Some(k.trim -> pyLiteral(v.trim))
         case _ => None
       }
@@ -396,10 +262,10 @@ object ProjectYaml {
                                (v.head == '"' && v.last == '"')))
       v.substring(1, v.length - 1)
     else if (v.startsWith("[") && v.endsWith("]"))
-      YamlLite.splitTop(v.substring(1, v.length - 1), ',').map(pyLiteral)
+      splitTop(v.substring(1, v.length - 1), ',').map(pyLiteral)
     else if (v.startsWith("{") && v.endsWith("}"))
-      YamlLite.splitTop(v.substring(1, v.length - 1), ',').flatMap { kv =>
-        YamlLite.splitTop(kv, ':') match {
+      splitTop(v.substring(1, v.length - 1), ',').flatMap { kv =>
+        splitTop(kv, ':') match {
           case Seq(k, vv) => Some(str(pyLiteral(k.trim)) -> pyLiteral(vv.trim))
           case _ => None
         }
@@ -474,7 +340,7 @@ object ProjectYaml {
   def loadModelTests(yaml: String)
       : Map[String, Seq[(String, DataFrame => DataFrame)]] = {
     import org.apache.spark.sql.functions._
-    val root = m(YamlLite.parse(yaml))
+    val root = m(parse(yaml))
     seq(root.getOrElse("models", Nil)).map(m(_)).flatMap { mod =>
       val name = str(mod.getOrElse("name", ""))
       // model-level: seq of one-key maps carrying column_name args;
@@ -528,7 +394,7 @@ object ProjectYaml {
     * that SET something appear — absent keys default to error-at-any-
     * violation in [[TestConfig]]. */
   def loadTestConfigs(yaml: String): Map[String, Map[String, TestConfig]] = {
-    val root = m(YamlLite.parse(yaml))
+    val root = m(parse(yaml))
     def cfgOf(args: Map[String, Any]): Option[TestConfig] = {
       val c = m(args.getOrElse("config", Map.empty[String, Any]))
       val sev = c.get("severity").orElse(args.get("severity")).map(str)
@@ -568,7 +434,7 @@ object ProjectYaml {
     * export persists (dbt `persist_docs`). */
   def loadModelDocs(yaml: String)
       : Map[String, (String, Map[String, String])] = {
-    val root = m(YamlLite.parse(yaml))
+    val root = m(parse(yaml))
     seq(root.getOrElse("models", Nil)).map(m(_)).flatMap { mod =>
       val name = str(mod.getOrElse("name", ""))
       if (name.isEmpty) None else Some(name -> (
@@ -600,7 +466,7 @@ object ProjectYaml {
     * dict form (`rows: - {a: 1, b: x}` or block maps); other fixture
     * formats (csv/sql) refuse loudly rather than silently passing. */
   def loadUnitTests(yaml: String): Seq[UnitTestDef] = {
-    val root = m(YamlLite.parse(yaml))
+    val root = m(parse(yaml))
     def rowsOf(node: Map[String, Any], what: String): Seq[Map[String, Any]] = {
       node.get("format").map(str).foreach(f => require(f == "dict",
         s"unit test $what: only format: dict fixtures load (got '$f')"))
@@ -735,7 +601,7 @@ object ProjectYaml {
     * other metrics) refuse loudly — out of the compiled-aggregate
     * contract. */
   def loadMetrics(yaml: String): Seq[Metric] = {
-    seq(m(YamlLite.parse(yaml)).getOrElse("metrics", Nil)).map(m(_)).map { mt =>
+    seq(m(parse(yaml)).getOrElse("metrics", Nil)).map(m(_)).map { mt =>
       val name = str(mt.getOrElse("name",
         throw new IllegalArgumentException("metric without a name")))
       val modelRaw = str(mt.getOrElse("model",
@@ -782,7 +648,7 @@ object ProjectYaml {
     * (`dbt run --selector nightly`). At most one may be `default: true`
     * (dbt refuses ambiguous defaults; so does this). */
   def loadSelectors(yaml: String): Seq[SelectorDef] = {
-    val defs = seq(m(YamlLite.parse(yaml)).getOrElse("selectors", Nil))
+    val defs = seq(m(parse(yaml)).getOrElse("selectors", Nil))
       .map(m(_)).map { s =>
         SelectorDef(
           str(s.getOrElse("name", throw new IllegalArgumentException(
@@ -833,7 +699,7 @@ object ProjectYaml {
       }
       count.map(_ * unit)
     }
-    val root = m(YamlLite.parse(yaml))
+    val root = m(parse(yaml))
     seq(root.getOrElse("sources", Nil)).map(m(_)).flatMap { src =>
       val sname = str(src.getOrElse("name", ""))
       seq(src.getOrElse("tables", Nil)).map(m(_)).map { t =>
@@ -893,7 +759,7 @@ object ProjectYaml {
   // ---- exposures.yml ----
 
   def loadExposures(yaml: String): Seq[Exposure] = {
-    val root = m(YamlLite.parse(yaml))
+    val root = m(parse(yaml))
     seq(root.getOrElse("exposures", Nil)).map(m(_)).map { e =>
       Exposure(
         name = str(e.getOrElse("name", "")),
@@ -904,7 +770,9 @@ object ProjectYaml {
             .orElse("ref\\('([^']+)'\\)".r.findFirstMatchIn(d).map(_.group(1)))
             .getOrElse(d)
         },
-        description = str(e.getOrElse("description", "")))
+        // a `|` block keeps its line break (YAML clip chomping); the
+        // exposure's description is the text without it
+        description = str(e.getOrElse("description", "")).stripLineEnd)
     }
   }
 

@@ -764,7 +764,7 @@ class ApproxSpec extends SparkSpec {
     assert(got == exact) // θ = 1 below k ⇒ the merge is exact, not approximate
     // shrink k below the per-type cardinality: the merged estimate must
     // stay a real estimate (deterministic given the fixed hash — bounded)
-    val approx = Analytics.sketchRollup(ev, k = 64).collect()
+    val approx = Analytics.sketchRollup(ev, lg = 6).collect()
       .map(r => r.getString(0) -> r.getLong(2)).toMap
     approx.foreach { case (t, est) =>
       val d = exact(t)._2.toDouble
@@ -775,35 +775,35 @@ class ApproxSpec extends SparkSpec {
 
   test("theta sketch: exact under k, bounded error at saturation, " +
        "set algebra composes, partition-invariant") {
-    import spark.implicits._
-    import graft.functions.ThetaAgg._
-    val k = 256
+    val lg = 8 // 256 nominal entries
     // A = [0, 12000), B = [8000, 20000) → |A∪B| = 20000, |A∩B| = 4000
     val df = spark.range(0, 12000).select(col("id").as("a"), lit(null.asInstanceOf[java.lang.Long]).as("b"))
       .unionAll(spark.range(8000, 20000).select(lit(null.asInstanceOf[java.lang.Long]).as("a"), col("id").as("b")))
     def run(parts: Int) = df.repartition(parts)
-      .agg(sketch(col("a"), k).as("ska"), sketch(col("b"), k).as("skb"))
-      .select(estimate(col("ska"), k), estimate(col("skb"), k),
-              unionEstimate(col("ska"), col("skb"), k),
-              intersectionEstimate(col("ska"), col("skb"), k),
+      .agg(theta_sketch_agg(col("a"), lg).as("ska"),
+           theta_sketch_agg(col("b"), lg).as("skb"))
+      .select(theta_sketch_estimate(col("ska")), theta_sketch_estimate(col("skb")),
+              theta_sketch_estimate(theta_union(col("ska"), col("skb"), lg)),
+              theta_sketch_estimate(theta_intersection(col("ska"), col("skb"))),
               col("ska"))
       .collect()(0)
     val r = run(1)
-    // merge is a pure function of the value set
-    assert(run(7).getSeq[Long](4) == r.getSeq[Long](4), "sketch depends on partitioning")
-    val (estA, estB, estU, estI) =
-      (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
+    // merge is a pure function of the value set: the same sketch bytes
+    assert(run(7).getAs[Array[Byte]](4).toSeq == r.getAs[Array[Byte]](4).toSeq,
+      "sketch depends on partitioning")
+    val (estA, estB, estU, estI) = (r.getLong(0).toDouble, r.getLong(1).toDouble,
+      r.getLong(2).toDouble, r.getLong(3).toDouble)
     def relErr(est: Double, truth: Double) = math.abs(est - truth) / truth
     assert(relErr(estA, 12000) < 0.15, s"A: $estA")
     assert(relErr(estB, 12000) < 0.15, s"B: $estB")
     assert(relErr(estU, 20000) < 0.15, s"U: $estU")
     // intersection inherits union-scale absolute error: bound vs |A∪B|
     assert(math.abs(estI - 4000) / 20000 < 0.15, s"I: $estI")
-    // exact mode below k distincts
+    // exact mode below 2^lg distincts
     val small = spark.range(0, 100).select(col("id").as("a"))
-      .agg(sketch(col("a"), k).as("sk"))
-      .select(estimate(col("sk"), k)).collect()(0).getDouble(0)
-    assert(small == 100.0, s"exact mode broken: $small")
+      .agg(theta_sketch_agg(col("a"), lg).as("sk"))
+      .select(theta_sketch_estimate(col("sk"))).collect()(0).getLong(0)
+    assert(small == 100L, s"exact mode broken: $small")
   }
 
   test("embedding PCA: k dims, variance concentrates in leading components") {

@@ -299,11 +299,6 @@ class FunctionsSpec extends SparkSpec {
       "SELECT graft_cms(w, 2, 16) AS sk FROM VALUES ('x'),('y'),('x') t(w)")
       .head.getSeq[Long](0)
     assert(cms.length == 32 && cms.sum == 6, s"cms: $cms")
-    // theta below saturation: 3 retained hashes = exact distinct count
-    val th = fresh.sql(
-      "SELECT graft_theta(w, 16) AS sk FROM VALUES ('x'),('y'),('x'),('z') t(w)")
-      .head.getSeq[Long](0)
-    assert(th.length == 3, s"theta: $th")
     // mojibake repair resolves by SQL name and repairs (r15)
     val fm = fresh.sql("SELECT graft_fix_mojibake('CafÃ©') AS t")
       .head.getString(0)
@@ -334,25 +329,32 @@ class FunctionsSpec extends SparkSpec {
     assert(digests(0) == digests(1), "NFC must unify the dedup key")
   }
 
-  test("theta UNION aggregate: identical array to the collect-then-trim " +
-       "merge it replaces, at O(k) state, under any partitioning") {
-    import graft.functions.ThetaAgg
+  test("theta union over stored cells: the same sketch bytes as one " +
+       "theta_sketch_agg over the raw events, at 1 and 7 partitions") {
     import graft.operators.Analytics
-    val k = 64 // small k so cells SATURATE and the trim actually binds
-    val cells = Analytics.sketchCells(Tables.events(spark, sf), k)
-      .localCheckpoint(false)
-    def viaUnion(df: org.apache.spark.sql.DataFrame) = df
-      .groupBy("event_type").agg(ThetaAgg.union(col("sk"), k).as("m"))
-      .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-    val viaCollect = cells
-      .groupBy("event_type")
-      .agg(slice(array_sort(array_distinct(flatten(collect_list(col("sk"))))),
-        1, k).as("m"))
-      .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-    assert(viaUnion(cells) == viaCollect, "union agg diverged from the " +
-      "collect-then-trim formulation")
-    assert(viaUnion(cells.repartition(13)) == viaCollect,
-      "union agg result depends on partition layout")
+    val lg = 6 // 64 nominal entries: every cell SATURATES, so the trim binds
+    // the sf tables hold ~15 users per event type, too few to saturate
+    // any theta sketch (lg ≥ 4), so the events are synthetic: 3 types ×
+    // 30 days, ~200 distinct users per (day, type) cell
+    val events = spark.range(0, 20000).select(
+      timestamp_seconds(col("id") % 30 * 86400).as("ts"),
+      (col("id") % 3).cast("string").as("event_type"),
+      (abs(xxhash64(col("id"))) % 5000).as("user_id"))
+    def bytesOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
+    def viaCells(parts: Int) = bytesOf(
+      Analytics.sketchCells(events.repartition(parts), lg).repartition(parts)
+        .groupBy("event_type").agg(theta_union_agg(col("sk"), lg)))
+    def direct(parts: Int) = bytesOf(events.repartition(parts)
+      .groupBy("event_type").agg(theta_sketch_agg(col("user_id"), lg)))
+    val raw = direct(1)
+    assert(raw.size == 3)
+    assert(events.groupBy(to_date(col("ts")), col("event_type"))
+      .agg(countDistinct("user_id")).collect().forall(_.getLong(2) > (1L << lg)),
+      "a cell does not saturate")
+    assert(direct(7) == raw, "raw sketch depends on partition layout")
+    assert(viaCells(1) == raw, "union of stored cells diverged from the raw sketch")
+    assert(viaCells(7) == raw, "union of stored cells depends on partition layout")
   }
 
   test("BoundedMinPosSet: exact cap boundary, min-pos fold, duplicate-doc " +

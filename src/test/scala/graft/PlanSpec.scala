@@ -609,11 +609,11 @@ class PlanSpec extends SparkSpec {
     val plan = explained(df)
     // cell build + merge each split into partial/final aggregates around
     // one exchange — sketches cross the wire, never raw rows
-    assert("partial_graft_theta\\(".r.findAllIn(plan).nonEmpty,
+    assert("partial_theta_sketch_agg\\(".r.findAllIn(plan).nonEmpty,
       s"cell sketch build is not partial:\n$plan")
-    // the merge stage is the O(k)-state UNION aggregate (r11), partial
+    // the merge stage is the bounded-state UNION aggregate, partial
     // too — not collect_list buffering every stored cell per group
-    assert("partial_graft_theta_union".r.findAllIn(plan).nonEmpty,
+    assert("partial_theta_union_agg\\(".r.findAllIn(plan).nonEmpty,
       s"stage-2 merge is not the partial union aggregate:\n$plan")
     assert(!plan.contains("collect_list"),
       s"stage-2 merge still buffers whole cell sketches:\n$plan")

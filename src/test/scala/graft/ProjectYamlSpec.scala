@@ -433,6 +433,53 @@ class ProjectYamlSpec extends SparkSpec {
       "Example dashboard exposure depending on fct_example.")))
   }
 
+  test("YAML 1.1 as dbt reads it: an anchor + merge key, double-quoted " +
+       "escapes, a multi-line flow list, date-like strings, yes/on booleans") {
+    import spark.implicits._
+    // dbt schema files share a column's config through an anchor and a
+    // `<<:` merge key; the merged column overrides only its name
+    val schema =
+      """version: 2
+        |models:
+        |  - name: m
+        |    description: "tab\there, a \"quote\""
+        |    columns:
+        |      - &key_col
+        |        name: id
+        |        description: shared key docs
+        |        tests:
+        |          - unique
+        |          - not_null:
+        |              config: {severity: warn, store_failures: yes}
+        |      - <<: *key_col
+        |        name: id2
+        |      - name: day
+        |        tests:
+        |          - accepted_values:
+        |              values: [
+        |                2024-01-01,
+        |                2024-01-02
+        |              ]
+        |""".stripMargin
+    val tests = ProjectYaml.loadModelTests(schema)("m")
+    assert(tests.map(_._1).toSet == Set("unique_m_id", "not_null_m_id",
+      "unique_m_id2", "not_null_m_id2", "accepted_values_m_day"))
+    val warnStored = TestConfig("warn", storeFailures = true)
+    assert(ProjectYaml.loadTestConfigs(schema)("m") ==
+      Map("not_null_m_id" -> warnStored, "not_null_m_id2" -> warnStored))
+    assert(ProjectYaml.loadModelDocs(schema)("m") == ("tab\there, a \"quote\"",
+      Map("id" -> "shared key docs", "id2" -> "shared key docs")))
+    // the dates load as the strings they spell, so only the third day
+    // violates accepted_values
+    val days = Seq("2024-01-01", "2024-01-02", "2024-01-03").toDF("day")
+    val bad = tests.find(_._1 == "accepted_values_m_day").get._2(days)
+    assert(bad.collect().map(_.getString(0)).toSeq == Seq("2024-01-03"))
+    assert(ProjectYaml.loadProject("name: p\nprofile: p\nvars:\n  start: 2024-01-01\n")
+      .vars == Map("start" -> "2024-01-01"))
+    assert(ProjectYaml.loadSelectors(
+      "selectors:\n  - name: s\n    default: on\n    definition: a\n").head.isDefault)
+  }
+
   test("reference src_example.yml ships fully commented: loads no sources") {
     val real = java.nio.file.Files.readString(
       refFile("models/staging/src_example.yml"))

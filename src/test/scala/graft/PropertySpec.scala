@@ -101,13 +101,14 @@ class PropertySpec extends AnyFunSuite {
 
   test("theta sketch: exact below k; bounded relative error above it") {
     import spark.implicits._
-    val k = 256
+    val lg = 8
+    val k = 1 << lg
     val gen = Gen.choose(50, 20000)
     forAllSampled(gen, 5) { card =>
       val est = spark.range(card.toLong)
-        .agg(graft.functions.ThetaAgg.sketch(col("id"), k).as("sk"))
-        .select(graft.functions.ThetaAgg.estimate(col("sk"), k))
-        .collect()(0).getDouble(0)
+        .agg(theta_sketch_agg(col("id"), lg).as("sk"))
+        .select(theta_sketch_estimate(col("sk")))
+        .collect()(0).getLong(0).toDouble
       if (card < k) assert(est == card.toDouble, s"exact mode: $est != $card")
       else assert(math.abs(est - card) / card < 0.2,
         s"cardinality $card estimated $est")
@@ -614,12 +615,16 @@ class PropertySpec extends AnyFunSuite {
         .groupBy("query_id", "doc_id").agg(sum("w").as("score_micro"))
         .select("query_id", "doc_id", "score_micro")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
-      val index = qt.agg(collect_list(struct(col("t"), col("query_id"))))
+      // the index bm25TopK builds: one (query_id, terms) element per
+      // query, plus a query whose terms array is null
+      val index = qt.groupBy("query_id").agg(collect_list(col("t")).as("terms"))
+        .unionByName(Seq(3000L -> Option.empty[Seq[String]]).toDF("query_id", "terms"))
+        .agg(collect_list(struct(col("query_id"), col("terms"))))
       val got = pdf.select(col("doc_id"), termScores(col("postings"), index.scalar()))
         .select("query_id", "doc_id", "score_micro")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
       assert(got == want, s"docs=$docs queries=$queries")
-      assert(!got.exists(r => Set(100L, 101L, 102L)(r._2) || r._1 == 2000L),
+      assert(!got.exists(r => Set(100L, 101L, 102L)(r._2) || r._1 >= 2000L),
         "a doc or query without a shared term got a row")
       // zero weights still make a row, as the join + sum does
       assert(got.filter(_._2 == 103L) ==
